@@ -29,7 +29,7 @@ object KmeansCurve {
     val spark = GraftSession.local("graft-kmeans-curve")
     try {
       // one training run; each round's table scored without re-running
-      // earlier rounds (kmCentroidTables — the loop's own checkpoints)
+      // earlier rounds (kmCentroidTables — the loop's driver-held tables)
       VectorQueries.kmCentroidTables(spark, d, 3).zipWithIndex
         .foreach { case (c, r) =>
           val dist = VectorQueries.kmDistortionOf(spark, d, c)

@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
 import graft.Tables
 import graft.functions.VectorFunctions
@@ -582,22 +584,77 @@ object VectorQueries {
           sum(floor(element_at(col("qe"), i + 1).cast("double")
             * lit(CentScale.toDouble) + lit(0.5)).cast("long")).as(s"c$i")): _*)
 
-  /** Centroids from accumulated (count, Σ fixed-point) sums: cells
-    * with mass take the integer-exact running mean, empty cells keep
-    * the FROZEN centroid (the kmCentroidSeq coalesce). ONE definition
-    * shared by the merged-round finish (stream_kmeans_update) and the
-    * sequential mini-batch loop (stream_kmeans_minibatch), so the
-    * mean arithmetic cannot drift between the two streaming regimes.
+  // ---- Driver-held k-means state ------------------------------------
+  //
+  // Every k-means centroid table and every set of per-cell training
+  // sums is at most KmCells rows, so it lives on the driver as exact
+  // values, never as a DataFrame lineage: the Lloyd rounds, the
+  // MacQueen fold and the drift decisions are driver arithmetic over
+  // one collect() of a ≤ KmCells-group aggregate (or over nothing at
+  // all), and plans read a table through kmCentsDf — a LocalRelation,
+  // so plan depth stays constant whatever the round or batch count.
+  // The arithmetic is the engine's, bit for bit: a coordinate
+  // quantizes as floor(x·CentScale + 0.5) to a long, a mean is
+  // c.toDouble / (n·CentScale).toDouble, and every long add, subtract
+  // and multiply is Math.*Exact, so an overflow fails loudly as ANSI
+  // Spark's sum and * do.
+
+  /** A centroid table: (kcell, karr) rows in kcell order. */
+  private[graft] type KmCents = Seq[(Long, Array[Double])]
+
+  /** Per-cell training sums: kcell → (n, Σ fixed-point components). */
+  private[graft] type KmSums = Map[Long, (Long, Array[Long])]
+
+  private val KmCentsSchema = StructType(Seq(
+    StructField("kcell", LongType), StructField("karr", ArrayType(DoubleType))))
+
+  /** The plan-side view of a centroid table: a LocalRelation with the
+    * (kcell bigint, karr array<double>) schema every consumer reads.
     */
-  private def kmCumCentroids(frozen: DataFrame, cum: DataFrame): DataFrame = {
-    val means = cum.select(col("kcell"),
-      array((0 until Dim).map(i =>
-        col(s"c$i").cast("double")
-          / (col("n") * lit(CentScale)).cast("double")): _*).as("marr"))
-    frozen.select(col("kcell"), col("karr").as("prev"))
-      .join(means, Seq("kcell"), "left")
-      .select(col("kcell"), coalesce(col("marr"), col("prev")).as("karr"))
-  }
+  private def kmCentsDf(s: SparkSession, c: KmCents): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(
+      c.map { case (k, a) => Row(k, a.toSeq) }: _*), KmCentsSchema)
+
+  /** A centroid DataFrame back on the driver — free (no job) on a
+    * kmCentsDf view.
+    */
+  private[graft] def kmCentsOf(df: DataFrame): KmCents =
+    df.select(col("kcell"), col("karr")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toSeq.sortBy(_._1)
+
+  /** floor(x·CentScale + 0.5) as a long — Spark's floor(double). */
+  private def kmFixed(x: Double): Long =
+    math.floor(x * CentScale.toDouble + 0.5).toLong
+
+  /** Per-cell sums of a (kcell, n, c0..c{Dim-1}) frame, collected. */
+  private def kmSumsOf(sums: DataFrame): KmSums =
+    sums.select(col("kcell") +: col("n") +: (0 until Dim).map(i => col(s"c$i")): _*)
+      .collect().map(r =>
+        r.getLong(0) -> (r.getLong(1), Array.tabulate(Dim)(i => r.getLong(i + 2))))
+      .toMap
+
+  /** Cumulative sums plus one batch's sums, cell by cell. */
+  private[graft] def kmFoldSums(cum: KmSums, batch: KmSums): KmSums =
+    batch.foldLeft(cum) { case (acc, (k, (n, c))) =>
+      acc.updated(k, acc.get(k).fold((n, c)) { case (n0, c0) =>
+        (Math.addExact(n0, n),
+          Array.tabulate(Dim)(i => Math.addExact(c0(i), c(i))))
+      })
+    }
+
+  /** Centroids from per-cell (count, Σ fixed-point) sums: cells with
+    * mass take the integer-exact mean, empty cells keep their `base`
+    * centroid. ONE definition for the Lloyd round (base = the previous
+    * round), the merged-round finish (stream_kmeans_update) and the
+    * MacQueen fold (base = the frozen quantizer).
+    */
+  private[graft] def kmCumCentroids(base: KmCents, sums: KmSums): KmCents =
+    base.map { case (k, prev) =>
+      k -> sums.get(k).fold(prev) { case (n, c) =>
+        val den = Math.multiplyExact(n, CentScale).toDouble
+        c.map(_.toDouble / den)
+      }
+    }
 
   /** A centroid table unnested to long form (kcell, pos, c) — the
     * shape a serving layer re-broadcasts and both streaming-training
@@ -612,7 +669,8 @@ object VectorQueries {
     */
   private[graft] def kmStreamUpdateFinish(cents: DataFrame,
                                           sums: DataFrame): DataFrame =
-    kmUnnest(kmCumCentroids(cents, sums))
+    kmUnnest(kmCentsDf(sums.sparkSession,
+      kmCumCentroids(kmCentsOf(cents), kmSumsOf(sums))))
 
   /** stream_kmeans_update's oracle: the streamed update over ALL
     * arrived batches IS batch Lloyd round KmRounds+1 (integer sums
@@ -646,24 +704,28 @@ object VectorQueries {
   // and order are deterministic (vec_id % n staged by mtime), so the
   // oracle unrolls the per-batch chain CTE-for-CTE (mbRoundSql).
 
-  /** Per-cell integer sums over an ALREADY-ASSIGNED batch frame
-    * (vec_id, kcell, embedding) — the MacQueen step's aggregation,
-    * split from the assignment so the online serve-and-train gate can
-    * feed BOTH the emission and the step from one nearest-cell scan.
+  /** Per-cell integer sums over an ALREADY-ASSIGNED frame (vec_id,
+    * kcell, embedding), collected — the Lloyd round's and the MacQueen
+    * step's one action, split from the assignment so the online
+    * serve-and-train gate can feed BOTH the emission and the step from
+    * one nearest-cell scan.
     */
-  private def kmAssignedSums(assigned: DataFrame): DataFrame =
-    assigned.groupBy(col("kcell")).agg(
+  private def kmAssignedSums(assigned: DataFrame): KmSums =
+    kmSumsOf(assigned.groupBy(col("kcell")).agg(
       count(lit(1)).as("n"),
       (0 until Dim).map(i =>
         sum(floor(element_at(col("embedding"), i + 1).cast("double")
-          * lit(CentScale.toDouble) + lit(0.5)).cast("long")).as(s"c$i")): _*)
+          * lit(CentScale.toDouble) + lit(0.5)).cast("long")).as(s"c$i")): _*))
 
   /** The sequential trainer's driver-held state: frozen starting
     * quantizer, cumulative per-cell sums, current centroids. Each
     * `update` is one MacQueen step over one micro-batch; `result()`
-    * is the final centroid table in long form. All three tables are
-    * ≤ KmCells rows (localCheckpointed per step — plan depth linear
-    * in batches, blocks freed by the ContextCleaner).
+    * is the final centroid table in long form. All three are exact
+    * driver values of ≤ KmCells rows (KmCents/KmSums): a step's
+    * control work — the fold, the means, every drift decision — is
+    * driver arithmetic over ONE collect() of the batch's per-cell
+    * sums, plans read the centroids as a LocalRelation, and plan
+    * depth is constant in the batch count.
     *
     * IDEMPOTENT per batch id — foreachBatch's replay contract (a
     * failed/restarted micro-batch is REDELIVERED with the same id;
@@ -674,9 +736,11 @@ object VectorQueries {
     * store; here the applied-id set is the driver-held equivalent.
     */
   private[graft] final class KmMiniBatch(s: SparkSession, d: String) {
-    private val frozen = kmCentroids(Tables.embeddingsSpread(s, d))
-    private var cum: Option[DataFrame] = None
-    private var cents: DataFrame = frozen
+    private val frozen: KmCents =
+      kmCentroidSeq(Tables.embeddingsSpread(s, d), KmRounds).last
+    private var cum: KmSums = Map.empty
+    private var cents: KmCents = frozen
+    private def df(c: KmCents): DataFrame = kmCentsDf(s, c)
     // Served emissions accumulate as a LIST of per-batch checkpointed
     // frames, unioned lazily at the result call — checkpointing only
     // the new batch keeps emission work linear in batch count (ADVICE
@@ -743,16 +807,16 @@ object VectorQueries {
       // the "one nearest-cell scan per batch covers both halves"
       // contract, same as serve's checkpointed assignment.
       val bscored =
-        if (ivf) Some(kmScored(batch, cents).localCheckpoint()) else None
+        if (ivf) Some(kmScored(batch, df(cents)).localCheckpoint()) else None
       val assigned =
-        if (serve) kmAssigned(batch, cents).localCheckpoint()
-        else bscored.fold(kmAssigned(batch, cents))(kmAssignedFromScored)
+        if (serve) kmAssigned(batch, df(cents)).localCheckpoint()
+        else bscored.fold(kmAssigned(batch, df(cents)))(kmAssignedFromScored)
       // IVF serving half (before the step — generation r serves batch
       // r): corpus index and the batch's query probe lists both under
       // the CURRENT centroids, then the shared exact re-rank tail.
       // The emission is query-count-bounded (≤ 3 rows per query).
       val newServedTopk = if (!ivf) None else {
-        val corpusIdx = kmAssigned(Tables.embeddingsSpread(s, d), cents)
+        val corpusIdx = kmAssigned(Tables.embeddingsSpread(s, d), df(cents))
           .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
             col("embedding"))
         Some(serveIvf(corpusIdx, bscored.get, batch).localCheckpoint())
@@ -772,7 +836,7 @@ object VectorQueries {
       // instance untouched, so a redelivery of the same id RE-APPLIES
       // instead of silently no-oping over half-updated state (the
       // transactional half of the replay contract).
-      cum = Some(newCum)
+      cum = newCum
       cents = newCents
       newServed.foreach(f => served = served :+ f)
       newServedTopk.foreach(f => servedTopk = servedTopk :+ f)
@@ -794,21 +858,17 @@ object VectorQueries {
       ivfTopkTail(corpusIdx, probed, q)
     }
 
-    /** The MacQueen fold shared by every serving mode: the batch's
-      * per-cell integer sums folded into the cumulative state, the
-      * centroids moved to the cumulative means (empty cells keep the
-      * frozen centroid). Returns the two checkpointed state tables
-      * WITHOUT assigning them — the caller's one commit point decides
-      * when the step becomes visible.
+    /** The MacQueen fold shared by every serving mode: ONE collect()
+      * of the batch's per-cell integer sums (≤ KmCells rows), folded
+      * into the cumulative state on the driver, the centroids moved
+      * to the cumulative means (empty cells keep the frozen
+      * centroid). Returns the new state WITHOUT assigning it — the
+      * caller's one commit point decides when the step becomes
+      * visible.
       */
-    private def macQueenFold(assigned: DataFrame): (DataFrame, DataFrame) = {
-      val sums = kmAssignedSums(assigned)
-      val newCum = cum.fold(sums)(prev =>
-        prev.unionAll(sums).groupBy(col("kcell")).agg(
-          sum(col("n")).as("n"),
-          (0 until Dim).map(i => sum(col(s"c$i")).as(s"c$i")): _*))
-        .localCheckpoint()
-      (newCum, kmCumCentroids(frozen, newCum).localCheckpoint())
+    private def macQueenFold(assigned: DataFrame): (KmSums, KmCents) = {
+      val newCum = kmFoldSums(cum, kmAssignedSums(assigned))
+      (newCum, kmCumCentroids(frozen, newCum))
     }
 
     // ---- drift-gated epoch state (serveIvfDriftAndUpdate) ----------
@@ -822,7 +882,7 @@ object VectorQueries {
     // the NEW quantizer against the OLD lists: exactly the mixed
     // generations the serving contract forbids, and every later drift
     // check was suppressed by the phantom generation).
-    private var idxCents: DataFrame = frozen
+    private var idxCents: KmCents = frozen
     private var idxCorpus: Option[DataFrame] = None
     private var rebuilt: List[Long] = Nil
 
@@ -841,13 +901,12 @@ object VectorQueries {
       * serveIvfAndUpdate's and the oracle reuses the same unrolled
       * chain, adding only the drift decisions (kmDriftDecisionSql).
       * Re-assignment work is sub-linear in batch count whenever the
-      * gate skips (measured: graft.DriftCurve, ScalingCheck r16); the
+      * gate skips (measured: the KmDriftRebuild doc, ScalingCheck r16); the
       * recall cost of staleness is floor-pinned in VectorSpec.
       *
-      * The drift scalar is a one-row action over two KmCells-row
-      * tables — the gate's per-batch control decision (the class the
-      * batch-id bookkeeping is in), O(KmCells) driver work, never a
-      * data materialization.
+      * The drift scalar is the gate's per-batch control decision
+      * (the class the batch-id bookkeeping is in): O(KmCells × Dim)
+      * driver arithmetic over two driver-held tables, no Spark job.
       */
     def serveIvfDriftAndUpdate(batch: DataFrame, batchId: Long): Unit = synchronized {
       requireMode("serveIvfDriftAndUpdate")
@@ -859,7 +918,7 @@ object VectorQueries {
       // until the commit point below (code-review r16).
       val (srvCents, srvCorpus) =
         if (rebuild)
-          (cents, kmAssigned(Tables.embeddingsSpread(s, d), cents)
+          (cents, kmAssigned(Tables.embeddingsSpread(s, d), df(cents))
             .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
               col("embedding"))
             .localCheckpoint())
@@ -868,7 +927,7 @@ object VectorQueries {
       // query probe lists score against srvCents, the corpus side is
       // the (possibly stale) checkpointed inverted lists — no
       // re-assignment on the skip path.
-      val bscoredIdx = kmScored(batch, srvCents).localCheckpoint()
+      val bscoredIdx = kmScored(batch, df(srvCents)).localCheckpoint()
       val cur = serveIvf(srvCorpus, bscoredIdx, batch).localCheckpoint()
       // MacQueen step under the CURRENT centroids — on a rebuild batch
       // the index generation IS the current one, so the serving scan
@@ -877,14 +936,14 @@ object VectorQueries {
       // scores once more under the current quantizer.
       val assigned =
         if (rebuild) kmAssignedFromScored(bscoredIdx)
-        else kmAssigned(batch, cents)
+        else kmAssigned(batch, df(cents))
       val (newCum, newCents) = macQueenFold(assigned)
       // Commit point (the update/serve contract): trainer state AND
       // index generation mutate together, after every table above has
       // materialized — a failure anywhere earlier leaves the instance
       // untouched and the id un-applied, so a redelivery re-runs the
       // whole step (including the rebuild decision) from clean state.
-      cum = Some(newCum)
+      cum = newCum
       cents = newCents
       idxCents = srvCents
       idxCorpus = Some(srvCorpus)
@@ -895,7 +954,7 @@ object VectorQueries {
 
     /** Batch ids at which the drift gate rebuilt the inverted lists
       * (batch 0 always — the initial build). The measurement surface
-      * for the sub-linear re-assignment claim (DriftCurve, VectorSpec).
+      * for the sub-linear re-assignment claim (VectorSpec).
       * Shared by the persisted-refresh mode (instances are single-mode,
       * so the log is unambiguous) — there it is the generation list:
       * entry g means directory gen_g exists under persistedRunRoot.
@@ -913,7 +972,7 @@ object VectorQueries {
     private[graft] val persistedRunRoot: String =
       s"${refreshStoreRoot(d)}/run_${System.nanoTime()}"
     private var pGen: Option[String] = None
-    private var pIdxCents: DataFrame = frozen
+    private var pIdxCents: KmCents = frozen
 
     /** Drift-gated IVF serving FROM A PERSISTED, INGESTED store
       * (stream_ann_ivf_persisted_refresh's body) — the two halves of
@@ -963,8 +1022,8 @@ object VectorQueries {
       * Oracle: the drift chain with the arrived-corpus
       * restriction (kmOnlineIvfPersistedRefreshOracleSql).
       *
-      * `thr` is the end-to-end measurement knob (graft.DriftCurve's
-      * composed-gate sweep, recorded at the KmDriftRebuild doc); the
+      * `thr` is the end-to-end measurement knob (the composed-gate
+      * sweep recorded at the KmDriftRebuild doc); the
       * registered gate and the oracle pin the default.
       */
     def serveIvfPersistedAndUpdate(batch: DataFrame, batchId: Long,
@@ -981,7 +1040,7 @@ object VectorQueries {
       // one-scan contract the sibling gates keep (code-review r17:
       // the skip path previously scored the batch twice).
       val bscoredIdx = kmScored(
-        batch.select(col("vec_id"), col("embedding")), srvCents)
+        batch.select(col("vec_id"), col("embedding")), df(srvCents))
         .localCheckpoint()
       val bRows = kmAssignedFromScored(bscoredIdx)
         .select(col("vec_id").as("nn_id"), col("embedding"),
@@ -992,8 +1051,8 @@ object VectorQueries {
           // the marker) and re-assigned under the current quantizer;
           // the arriving batch's rows come from the shared scan
           val prior = pGen.map(g =>
-            kmAssigned(s.read.parquet(g)
-              .select(col("nn_id").as("vec_id"), col("embedding")), cents)
+            kmAssigned(s.read.schema(genSchema(bRows)).parquet(g)
+              .select(col("nn_id").as("vec_id"), col("embedding")), df(cents))
               .select(col("vec_id").as("nn_id"), col("embedding"),
                 lit(batchId).as("ingest"), col("kcell").as("cell")))
           val dir = s"$persistedRunRoot/gen_$batchId"
@@ -1016,16 +1075,15 @@ object VectorQueries {
       ivfStoreCommitLatest(persistedRunRoot, genDir)
       // serving half, wholly under the generation's quantizer, corpus
       // side = the artifact's (pruned) scan
-      val idx = s.read.parquet(genDir)
-        .select(col("nn_id"), col("embedding"),
-          col("cell").cast("int").as("cell"))
+      val idx = s.read.schema(genSchema(bRows)).parquet(genDir)
+        .select(col("nn_id"), col("embedding"), col("cell"))
       val cur = serveIvf(idx, bscoredIdx, batch).localCheckpoint()
       val assigned =
         if (rebuild) kmAssignedFromScored(bscoredIdx)
-        else kmAssigned(batch, cents)
+        else kmAssigned(batch, df(cents))
       val (newCum, newCents) = macQueenFold(assigned)
       // commit point: trainer state and generation move together
-      cum = Some(newCum)
+      cum = newCum
       cents = newCents
       pIdxCents = srvCents
       pGen = Some(genDir)
@@ -1045,7 +1103,7 @@ object VectorQueries {
     private[graft] val pqPersistedRunRoot: String =
       s"${pqRefreshStoreRoot(d)}/run_${System.nanoTime()}"
     private var cpGen: Option[String] = None
-    private var cpIdxCents: DataFrame = frozen
+    private var cpIdxCents: KmCents = frozen
     // The FROZEN offline-trained codebook (the train-offline/
     // serve-online deployment every PQ face uses): trained once per
     // instance on the static corpus, broadcast per batch. Lazy — only
@@ -1110,7 +1168,7 @@ object VectorQueries {
       // for the arriving rows, probe ranking, and on rebuild batches
       // the training assignment
       val bscoredIdx = kmScored(
-        batch.select(col("vec_id"), col("embedding")), srvCents)
+        batch.select(col("vec_id"), col("embedding")), df(srvCents))
         .localCheckpoint()
       val bRows = packCodes(
         pqAssign(pqSubsOf(batch), pqCb)
@@ -1125,10 +1183,11 @@ object VectorQueries {
           // quantizer — the embeddings join restricts the raw table to
           // the arrived ids (vec_id-keyed; co-partitioned at scale)
           val prior = cpGen.map { g =>
-            val pc = s.read.parquet(g).select(col("vec_id"), col("codes"))
+            val pc = s.read.schema(genSchema(bRows)).parquet(g)
+              .select(col("vec_id"), col("codes"))
             pc.join(
               kmAssigned(Tables.embeddingsSpread(s, d)
-                .join(pc.select(col("vec_id")), "vec_id"), cents)
+                .join(pc.select(col("vec_id")), "vec_id"), df(cents))
                 .select(col("vec_id"), col("kcell").as("cell")), "vec_id")
               .select(col("vec_id"), col("cell"), col("codes"),
                 lit(batchId).as("ingest"))
@@ -1152,8 +1211,8 @@ object VectorQueries {
       // ADC serving half, wholly under the generation's quantizer:
       // corpus side = the artifact's pruned scan, probe lists from the
       // shared batch scan, LUT from the frozen codebook
-      val codes = s.read.parquet(genDir)
-        .select(col("vec_id"), col("cell").cast("int").as("cell"),
+      val codes = s.read.schema(genSchema(bRows)).parquet(genDir)
+        .select(col("vec_id"), col("cell"),
           posexplode(col("codes")))
         .select(col("vec_id"), col("cell"),
           col("pos").as("sub_id"), col("col").cast("long").as("code"))
@@ -1163,10 +1222,10 @@ object VectorQueries {
       val cur = adcServeTail(codes, probed, lut).localCheckpoint()
       val assigned =
         if (rebuild) kmAssignedFromScored(bscoredIdx)
-        else kmAssigned(batch, cents)
+        else kmAssigned(batch, df(cents))
       val (newCum, newCents) = macQueenFold(assigned)
       // commit point: trainer state and code generation move together
-      cum = Some(newCum)
+      cum = newCum
       cents = newCents
       cpIdxCents = srvCents
       cpGen = Some(genDir)
@@ -1180,14 +1239,9 @@ object VectorQueries {
     // tracked as centroid VALUES, not generation numbers, so drift is
     // a direct per-cell comparison) and the patchwork inverted lists.
     // Both mutate only at the commit point, with the trainer state.
-    private var cellCents: DataFrame = frozen
+    private var cellCents: KmCents = frozen
     private var lists: Option[DataFrame] = None
-    private var movedLog: List[DataFrame] = Nil
-    // per-batch re-assigned members (the migration input) — a LAZY
-    // projection over checkpointed inputs, kept for the measurement
-    // surface only (counting happens in DriftCurve/specs, never in
-    // the gate path)
-    private var migratedLog: List[DataFrame] = Nil
+    private var movedLog: List[Seq[Long]] = Nil
 
     /** PER-CELL incremental reindexing — the finer production protocol
       * next to serveIvfDriftAndUpdate's whole-index epoch gate
@@ -1205,11 +1259,11 @@ object VectorQueries {
       * MacQueen step, so the one-scan contract holds on EVERY batch
       * here (the whole-index gate only gets it on rebuild batches).
       *
-      * Everything is data-driven — the moved set, the member
-      * migration, the centroid patch are all DataFrames; unlike the
-      * whole-index gate there is NO driver-side drift scalar and no
-      * control-flow branch on data: a batch with zero moved cells
-      * simply unions an empty re-assignment. Re-assignment work per
+      * The moved set and the centroid patch are driver arithmetic
+      * over the driver-held tables (kmDriftPerCell, no Spark job);
+      * the member migration is the only data work, and a batch with
+      * zero moved cells simply unions an empty re-assignment — no
+      * control-flow branch on data. Re-assignment work per
       * batch ∝ members of moved cells only — the sub-linear
       * incremental cost (movedLog is the measurement surface; the
       * list invariant — every vector in exactly one list — is
@@ -1218,54 +1272,42 @@ object VectorQueries {
     def serveIvfIncrAndUpdate(batch: DataFrame, batchId: Long): Unit = synchronized {
       requireMode("serveIvfIncrAndUpdate")
       if (applied.contains(batchId)) return // replay of a committed batch
-      val (newLists, newCellCents, movedRec, migrated) = lists match {
+      val (newLists, newCellCents, moved) = lists match {
         case None =>
           // initial build: every list built under the current (frozen)
           // quantizer — the "all cells moved" base case
-          val built = kmAssigned(Tables.embeddingsSpread(s, d), cents)
+          val built = kmAssigned(Tables.embeddingsSpread(s, d), df(cents))
             .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
               col("embedding"))
             .localCheckpoint()
-          (built,
-           cents,
-           cents.select(col("kcell")).localCheckpoint(),
-           built.select(col("nn_id")))
+          (built, cents, cents.map(_._1))
         case Some(prev) =>
           val moved = kmDriftPerCell(cents, cellCents)
-            .filter(col("d2") > KmDriftRebuild).select(col("kcell"))
-            .localCheckpoint()
-          val members = prev
-            .join(moved, prev("cell") === moved("kcell"), "left_semi")
-          val keep = prev.join(moved, prev("cell") === moved("kcell"),
-            "left_anti")
+            .collect { case (k, d2) if d2 > KmDriftRebuild => k }
+          val inMoved = col("cell").isin(moved: _*)
           val rea = kmAssigned(
-            members.select(col("nn_id").as("vec_id"), col("embedding")),
-            cents)
+            prev.filter(inMoved)
+              .select(col("nn_id").as("vec_id"), col("embedding")),
+            df(cents))
             .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
               col("embedding"))
-          val ncc = cellCents.select(col("kcell"), col("karr").as("prev"))
-            .join(cents.select(col("kcell"), col("karr").as("curk")), "kcell")
-            .join(moved.select(col("kcell"), lit(1).as("m")), Seq("kcell"),
-              "left")
-            .select(col("kcell"),
-              when(col("m").isNotNull, col("curk")).otherwise(col("prev"))
-                .as("karr"))
-            .localCheckpoint()
-          (keep.unionAll(rea).localCheckpoint(), ncc, moved,
-           members.select(col("nn_id")))
+          val cur = cents.toMap
+          val ncc = cellCents.map { case (k, prevK) =>
+            k -> (if (moved.contains(k)) cur(k) else prevK)
+          }
+          (prev.filter(!inMoved).unionAll(rea).localCheckpoint(), ncc, moved)
       }
       // fresh probes under the CURRENT quantizer against the patchwork
       // lists; the same scan feeds the MacQueen step
-      val bscored = kmScored(batch, cents).localCheckpoint()
+      val bscored = kmScored(batch, df(cents)).localCheckpoint()
       val cur = serveIvf(newLists, bscored, batch).localCheckpoint()
       val (newCum, newCents) = macQueenFold(kmAssignedFromScored(bscored))
       // commit point: trainer, index state, and logs move together
-      cum = Some(newCum)
+      cum = newCum
       cents = newCents
       lists = Some(newLists)
       cellCents = newCellCents
-      movedLog = movedLog :+ movedRec
-      migratedLog = migratedLog :+ migrated
+      movedLog = movedLog :+ moved
       servedTopk = servedTopk :+ cur
       applied.add(batchId)
     }
@@ -1273,16 +1315,8 @@ object VectorQueries {
     /** Per-batch moved-cell sets (batch 0 = all cells, the initial
       * build) — the incremental gate's re-assignment-work surface.
       */
-    def movedCells: Seq[DataFrame] = movedLog
-
-    /** Per-batch MIGRATED MEMBERS (batch 0 = the whole corpus, the
-      * initial build) — the rows the incremental step actually
-      * re-assigned; their fraction of the corpus is the sub-linear
-      * re-assignment claim's direct measurement (DriftCurve's INCR
-      * rows record it per SF). Lazy projections over checkpointed
-      * inputs — nothing here materializes in the gate path.
-      */
-    def migratedMembers: Seq[DataFrame] = migratedLog
+    def movedCells: Seq[DataFrame] = movedLog.map(m =>
+      kmCentsDf(s, frozen.filter(c => m.contains(c._1))).select(col("kcell")))
 
     /** The current patchwork inverted lists — exposed for the
       * VectorSpec list invariant (every vector in exactly one list).
@@ -1292,13 +1326,7 @@ object VectorQueries {
       lists.get
     }
 
-    /** The current centroid table (generation = number of applied
-      * batches) — exposed for graft.DriftCurve's decision-curve
-      * measurement.
-      */
-    private[graft] def centroidTable: DataFrame = cents
-
-    def result(): DataFrame = kmUnnest(cents)
+    def result(): DataFrame = kmUnnest(df(cents))
 
     /** Every batch's served (vec_id, kcell) assignments — batch r's
       * rows were assigned under the centroids AFTER r prior updates.
@@ -1321,6 +1349,16 @@ object VectorQueries {
       servedTopk.reduce(_ unionAll _)
     }
   }
+
+  /** The read schema of a refresh-store generation written from `rows`
+    * with partitionBy("ingest", "cell"): the data columns as written,
+    * the two partition columns typed as directory inference types them
+    * (int), so a store read runs no schema-inference job and plans
+    * exactly as an inferring read would.
+    */
+  private def genSchema(rows: DataFrame): StructType =
+    StructType(rows.schema.filterNot(f => f.name == "ingest" || f.name == "cell") ++
+      Seq(StructField("ingest", IntegerType), StructField("cell", IntegerType)))
 
   /** One oracle mini-batch step r (of `nb`): batch membership, L2²
     * distances vs the CURRENT centroids mbc$r, ranked assignment,
@@ -1671,39 +1709,43 @@ object VectorQueries {
   private[graft] val KmMbBatches = 4
 
   /** Per-cell squared fixed-point drift between two centroid tables —
-    * (kcell, d2) rows in EXACT arithmetic: each coordinate quantizes
-    * as floor(c·CentScale + 0.5) (the training sums' own device), the
-    * per-cell sum of squared coordinate deltas a pure BIGINT sum —
-    * the exact integers the oracle's per-cell drift CTEs compute.
-    * Integer end-to-end, so the engine and the oracle compute the
-    * IDENTICAL value and the rebuild decision can sit on an
+    * (kcell, d2) pairs over the cells both hold, in EXACT arithmetic:
+    * each coordinate quantizes as floor(c·CentScale + 0.5) (the
+    * training sums' own device), the per-cell sum of squared
+    * coordinate deltas a pure long sum (Math.*Exact — an overflow
+    * throws) — the exact integers the oracle's per-cell drift CTEs
+    * compute. Integer end-to-end, so the engine and the oracle compute
+    * the IDENTICAL value and the rebuild decision can sit on an
     * equality-sharp threshold with no FP-associativity risk (the
-    * reason the metric is not a double norm). The global gate maxes
-    * this (kmDriftFp2 — one row over two KmCells-row tables,
-    * O(KmCells) work); the per-cell incremental gate filters it
+    * reason the metric is not a double norm). The global gates max
+    * this (kmDriftFp2); the per-cell incremental gate filters it
     * (cells past the threshold rebuild, the rest serve stale lists) —
-    * ONE arithmetic definition for both regimes.
+    * ONE arithmetic definition for both regimes, O(KmCells × Dim)
+    * driver work over the driver-held tables, no Spark job.
     */
-  private[graft] def kmDriftPerCell(a: DataFrame, b: DataFrame): DataFrame = {
-    def q(df: DataFrame, p: String) = df.select(col("kcell") +:
-      (0 until Dim).map(i => floor(element_at(col("karr"), i + 1)
-        * lit(CentScale.toDouble) + lit(0.5)).cast("long").as(s"$p$i")): _*)
-    val d2 = (0 until Dim).map { i =>
-      val d = col(s"a$i") - col(s"b$i"); d * d
-    }.reduce(_ + _)
-    q(a, "a").join(q(b, "b"), "kcell")
-      .select(col("kcell"), d2.as("d2"))
+  private[graft] def kmDriftPerCell(a: KmCents, b: KmCents): Seq[(Long, Long)] = {
+    val bm = b.toMap
+    a.flatMap { case (k, x) =>
+      bm.get(k).map { y =>
+        k -> (0 until Dim).foldLeft(0L) { (acc, i) =>
+          val dd = Math.subtractExact(kmFixed(x(i)), kmFixed(y(i)))
+          Math.addExact(acc, Math.multiplyExact(dd, dd))
+        }
+      }
+    }
   }
 
-  private[graft] def kmDriftFp2(a: DataFrame, b: DataFrame): Long =
-    kmDriftPerCell(a, b).agg(max(col("d2")).as("m")).head().getLong(0)
+  private[graft] def kmDriftFp2(a: KmCents, b: KmCents): Long =
+    kmDriftPerCell(a, b).map(_._2).max
 
   /** Drift threshold for the online IVF gate's epoch rebuild, in
     * squared fixed-point units: rebuild when some cell's centroid has
     * moved more than 0.25 in L2 since the lists were last built —
     * (0.25·2²⁴)² ≈ 1.76e13 in the integer metric. Chosen from the
-    * measured decision curve (graft.DriftCurve at sf0.01, the gate's
-    * own MacQueen trajectory; drift d2 = max-cell squared movement):
+    * measured decision curve (sf0.01, KmMiniBatch.update driven
+    * batch-for-batch along the gate's own MacQueen trajectory, drift
+    * taken between the quantizer at batch r and each earlier one;
+    * d2 = max-cell squared movement):
     *   d(1,0)=4.51e13  d(2,1)=1.65e13  d(3,1)=2.09e13  d(3,2)=4.48e12
     * so the recurrence rebuilds at batch 1 (the first step's jump
     * while the cumulative state is thin), SKIPS batch 2 (movement
@@ -1731,8 +1773,10 @@ object VectorQueries {
     * 1.22×.
     *
     * End-to-end sensitivity on the COMPOSED persisted-refresh gate
-    * (r16 verdict Next #7; graft.DriftCurve REFRESH rows, sf0.01,
-    * recall@3 vs exact brute over the arrived corpus): a two-point
+    * (r16 verdict Next #7; serveIvfPersistedAndUpdate driven at
+    * `thr` over the four staged batches, sf0.01, recall@3 vs
+    * arrivedBruteTopk, the exact brute over the arrived corpus): a
+    * two-point
     * sweep around the registered value —
     *   thr/4  (0.125 L2): rebuilds 0,1,2,3  recall 0.5700
     *   thr    (0.25  L2): rebuilds 0,1,3    recall 0.5500
@@ -2214,15 +2258,14 @@ object VectorQueries {
   /** Deterministic seed: the first `cells` vectors widened to double
     * (the pqSeedCodebook device — no RNG, both engines pick the same
     * rows; seeds are `cells` point reads of the full corpus whatever
-    * the training set, so the sampled face shares the same km0).
-    * localCheckpoint is free on a `cells`-row table and keeps the
-    * Lloyd loop's plan depth linear in rounds.
+    * the training set, so the sampled face shares the same km0),
+    * collected once into the driver-held table the Lloyd rounds
+    * update.
     */
-  private def kmSeed(e: DataFrame, cells: Int = KmCells): DataFrame =
-    e.filter(col("vec_id") < cells)
+  private def kmSeed(e: DataFrame, cells: Int = KmCells): KmCents =
+    kmCentsOf(e.filter(col("vec_id") < cells)
       .select(col("vec_id").as("kcell"),
-        transform(col("embedding"), v => v.cast("double")).as("karr"))
-      .localCheckpoint()
+        transform(col("embedding"), v => v.cast("double")).as("karr")))
 
   /** Deterministic farthest-point seed (Gonzalez 1985) — the MEASURED
     * alternative to first-K (r13 verdict #6 / r14 Next #4): seed 0 is
@@ -2232,7 +2275,8 @@ object VectorQueries {
     * pure function of the training set. Each step is ONE scan of the
     * training frame against the (≤ cells)-row broadcast seed table
     * (bounded-state min per vec_id, then a global top-1 —
-    * TakeOrderedAndProject, never a collect), so seeding costs
+    * TakeOrderedAndProject — collected as the next driver-held seed
+    * row), so seeding costs
     * (cells−1) training-set scans — O(sample) under the sampled
     * trainer, the regime production would seed in (FAISS seeds on the
     * subsample too).
@@ -2242,14 +2286,14 @@ object VectorQueries {
     * and the registered choice.
     */
   private def kmSeedFarthest(train: DataFrame,
-                             cells: Int = KmCells): DataFrame = {
-    var seeds = train.orderBy(col("vec_id")).limit(1)
+                             cells: Int = KmCells): KmCents = {
+    var seeds = kmCentsOf(train.orderBy(col("vec_id")).limit(1)
       .select(lit(0L).as("kcell"),
-        transform(col("embedding"), v => v.cast("double")).as("karr"))
-      .localCheckpoint()
+        transform(col("embedding"), v => v.cast("double")).as("karr")))
     for (j <- 1 until cells) {
-      val nxt = train
-        .crossJoin(broadcast(seeds.select(col("karr").as("sarr"))))
+      seeds = seeds ++ kmCentsOf(train
+        .crossJoin(broadcast(kmCentsDf(train.sparkSession, seeds)
+          .select(col("karr").as("sarr"))))
         .withColumn("sd", kmL2(col("sarr"), col("embedding")))
         .groupBy(col("vec_id"))
         .agg(min(col("sd")).as("mind"),
@@ -2257,8 +2301,7 @@ object VectorQueries {
         .orderBy(col("mind").desc, col("vec_id"))
         .limit(1)
         .select(lit(j.toLong).as("kcell"),
-          transform(col("emb"), v => v.cast("double")).as("karr"))
-      seeds = seeds.unionByName(nxt).localCheckpoint()
+          transform(col("emb"), v => v.cast("double")).as("karr")))
     }
     seeds
   }
@@ -2302,16 +2345,15 @@ object VectorQueries {
   /** Lloyd-trained coarse centroids: `rounds` rounds of assign →
     * integer-exact per-dimension means (the ivfCentroids fixed-point
     * sum, grouped by the assigned cell instead of the label). EMPTY
-    * CELLS ARE PRESERVED via the left join + coalesce (the pqCodebook
-    * device), so the table is KmCells rows at any round count; each
-    * round's 10-row table localCheckpoints so the corpus-side
-    * assignment subtree is never re-derived transitively.
+    * CELLS KEEP their previous centroid (kmCumCentroids), so the
+    * table is KmCells rows at any round count; it reaches plans as a
+    * LocalRelation, so no consumer re-derives the training scans.
     */
   private def kmCentroids(e: DataFrame, rounds: Int = KmRounds,
                           sampled: Boolean = false,
                           cells: Int = KmCells,
                           seed: String = KmSeed): DataFrame =
-    kmCentroidSeq(e, rounds, sampled, cells, seed).last
+    kmCentsDf(e.sparkSession, kmCentroidSeq(e, rounds, sampled, cells, seed).last)
 
   /** Every round's centroid table from ONE training run — element r is
     * the quantizer after r rounds (element 0 the seed). The loop body
@@ -2324,7 +2366,7 @@ object VectorQueries {
   private def kmCentroidSeq(e: DataFrame, rounds: Int,
                             sampled: Boolean = false,
                             cells: Int = KmCells,
-                            seed: String = KmSeed): Seq[DataFrame] = {
+                            seed: String = KmSeed): Seq[KmCents] = {
     // `sampled` trains on the deterministic subsample (FAISS's
     // max_points_per_centroid protocol — the KmTrainPerCell doc); the
     // first-K seed stays the full corpus's first `cells` rows (point
@@ -2334,30 +2376,14 @@ object VectorQueries {
     require(seed == "first" || seed == "farthest",
       s"unknown km seed protocol '$seed' (first | farthest)")
     val train = if (sampled) kmTrainSample(e, cells) else e
-    var cents =
+    val seeds =
       if (seed == "farthest") kmSeedFarthest(train, cells)
       else kmSeed(e, cells)
-    val all = Seq.newBuilder[DataFrame]
-    all += cents
-    for (_ <- 1 to rounds) {
-      val assigned = kmAssigned(train, cents)
-      // integer sum (cast long BEFORE summing — the ivfCentroids note)
-      val sums = assigned.groupBy(col("kcell")).agg(
-        count(lit(1)).as("n"),
-        (0 until Dim).map(i =>
-          sum(floor(element_at(col("embedding"), i + 1).cast("double")
-            * lit(CentScale.toDouble) + lit(0.5)).cast("long")).as(s"c$i")): _*)
-      val means = sums.select(col("kcell"),
-        array((0 until Dim).map(i =>
-          col(s"c$i").cast("double")
-            / (col("n") * lit(CentScale)).cast("double")): _*).as("marr"))
-      cents = cents.select(col("kcell"), col("karr").as("prev"))
-        .join(means, Seq("kcell"), "left")
-        .select(col("kcell"), coalesce(col("marr"), col("prev")).as("karr"))
-        .localCheckpoint()
-      all += cents
+    // one round = one collect() of the ≤ cells-group integer sums
+    (1 to rounds).scanLeft(seeds) { (cents, _) =>
+      kmCumCentroids(cents,
+        kmAssignedSums(kmAssigned(train, kmCentsDf(e.sparkSession, cents))))
     }
-    all.result()
   }
 
   /** The per-round centroid tables for a data dir — ONE training run
@@ -2371,6 +2397,7 @@ object VectorQueries {
                                       cells: Int = KmCells,
                                       seed: String = KmSeed): Seq[DataFrame] =
     kmCentroidSeq(Tables.embeddingsSpread(s, d), rounds, sampled, cells, seed)
+      .map(kmCentsDf(s, _))
 
   /** The frozen offline quantizer for a data dir — kmCentroids exposed
     * for the streaming update gate (stream_kmeans_update shares ONE
@@ -2419,7 +2446,7 @@ object VectorQueries {
   /** Exact brute-force cosine top-3 of batch `r`'s queries over the
     * ARRIVED corpus (vec_id % nb <= r) — the measurement baseline for
     * the persisted-refresh gate (the store cannot contain vectors
-    * that have not arrived), ONE definition for DriftCurve's
+    * that have not arrived), ONE definition for the KmDriftRebuild
     * threshold sweep and VectorSpec's recall floors (code-review r17:
     * the two carried verbatim copies).
     */

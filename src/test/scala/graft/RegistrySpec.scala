@@ -59,4 +59,18 @@ class RegistrySpec extends GraftSpec {
     assert(failures.isEmpty,
       s"${failures.size} queries failed analysis:\n${failures.mkString("\n")}")
   }
+
+  test("stream_ann_ivf_persisted_refresh leaves no graft-* temp entries behind") {
+    // The gate's staging, checkpoint and staged-source dirs are all
+    // gate-private: the run deletes them once the stream has drained.
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftEntries: Set[String] = Option(tmp.listFiles()).getOrElse(Array.empty)
+      .map(_.getName).filter(_.startsWith("graft-")).toSet
+    val session = spark // the shared session's own graft-warehouse dir predates the count
+    val before = graftEntries
+    assert(SparkEntry.queries("stream_ann_ivf_persisted_refresh")(session, Sf).count() > 0L)
+    val after = graftEntries
+    assert(after.size === before.size,
+      s"the gate left temp entries behind: ${(after -- before).mkString(", ")}")
+  }
 }

@@ -409,8 +409,8 @@ class VectorSpec extends GraftSpec {
     assert(fullLog.isEmpty,
       "the always-rebuild path must not touch the drift-gate state")
     assert(log === Seq(0L, 1L, 3L),
-      s"drift gate's rebuild sequence drifted (got $log) — re-measure " +
-        "graft.DriftCurve before moving KmDriftRebuild")
+      s"drift gate's rebuild sequence drifted (got $log) — see the " +
+        "measured decision curve in the KmDriftRebuild doc before moving it")
     val fr = full.intersect(brute).size.toDouble / brute.size
     val dr = stale.intersect(brute).size.toDouble / brute.size
     info(f"online recall@3: always-rebuild=$fr%.4f drift-gated=$dr%.4f " +
@@ -430,7 +430,7 @@ class VectorSpec extends GraftSpec {
     val movedCounts = si.movedCells.map(_.count())
     assert(movedCounts === Seq(10L, 7L, 0L, 1L),
       s"incremental moved-cell schedule drifted (got $movedCounts) — " +
-        "re-measure graft.DriftCurve before moving KmDriftRebuild")
+        "see the measured decision curve in the KmDriftRebuild doc before moving it")
     val corpus = graft.Tables.embeddings(spark, d).count()
     val listRows = si.listsTable.select(col("nn_id")).collect().map(_.getLong(0))
     assert(listRows.length.toLong === corpus &&
@@ -461,15 +461,35 @@ class VectorSpec extends GraftSpec {
     def batch(r: Int) = graft.Tables.embeddings(spark, d)
       .filter(col("vec_id") % nb === r)
     val st = new vq.KmMiniBatch(spark, d)
-    for (r <- 0 until nb) st.serveIvfPersistedAndUpdate(batch(r), r.toLong)
+    // Each step's control work (MacQueen fold, drift decision) is
+    // driver arithmetic over driver-held state; only data work runs as
+    // Spark jobs. The budget is the heaviest step's count (measured
+    // 14/16/15/16 with driver-held state).
+    val stepJobs = (0 until nb).map { r =>
+      org.apache.spark.graft.JobCount(spark.sparkContext) {
+        st.serveIvfPersistedAndUpdate(batch(r), r.toLong)
+      }._2
+    }
+    info(s"persisted-refresh jobs per step: ${stepJobs.mkString(", ")}")
+    stepJobs.zipWithIndex.foreach { case (n, r) =>
+      assert(n <= 16, s"persisted-refresh step $r ran $n Spark jobs, budget 16")
+    }
     assert(st.rebuildLog === Seq(0L, 1L, 3L),
       s"refresh gate's generation schedule drifted (got ${st.rebuildLog})" +
-        " — re-measure graft.DriftCurve before moving KmDriftRebuild")
+        " — see the measured decision curve in the KmDriftRebuild doc before moving it")
+    // centroid tables read back from their plan-side view and the drift
+    // decision on them run no job at all
+    val t = vq.kmCentroidTables(spark, d, 2)
+    val (drift, driftJobs) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      vq.kmDriftFp2(vq.kmCentsOf(t(2)), vq.kmCentsOf(t(1)))
+    }
+    assert(driftJobs === 0, s"the drift decision ran $driftJobs Spark jobs")
+    assert(drift > 0L, "a Lloyd round should move some centroid")
     val served = st.servedTopkResult().select(col("qid"), col("nn_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // exact per-batch brute over the arrived corpus — the only fair
     // baseline (the store cannot contain vectors that have not
-    // arrived); the shared definition DriftCurve's sweep also uses
+    // arrived); the shared definition behind the KmDriftRebuild sweep
     val perBatch = (0 until nb).map { r =>
       vq.arrivedBruteTopk(spark, d, r, nb)
         .collect().map(x => (x.getLong(0), x.getLong(1))).toSet
@@ -509,7 +529,7 @@ class VectorSpec extends GraftSpec {
     for (r <- 0 until nb) st.servePqPersistedAndUpdate(batch(r), r.toLong)
     assert(st.rebuildLog === Seq(0L, 1L, 3L),
       s"PQ refresh gate's generation schedule drifted (got ${st.rebuildLog})" +
-        " — re-measure graft.DriftCurve before moving KmDriftRebuild")
+        " — see the measured decision curve in the KmDriftRebuild doc before moving it")
     val served = st.servedTopkResult().select(col("qid"), col("nn_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val perBatch = (0 until nb).map { r =>
@@ -1007,5 +1027,45 @@ class VectorSpec extends GraftSpec {
     val df = Seq(Tuple1(v), Tuple1(v)).toDF("v")
       .select(VectorFunctions.hyperplaneSig(col("v"), w).as("s"))
     assert(df.distinct().count() === 1)
+  }
+
+  test("driver-held k-means arithmetic is exact, and a Long overflow fails loudly") {
+    // The driver fold, means and drift are the engine's integer
+    // arithmetic with Math.*Exact where ANSI Spark's sum and * would
+    // raise: constructed tables pin the exact values and each
+    // overflow path.
+    val vq = graft.queries.VectorQueries
+    val zero = Array.fill(64)(0L)
+    val cum = Map(3L -> ((2L, Array.tabulate(64)(i => i.toLong << 24))))
+    val folded = vq.kmFoldSums(cum, cum)
+    assert(folded(3L)._1 === 4L)
+    assert(folded(3L)._2.toSeq === Seq.tabulate(64)(i => (2L * i) << 24))
+    val base = Seq(3L -> Array.fill(64)(9.0), 4L -> Array.fill(64)(7.0))
+    val means = vq.kmCumCentroids(base, folded)
+    assert(means.map(_._1) === Seq(3L, 4L))
+    assert(means(0)._2.toSeq === Seq.tabulate(64)(i => i / 2.0))
+    assert(means(1)._2.toSeq === base(1)._2.toSeq, "an empty cell keeps its base centroid")
+    // one coordinate moved by 1.0 is (2^24)^2 in the fixed-point metric
+    val moved = Seq(3L -> Array.tabulate(64)(i => if (i == 5) 10.0 else 9.0))
+    assert(vq.kmDriftFp2(moved, base) === (1L << 48))
+    assert(vq.kmDriftPerCell(moved, base) === Seq(3L -> (1L << 48)),
+      "drift covers only the cells both tables hold")
+    intercept[ArithmeticException] { // count
+      vq.kmFoldSums(Map(0L -> ((Long.MaxValue, zero))), Map(0L -> ((1L, zero))))
+    }
+    intercept[ArithmeticException] { // Σ component
+      vq.kmFoldSums(Map(0L -> ((1L, Array.fill(64)(Long.MaxValue)))),
+        Map(0L -> ((1L, Array.fill(64)(1L)))))
+    }
+    intercept[ArithmeticException] { // n · CentScale
+      vq.kmCumCentroids(Seq(0L -> Array.fill(64)(0.0)), Map(0L -> ((1L << 40, zero))))
+    }
+    intercept[ArithmeticException] { // squared delta: (2^44)^2
+      vq.kmDriftFp2(Seq(0L -> Array.fill(64)(1024.0 * 1024)), Seq(0L -> Array.fill(64)(0.0)))
+    }
+    intercept[ArithmeticException] { // sum of squares: 2 · (2^31)^2
+      vq.kmDriftFp2(Seq(0L -> Array.tabulate(64)(i => if (i < 2) 128.0 else 0.0)),
+        Seq(0L -> Array.fill(64)(0.0)))
+    }
   }
 }
