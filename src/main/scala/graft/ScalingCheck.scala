@@ -6,7 +6,8 @@ package graft
   * plan's "linear / bounded at 100 TB" claim (a ratio well above the
   * data growth is a super-linear plan; near or below it, the operator
   * is data-linear with fixed overhead still amortizing). Medians of 3
-  * cache-cleared reps, same rep contract as Bench/TimeOne.
+  * cache-cleared reps, each written to a noop sink (Bench's rep
+  * contract).
   * {{{ runMain graft.ScalingCheck [sfSmall] [sfLarge] }}}
   * Prints ONE JSON line {"scaling_check": ...}.
   */

@@ -194,9 +194,9 @@ object TextQueries {
     * the previous 6% relative cap (pair-identical join volume), at
     * sf0.01 max df is 46 so no shingle is capped (and round 2 measured
     * the capped and uncapped results identical there). The bound's
-    * ENGAGEMENT is measured too (r12, graft.PairScale): on a
-    * df-doubling 2× derivation of sf0.1, 900 of the 931 shingles
-    * exceed the cap and the pair join collapses (7.7 → 1.2 s) — the
+    * ENGAGEMENT is measured too (min of 3 timed reps after a warm
+    * rep): on a df-doubling 2× derivation of sf0.1, 900 of the 931
+    * shingles exceed the cap and the pair join collapses (7.7 → 1.2 s) — the
     * guard, not the join, governs the family's cost from this
     * corpus's density upward, exactly as the K² analysis above
     * predicts.
@@ -502,7 +502,8 @@ object TextQueries {
     * comment in the body), one fold apply pass with the admitted set
     * broadcast as a single m-element array row — so per-ROUND cost is
     * a constant ~0.3 s here whatever m, and per-MERGE cost is that
-    * constant / m. Measured at sf0.1 (graft.BpeCurve, min of 3;
+    * constant / m. Measured at sf0.1 (each trainer written to a noop
+    * sink, min of 3 cache-cleared reps;
     * r12-closing re-run after the best-pair checkpoint, which cut
     * exact from its pre-checkpoint 4.02 s): exact 16 rounds 3.48 s
     * cold / 2.1 s warm-protocol (0.13-0.22 s/merge) → batched 4×4
@@ -1087,7 +1088,8 @@ object TextQueries {
     * candidate factory; web-scale near-dup pipelines cap or shard such
     * buckets — Henzinger SIGIR'06 discusses the cluster-mass problem,
     * and bucket truncation is the standard engineering response).
-    * 64 binds on BOTH measured scales of this corpus (LshScale:
+    * 64 binds on BOTH measured scales of this corpus (exact counts
+    * over lshCandidateStages' frames and per-band bucket sizes:
     * max bucket 329 of 500 docs at sf0.01, 3143 of 5000 at sf0.1 —
     * that one bucket is why candidates grow ×99 under ×10 data while
     * verified pairs grow ×10.2) while p99 buckets at the skew-free
@@ -1098,7 +1100,7 @@ object TextQueries {
   /** The LSH pipeline with its intermediate stages exposed — ONE
     * definition feeding the registered queries (`minhashPairs` and the
     * capped variant take the verified third element) and the scaling
-    * attribution harness (`graft.LshScale` counts all three). Returns
+    * attribution that counts all three (the LshBucketCap doc). Returns
     * (band-collision rows pre-distinct, distinct candidate pairs,
     * verified pairs). With `cap = Some(c)`, each band self-joins only
     * inside buckets of width ≤ c: the per-band bucket-size aggregate is
@@ -1135,25 +1137,6 @@ object TextQueries {
     val cand = coll.distinct()
     (coll, cand, jaccardVerify(cand,
       sh.select(col("doc_id"), xxhash64(col("sh")).as("sid"))))
-  }
-
-  /** Per-(band, key) bucket-size stats for the same signatures — the
-    * quantity whose square drives collision volume (Σ_buckets n·(n−1)/2).
-    * Used by LshScale to attribute superlinear growth to bucket
-    * densification vs plan shape.
-    */
-  private[graft] def lshBucketStats(s: SparkSession, d: String,
-                                    bands: Int = 4, rows: Int = 2): DataFrame = {
-    val sig = signatures(docShingles(s, d)).localCheckpoint()
-    (0 until bands).map { b =>
-      val ms = (b * rows until (b + 1) * rows).map(i => s"m${i + 1}")
-      sig.groupBy(ms.map(col): _*).agg(count(lit(1)).as("n"))
-        .select(lit(b).as("band"), col("n"))
-    }.reduce(_ unionAll _)
-      .groupBy(col("band"))
-      .agg(count(lit(1)).as("buckets"), max(col("n")).as("max_n"),
-        expr("percentile_approx(n, 0.99)").as("p99_n"),
-        sum(col("n") * (col("n") - 1) / 2).as("pairs"))
   }
 
   /** Each document's AllPairs PREFIX postings — its ⌊n/2⌋+1 rarest
@@ -1376,10 +1359,10 @@ object TextQueries {
     // rows instead of dedup_containment's Σ df², and df_pref is the
     // ~0.2 tail of each doc's rarest shingles. Measured at sf0.1:
     // 11.7M vs 59.0M candidate-join rows (5.0×) and a 2.1× wall-clock
-    // win (4.7 s vs 9.7 s TimeOne medians, same host window) — on the
-    // near-UNIFORM synthetic corpus; a Zipfian corpus concentrates
-    // df² on exactly the stop-shingles prefixes exclude, so the
-    // reduction grows with skew. Verification re-counts
+    // win (4.7 s vs 9.7 s medians of cache-cleared reps, same host
+    // window) — on the near-UNIFORM synthetic corpus; a Zipfian
+    // corpus concentrates df² on exactly the stop-shingles prefixes
+    // exclude, so the reduction grows with skew. Verification re-counts
     // the exact intersection per candidate with the merge-intersect
     // kernel; result spec-pinned identical to dedup_containment.
     // (A symmetric per-set prefix is UNSOUND here — the partner's size,
@@ -1438,8 +1421,9 @@ object TextQueries {
       // The gram stream feeds BOTH the occurrence-count subtree and the
       // span side; localCheckpoint materializes the window explode +
       // xxhash64 once instead of per subtree (measured 1.72 → 1.29 s
-      // TimeOne median at sf0.1; blocks freed by the ContextCleaner —
-      // the cache() hygiene note at dedup_minhash_lsh applies).
+      // median of cache-cleared reps at sf0.1; blocks freed by the
+      // ContextCleaner — the cache() hygiene note at dedup_minhash_lsh
+      // applies).
       val g = substrGramRows(
         Tables.documentsSpread(s, d).select(col("doc_id"), col("text")))
         .select(col("doc_id"), col("n_tokens"), col("s"), col("e"),
@@ -1536,7 +1520,8 @@ object TextQueries {
     // rounds, and the marker-element cascade exclusion round after
     // round — exactly the dense-interaction regime where a batch-apply
     // bug would surface that the shallow 4×4 gate cannot reach. The
-    // 30k throughput claim itself stays BpeCurve's measured number;
+    // 30k throughput claim itself stays the number measured at
+    // bpeTrainBatchedAt's doc;
     // this row pins the CORRECTNESS of the machinery at depth.
     "text_bpe_train_batched_deep" -> ((s, d) =>
       bpeTrainBatchedAt(s, d, rounds = 16, m = 8)),
@@ -1807,10 +1792,10 @@ object TextQueries {
     // verified pair sets identical on both (losslessness is
     // distribution-independent).
     //
-    // FOUR-SCALE wall-clock measurement (r12, graft.PairScale — min
-    // of 3 after a warm rep; "half"/"2×" are distribution-preserving
-    // derivations of sf0.1, every shingle's df scaling with the
-    // corpus as a same-generator draw would): direct vs prefix
+    // FOUR-SCALE wall-clock measurement (min of 3 after a warm rep;
+    // "half"/"2×" are distribution-preserving derivations of sf0.1,
+    // every shingle's df scaling with the corpus as a same-generator
+    // draw would): direct vs prefix
     // sf0.01 1.20/1.29 s → half 4.55/5.22 s → sf0.1 7.69/11.55 s →
     // 2× 1.18/1.40 s. Two pinned conclusions. (1) NO uniform-growth
     // crossover exists on this corpus: the prefix twin's gap WIDENS
@@ -1880,10 +1865,10 @@ object TextQueries {
     }),
 
     // Bucket-width-capped LSH — the 100 TB twin of dedup_minhash_lsh,
-    // motivated by MEASUREMENT (graft.LshScale): on this corpus one
-    // band bucket holds 3143 of 5000 docs at sf0.1, so candidates grow
-    // ×99 under ×10 data (the Σ n·(n−1)/2 model's prediction) while
-    // verified pairs grow only ×10.2 — the mega-bucket is a
+    // motivated by MEASUREMENT (exact lshCandidateStages counts): on
+    // this corpus one band bucket holds 3143 of 5000 docs at sf0.1, so
+    // candidates grow ×99 under ×10 data (the Σ n·(n−1)/2 model's
+    // prediction) while verified pairs grow only ×10.2 — the mega-bucket is a
     // false-positive factory, and it is exactly the bucket a 100 TB
     // boilerplate cluster creates. The cap excises buckets wider than
     // LshBucketCap BEFORE the self-join (the quadratic term never
@@ -1914,9 +1899,9 @@ object TextQueries {
     // The LOSSLESS composite: near-dup stage = the uncapped LSH
     // clusters (exact cluster inventory, oracle-exact). Its measured
     // 4.8× growth under 10× data is entirely that stage's mega-bucket
-    // pair join (SCALING_r12; LshScale attributes it to one 3143-doc
-    // band bucket at sf0.1 → collision volume ×99) — which is why the
-    // capped twin below exists and IS the registered scale path.
+    // pair join (SCALING_r12; per-band bucket counts attribute it to
+    // one 3143-doc band bucket at sf0.1 → collision volume ×99) —
+    // which is why the capped twin below exists and IS the registered scale path.
     "dedup_e2e_pipeline" -> ((s, d) =>
       e2ePipelineFrom(s, d, queries("dedup_minhash_clusters")(s, d))),
 

@@ -122,10 +122,12 @@ object VectorQueries {
     * rows total here, R point-lookups per query at any corpus size —
     * so R is a pure recall knob with corpus-independent cost.
     * REGISTERED R = 20, selected from the JOINT (np, R) grid
-    * (graft.RefineGrid, sf0.01, recall@3 vs brute at k = 128 — the
-    * r12 verdict's point that the two knobs interact: refine can
-    * never resurrect a neighbor whose cell np did not probe, so each
-    * np row saturates toward its exact-within-probed-cells ceiling):
+    * (sf0.01, recall@3 vs brute at k = 128, each point the
+    * registered ivfpqRefineTopk at (np, R), each np's ceiling the
+    * exact IVF ranking over the same probed cells — the two knobs
+    * interact: refine can never resurrect a neighbor whose cell np
+    * did not probe, so each np row saturates toward its
+    * exact-within-probed-cells ceiling):
     * {{{
     *   np=3  adc 0.207  R=10 0.353  R=20 0.453  R=40 0.493  ceiling 0.533
     *   np=4  adc 0.233  R=10 0.437  R=20 0.547  R=40 0.623  ceiling 0.677
@@ -717,565 +719,383 @@ object VectorQueries {
         sum(floor(element_at(col("embedding"), i + 1).cast("double")
           * lit(CentScale.toDouble) + lit(0.5)).cast("long")).as(s"c$i")): _*))
 
-  /** The sequential trainer's driver-held state: frozen starting
-    * quantizer, cumulative per-cell sums, current centroids. Each
-    * `update` is one MacQueen step over one micro-batch; `result()`
-    * is the final centroid table in long form. All three are exact
-    * driver values of ≤ KmCells rows (KmCents/KmSums): a step's
-    * control work — the fold, the means, every drift decision — is
-    * driver arithmetic over ONE collect() of the batch's per-cell
-    * sums, plans read the centroids as a LocalRelation, and plan
-    * depth is constant in the batch count.
-    *
-    * IDEMPOTENT per batch id — foreachBatch's replay contract (a
-    * failed/restarted micro-batch is REDELIVERED with the same id;
-    * the same contract the foreachBatch-sink spec pins): an
-    * already-applied id is a no-op, so a replay cannot double-count
-    * a batch's vectors into the cumulative sums. At scale this state
-    * is an idempotent upsert keyed by batch id in a transactional
-    * store; here the applied-id set is the driver-held equivalent.
+  /** A protocol's half of one trainer step: the (vec_id, kcell,
+    * embedding) frame the MacQueen fold reads, the batch's emission
+    * (if the protocol emits one), and the protocol's own state change,
+    * run at the trainer's commit point.
     */
-  private[graft] final class KmMiniBatch(s: SparkSession, d: String) {
-    private val frozen: KmCents =
+  private[graft] final case class KmServed(assigned: DataFrame,
+                                           emission: Option[DataFrame] = None,
+                                           publish: () => Unit = () => ())
+
+  /** The online k-means trainer — MacQueen's running mean, one step
+    * per micro-batch — under a serving protocol fixed when the
+    * instance is built: a subclass supplies `serve`, and the trainer
+    * owns the state every protocol shares (the frozen starting
+    * quantizer, the cumulative per-cell sums, the current centroids,
+    * the applied batch ids and the emissions). The centroids and sums
+    * are exact driver values of ≤ KmCells rows (KmCents/KmSums), so a
+    * step's control work — the fold, the means, every drift decision —
+    * is driver arithmetic over ONE collect() of the batch's per-cell
+    * sums, and plans read the centroids as a LocalRelation whose depth
+    * is constant in the batch count.
+    *
+    * Invariants of `step`, whatever the protocol:
+    *  - idempotent per batch id: an applied id is a no-op, so a
+    *    foreachBatch redelivery cannot double-count a batch;
+    *  - one commit point: `serve` materializes its tables and mutates
+    *    no instance state; the sums, the centroids, the protocol's
+    *    state and the emission move together after the fold, and the
+    *    id joins the applied set last — a failure anywhere before
+    *    leaves the instance untouched, so the redelivered id
+    *    re-applies;
+    *  - replay safety within one process: the applied set lives on the
+    *    driver, so a fresh instance (a restarted stream) starts from
+    *    batch 0; at scale it is an idempotent upsert keyed by batch id
+    *    in a transactional store.
+    */
+  private[graft] abstract class KmMiniBatch(s: SparkSession, d: String) {
+    protected final val frozen: KmCents =
       kmCentroidSeq(Tables.embeddingsSpread(s, d), KmRounds).last
     private var cum: KmSums = Map.empty
-    private var cents: KmCents = frozen
-    private def df(c: KmCents): DataFrame = kmCentsDf(s, c)
-    // Served emissions accumulate as a LIST of per-batch checkpointed
-    // frames, unioned lazily at the result call — checkpointing only
-    // the new batch keeps emission work linear in batch count (ADVICE
-    // r15: checkpointing the whole union each step re-materialized
-    // every prior batch's rows per step, quadratic in batches).
-    private var served: List[DataFrame] = Nil
-    private var servedTopk: List[DataFrame] = Nil
+    private var current: KmCents = frozen
     private val applied = scala.collection.mutable.Set.empty[Long]
-    // The serving mode the first step recorded. The three IVF serving
-    // protocols keep DISJOINT index state but share the applied set
-    // and the emission lists, so interleaving modes on one instance
-    // would silently no-op replays across modes and interleave
-    // emissions (ADVICE r16) — a mixed-mode step now fails loudly
-    // instead of being guarded by convention.
-    private var mode: Option[String] = None
+    // per-batch checkpointed emissions, unioned at the result call, so
+    // emission work stays linear in the batch count
+    private var emitted: List[DataFrame] = Nil
 
-    private def requireMode(m: String): Unit = {
-      require(mode.forall(_ == m),
-        s"KmMiniBatch is single-mode per instance: first step ran " +
-          s"'${mode.get}', this step is '$m' — use a fresh instance " +
-          "per serving protocol (shared applied/emission state would " +
-          "silently mix the modes)")
-      mode = Some(m)
-    }
+    /** The centroids the next batch assigns under. */
+    protected final def cents: KmCents = current
+    protected final def df(c: KmCents): DataFrame = kmCentsDf(s, c)
 
-    /** One MacQueen training step (stream_kmeans_minibatch's body). */
-    def update(batch: DataFrame, batchId: Long): Unit =
-      step(batch, batchId, serve = false)
+    /** The protocol's half of one step, run under `cents`. */
+    protected def serve(batch: DataFrame, batchId: Long): KmServed
 
-    /** Serve-then-train — the online-deployment shape
-      * (stream_kmeans_online_serve's body): the batch's vectors assign
-      * under the CURRENT centroids and that emission is recorded,
-      * then the SAME assignment feeds the MacQueen step, so the moved
-      * centroids are what the NEXT batch's admission broadcasts. One
-      * nearest-cell scan per batch covers both halves.
-      */
-    def serveAndUpdate(batch: DataFrame, batchId: Long): Unit =
-      step(batch, batchId, serve = true)
-
-    /** IVF TopK serving under the moving quantizer
-      * (stream_ann_ivf_online_topk's body): the batch's queries probe
-      * and the corpus inverted lists re-assign under the CURRENT
-      * centroid generation, the shared exact re-rank tail emits their
-      * top-3, then the same batch feeds the MacQueen step — so batch
-      * r+1's probes AND index run under moved centroids. The per-batch
-      * full-corpus re-assignment is the gate-scale form of the
-      * production epoch rebuild: a quantizer generation triggers ONE
-      * index re-assignment amortized over the epoch's queries (here
-      * each micro-batch is one epoch); probe lists stay per-query
-      * expressions either way.
-      */
-    def serveIvfAndUpdate(batch: DataFrame, batchId: Long): Unit =
-      step(batch, batchId, serve = false, ivf = true)
-
-    private def step(batch: DataFrame, batchId: Long,
-                     serve: Boolean, ivf: Boolean = false): Unit = synchronized {
-      requireMode(if (ivf) "serveIvfAndUpdate"
-        else if (serve) "serveAndUpdate" else "update")
-      if (applied.contains(batchId)) return // replay of a committed batch
-      // serving checkpoints the batch-sized assignment (read twice:
-      // emission + sums); the train-only path keeps the fused plan
-      // ivf scores the batch ONCE (checkpointed) and derives both the
-      // MacQueen assignment and the probe ranking from that frame —
-      // the "one nearest-cell scan per batch covers both halves"
-      // contract, same as serve's checkpointed assignment.
-      val bscored =
-        if (ivf) Some(kmScored(batch, df(cents)).localCheckpoint()) else None
-      val assigned =
-        if (serve) kmAssigned(batch, df(cents)).localCheckpoint()
-        else bscored.fold(kmAssigned(batch, df(cents)))(kmAssignedFromScored)
-      // IVF serving half (before the step — generation r serves batch
-      // r): corpus index and the batch's query probe lists both under
-      // the CURRENT centroids, then the shared exact re-rank tail.
-      // The emission is query-count-bounded (≤ 3 rows per query).
-      val newServedTopk = if (!ivf) None else {
-        val corpusIdx = kmAssigned(Tables.embeddingsSpread(s, d), df(cents))
-          .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
-            col("embedding"))
-        Some(serveIvf(corpusIdx, bscored.get, batch).localCheckpoint())
-      }
-      val (newCum, newCents) = macQueenFold(assigned)
-      // The served emission accumulates as checkpointed executor
-      // blocks — the gate-local stand-in for the production sink
-      // append this emission IS at scale (each batch's rows land in
-      // the sink exactly once, guarded by the same batch-id
-      // idempotence). `assigned` is already checkpointed on the serve
-      // path, so the projection reads materialized blocks.
-      val newServed =
-        if (!serve) None
-        else Some(assigned.select(col("vec_id"), col("kcell")))
-      // Commit point: the id joins `applied` only after ALL state
-      // tables are materialized — a failure anywhere above leaves the
-      // instance untouched, so a redelivery of the same id RE-APPLIES
-      // instead of silently no-oping over half-updated state (the
-      // transactional half of the replay contract).
+    /** One step over micro-batch `batchId` — the foreachBatch body. */
+    final def step(batch: DataFrame, batchId: Long): Unit = synchronized {
+      if (applied.contains(batchId)) return
+      val served = serve(batch, batchId)
+      val newCum = kmFoldSums(cum, kmAssignedSums(served.assigned))
+      val newCents = kmCumCentroids(frozen, newCum)
+      // commit point
       cum = newCum
-      cents = newCents
-      newServed.foreach(f => served = served :+ f)
-      newServedTopk.foreach(f => servedTopk = servedTopk :+ f)
+      current = newCents
+      served.publish()
+      emitted = emitted ++ served.emission
       applied.add(batchId)
     }
-    /** The IVF serving half shared by the always-rebuild and
-      * drift-gated steps (code-review r16 — it lived in two near
-      * copies): probe lists from the batch's scored frame, the query
-      * rows, the shared exact re-rank tail — parameterized only by
-      * which generation's corpus index and scored frame feed it, so
-      * the two gates' emissions cannot drift apart (VectorSpec
-      * compares them directly in the staleness-cost pin).
+
+    /** The current centroid table in long form (kcell, pos, c). */
+    def result(): DataFrame = kmUnnest(df(cents))
+
+    /** Every applied batch's emission. */
+    protected final def emissions: DataFrame = {
+      require(emitted.nonEmpty,
+        "no served batch yet — the gate must drive at least one step")
+      emitted.reduce(_ unionAll _)
+    }
+  }
+
+  /** Train only (stream_kmeans_minibatch): the batch assigns under the
+    * current centroids inside the fold's own plan.
+    */
+  private[graft] final class KmTrainOnly(s: SparkSession, d: String)
+      extends KmMiniBatch(s, d) {
+    protected def serve(batch: DataFrame, batchId: Long): KmServed =
+      KmServed(kmAssigned(batch, df(cents)))
+  }
+
+  /** Serve, then train (stream_kmeans_online_serve): the batch's
+    * vectors assign under the current centroids and that assignment is
+    * both the emission and the fold's input — one nearest-cell scan
+    * per batch — so the moved centroids are what the next batch
+    * assigns under.
+    */
+  private[graft] final class KmServeAssign(s: SparkSession, d: String)
+      extends KmMiniBatch(s, d) {
+    protected def serve(batch: DataFrame, batchId: Long): KmServed = {
+      val assigned = kmAssigned(batch, df(cents)).localCheckpoint()
+      KmServed(assigned, Some(assigned.select(col("vec_id"), col("kcell"))))
+    }
+
+    /** Every batch's (vec_id, kcell): batch r assigned under the
+      * centroids after r steps.
       */
-    private def serveIvf(corpusIdx: DataFrame, bscored: DataFrame,
+    def servedResult(): DataFrame = emissions
+  }
+
+  /** IVF top-3 of the batch's queries: probe lists from `bscored`
+    * (the batch scored under the quantizer `corpusIdx` was built
+    * with), then the shared exact re-rank tail over the (nn_id, cell,
+    * embedding) lists.
+    */
+  private def kmServeIvf(corpusIdx: DataFrame, bscored: DataFrame,
                          batch: DataFrame): DataFrame = {
-      val probed = kmProbeSelection(bscored, NProbe)
-      val q = batch.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      ivfTopkTail(corpusIdx, probed, q)
-    }
+    val probed = kmProbeSelection(bscored, NProbe)
+    val q = batch.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+    ivfTopkTail(corpusIdx, probed, q)
+  }
 
-    /** The MacQueen fold shared by every serving mode: ONE collect()
-      * of the batch's per-cell integer sums (≤ KmCells rows), folded
-      * into the cumulative state on the driver, the centroids moved
-      * to the cumulative means (empty cells keep the frozen
-      * centroid). Returns the new state WITHOUT assigning it — the
-      * caller's one commit point decides when the step becomes
-      * visible.
+  /** The index a generation protocol serves from. A generation is
+    * built whole under one quantizer and grows by appends assigned
+    * under that same quantizer, so probes and lists never mix
+    * generations.
+    */
+  private[graft] trait KmArtifact {
+    type Gen
+
+    /** The generation serving batch `batchId`, and the batch's top-3
+      * served from it: on `rebuild` a new generation holding `prior`'s
+      * corpus and the batch, assigned under `cents`; otherwise `prior`
+      * with the batch appended. `bscored` is the batch scored under the
+      * serving generation's quantizer. The caller commits the returned
+      * generation; nothing else may depend on it before.
       */
-    private def macQueenFold(assigned: DataFrame): (KmSums, KmCents) = {
-      val newCum = kmFoldSums(cum, kmAssignedSums(assigned))
-      (newCum, kmCumCentroids(frozen, newCum))
-    }
+    def advance(prior: Option[Gen], rebuild: Boolean, cents: KmCents,
+                bscored: DataFrame, batch: DataFrame,
+                batchId: Long): (Gen, DataFrame)
+  }
 
-    // ---- drift-gated epoch state (serveIvfDriftAndUpdate) ----------
-    // The inverted lists last built, and the quantizer generation they
-    // were built under. BOTH mutate only at the batch commit point,
-    // together with the trainer state (code-review r16: an early
-    // `idxCents = cents` before the new lists materialized meant a
-    // mid-rebuild failure left the generation moved but the lists
-    // stale — the replay then read drift 0 against the moved
-    // generation, skipped the rebuild, and served probes scored under
-    // the NEW quantizer against the OLD lists: exactly the mixed
-    // generations the serving contract forbids, and every later drift
-    // check was suppressed by the phantom generation).
-    private var idxCents: KmCents = frozen
-    private var idxCorpus: Option[DataFrame] = None
-    private var rebuilt: List[Long] = Nil
+  /** In-memory inverted lists: the full corpus assigned under the
+    * generation's quantizer, checkpointed. The corpus is static, so an
+    * append keeps the lists as they are.
+    */
+  private[graft] final class KmLists(s: SparkSession, d: String) extends KmArtifact {
+    type Gen = DataFrame
 
-    /** Drift-gated IVF serving under the moving quantizer
-      * (stream_ann_ivf_online_topk_drift's body) — the production
-      * epoch-rebuild protocol serveIvfAndUpdate's doc argues, now as a
-      * measured knob: the corpus inverted lists rebuild ONLY when the
-      * quantizer has drifted past KmDriftRebuild since the last
-      * rebuild (max per-cell squared L2 movement, exact fixed-point —
-      * kmDriftFp2); intervening batches serve from the STALE index
-      * with their probe lists under the SAME stale generation (cells
-      * are defined by the index's centroids — probing a newer
-      * quantizer against older lists would mix generations). Training
-      * is untouched: every batch's MacQueen step assigns under the
-      * CURRENT centroids, so the trainer trajectory is identical to
-      * serveIvfAndUpdate's and the oracle reuses the same unrolled
-      * chain, adding only the drift decisions (kmDriftDecisionSql).
-      * Re-assignment work is sub-linear in batch count whenever the
-      * gate skips (measured: the KmDriftRebuild doc, ScalingCheck r16); the
-      * recall cost of staleness is floor-pinned in VectorSpec.
-      *
-      * The drift scalar is the gate's per-batch control decision
-      * (the class the batch-id bookkeeping is in): O(KmCells × Dim)
-      * driver arithmetic over two driver-held tables, no Spark job.
-      */
-    def serveIvfDriftAndUpdate(batch: DataFrame, batchId: Long): Unit = synchronized {
-      requireMode("serveIvfDriftAndUpdate")
-      if (applied.contains(batchId)) return // replay of a committed batch
-      val rebuild = idxCorpus.isEmpty ||
-        kmDriftFp2(cents, idxCents) > KmDriftRebuild
-      // The serving generation for THIS batch — on a rebuild the new
-      // lists materialize into a LOCAL here; no instance state moves
-      // until the commit point below (code-review r16).
-      val (srvCents, srvCorpus) =
+    def advance(prior: Option[DataFrame], rebuild: Boolean, cents: KmCents,
+                bscored: DataFrame, batch: DataFrame,
+                batchId: Long): (DataFrame, DataFrame) = {
+      val lists =
         if (rebuild)
-          (cents, kmAssigned(Tables.embeddingsSpread(s, d), df(cents))
+          kmAssigned(Tables.embeddingsSpread(s, d), kmCentsDf(s, cents))
             .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
               col("embedding"))
-            .localCheckpoint())
-        else (idxCents, idxCorpus.get)
-      // Serving half, wholly under the INDEX generation: the batch's
-      // query probe lists score against srvCents, the corpus side is
-      // the (possibly stale) checkpointed inverted lists — no
-      // re-assignment on the skip path.
-      val bscoredIdx = kmScored(batch, df(srvCents)).localCheckpoint()
-      val cur = serveIvf(srvCorpus, bscoredIdx, batch).localCheckpoint()
-      // MacQueen step under the CURRENT centroids — on a rebuild batch
-      // the index generation IS the current one, so the serving scan
-      // doubles as the training assignment (the one-scan contract);
-      // on a skip batch the two generations differ and the batch
-      // scores once more under the current quantizer.
-      val assigned =
-        if (rebuild) kmAssignedFromScored(bscoredIdx)
-        else kmAssigned(batch, df(cents))
-      val (newCum, newCents) = macQueenFold(assigned)
-      // Commit point (the update/serve contract): trainer state AND
-      // index generation mutate together, after every table above has
-      // materialized — a failure anywhere earlier leaves the instance
-      // untouched and the id un-applied, so a redelivery re-runs the
-      // whole step (including the rebuild decision) from clean state.
-      cum = newCum
-      cents = newCents
-      idxCents = srvCents
-      idxCorpus = Some(srvCorpus)
-      if (rebuild) rebuilt = rebuilt :+ batchId
-      servedTopk = servedTopk :+ cur
-      applied.add(batchId)
+            .localCheckpoint()
+        else prior.get
+      (lists, kmServeIvf(lists, bscored, batch))
+    }
+  }
+
+  /** A persisted, cell-partitioned generation store. Each instance
+    * writes one run directory under `storeRoot`; generation g is the
+    * directory gen_g (partitionBy ingest, cell) and the run's LATEST
+    * marker names the serving one.
+    *  - rebuild: the prior generation's rows, re-assigned under the
+    *    current quantizer, and the batch's rows overwrite gen_batchId,
+    *    then LATEST switches to it (tmp + rename — atomic);
+    *  - append: the batch's rows land as the current generation's
+    *    ingest=batchId partitions by dynamic overwrite;
+    *  - serve: from the generation's scan, which the broadcast probe
+    *    join prunes to the probed cells.
+    * Replay-safe within one process: a rebuild rewrites a directory
+    * named by the batch id, an append overwrites only its own ingest
+    * partition, and the prior corpus is read from the committed
+    * generation, never from LATEST — a redelivered batch reproduces
+    * the store whatever the failure point. Reads pass the written
+    * schema (genSchema), so no read infers one.
+    */
+  private[graft] abstract class KmGenStore(s: SparkSession, storeRoot: String)
+      extends KmArtifact {
+    type Gen = String
+
+    /** This instance's run directory. */
+    val runRoot: String = s"$storeRoot/run_${System.nanoTime()}"
+
+    /** The batch's store rows (…, ingest = batchId, cell from `bscored`). */
+    protected def batchRows(bscored: DataFrame, batch: DataFrame,
+                            batchId: Long): DataFrame
+
+    /** A prior generation's rows, re-assigned under `cents` into
+      * ingest = batchId.
+      */
+    protected def priorRows(prior: DataFrame, cents: KmCents,
+                            batchId: Long): DataFrame
+
+    /** The batch's top-3 served from a generation's scan. */
+    protected def serveScan(scan: DataFrame, bscored: DataFrame,
+                            batch: DataFrame): DataFrame
+
+    final def advance(prior: Option[String], rebuild: Boolean, cents: KmCents,
+                      bscored: DataFrame, batch: DataFrame,
+                      batchId: Long): (String, DataFrame) = {
+      val rows = batchRows(bscored, batch, batchId)
+      def read(dir: String) = s.read.schema(genSchema(rows)).parquet(dir)
+      val dir = if (rebuild) s"$runRoot/gen_$batchId" else prior.get
+      val out =
+        if (rebuild) prior.fold(rows)(g => priorRows(read(g), cents, batchId)
+          .unionByName(rows))
+        else rows
+      val w = out.repartition(col("cell")).write.mode("overwrite")
+      (if (rebuild) w else w.option("partitionOverwriteMode", "dynamic"))
+        .partitionBy("ingest", "cell").parquet(dir)
+      ivfStoreCommitLatest(runRoot, dir)
+      (dir, serveScan(read(dir), bscored, batch))
     }
 
-    /** Batch ids at which the drift gate rebuilt the inverted lists
-      * (batch 0 always — the initial build). The measurement surface
-      * for the sub-linear re-assignment claim (VectorSpec).
-      * Shared by the persisted-refresh mode (instances are single-mode,
-      * so the log is unambiguous) — there it is the generation list:
-      * entry g means directory gen_g exists under persistedRunRoot.
+    /** At drain: compact the current generation, bound the run to ≤ 2
+      * generations (ivfStoreFinalize), then publish the run as the
+      * store root's current one.
       */
-    def rebuildLog: Seq[Long] = rebuilt
-
-    // ---- persisted-refresh state (serveIvfPersistedAndUpdate) ------
-    // The composed production index story (r16 verdict Next #1): the
-    // drift gate's epoch protocol with the PERSISTED cell-partitioned
-    // layout as the index — generations are parquet directories, not
-    // localCheckpoint blocks. Per-instance run directory so two gates
-    // (bench reps, concurrent JVMs) never clobber each other's
-    // generations; the gate publishes the run as the corpus's current
-    // refresh store after the drain.
-    private[graft] val persistedRunRoot: String =
-      s"${refreshStoreRoot(d)}/run_${System.nanoTime()}"
-    private var pGen: Option[String] = None
-    private var pIdxCents: KmCents = frozen
-
-    /** Drift-gated IVF serving FROM A PERSISTED, INGESTED store
-      * (stream_ann_ivf_persisted_refresh's body) — the two halves of
-      * the production index story composed (r16 verdict Next #1):
-      *
-      *  - INGEST: every arriving batch lands in the store. On a skip
-      *    batch it APPENDS — assigned under the current GENERATION's
-      *    quantizer (rows join the generation they arrive into) and
-      *    written as that generation's ingest=batchId partition, so
-      *    existing lists are never rewritten and a REPLAYED batch
-      *    dynamically overwrites ITS OWN partition instead of
-      *    double-appending (the exactly-once half the streaming sink's
-      *    commit log provides elsewhere, here as idempotent-by-layout).
-      *  - REBUILD: when the trainer has drifted past KmDriftRebuild
-      *    since the serving generation was built (batch 0 always), the
-      *    whole ARRIVED corpus — read back from the superseded
-      *    generation, plus this batch — re-assigns under the CURRENT
-      *    quantizer into a NEW generation directory gen_batchId
-      *    (repartition(cell): one file per cell per ingest), and
-      *    serving switches to it ATOMICALLY via the run root's LATEST
-      *    marker (tmp+rename). Superseded generations are left in
-      *    place as compaction input (ivfStoreCompact drops them).
-      *  - SERVE: the batch's queries probe under the generation's
-      *    quantizer against the ARTIFACT's scan — the broadcast probe
-      *    join prunes it to the probed cells' partitions
-      *    (PartitioningSpec pins files read on the current
-      *    generation) — then the shared exact re-rank tail.
-      *  - TRAIN: the MacQueen step under the CURRENT centroids; on a
-      *    rebuild batch the serving scan doubles as the training
-      *    assignment (the one-scan contract).
-      *
-      * State mutates only at the commit point. The store writes
-      * before it are replay-safe by construction WITHIN one process
-      * (ADVICE r17 — the scope of the claim): a rebuild rewrites the
-      * deterministic gen_batchId directory, an append dynamically
-      * overwrites its own ingest partition, and the prior corpus is
-      * read from the COMMITTED pGen (never the marker), so a batch
-      * REDELIVERED TO THIS INSTANCE — the foreachBatch replay the
-      * AvailableNow gates actually exercise — reproduces the
-      * identical store whatever the failure point. Cross-restart
-      * resume (a checkpoint-recovered stream handing a fresh
-      * KmMiniBatch an old batch id) is OUT OF CONTRACT for the whole
-      * KmMiniBatch family: applied/pGen/cents are in-memory, so a
-      * fresh instance starts a new run root from batch 0 — at scale
-      * the applied-id set and generation pointer live in a
-      * transactional store, as the class doc's idempotence note says.
-      * Oracle: the drift chain with the arrived-corpus
-      * restriction (kmOnlineIvfPersistedRefreshOracleSql).
-      *
-      * `thr` is the end-to-end measurement knob (the composed-gate
-      * sweep recorded at the KmDriftRebuild doc); the
-      * registered gate and the oracle pin the default.
-      */
-    def serveIvfPersistedAndUpdate(batch: DataFrame, batchId: Long,
-                                   thr: Long = KmDriftRebuild): Unit = synchronized {
-      requireMode("serveIvfPersistedAndUpdate")
-      if (applied.contains(batchId)) return // replay of a committed batch
-      val rebuild = pGen.isEmpty || kmDriftFp2(cents, pIdxCents) > thr
-      val srvCents = if (rebuild) cents else pIdxCents
-      // ONE nearest-cell scan of the batch under the generation
-      // quantizer serves three consumers: the batch's store rows (on
-      // both paths the arriving rows are assigned under srvCents —
-      // the generation they join), the probe ranking, and on rebuild
-      // batches (srvCents == cents) the training assignment — the
-      // one-scan contract the sibling gates keep (code-review r17:
-      // the skip path previously scored the batch twice).
-      val bscoredIdx = kmScored(
-        batch.select(col("vec_id"), col("embedding")), df(srvCents))
-        .localCheckpoint()
-      val bRows = kmAssignedFromScored(bscoredIdx)
-        .select(col("vec_id").as("nn_id"), col("embedding"),
-          lit(batchId).as("ingest"), col("kcell").as("cell"))
-      val genDir =
-        if (rebuild) {
-          // prior corpus re-read from the COMMITTED generation (never
-          // the marker) and re-assigned under the current quantizer;
-          // the arriving batch's rows come from the shared scan
-          val prior = pGen.map(g =>
-            kmAssigned(s.read.schema(genSchema(bRows)).parquet(g)
-              .select(col("nn_id").as("vec_id"), col("embedding")), df(cents))
-              .select(col("vec_id").as("nn_id"), col("embedding"),
-                lit(batchId).as("ingest"), col("kcell").as("cell")))
-          val dir = s"$persistedRunRoot/gen_$batchId"
-          prior.fold(bRows)(_ unionByName bRows)
-            .repartition(col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("ingest", "cell").parquet(dir)
-          dir
-        } else {
-          val dir = pGen.get
-          bRows
-            .repartition(col("cell"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest", "cell").parquet(dir)
-          dir
-        }
-      // the atomic serving switch — readers resolving the marker never
-      // observe a half-written generation (the write above completed)
-      ivfStoreCommitLatest(persistedRunRoot, genDir)
-      // serving half, wholly under the generation's quantizer, corpus
-      // side = the artifact's (pruned) scan
-      val idx = s.read.schema(genSchema(bRows)).parquet(genDir)
-        .select(col("nn_id"), col("embedding"), col("cell"))
-      val cur = serveIvf(idx, bscoredIdx, batch).localCheckpoint()
-      val assigned =
-        if (rebuild) kmAssignedFromScored(bscoredIdx)
-        else kmAssigned(batch, df(cents))
-      val (newCum, newCents) = macQueenFold(assigned)
-      // commit point: trainer state and generation move together
-      cum = newCum
-      cents = newCents
-      pIdxCents = srvCents
-      pGen = Some(genDir)
-      if (rebuild) rebuilt = rebuilt :+ batchId
-      servedTopk = servedTopk :+ cur
-      applied.add(batchId)
+    def publish(): Unit = {
+      ivfStoreFinalize(s, runRoot)
+      ivfStoreCommitLatest(storeRoot, runRoot)
     }
+  }
 
-    // ---- PQ-code persisted-refresh state (servePqPersistedAndUpdate) --
-    // The code-table twin of the raw-vector refresh state above: same
-    // generation protocol, but the persisted artifact is the packed
-    // PQ code table (the repo's own r17 rationale: at 100 TB the
-    // artifact worth persisting is the 32x-compressed code store, not
-    // full embedding arrays). Dedicated fields rather than reusing
-    // pGen/pIdxCents — instances are single-mode, but each mode's
-    // state reads as its own protocol.
-    private[graft] val pqPersistedRunRoot: String =
-      s"${pqRefreshStoreRoot(d)}/run_${System.nanoTime()}"
-    private var cpGen: Option[String] = None
-    private var cpIdxCents: KmCents = frozen
-    // The FROZEN offline-trained codebook (the train-offline/
-    // serve-online deployment every PQ face uses): trained once per
-    // instance on the static corpus, broadcast per batch. Lazy — only
-    // the PQ mode pays for the Lloyd rounds.
+  /** The raw-vector store (stream_ann_ivf_persisted_refresh): rows are
+    * (nn_id, embedding, ingest, cell), served by the exact re-rank
+    * tail.
+    */
+  private[graft] final class KmRawStore(s: SparkSession, d: String)
+      extends KmGenStore(s, refreshStoreRoot(d)) {
+    private def rows(assigned: DataFrame, batchId: Long): DataFrame =
+      assigned.select(col("vec_id").as("nn_id"), col("embedding"),
+        lit(batchId).as("ingest"), col("kcell").as("cell"))
+
+    protected def batchRows(bscored: DataFrame, batch: DataFrame,
+                            batchId: Long): DataFrame =
+      rows(kmAssignedFromScored(bscored), batchId)
+
+    protected def priorRows(prior: DataFrame, cents: KmCents,
+                            batchId: Long): DataFrame =
+      rows(kmAssigned(prior.select(col("nn_id").as("vec_id"), col("embedding")),
+        kmCentsDf(s, cents)), batchId)
+
+    protected def serveScan(scan: DataFrame, bscored: DataFrame,
+                            batch: DataFrame): DataFrame =
+      kmServeIvf(scan.select(col("nn_id"), col("embedding"), col("cell")),
+        bscored, batch)
+  }
+
+  /** The PQ code store (stream_ann_ivfpq_persisted_refresh): rows are
+    * (vec_id, cell, packed codes, ingest), the codes encoded under a
+    * codebook trained once per instance on the static corpus. Raw
+    * (non-residual) PQ under a frozen codebook makes codes
+    * generation-invariant, so a rebuild re-buckets the stored codes
+    * and never re-encodes them. Serving builds each query's integer
+    * LUT against the same codebook and runs the ADC tail.
+    */
+  private[graft] final class KmPqStore(s: SparkSession, d: String)
+      extends KmGenStore(s, pqRefreshStoreRoot(d)) {
     private lazy val pqCb: DataFrame =
       pqCodebook(pqSubs(s, d).localCheckpoint(), k = IvfPqK)
 
-    /** Drift-refreshed PERSISTED PQ CODE STORE serving
-      * (stream_ann_ivfpq_persisted_refresh's body) — the r17 verdict's
-      * last open seam closed: serveIvfPersistedAndUpdate composes the
-      * refresh protocol with the RAW-VECTOR store; this composes it
-      * with the artifact a 100 TB deployment actually persists, the
-      * cell-partitioned PACKED CODE table (Jégou et al. TPAMI'11
-      * fig. 5; FAISS IndexIVFPQ's on-disk form):
-      *
-      *  - INGEST: arriving vectors PQ-encode under the FROZEN offline
-      *    codebook (pqSubsOf/pqAssign — the batch faces' exact
-      *    arithmetic), take their cell under the current GENERATION's
-      *    quantizer, pack to one array<tinyint> row, and land as that
-      *    generation's idempotent ingest=batchId partitions (dynamic
-      *    overwrite — a redelivered batch overwrites its own rows).
-      *  - REBUILD: when the MacQueen trainer has drifted past `thr`
-      *    since the serving generation was built (batch 0 always),
-      *    the whole arrived corpus re-enters a NEW generation
-      *    directory with cells RE-ASSIGNED under the CURRENT
-      *    quantizer; the code bytes are read back from the superseded
-      *    generation UNCHANGED — raw (non-residual) PQ under a frozen
-      *    codebook makes codes generation-invariant, so a rebuild
-      *    re-buckets the store, never re-quantizes it. (The
-      *    alternative composition — codebook drift triggering a
-      *    RE-ENCODED generation — would put the drift metric on the
-      *    codebook and rewrite code bytes too; with residual PQ it
-      *    becomes mandatory, since codes would depend on the cell
-      *    centroids. Documented, not built: the registered family is
-      *    raw-PQ-by-measurement, see ivfpqResidualTopk's doc.)
-      *    Serving switches atomically via the run root's LATEST
-      *    marker; superseded generations are compaction input.
-      *  - SERVE: the batch's queries build their integer LUT against
-      *    the frozen codebook and probe under the generation's
-      *    quantizer; the corpus side is the ARTIFACT's posexploded
-      *    scan, pruned to the probed cells' partitions by the
-      *    broadcast probe join (PartitioningSpec pins files read on
-      *    the current code generation); then the shared ADC tail.
-      *  - TRAIN: the MacQueen step under the CURRENT centroids; on a
-      *    rebuild batch the serving scan doubles as the training
-      *    assignment (the one-scan contract).
-      *
-      * Same replay scope as the raw twin: idempotent-by-layout within
-      * one process; cross-restart resume is out of contract for the
-      * KmMiniBatch family. Oracle: the shared drift recurrence over
-      * the ADC chain, arrived-corpus-restricted, batch-for-batch
-      * (kmOnlineIvfPqPersistedRefreshOracleSql).
-      */
-    def servePqPersistedAndUpdate(batch: DataFrame, batchId: Long,
-                                  thr: Long = KmDriftRebuild): Unit = synchronized {
-      requireMode("servePqPersistedAndUpdate")
-      if (applied.contains(batchId)) return // replay of a committed batch
-      val rebuild = cpGen.isEmpty || kmDriftFp2(cents, cpIdxCents) > thr
-      val srvCents = if (rebuild) cents else cpIdxCents
-      // ONE nearest-cell scan of the batch under the generation
-      // quantizer (the sibling gates' one-scan contract): store cells
-      // for the arriving rows, probe ranking, and on rebuild batches
-      // the training assignment
-      val bscoredIdx = kmScored(
-        batch.select(col("vec_id"), col("embedding")), df(srvCents))
-        .localCheckpoint()
-      val bRows = packCodes(
+    protected def batchRows(bscored: DataFrame, batch: DataFrame,
+                            batchId: Long): DataFrame =
+      packCodes(
         pqAssign(pqSubsOf(batch), pqCb)
           .select(col("vec_id"), col("sub_id"), col("code"))
-          .join(kmAssignedFromScored(bscoredIdx)
+          .join(kmAssignedFromScored(bscored)
             .select(col("vec_id"), col("kcell").as("cell")), "vec_id"))
         .withColumn("ingest", lit(batchId))
-      val genDir =
-        if (rebuild) {
-          // prior codes read back from the COMMITTED generation (never
-          // the marker) with their cells re-assigned under the current
-          // quantizer — the embeddings join restricts the raw table to
-          // the arrived ids (vec_id-keyed; co-partitioned at scale)
-          val prior = cpGen.map { g =>
-            val pc = s.read.schema(genSchema(bRows)).parquet(g)
-              .select(col("vec_id"), col("codes"))
-            pc.join(
-              kmAssigned(Tables.embeddingsSpread(s, d)
-                .join(pc.select(col("vec_id")), "vec_id"), df(cents))
-                .select(col("vec_id"), col("kcell").as("cell")), "vec_id")
-              .select(col("vec_id"), col("cell"), col("codes"),
-                lit(batchId).as("ingest"))
-          }
-          val dir = s"$pqPersistedRunRoot/gen_$batchId"
-          prior.fold(bRows)(_ unionByName bRows)
-            .repartition(col("cell"))
-            .write.mode("overwrite")
-            .partitionBy("ingest", "cell").parquet(dir)
-          dir
-        } else {
-          val dir = cpGen.get
-          bRows
-            .repartition(col("cell"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest", "cell").parquet(dir)
-          dir
-        }
-      ivfStoreCommitLatest(pqPersistedRunRoot, genDir)
-      // ADC serving half, wholly under the generation's quantizer:
-      // corpus side = the artifact's pruned scan, probe lists from the
-      // shared batch scan, LUT from the frozen codebook
-      val codes = s.read.schema(genSchema(bRows)).parquet(genDir)
-        .select(col("vec_id"), col("cell"),
-          posexplode(col("codes")))
-        .select(col("vec_id"), col("cell"),
-          col("pos").as("sub_id"), col("col").cast("long").as("code"))
-      val probed = kmProbeSelection(bscoredIdx, NProbe)
-      val lut = pqQueryLut(
-        pqSubsOf(batch.filter(col("vec_id") < NQueries)), pqCb)
-      val cur = adcServeTail(codes, probed, lut).localCheckpoint()
-      val assigned =
-        if (rebuild) kmAssignedFromScored(bscoredIdx)
-        else kmAssigned(batch, df(cents))
-      val (newCum, newCents) = macQueenFold(assigned)
-      // commit point: trainer state and code generation move together
-      cum = newCum
-      cents = newCents
-      cpIdxCents = srvCents
-      cpGen = Some(genDir)
-      if (rebuild) rebuilt = rebuilt :+ batchId
-      servedTopk = servedTopk :+ cur
-      applied.add(batchId)
+
+    // cells re-assigned from the raw embeddings of the stored ids
+    // (vec_id-keyed; co-partitioned at scale)
+    protected def priorRows(prior: DataFrame, cents: KmCents,
+                            batchId: Long): DataFrame = {
+      val pc = prior.select(col("vec_id"), col("codes"))
+      pc.join(
+        kmAssigned(Tables.embeddingsSpread(s, d)
+          .join(pc.select(col("vec_id")), "vec_id"), kmCentsDf(s, cents))
+          .select(col("vec_id"), col("kcell").as("cell")), "vec_id")
+        .select(col("vec_id"), col("cell"), col("codes"),
+          lit(batchId).as("ingest"))
     }
 
-    // ---- per-cell incremental-reindex state (serveIvfIncrAndUpdate) --
-    // Each cell's list-build centroid (the per-cell generation —
-    // tracked as centroid VALUES, not generation numbers, so drift is
-    // a direct per-cell comparison) and the patchwork inverted lists.
-    // Both mutate only at the commit point, with the trainer state.
+    protected def serveScan(scan: DataFrame, bscored: DataFrame,
+                            batch: DataFrame): DataFrame = {
+      val codes = scan
+        .select(col("vec_id"), col("cell"), posexplode(col("codes")))
+        .select(col("vec_id"), col("cell"),
+          col("pos").as("sub_id"), col("col").cast("long").as("code"))
+      val lut = pqQueryLut(
+        pqSubsOf(batch.filter(col("vec_id") < NQueries)), pqCb)
+      adcServeTail(codes, kmProbeSelection(bscored, NProbe), lut)
+    }
+  }
+
+  /** Threshold that trips on every batch: kmDriftFp2 ≥ 0 > -1. */
+  private[graft] val KmRebuildAlways: Long = -1L
+
+  /** Drift-gated IVF serving from a generation `artifact` under the
+    * moving quantizer (stream_ann_ivf_online_topk with
+    * thr = KmRebuildAlways, stream_ann_ivf_online_topk_drift over
+    * KmLists, and the two persisted-refresh gates over KmRawStore and
+    * KmPqStore, all with thr = KmDriftRebuild). One step:
+    *  - rebuild iff there is no generation yet or the trainer has
+    *    drifted past `thr` since the serving generation was built
+    *    (kmDriftFp2 — max per-cell squared movement, exact fixed
+    *    point, driver arithmetic);
+    *  - the batch is scored ONCE under the serving generation's
+    *    quantizer and checkpointed; that scan feeds the batch's store
+    *    rows, the probe ranking and, on a rebuild batch (where the
+    *    generation's quantizer IS the current one), the fold;
+    *  - the artifact builds or appends and serves the batch's queries;
+    *  - the fold reads the batch under the current centroids, so the
+    *    trainer trajectory is the same whatever the artifact or `thr`;
+    *  - the commit point moves the generation, its quantizer, the
+    *    rebuild log and the emission together.
+    */
+  private[graft] final class KmIvfGenerations[A <: KmArtifact](
+      s: SparkSession, d: String, thr: Long, val artifact: A)
+      extends KmMiniBatch(s, d) {
+    private var gen: Option[artifact.Gen] = None
+    private var genCents: KmCents = frozen
+    private var rebuilt: List[Long] = Nil
+
+    protected def serve(batch: DataFrame, batchId: Long): KmServed = {
+      val rebuild = gen.isEmpty || kmDriftFp2(cents, genCents) > thr
+      val srvCents = if (rebuild) cents else genCents
+      val bscored = kmScored(batch.select(col("vec_id"), col("embedding")),
+        df(srvCents)).localCheckpoint()
+      val (g, topk) = artifact.advance(gen, rebuild, cents, bscored, batch, batchId)
+      val cur = topk.localCheckpoint()
+      val assigned =
+        if (rebuild) kmAssignedFromScored(bscored)
+        else kmAssigned(batch, df(cents))
+      KmServed(assigned, Some(cur), () => {
+        gen = Some(g)
+        genCents = srvCents
+        if (rebuild) rebuilt = rebuilt :+ batchId
+      })
+    }
+
+    /** Batch ids that built a generation (batch 0 always); for a store
+      * artifact, entry g names the directory gen_g under its run root.
+      */
+    def rebuildLog: Seq[Long] = rebuilt
+
+    /** Every batch's top-3: batch r's queries served from the
+      * generation committed at batch r.
+      */
+    def servedTopkResult(): DataFrame = emissions
+  }
+
+  /** Per-cell incremental reindexing (stream_ann_ivf_online_topk_incr):
+    * a cell whose OWN centroid moved past KmDriftRebuild since its list
+    * was built re-assigns its members under the current quantizer, and
+    * they migrate into their new cells' lists (a patchwork index);
+    * unmoved cells keep their lists. Probes always score under the
+    * current quantizer, and that batch scan also feeds the fold. The
+    * moved set and the centroid patch are driver arithmetic
+    * (kmDriftPerCell); the member migration is the only data work —
+    * a batch with no moved cell unions an empty re-assignment — so
+    * re-assignment work per batch is the moved cells' members.
+    */
+  private[graft] final class KmIvfIncr(s: SparkSession, d: String)
+      extends KmMiniBatch(s, d) {
+    // each cell's list-build centroid and the lists, moved at the
+    // commit point
     private var cellCents: KmCents = frozen
     private var lists: Option[DataFrame] = None
     private var movedLog: List[Seq[Long]] = Nil
 
-    /** PER-CELL incremental reindexing — the finer production protocol
-      * next to serveIvfDriftAndUpdate's whole-index epoch gate
-      * (stream_ann_ivf_online_topk_incr's body): instead of rebuilding
-      * ALL inverted lists when the quantizer drifts, only the cells
-      * whose OWN centroid moved past KmDriftRebuild since their list
-      * was last built rebuild — their members re-assign under the
-      * CURRENT quantizer and MIGRATE into their new cells' lists (a
-      * member leaving a rebuilt cell joins a list that was not itself
-      * rebuilt — the patchwork index real incremental-reindex systems
-      * maintain); unmoved cells serve their stale lists untouched.
-      * Probe lists are per-query expressions and always score against
-      * the CURRENT quantizer (fresh probes over stale lists — the
-      * production serving reality), and that same batch scan feeds the
-      * MacQueen step, so the one-scan contract holds on EVERY batch
-      * here (the whole-index gate only gets it on rebuild batches).
-      *
-      * The moved set and the centroid patch are driver arithmetic
-      * over the driver-held tables (kmDriftPerCell, no Spark job);
-      * the member migration is the only data work, and a batch with
-      * zero moved cells simply unions an empty re-assignment — no
-      * control-flow branch on data. Re-assignment work per
-      * batch ∝ members of moved cells only — the sub-linear
-      * incremental cost (movedLog is the measurement surface; the
-      * list invariant — every vector in exactly one list — is
-      * spec-pinned via listsTable).
-      */
-    def serveIvfIncrAndUpdate(batch: DataFrame, batchId: Long): Unit = synchronized {
-      requireMode("serveIvfIncrAndUpdate")
-      if (applied.contains(batchId)) return // replay of a committed batch
+    protected def serve(batch: DataFrame, batchId: Long): KmServed = {
       val (newLists, newCellCents, moved) = lists match {
         case None =>
-          // initial build: every list built under the current (frozen)
-          // quantizer — the "all cells moved" base case
+          // initial build: every list under the frozen quantizer
           val built = kmAssigned(Tables.embeddingsSpread(s, d), df(cents))
             .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
               col("embedding"))
@@ -1297,57 +1117,29 @@ object VectorQueries {
           }
           (prev.filter(!inMoved).unionAll(rea).localCheckpoint(), ncc, moved)
       }
-      // fresh probes under the CURRENT quantizer against the patchwork
-      // lists; the same scan feeds the MacQueen step
       val bscored = kmScored(batch, df(cents)).localCheckpoint()
-      val cur = serveIvf(newLists, bscored, batch).localCheckpoint()
-      val (newCum, newCents) = macQueenFold(kmAssignedFromScored(bscored))
-      // commit point: trainer, index state, and logs move together
-      cum = newCum
-      cents = newCents
-      lists = Some(newLists)
-      cellCents = newCellCents
-      movedLog = movedLog :+ moved
-      servedTopk = servedTopk :+ cur
-      applied.add(batchId)
+      val cur = kmServeIvf(newLists, bscored, batch).localCheckpoint()
+      KmServed(kmAssignedFromScored(bscored), Some(cur), () => {
+        lists = Some(newLists)
+        cellCents = newCellCents
+        movedLog = movedLog :+ moved
+      })
     }
 
     /** Per-batch moved-cell sets (batch 0 = all cells, the initial
-      * build) — the incremental gate's re-assignment-work surface.
+      * build) — the re-assignment-work surface.
       */
     def movedCells: Seq[DataFrame] = movedLog.map(m =>
       kmCentsDf(s, frozen.filter(c => m.contains(c._1))).select(col("kcell")))
 
-    /** The current patchwork inverted lists — exposed for the
-      * VectorSpec list invariant (every vector in exactly one list).
-      */
+    /** The current patchwork lists (every vector in exactly one). */
     private[graft] def listsTable: DataFrame = {
       require(lists.nonEmpty, "listsTable before any incremental batch")
       lists.get
     }
 
-    def result(): DataFrame = kmUnnest(df(cents))
-
-    /** Every batch's served (vec_id, kcell) assignments — batch r's
-      * rows were assigned under the centroids AFTER r prior updates.
-      */
-    def servedResult(): DataFrame = {
-      require(served.nonEmpty,
-        "servedResult() before any served batch — the gate must drive " +
-          "serveAndUpdate at least once (empty stream, or a " +
-          "train-only instance?)")
-      served.reduce(_ unionAll _)
-    }
-
-    /** Every batch's served IVF top-3 — batch r's queries probed the
-      * generation-r index.
-      */
-    def servedTopkResult(): DataFrame = {
-      require(servedTopk.nonEmpty,
-        "servedTopkResult() before any served batch — the gate must " +
-          "drive serveIvfAndUpdate at least once")
-      servedTopk.reduce(_ unionAll _)
-    }
+    /** Every batch's top-3 from the lists as patched at that batch. */
+    def servedTopkResult(): DataFrame = emissions
   }
 
   /** The read schema of a refresh-store generation written from `rows`
@@ -1365,7 +1157,7 @@ object VectorQueries {
     * per-(cell, dim) integer sums, cumulative fold, and the next
     * centroid table mbc${r+1} (cells with cumulative mass take the
     * running mean, empty cells keep the FROZEN mbc0) — mirroring
-    * KmMiniBatch.update statement-for-statement (the kmRoundSql
+    * KmTrainOnly's step statement-for-statement (the kmRoundSql
     * device over batch prefixes).
     */
   private def mbRoundSql(r: Int, nb: Int): String = s"""mb$r AS (
@@ -1742,7 +1534,7 @@ object VectorQueries {
     * squared fixed-point units: rebuild when some cell's centroid has
     * moved more than 0.25 in L2 since the lists were last built —
     * (0.25·2²⁴)² ≈ 1.76e13 in the integer metric. Chosen from the
-    * measured decision curve (sf0.01, KmMiniBatch.update driven
+    * measured decision curve (sf0.01, KmTrainOnly stepped
     * batch-for-batch along the gate's own MacQueen trajectory, drift
     * taken between the quantizer at batch r and each earlier one;
     * d2 = max-cell squared movement):
@@ -1773,7 +1565,7 @@ object VectorQueries {
     * 1.22×.
     *
     * End-to-end sensitivity on the COMPOSED persisted-refresh gate
-    * (r16 verdict Next #7; serveIvfPersistedAndUpdate driven at
+    * (KmIvfGenerations over KmRawStore stepped at
     * `thr` over the four staged batches, sf0.01, recall@3 vs
     * arrivedBruteTopk, the exact brute over the arrived corpus): a
     * two-point
@@ -2128,7 +1920,8 @@ object VectorQueries {
   private[graft] val KmCells = 10
 
   /** Lloyd rounds for the coarse quantizer. Measured on the sf0.01
-    * corpus (graft.KmeansCurve; VectorSpec pins non-increase through
+    * corpus (kmDistortionOf over each kmCentroidTables round;
+    * VectorSpec pins non-increase through
     * rounds = 3): total assigned distortion falls 791.5 (seed) →
     * 466.0 (r1) → 461.8 (r2) → 459.7 (r3) — the knee is at 1-2
     * rounds — and recall@3 vs brute at the family's pinned NProbe=3
@@ -2147,8 +1940,9 @@ object VectorQueries {
     * KmCells vectors, the pqSeedCodebook device) or "farthest"
     * (deterministic Gonzalez farthest-point traversal, kmSeedFarthest).
     *
-    * MEASURED head-to-head at equal rounds (graft.KmeansCurve seed
-    * grid, KmRounds = 2, both trainers, both gate scales):
+    * MEASURED head-to-head at equal rounds (kmDistortionOf per round
+    * and kmIvfTopk recall@3 vs brute for each seed, KmRounds = 2,
+    * both trainers, both gate scales):
     *
     *   sf0.01  full:    dist 461.8 first / 461.3 farthest; recall@3
     *                    0.633 first / 0.613 farthest
@@ -2281,9 +2075,9 @@ object VectorQueries {
     * trainer, the regime production would seed in (FAISS seeds on the
     * subsample too).
     *
-    * MEASURED vs first-K at equal rounds (graft.KmeansCurve, the
-    * KmSeed grid): see the KmSeed doc below for the recorded numbers
-    * and the registered choice.
+    * MEASURED vs first-K at equal rounds (the KmSeed grid): see the
+    * KmSeed doc below for the recorded numbers and the registered
+    * choice.
     */
   private def kmSeedFarthest(train: DataFrame,
                              cells: Int = KmCells): KmCents = {
@@ -2358,7 +2152,7 @@ object VectorQueries {
   /** Every round's centroid table from ONE training run — element r is
     * the quantizer after r rounds (element 0 the seed). The loop body
     * lives only here; kmCentroids takes `.last`, and the curve
-    * consumers (KmeansCurve, the VectorSpec training contracts) score
+    * consumers (the VectorSpec training contracts) score
     * each table without re-running earlier rounds per point
     * (code-review r13: per-round retraining repeated the corpus
     * scans quadratically in the round count).
@@ -2389,7 +2183,7 @@ object VectorQueries {
   /** The per-round centroid tables for a data dir — ONE training run
     * (seq element r = the quantizer after r rounds), exposed for the
     * VectorSpec training contracts (distortion non-increase, shape
-    * invariance) and graft.KmeansCurve.
+    * invariance) and the KmRounds/KmSeed measurements.
     */
   private[graft] def kmCentroidTables(s: SparkSession, d: String,
                                       rounds: Int,
@@ -3781,7 +3575,7 @@ object VectorQueries {
     // this is the only trainable shape: T rounds × an O(1) sample
     // instead of T full-corpus scans — measured training growth under
     // 10× data ~1.0× (SCALING_r15). Measured sample-vs-full
-    // (graft.KmeansCurve, recall@3 vs brute at NProbe = 3,
+    // (recall@3 vs brute at NProbe = 3,
     // full-corpus assignment under each quantizer, at the registered
     // KmRounds = 2):
     // sf0.01 sampled 0.610 vs full 0.633 (full-corpus distortion

@@ -373,7 +373,7 @@ class CoreSpec extends GraftSpec {
     // The mega-bucket guard's three-part contract on the gate corpus:
     // (1) soundness — every capped pair is an uncapped pair (the cap
     //     only removes candidates, verification is unchanged);
-    // (2) the cap BINDS here (LshScale: max bucket 329 of 500 docs at
+    // (2) the cap BINDS here (measured: max bucket 329 of 500 docs at
     //     sf0.01) — capped candidates are strictly fewer, by a large
     //     factor, or the query is measuring nothing;
     // (3) the recall trade is real and visible: some uncapped pairs

@@ -461,19 +461,19 @@ class PartitioningSpec extends GraftSpec {
     val nb = vq.KmMbBatches
     def batch(r: Int) = graft.Tables.embeddings(spark, sf)
       .filter(col("vec_id") % nb === r)
-    val st = new vq.KmMiniBatch(spark, sf)
-    for (r <- 0 until nb)
-      st.serveIvfPersistedAndUpdate(batch(r), r.toLong, thr = Long.MaxValue)
+    val st = new vq.KmIvfGenerations(spark, sf, Long.MaxValue,
+      new vq.KmRawStore(spark, sf))
+    for (r <- 0 until nb) st.step(batch(r), r.toLong)
     assert(st.rebuildLog === Seq(0L),
       "infinite threshold must leave only the initial build")
-    val cur = vq.storeLatest(st.persistedRunRoot)
+    val cur = vq.storeLatest(st.artifact.runRoot)
     assert(cur.endsWith("gen_0"))
     val corpus = graft.Tables.embeddings(spark, sf).count()
     assert(spark.read.parquet(cur).count() === corpus)
-    val fin = vq.ivfStoreFinalize(spark, st.persistedRunRoot)
+    val fin = vq.ivfStoreFinalize(spark, st.artifact.runRoot)
     assert(fin !== cur, "an append-accumulated run must actually compact")
-    assert(vq.storeLatest(st.persistedRunRoot) === fin)
-    val kids = new java.io.File(st.persistedRunRoot).listFiles()
+    assert(vq.storeLatest(st.artifact.runRoot) === fin)
+    val kids = new java.io.File(st.artifact.runRoot).listFiles()
       .filter(f => f.isDirectory && (f.getName.startsWith("gen_") ||
         f.getName.startsWith("cmp_")))
     assert(kids.length <= 2,

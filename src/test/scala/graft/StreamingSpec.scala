@@ -414,36 +414,60 @@ class StreamingSpec extends GraftSpec {
     assert(seqr !== frozen, "the online steps must move the centroids")
     assert(seqr !== merged,
       "the online trajectory must differ from the merged one-shot round")
-    // foreachBatch replay contract: a redelivered batch id is a no-op
-    // — the cumulative sums cannot double-count a replayed batch.
-    val st = new graft.queries.VectorQueries.KmMiniBatch(spark, d)
-    val b0 = graft.Tables.embeddings(spark, d).filter(col("vec_id") % 4 === 0)
-    st.update(b0, 0L)
-    val once = rows(st.result())
-    st.update(b0, 0L) // replay of the committed id
-    assert(rows(st.result()) === once,
-      "replaying a committed batch id must not change the centroids")
-    val b1 = graft.Tables.embeddings(spark, d).filter(col("vec_id") % 4 === 1)
-    st.update(b1, 1L) // a genuinely new batch id is a real step
-    val afterB1 = rows(st.result())
-    assert(afterB1 !== once,
-      "a new batch id must fold new data into the cumulative means")
-    // The other direction of the replay contract (ADVICE r14): a step
-    // that FAILS before its commit point must leave the id unapplied,
-    // so the foreachBatch redelivery RE-APPLIES instead of silently
-    // dropping the batch over half-updated state.
-    val b2good = graft.Tables.embeddings(spark, d)
-      .filter(col("vec_id") % 4 === 2)
+    // foreachBatch replay contract, on the train-only protocol and on
+    // the persisted-refresh generation step (whose store writes precede
+    // its commit point): a redelivered batch id is a no-op — the
+    // cumulative sums cannot double-count a replayed batch, and the
+    // step runs no Spark job at all.
+    val vq = graft.queries.VectorQueries
+    def emb(r: Int) = graft.Tables.embeddings(spark, d).filter(col("vec_id") % 4 === r)
+    val b0 = emb(0)
+    val b1 = emb(1)
+    // The other direction of the replay contract: a step that FAILS
+    // before its commit point must leave the id unapplied, so the
+    // foreachBatch redelivery RE-APPLIES instead of silently dropping
+    // the batch over half-updated state.
+    val b2good = emb(2)
     val embType = b2good.schema("embedding").dataType
     val b2bad = b2good.select(col("vec_id"),
       when(col("vec_id") >= 0, raise_error(lit("injected mid-step failure")))
         .otherwise(lit(null)).cast(embType).as("embedding"))
-    intercept[Exception] { st.update(b2bad, 2L) }
-    assert(rows(st.result()) === afterB1,
-      "a failed step must not move the published centroids")
-    st.update(b2good, 2L) // redelivery of the FAILED id
-    assert(rows(st.result()) !== afterB1,
-      "redelivery of a failed batch id must re-apply, not no-op")
+    val refresh = new vq.KmIvfGenerations(spark, d, vq.KmDriftRebuild,
+      new vq.KmRawStore(spark, d))
+    // what each protocol publishes besides the centroids: the refresh
+    // step's LATEST generation, rebuild log and emission
+    val protocols: Seq[(vq.KmMiniBatch, () => Any)] = Seq(
+      new vq.KmTrainOnly(spark, d) -> (() => ()),
+      refresh -> (() => (vq.storeLatest(refresh.artifact.runRoot),
+        refresh.rebuildLog, refresh.servedTopkResult().collect().toSet)))
+    try for ((st, published) <- protocols) {
+      st.step(b0, 0L)
+      val once = rows(st.result())
+      val pub0 = published()
+      val (_, replayJobs) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+        st.step(b0, 0L) // replay of the committed id
+      }
+      assert(replayJobs === 0, s"replaying a committed batch id ran $replayJobs Spark jobs")
+      assert(rows(st.result()) === once,
+        "replaying a committed batch id must not change the centroids")
+      assert(published() === pub0,
+        "replaying a committed batch id must not move LATEST, the rebuild log or the emission")
+      st.step(b1, 1L) // a genuinely new batch id is a real step
+      val afterB1 = rows(st.result())
+      assert(afterB1 !== once,
+        "a new batch id must fold new data into the cumulative means")
+      val pub1 = published()
+      intercept[Exception] { st.step(b2bad, 2L) }
+      assert(rows(st.result()) === afterB1,
+        "a failed step must not move the published centroids")
+      assert(published() === pub1,
+        "a failed step must not move LATEST, the rebuild log or the emission")
+      st.step(b2good, 2L) // redelivery of the FAILED id
+      assert(rows(st.result()) !== afterB1,
+        "redelivery of a failed batch id must re-apply, not no-op")
+    } finally vq.deleteRecursively(new java.io.File(refresh.artifact.runRoot))
+    assert(refresh.servedTopkResult().filter(col("qid") % 4 === 2).count() > 0,
+      "the redelivered batch's queries must be served")
   }
 
   test("online serve-and-train: later batches assign under moved centroids") {

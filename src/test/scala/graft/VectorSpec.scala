@@ -293,7 +293,7 @@ class VectorSpec extends GraftSpec {
     // assigned distortion. Fixed-point means shift each centroid
     // component < 2^-24 from the true minimizer — not enough to
     // regress the objective on this corpus (measured at sf0.01:
-    // 791.5 → 466.0 → 461.8 → 459.7, graft.KmeansCurve).
+    // 791.5 → 466.0 → 461.8 → 459.7, kmDistortionOf per round).
     val d = "/root/testdata/sf0.001"
     val tables = graft.queries.VectorQueries.kmCentroidTables(spark, d, 3)
     val dist = tables.map(c =>
@@ -395,10 +395,11 @@ class VectorSpec extends GraftSpec {
     def batch(r: Int) = graft.Tables.embeddings(spark, d)
       .filter(col("vec_id") % nb === r)
     def served(drift: Boolean): (Set[(Long, Long)], Seq[Long]) = {
-      val st = new graft.queries.VectorQueries.KmMiniBatch(spark, d)
-      for (r <- 0 until nb)
-        if (drift) st.serveIvfDriftAndUpdate(batch(r), r.toLong)
-        else st.serveIvfAndUpdate(batch(r), r.toLong)
+      val vq = graft.queries.VectorQueries
+      val st = new vq.KmIvfGenerations(spark, d,
+        if (drift) vq.KmDriftRebuild else vq.KmRebuildAlways,
+        new vq.KmLists(spark, d))
+      for (r <- 0 until nb) st.step(batch(r), r.toLong)
       val p = st.servedTopkResult().select(col("qid"), col("nn_id"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       (p, st.rebuildLog)
@@ -406,8 +407,8 @@ class VectorSpec extends GraftSpec {
     val brute = annPairs("ann_brute_topk", d)
     val (full, fullLog) = served(drift = false)
     val (stale, log) = served(drift = true)
-    assert(fullLog.isEmpty,
-      "the always-rebuild path must not touch the drift-gate state")
+    assert(fullLog === Seq(0L, 1L, 2L, 3L),
+      s"the always-rebuild threshold must rebuild on every batch (got $fullLog)")
     assert(log === Seq(0L, 1L, 3L),
       s"drift gate's rebuild sequence drifted (got $log) — see the " +
         "measured decision curve in the KmDriftRebuild doc before moving it")
@@ -425,8 +426,8 @@ class VectorSpec extends GraftSpec {
     // fraction of always-rebuild's three full corpus passes) — the
     // patchwork lists must hold every vector exactly once, and recall
     // must stay within the same staleness bound.
-    val si = new graft.queries.VectorQueries.KmMiniBatch(spark, d)
-    for (r <- 0 until nb) si.serveIvfIncrAndUpdate(batch(r), r.toLong)
+    val si = new graft.queries.VectorQueries.KmIvfIncr(spark, d)
+    for (r <- 0 until nb) si.step(batch(r), r.toLong)
     val movedCounts = si.movedCells.map(_.count())
     assert(movedCounts === Seq(10L, 7L, 0L, 1L),
       s"incremental moved-cell schedule drifted (got $movedCounts) — " +
@@ -460,14 +461,15 @@ class VectorSpec extends GraftSpec {
     val nb = vq.KmMbBatches
     def batch(r: Int) = graft.Tables.embeddings(spark, d)
       .filter(col("vec_id") % nb === r)
-    val st = new vq.KmMiniBatch(spark, d)
+    val st = new vq.KmIvfGenerations(spark, d, vq.KmDriftRebuild,
+      new vq.KmRawStore(spark, d))
     // Each step's control work (MacQueen fold, drift decision) is
     // driver arithmetic over driver-held state; only data work runs as
     // Spark jobs. The budget is the heaviest step's count (measured
     // 14/16/15/16 with driver-held state).
     val stepJobs = (0 until nb).map { r =>
       org.apache.spark.graft.JobCount(spark.sparkContext) {
-        st.serveIvfPersistedAndUpdate(batch(r), r.toLong)
+        st.step(batch(r), r.toLong)
       }._2
     }
     info(s"persisted-refresh jobs per step: ${stepJobs.mkString(", ")}")
@@ -525,8 +527,20 @@ class VectorSpec extends GraftSpec {
     val nb = vq.KmMbBatches
     def batch(r: Int) = graft.Tables.embeddings(spark, d)
       .filter(col("vec_id") % nb === r)
-    val st = new vq.KmMiniBatch(spark, d)
-    for (r <- 0 until nb) st.servePqPersistedAndUpdate(batch(r), r.toLong)
+    val st = new vq.KmIvfGenerations(spark, d, vq.KmDriftRebuild,
+      new vq.KmPqStore(spark, d))
+    // The same per-step job budget as the raw twin, at the heaviest
+    // step's count (measured 27/24/20/24; the first step also trains
+    // the frozen codebook).
+    val stepJobs = (0 until nb).map { r =>
+      org.apache.spark.graft.JobCount(spark.sparkContext) {
+        st.step(batch(r), r.toLong)
+      }._2
+    }
+    info(s"PQ persisted-refresh jobs per step: ${stepJobs.mkString(", ")}")
+    stepJobs.zipWithIndex.foreach { case (n, r) =>
+      assert(n <= 27, s"PQ persisted-refresh step $r ran $n Spark jobs, budget 27")
+    }
     assert(st.rebuildLog === Seq(0L, 1L, 3L),
       s"PQ refresh gate's generation schedule drifted (got ${st.rebuildLog})" +
         " — see the measured decision curve in the KmDriftRebuild doc before moving it")
@@ -562,7 +576,7 @@ class VectorSpec extends GraftSpec {
     // corpus's; recall unaffected, see the registration doc); (b) at
     // the gate corpus the sample-trained quantizer still BEATS the
     // label cells it replaces at the identical NProbe pruning
-    // fraction. Measured (graft.KmeansCurve, recall@3 vs brute,
+    // fraction. Measured (recall@3 vs brute,
     // np=3): sf0.01 sampled 0.610 / full 0.633 / label 0.533 (250 of
     // 500 train); sf0.1 sampled 0.623 / full 0.623 / label 0.540
     // (250 of 2000 train — ties full training on 1/8 the points).
@@ -781,8 +795,8 @@ class VectorSpec extends GraftSpec {
     info(s"recall@3 vs brute: adc=$rAdc refine=$rRef ivf-exact-within-cells=$rIvf")
     assert(rRef > rAdc,
       s"refine recall $rRef must beat the raw ADC order's $rAdc")
-    // The registered point (np=3, R=20 — selected from the RefineGrid
-    // joint surface, see the RefineR doc) must hold its measured
+    // The registered point (np=3, R=20 — selected from the measured
+    // joint (np, R) surface, see the RefineR doc) must hold its measured
     // recall: 0.453 on this corpus, floored with margin.
     assert(rRef >= 0.40,
       s"registered refine recall $rRef fell below the grid-selected floor")
