@@ -74,10 +74,10 @@ object ClusterCheck {
     * between partial and merge phases ACROSS executor JVMs (every
     * other Aggregator use in the suite runs single-JVM), under a
     * streaming stream-static join;
-    * stream_semdedup adds the r12 serving composition (r12 verdict
-    * #5): the one-row broadcast centroid array built FROM a
-    * checkpointed aggregate, the pure-expression cell assignment
-    * (sortedCellsExpr under crossJoin(broadcast(...))) evaluated in
+    * stream_semdedup adds the serving composition: the one-row
+    * broadcast centroid array built FROM a checkpointed aggregate, the
+    * pure-expression cell assignment (Quantizer.ranked under
+    * crossJoin(broadcast(...))) evaluated in
     * executor JVMs per micro-batch, and the stream-static LEFT join
     * against the checkpointed admission index;
     * ann_ivfpq_refine adds the full three-stage IVFADC+R chain under

@@ -213,7 +213,7 @@ object VectorQueries {
       windowed)
 
   /** The BOUNDED-STATE serving regime shared by the four `*_wm` serving
-    * twins (r12 verdict #1): when `windowed`, the arriving frame must
+    * twins: when `windowed`, the arriving frame must
     * carry an `arrival_ts` event-time column (the staged-clock device —
     * a pure function of the arriving key, so the oracle can replay the
     * watermark exactly); the stateful aggregation keys by the
@@ -254,56 +254,177 @@ object VectorQueries {
         (col("pos") + 1L).as("rnk"),
         round(col("col._1"), 6).as("cos_sim")): _*)
 
-  /** ANN serving WITH IVF pruning on the streaming face — the
-    * composition stream_ann_topk's comment promised (r10 verdict #5):
-    * the static corpus is cell-assigned once per micro-batch plan; an
-    * arriving query picks its NProbe nearest cells and scores ONLY
-    * those cells' vectors. Two devices make it legal over a streaming
-    * frame where the batch plan's devices are not:
-    *  - the probe list: the batch side ranks (qid × cell) scores under
-    *    a window — illegal on a stream. Here the 10-row centroid table
-    *    collapses to ONE broadcast row (array of (clabel, carr)
-    *    structs, array_sort for a deterministic order), and each query
-    *    ROW computes its own probe list as a pure expression —
-    *    sort the (−adot, clabel) structs, slice NProbe, explode.
-    *    Ascending (−adot, clabel) IS the batch window's
-    *    (adot DESC, clabel ASC) tie-break, and the fold inside cdot is
-    *    the identical index-ordered sum, so the probe SET matches
-    *    ann_ivf_topk's exactly (the oracle is its SQL verbatim).
-    *  - the ranking: the bounded-heap TopKAggregator (≤ k rows per
-    *    partition-group shuffled), as in annStreamTopk.
-    * Scale shape: at 10⁹ vectors the assigned corpus is the
-    * cell-partitioned table — probe join = partition pruning,
-    * MEASURED in PartitioningSpec (ivfAssignedCorpus written
-    * partitionBy("cell"); a probe-list join reads 3 of 10 cells'
-    * files on the batch face via dynamic partition pruning AND per
-    * serving micro-batch in the sink) — the centroid row is O(NCells)
-    * broadcast, per-query streamed work is O(N·NProbe/NCells) — ANN
-    * serving at the shape the batch IVFADC family stores.
+  /** Every query row of a corpus or batch frame as (qid, qe). */
+  private def queriesOf(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < NQueries)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
+
+  /** Per-component fixed-point sums c0..c{Dim-1} of the vector column
+    * `v` — each component quantized to floor(x·CentScale + 0.5) and
+    * cast to long BEFORE the sum, so the sums are true integer
+    * arithmetic (a double sum is exact only below 2^53, and the oracle
+    * sums BIGINT). Integer addition is associative, so partial
+    * aggregation and micro-batch merging are exact whatever the split.
     */
-  /** The cell-assigned corpus (nn_id, cell, embedding) — the IVF
-    * inverted-list STORAGE UNIT: at scale this table is what gets
-    * written `partitionBy("cell")` to the store, so a probe-cell join
-    * becomes partition pruning on read. That claim is MEASURED, not
-    * argued (r11 verdict #2): PartitioningSpec writes this exact frame
-    * cell-partitioned at sf0.001 and pins, on both faces, that the
-    * probe join's store scan reads only the probed cells' files
-    * (batch: a dynamicpruning predicate on the scan + files-read <
-    * total; streaming: the per-micro-batch serving lookup inside the
-    * sink reads ≤ probed-cells' files). Shared by stream_ann_ivf_topk
-    * (below) and that spec — one definition of the storage unit.
+  private def fixedSums(v: Column): Seq[Column] =
+    (0 until Dim).map(i =>
+      sum(floor(element_at(v, i + 1).cast("double")
+        * lit(CentScale.toDouble) + lit(0.5)).cast("long")).as(s"c$i"))
+
+  // ---- The coarse quantizer -----------------------------------------
+
+  /** The rank of a cell for a vector: (key, cell) ascending — the lower
+    * key first, the smaller cell first on equal keys. The one statement
+    * of the tie-break that every assignment, probe list and arrival-side
+    * rank orders by; `ride` fields trail it and never decide the order,
+    * since a cell appears once per vector.
     */
-  private[graft] def ivfAssignedCorpus(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    ivfAssignedFrom(e, ivfCentroids(e))
+  private def cellRank(key: Column, cell: Column, ride: Column*): Column =
+    struct(key.as("key") +: cell.as("cell") +: ride: _*)
+
+  /** A coarse quantizer: its centroid table `cents` (cell, carr), at
+    * most NCells rows, and its metric. `key` maps a centroid and a
+    * vector to the cell's rank key (lower ranks first); `centDot`
+    * recovers the centroid dot — SemDeDup's prototypicality key — from
+    * a ranked (key, centroid, vector). Two constructors:
+    *  - labelMeans: the per-label mean cells, ranked by max centroid dot
+    *    (key = −dot, exact under IEEE negation); `cell` is int;
+    *  - lloyd / trained: Lloyd cells, ranked by min L2² (their training
+    *    metric); `cell` is bigint.
+    * Scoring, assignment, probe selection and the per-row arrival-side
+    * rank exist once, here, so a batch consumer and a streaming one
+    * rank the same cells in the same order under either metric.
+    */
+  private[graft] final class Quantizer private (
+      val cents: DataFrame,
+      key: (Column, Column) => Column,
+      centDot: (Column, Column, Column) => Column) {
+
+    /** Every (vector, cell) pair of `e` with its rank key — a narrow
+      * scan × broadcast, no exchange; cheap enough that consumers
+      * rescore rather than cache it.
+      */
+    def scored(e: DataFrame): DataFrame =
+      e.crossJoin(broadcast(cents))
+        .withColumn("key", key(col("carr"), col("embedding")))
+
+    /** Each vector's first-ranked cell via ONE bounded-state min_by:
+      * partial aggregation collapses the ×NCells rows map-side and
+      * nothing is sorted.
+      */
+    private def firstCell(scored: DataFrame, ride: Column*): DataFrame =
+      scored.groupBy(col("vec_id"))
+        .agg(min_by(struct(col("cell") +: col("embedding") +: ride: _*),
+          cellRank(col("key"), col("cell"))).as("m"))
+
+    /** (vec_id, cell, embedding) over an already-scored frame. */
+    def assignedFrom(scored: DataFrame): DataFrame =
+      firstCell(scored).select(col("vec_id"), col("m.cell").as("cell"),
+        col("m.embedding").as("embedding"))
+
+    def assigned(e: DataFrame): DataFrame = assignedFrom(scored(e))
+
+    /** The inverted lists (nn_id, cell, embedding) of `e`. */
+    def lists(e: DataFrame): DataFrame =
+      assigned(e).withColumnRenamed("vec_id", "nn_id")
+
+    /** (vec_id, cell, embedding, cdot): the assignment with the dot
+      * against the assigned cell's centroid riding along.
+      */
+    def assignedWithDot(e: DataFrame): DataFrame =
+      firstCell(scored(e), col("key"), col("carr"))
+        .select(col("vec_id"), col("m.cell").as("cell"),
+          col("m.embedding").as("embedding"),
+          centDot(col("m.key"), col("m.carr"), col("m.embedding")).as("cdot"))
+
+    /** (qid, cell): each query's first `nprobe` cells over a scored
+      * frame — the rank window runs after the query filter, over
+      * NQueries × NCells rows only.
+      */
+    def probes(scored: DataFrame, nprobe: Int): DataFrame =
+      scored.filter(col("vec_id") < NQueries)
+        .withColumn("crn", row_number().over(Window.partitionBy(col("vec_id"))
+          .orderBy(cellRank(col("key"), col("cell")))))
+        .filter(col("crn") <= nprobe)
+        .select(col("vec_id").as("qid"), col("cell"))
+
+    /** `rows` plus `cells`: the first `n` cells of vector `v` in rank
+      * order, as (key, cell, carr) structs computed per row against the
+      * centroid table collapsed to ONE broadcast row — a pure expression,
+      * no window and no per-row state, so it is legal over a stream.
+      * Slice 1 is assignedFrom's cell and slices 1..n are probes' list:
+      * the same keys under the same tie-break.
+      */
+    def ranked(rows: DataFrame, v: Column, n: Int): DataFrame =
+      rows.crossJoin(broadcast(cents.agg(
+          array_sort(collect_list(struct(col("cell"), col("carr")))).as("cents"))))
+        .withColumn("cells", slice(array_sort(transform(col("cents"), c =>
+          cellRank(key(c.getField("carr"), v), c.getField("cell"),
+            c.getField("carr").as("carr")))), 1, n))
+        .drop("cents")
+
+    /** The centroid dot of a `ranked` cell struct `m` for vector `v`. */
+    def dotOf(m: Column, v: Column): Column =
+      centDot(m.getField("key"), m.getField("carr"), v)
   }
 
-  /** The IVF probe-join / exact re-rank tail shared by ann_ivf_topk
-    * and ann_ivf_kmeans_topk (ONE definition — the tie-break and k
-    * cannot drift between the supervised and trained quantizer
-    * faces): inverted lists join the broadcast probe table,
-    * self-matches drop, exact cosine ranks within each query's probed
-    * cells, top 3 kept.
+  private[graft] object Quantizer {
+
+    /** The label-mean cells: exact per-label mean vectors via
+      * fixed-point integer sums — ONE groupBy(label) with Dim
+      * bounded-state sum columns, no explode and no per-group buffer.
+      * The ≤ NCells-row table is localCheckpointed, so the corpus
+      * aggregate behind it runs once whatever the number of consumers
+      * (free at any scale, where a corpus-sized materialization is
+      * not), and no query path holds a bare cache() the session would
+      * accumulate.
+      */
+    def labelMeans(s: SparkSession, d: String): Quantizer = {
+      val sums = Tables.embeddingsSpread(s, d).groupBy(col("label"))
+        .agg(count(lit(1)).as("n"), fixedSums(col("embedding")): _*)
+      val cents = sums.select(col("label").as("cell"),
+        array((0 until Dim).map(i =>
+          col(s"c$i").cast("double")
+            / (col("n") * lit(CentScale)).cast("double")): _*).as("carr"))
+        .localCheckpoint()
+      new Quantizer(cents, (c, v) => -cdot(c, v), (k, _, _) => -k)
+    }
+
+    /** A driver-held Lloyd centroid table under its training metric,
+      * min L2²; plans read it as a LocalRelation.
+      */
+    def trained(s: SparkSession, table: KmCents): Quantizer =
+      new Quantizer(kmCentsDf(s, table), kmL2, (_, c, v) => cdot(c, v))
+
+    /** Lloyd training over the corpus (kmCentroidSeq: full or sampled,
+      * first-K or farthest-point seed), as the trained quantizer.
+      */
+    def lloyd(s: SparkSession, d: String, rounds: Int = KmRounds,
+              sampled: Boolean = false, cells: Int = KmCells,
+              seed: String = KmSeed): Quantizer =
+      trained(s, kmCentroidSeq(Tables.embeddingsSpread(s, d), rounds,
+        sampled, cells, seed).last)
+  }
+
+  /** The cell-assigned corpus (nn_id, cell, embedding) under the label
+    * quantizer — the IVF inverted-list STORAGE UNIT: at scale this
+    * table is what gets written `partitionBy("cell")` to the store, so
+    * a probe-cell join becomes partition pruning on read.
+    * PartitioningSpec writes this exact frame cell-partitioned at
+    * sf0.001 and pins, on both faces, that the probe join's store scan
+    * reads only the probed cells' files (batch: a dynamicpruning
+    * predicate on the scan + files-read < total; streaming: the
+    * per-micro-batch serving lookup inside the sink reads ≤
+    * probed-cells' files).
+    */
+  private[graft] def ivfAssignedCorpus(s: SparkSession, d: String): DataFrame =
+    Quantizer.labelMeans(s, d).lists(Tables.embeddingsSpread(s, d))
+
+  /** The IVF probe-join / exact re-rank tail every IVF serving face
+    * shares (one definition — the tie-break and k cannot drift between
+    * quantizers or between batch and online serving): inverted lists
+    * join the broadcast probe table, self-matches drop, exact cosine
+    * ranks within each query's probed cells, top 3 kept.
     */
   private def ivfTopkTail(assigned: DataFrame, probed: DataFrame,
                           q: DataFrame): DataFrame = {
@@ -320,77 +441,23 @@ object VectorQueries {
         round(col("cos"), 6).as("cos_sim"))
   }
 
-  /** Cell assignment with the centroid similarity riding along:
-    * (vec_id, cell, embedding, cdot) via ONE bounded-state max_by —
-    * the single definition of the (adot DESC, clabel ASC) assignment
-    * tie-break for every batch consumer (the IVF family's inverted
-    * lists, SemDeDup's clusters, the streaming admission index), so
-    * the parity-critical arithmetic cannot drift between them
-    * (code-review r12 session 2: three verbatim copies existed).
+  /** IVF top-3 of the query rows of `rows` from inverted `lists` built
+    * under `q`: each query's NProbe-cell probe list from `scored` (the
+    * rows scored under `q`), then the shared exact re-rank tail. The
+    * serving step of the in-plan, persisted and online faces alike.
     */
-  private def ivfAssignedScored(e: DataFrame, carr: DataFrame): DataFrame =
-    ivfScoredCells(e, carr)
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("clabel"), col("embedding"), col("adot")),
-        struct(col("adot"), -col("clabel"))).as("m"))
-      .select(col("vec_id"), col("m.clabel").as("cell"),
-        col("m.embedding").as("embedding"), col("m.adot").as("cdot"))
+  private def ivfServe(lists: DataFrame, q: Quantizer, scored: DataFrame,
+                       rows: DataFrame): DataFrame =
+    ivfTopkTail(lists, q.probes(scored, NProbe), queriesOf(rows))
 
-  private def ivfAssignedFrom(e: DataFrame, carr: DataFrame): DataFrame =
-    ivfAssignedScored(e, carr)
-      .select(col("vec_id").as("nn_id"), col("cell"), col("embedding"))
-
-  /** One-row broadcastable centroid table: the array of (clabel, carr)
-    * structs in deterministic label order.
+  /** IVF top-3 under quantizer `q` — ann_ivf_topk on the label cells,
+    * ann_ivf_kmeans_topk and _sampled_topk on Lloyd cells — over the
+    * whole corpus's inverted lists.
     */
-  private def centsRowOf(carr: DataFrame): DataFrame =
-    carr.agg(array_sort(collect_list(struct(col("clabel"), col("carr"))))
-      .as("cents"))
-
-  /** An arriving row's cells by proximity, as a PURE EXPRESSION over
-    * the one-row centroid array: ascending (−adot, clabel) structs —
-    * exactly the batch window's (adot DESC, clabel ASC) tie-break, and
-    * the fold inside cdot is the identical index-ordered sum. ONE
-    * definition shared by the streaming probe list (annStreamIvfTopk,
-    * slice nprobe) and streaming cell assignment (semdedupStreamAdmit,
-    * slice 1), so the two serving gates' oracle-parity arithmetic is
-    * the same expression tree.
-    */
-  private def sortedCellsExpr(cents: Column, v: Column): Column =
-    array_sort(transform(cents,
-      c => struct((-cdot(c.getField("carr"), v)).as("nadot"),
-        c.getField("clabel").as("clabel"))))
-
-  /** The TRAINED quantizer's arriving-row assignment as the same pure
-    * broadcast expression, under ITS training metric: ascending
-    * (L2², clabel) structs — exactly kmAssigned's min_by
-    * (kdist ASC, kcell ASC) tie-break — with the trained-centroid dot
-    * riding along as a trailing struct field (it cannot affect the
-    * order: (kdist, clabel) is already unique per cell), so slice 1
-    * yields both the cell and the dominance key in one expression.
-    */
-  private def sortedCellsL2Expr(cents: Column, v: Column): Column =
-    array_sort(transform(cents,
-      c => struct(kmL2(c.getField("carr"), v).as("kdist"),
-        c.getField("clabel").as("clabel"),
-        cdot(c.getField("carr"), v).as("adot"))))
-
-  /** Probe selection over a scored-cells frame: each query's top
-    * `nprobe` cells under the (adot DESC, clabel ASC) rank, post
-    * query filter. ONE definition shared by ann_ivf_topk, both IVFADC
-    * variants, and the exposed knob face below, so the tie-break
-    * cannot drift between the registered gates and the measured
-    * contracts (probe-set subset, partition pruning) — code-review
-    * r12 replaced four verbatim copies.
-    */
-  private def probeSelection(scoredCells: DataFrame, nprobe: Int): DataFrame =
-    scoredCells
-      .filter(col("vec_id") < NQueries)
-      .withColumn("crn", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("adot").desc, col("clabel"))))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("clabel").as("cell"))
+  private[graft] def ivfTopk(s: SparkSession, d: String, q: Quantizer): DataFrame = {
+    val e = Tables.embeddingsSpread(s, d)
+    ivfServe(q.lists(e), q, q.scored(e), e)
+  }
 
   /** The (qid, cell) probe list at an arbitrary `nprobe` — exactly
     * ann_ivf_topk's probe selection, exposed for the
@@ -398,79 +465,65 @@ object VectorQueries {
     */
   private[graft] def ivfProbedCells(s: SparkSession, d: String,
                                     nprobe: Int = NProbe): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    probeSelection(ivfScoredCells(e, ivfCentroids(e)), nprobe)
+    val q = Quantizer.labelMeans(s, d)
+    q.probes(q.scored(Tables.embeddingsSpread(s, d)), nprobe)
   }
 
+  /** ANN serving WITH IVF pruning on the streaming face
+    * (stream_ann_ivf_topk and its `_wm` twin): the static corpus is
+    * cell-assigned once per micro-batch plan; an arriving query takes
+    * its NProbe first cells from the label quantizer's per-row rank
+    * (Quantizer.ranked — a window is illegal on a stream; the rank is
+    * the batch probe window's keys and tie-break, so the probe SET
+    * matches ann_ivf_topk's exactly and the oracle is its SQL verbatim)
+    * and scores ONLY those cells' vectors, ranked by the bounded-heap
+    * TopKAggregator as in annStreamTopk.
+    * Scale shape: at 10⁹ vectors the assigned corpus is the
+    * cell-partitioned table and the probe join is partition pruning
+    * (measured in PartitioningSpec on the batch face and per serving
+    * micro-batch); the centroid row is an O(NCells) broadcast and
+    * per-query streamed work is O(N·NProbe/NCells).
+    */
   private[graft] def annStreamIvfTopk(qs: DataFrame,
                                       s: SparkSession, d: String,
                                       nprobe: Int = NProbe,
                                       windowed: Boolean = false): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    val carr = ivfCentroids(e)
-    val assigned = ivfAssignedFrom(e, carr)
+    val q = Quantizer.labelMeans(s, d)
     val carry = if (windowed) Seq(col("arrival_ts")) else Nil
-    val probes = watermarked(qs, windowed)
-      .crossJoin(broadcast(centsRowOf(carr)))
-      .select(Seq(col("qid"), col("qe"),
-        explode(slice(sortedCellsExpr(col("cents"), col("qe")),
-          1, nprobe)).as("p")) ++ carry: _*)
-      .select(Seq(col("qid"), col("qe"),
-        col("p.clabel").as("cell")) ++ carry: _*)
+    val probes = q.ranked(watermarked(qs, windowed), col("qe"), nprobe)
+      .select(Seq(col("qid"), col("qe"), explode(col("cells")).as("p")) ++ carry: _*)
+      .select(Seq(col("qid"), col("qe"), col("p.cell").as("cell")) ++ carry: _*)
     servingTopkRank(
-      probes.join(assigned, "cell") // stream-static equi join: probed cells only
+      // stream-static equi join: probed cells only
+      probes.join(q.lists(Tables.embeddingsSpread(s, d)), "cell")
         .filter(col("nn_id") =!= col("qid"))
         .withColumn("cos", dot(col("qe"), col("embedding"))),
       windowed)
   }
 
-  /** SemDeDup admission on the streaming face — shared by
-    * stream_semdedup (oracle = dedup_semdedup's SQL verbatim): an
-    * arriving vector computes its OWN cell and centroid similarity as
-    * a pure expression over the one-row broadcast centroid array (the
-    * annStreamIvfTopk device; slicing 1 from the sorted
-    * (−adot, clabel) structs IS the batch max_by's
-    * (adot DESC, clabel ASC) tie-break, and double negation is exact
-    * in IEEE), then stream-static LEFT joins the cell-assigned STATIC
-    * corpus on cell and is admitted iff NO static same-cell member at
-    * cos >= DedupCos dominates it on the (centroid-sim, vec_id) key.
-    * The only stateful operator is the per-arrival max aggregation —
-    * admission state is one flag per arriving vector, never a pair
-    * set. This is how SemDeDup runs over a 100 TB ingest: centroids
-    * trained offline (O(NCells) broadcast), the admitted corpus stored
-    * cell-partitioned (the PartitioningSpec storage unit), each
-    * arriving shard checked against ITS cell's partition only.
+  /** SemDeDup admission on the streaming face under quantizer `q` —
+    * stream_semdedup (label cells, oracle = dedup_semdedup's SQL
+    * verbatim) and stream_semdedup_kmeans (Lloyd cells, oracle =
+    * dedup_semdedup_kmeans's): an arriving vector computes its OWN cell
+    * and centroid dot as a pure per-row expression (semdedupArriving),
+    * then stream-static LEFT joins the cell-assigned STATIC corpus on
+    * cell and is admitted iff NO static same-cell member at
+    * cos >= DedupCos dominates it on the (centroid dot, vec_id) key.
+    * The only stateful operator is the per-arrival max
+    * aggregation — admission state is one flag per arriving vector,
+    * never a pair set. This is how SemDeDup runs over a 100 TB ingest:
+    * centroids trained offline (O(NCells) broadcast), the admitted
+    * corpus stored cell-partitioned (the PartitioningSpec storage unit),
+    * each arriving shard checked against ITS cell's partition only.
     * `qs` must carry (vec_id, qe).
     */
   private[graft] def semdedupStreamAdmit(qs: DataFrame,
                                          s: SparkSession, d: String,
-                                         windowed: Boolean = false,
-                                         trained: Boolean = false): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    // `trained` selects the quantizer: label-mean cells under the max-
-    // dot assignment (the registered batch face) or Lloyd-trained
-    // cells under their OWN min-L2 training metric (the
-    // dedup_semdedup_kmeans face) — everything downstream of the
-    // (cell, dominance-key) pair is the same admission body.
-    // static members with their dominance key — the admission index;
-    // checkpointed so the corpus×NCells scoring runs once per gate
-    // (and the Lloyd training loop runs ONCE for both its consumers)
-    val (carr, scored) =
-      if (trained) {
-        val cents = kmCentroids(e)
-        (cents.select(col("kcell").as("clabel"), col("karr").as("carr")),
-          kmAssignedScored(e, cents))
-      } else {
-        val c = ivfCentroids(e)
-        (c, ivfAssignedScored(e, c))
-      }
-    val statics = scored
-      .select(col("cell"), col("vec_id").as("nb_id"),
-        col("embedding").as("eb"), col("cdot").as("ncdot"))
-      .localCheckpoint()
+                                         q: Quantizer,
+                                         windowed: Boolean = false): DataFrame = {
+    val statics = semdedupIndex(s, d, q)
     val carry = if (windowed) Seq(col("arrival_ts")) else Nil
-    val arriving = semdedupArriving(watermarked(qs, windowed), carr, carry,
-      byL2 = trained)
+    val arriving = semdedupArriving(watermarked(qs, windowed), q, carry)
     servingGroup(
       arriving.join(statics, Seq("cell"), "left")
         .withColumn("dominated",
@@ -484,37 +537,37 @@ object VectorQueries {
         (lit(1L) - col("dr")).as("kept")): _*)
   }
 
-  /** An arriving vector's PRIMARY cell + centroid similarity as the
-    * pure broadcast expression (slice 1 of sortedCellsExpr — the batch
-    * max_by's tie-break): the admission gate's arrival-side
-    * assignment, ONE definition shared by semdedupStreamAdmit and
-    * PartitioningSpec's per-micro-batch admission-pruning measurement.
-    * `qs` carries (vec_id, qe); extra columns ride via `carry`.
+  /** The static admission index under `q`: every corpus member as
+    * (cell, nb_id, eb, ncdot), its dominance key ncdot the dot with its
+    * cell's centroid — checkpointed, so the corpus × NCells scoring
+    * runs once per gate.
     */
-  private[graft] def semdedupArriving(qs: DataFrame, carr: DataFrame,
-                                      carry: Seq[Column] = Nil,
-                                      byL2: Boolean = false): DataFrame = {
-    // `byL2` selects the arriving-side assignment metric to match the
-    // quantizer's batch assignment: max dot for the label-mean cells
-    // (sortedCellsExpr = ivfAssignedScored's tie-break), min L2² for
-    // the trained cells (sortedCellsL2Expr = kmAssigned's) — the
-    // dominance key is the trained-centroid dot in both cases.
-    val m =
-      if (byL2) slice(sortedCellsL2Expr(col("cents"), col("qe")), 1, 1)
-        .getItem(0)
-      else slice(sortedCellsExpr(col("cents"), col("qe")), 1, 1).getItem(0)
-    val cdotCol = if (byL2) col("m.adot") else -col("m.nadot")
-    qs.crossJoin(broadcast(centsRowOf(carr)))
-      .select(Seq(col("vec_id"), col("qe"), m.as("m")) ++ carry: _*)
-      .select(Seq(col("vec_id"), col("qe"),
-        col("m.clabel").as("cell"), cdotCol.as("cdot")) ++ carry: _*)
-  }
+  private def semdedupIndex(s: SparkSession, d: String, q: Quantizer): DataFrame =
+    q.assignedWithDot(Tables.embeddingsSpread(s, d))
+      .select(col("cell"), col("vec_id").as("nb_id"),
+        col("embedding").as("eb"), col("cdot").as("ncdot"))
+      .localCheckpoint()
 
-  /** STATELESS SemDeDup admission under the trained quantizer — the
-    * streaming e2e curation composite's semantic-dedup stage: arriving
-    * (vec_id, qe [, carry...]) rows assign to their trained cell as a
-    * pure broadcast expression (semdedupArriving, the admission gates'
-    * shared device) and DROP iff a static member of that cell
+  /** An arriving vector's PRIMARY cell and centroid dot under `q` —
+    * slice 1 of the quantizer's per-row rank, i.e. its batch
+    * assignment: the admission gates' arrival-side assignment, shared
+    * by semdedupStreamAdmit, semdedupAdmitStateless, the persisted
+    * stores' streaming ingest (ivfArrivingAssign) and PartitioningSpec's
+    * per-micro-batch admission-pruning measurement. `qs` carries
+    * (vec_id, qe); extra columns ride via `carry`.
+    */
+  private[graft] def semdedupArriving(qs: DataFrame, q: Quantizer,
+                                      carry: Seq[Column] = Nil): DataFrame =
+    q.ranked(qs, col("qe"), 1)
+      .select(Seq(col("vec_id"), col("qe"), col("cells").getItem(0).as("m")) ++
+        carry: _*)
+      .select(Seq(col("vec_id"), col("qe"), col("m.cell").as("cell"),
+        q.dotOf(col("m"), col("qe")).as("cdot")) ++ carry: _*)
+
+  /** STATELESS SemDeDup admission under quantizer `q` — the streaming
+    * e2e curation composite's semantic-dedup stage (Lloyd cells):
+    * arriving (vec_id, qe [, carry...]) rows take their cell from
+    * semdedupArriving and DROP iff a static member of that cell
     * dominates them — the identical rule semdedupStreamAdmit's grouped
     * form applies (near-duplicate above DedupCos, dominator's
     * (cdot, id) smaller), expressed as a stream-static LEFT ANTI join
@@ -526,15 +579,10 @@ object VectorQueries {
     */
   private[graft] def semdedupAdmitStateless(qs: DataFrame,
                                             s: SparkSession, d: String,
+                                            q: Quantizer,
                                             carry: Seq[Column] = Nil): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    val cents = kmCentroids(e)
-    val carr = cents.select(col("kcell").as("clabel"), col("karr").as("carr"))
-    val statics = kmAssignedScored(e, cents)
-      .select(col("cell").as("ncell"), col("vec_id").as("nb_id"),
-        col("embedding").as("eb"), col("cdot").as("ncdot"))
-      .localCheckpoint()
-    semdedupArriving(qs, carr, carry, byL2 = true)
+    val statics = semdedupIndex(s, d, q).withColumnRenamed("cell", "ncell")
+    semdedupArriving(qs, q, carry)
       .join(statics,
         col("ncell") === col("cell") &&
           col("nb_id") =!= col("vec_id") &&
@@ -544,21 +592,15 @@ object VectorQueries {
         "left_anti")
   }
 
-  /** The trained centroid table for a data dir — ivfCentroids exposed
-    * for the spec that measures admission-side partition pruning.
-    */
-  private[graft] def ivfCentroidsOf(s: SparkSession, d: String): DataFrame =
-    ivfCentroids(Tables.embeddingsSpread(s, d))
-
   // ---- Streaming quantizer training (stream_kmeans_update) --------
   //
   // Online mini-batch k-means (the streaming face of the Lloyd loop —
   // Sculley, WWW'10 states the mini-batch protocol; the exactly-
   // mergeable-state form here is the CMS-pair device): the frozen
   // offline quantizer broadcasts, every ARRIVING vector assigns to its
-  // nearest cell as a pure expression (sortedCellsL2Expr slice 1 —
-  // kmAssigned's own (kdist ASC, kcell ASC) tie-break, no window, no
-  // per-row state), and the only stateful operator accumulates
+  // nearest cell as a pure expression (slice 1 of Quantizer.ranked —
+  // the batch assignment's own min-L2 rank, no window, no per-row
+  // state), and the only stateful operator accumulates
   // per-cell (count, Σ fixed-point components): integer sums are
   // associative, so micro-batch merging is EXACT whatever the arrival
   // split, and state is ≤ KmCells groups × (Dim + 1) longs — bounded
@@ -574,17 +616,11 @@ object VectorQueries {
     * per-cell integer-exact running sums. Legal over a streaming frame
     * (one stateful aggregation; everything upstream is stateless).
     */
-  private[graft] def kmStreamSums(qs: DataFrame, cents: DataFrame): DataFrame =
-    qs.crossJoin(broadcast(centsRowOf(
-        cents.select(col("kcell").as("clabel"), col("karr").as("carr")))))
-      .select(col("qe"),
-        slice(sortedCellsL2Expr(col("cents"), col("qe")), 1, 1)
-          .getItem(0).getField("clabel").as("kcell"))
-      .groupBy(col("kcell"))
-      .agg(count(lit(1)).as("n"),
-        (0 until Dim).map(i =>
-          sum(floor(element_at(col("qe"), i + 1).cast("double")
-            * lit(CentScale.toDouble) + lit(0.5)).cast("long")).as(s"c$i")): _*)
+  private[graft] def kmStreamSums(qs: DataFrame, q: Quantizer): DataFrame =
+    q.ranked(qs, col("qe"), 1)
+      .select(col("qe"), col("cells").getItem(0).getField("cell").as("cell"))
+      .groupBy(col("cell"))
+      .agg(count(lit(1)).as("n"), fixedSums(col("qe")): _*)
 
   // ---- Driver-held k-means state ------------------------------------
   //
@@ -593,25 +629,26 @@ object VectorQueries {
   // values, never as a DataFrame lineage: the Lloyd rounds, the
   // MacQueen fold and the drift decisions are driver arithmetic over
   // one collect() of a ≤ KmCells-group aggregate (or over nothing at
-  // all), and plans read a table through kmCentsDf — a LocalRelation,
-  // so plan depth stays constant whatever the round or batch count.
+  // all), and plans read a table through Quantizer.trained — a
+  // LocalRelation, so plan depth stays constant whatever the round or
+  // batch count.
   // The arithmetic is the engine's, bit for bit: a coordinate
   // quantizes as floor(x·CentScale + 0.5) to a long, a mean is
   // c.toDouble / (n·CentScale).toDouble, and every long add, subtract
   // and multiply is Math.*Exact, so an overflow fails loudly as ANSI
   // Spark's sum and * do.
 
-  /** A centroid table: (kcell, karr) rows in kcell order. */
+  /** A centroid table: (cell, centroid) rows in cell order. */
   private[graft] type KmCents = Seq[(Long, Array[Double])]
 
-  /** Per-cell training sums: kcell → (n, Σ fixed-point components). */
+  /** Per-cell training sums: cell → (n, Σ fixed-point components). */
   private[graft] type KmSums = Map[Long, (Long, Array[Long])]
 
   private val KmCentsSchema = StructType(Seq(
-    StructField("kcell", LongType), StructField("karr", ArrayType(DoubleType))))
+    StructField("cell", LongType), StructField("carr", ArrayType(DoubleType))))
 
   /** The plan-side view of a centroid table: a LocalRelation with the
-    * (kcell bigint, karr array<double>) schema every consumer reads.
+    * (cell bigint, carr array<double>) schema every consumer reads.
     */
   private def kmCentsDf(s: SparkSession, c: KmCents): DataFrame =
     s.createDataFrame(java.util.Arrays.asList(
@@ -621,16 +658,16 @@ object VectorQueries {
     * kmCentsDf view.
     */
   private[graft] def kmCentsOf(df: DataFrame): KmCents =
-    df.select(col("kcell"), col("karr")).collect()
+    df.select(col("cell"), col("carr")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray).toSeq.sortBy(_._1)
 
   /** floor(x·CentScale + 0.5) as a long — Spark's floor(double). */
   private def kmFixed(x: Double): Long =
     math.floor(x * CentScale.toDouble + 0.5).toLong
 
-  /** Per-cell sums of a (kcell, n, c0..c{Dim-1}) frame, collected. */
+  /** Per-cell sums of a (cell, n, c0..c{Dim-1}) frame, collected. */
   private def kmSumsOf(sums: DataFrame): KmSums =
-    sums.select(col("kcell") +: col("n") +: (0 until Dim).map(i => col(s"c$i")): _*)
+    sums.select(col("cell") +: col("n") +: (0 until Dim).map(i => col(s"c$i")): _*)
       .collect().map(r =>
         r.getLong(0) -> (r.getLong(1), Array.tabulate(Dim)(i => r.getLong(i + 2))))
       .toMap
@@ -662,17 +699,19 @@ object VectorQueries {
     * shape a serving layer re-broadcasts and both streaming-training
     * gates emit.
     */
-  private def kmUnnest(cents: DataFrame): DataFrame =
-    cents.select(col("kcell"), posexplode(col("karr")).as(Seq("pos", "c")))
+  private def kmUnnest(s: SparkSession, c: KmCents): DataFrame =
+    kmCentsDf(s, c)
+      .select(col("cell").as("kcell"), posexplode(col("carr")).as(Seq("pos", "c")))
       .select(col("kcell"), col("pos").cast("long").as("pos"), col("c"))
 
   /** The batch post-pass over the drained sums: integer-exact means,
-    * empty cells keep their frozen centroid, unnested to long form.
+    * empty cells keep the frozen quantizer's centroid, unnested to long
+    * form.
     */
-  private[graft] def kmStreamUpdateFinish(cents: DataFrame,
+  private[graft] def kmStreamUpdateFinish(frozen: Quantizer,
                                           sums: DataFrame): DataFrame =
-    kmUnnest(kmCentsDf(sums.sparkSession,
-      kmCumCentroids(kmCentsOf(cents), kmSumsOf(sums))))
+    kmUnnest(sums.sparkSession,
+      kmCumCentroids(kmCentsOf(frozen.cents), kmSumsOf(sums)))
 
   /** stream_kmeans_update's oracle: the streamed update over ALL
     * arrived batches IS batch Lloyd round KmRounds+1 (integer sums
@@ -701,25 +740,22 @@ object VectorQueries {
   // foreachBatch exists for, and the cumulative state is a
   // KmCells-row table (at scale: an idempotent upsert keyed by batch
   // id — the foreachBatch replay contract StreamingSpec pins).
-  // Everything stays engine-exact: assignment is kmAssigned's own
+  // Everything stays engine-exact: assignment is the Lloyd quantizer's
   // min-L2 tie-break, sums are fixed-point integers, batch membership
   // and order are deterministic (vec_id % n staged by mtime), so the
   // oracle unrolls the per-batch chain CTE-for-CTE (mbRoundSql).
 
   /** Per-cell integer sums over an ALREADY-ASSIGNED frame (vec_id,
-    * kcell, embedding), collected — the Lloyd round's and the MacQueen
+    * cell, embedding), collected — the Lloyd round's and the MacQueen
     * step's one action, split from the assignment so the online
     * serve-and-train gate can feed BOTH the emission and the step from
     * one nearest-cell scan.
     */
   private def kmAssignedSums(assigned: DataFrame): KmSums =
-    kmSumsOf(assigned.groupBy(col("kcell")).agg(
-      count(lit(1)).as("n"),
-      (0 until Dim).map(i =>
-        sum(floor(element_at(col("embedding"), i + 1).cast("double")
-          * lit(CentScale.toDouble) + lit(0.5)).cast("long")).as(s"c$i")): _*))
+    kmSumsOf(assigned.groupBy(col("cell"))
+      .agg(count(lit(1)).as("n"), fixedSums(col("embedding")): _*))
 
-  /** A protocol's half of one trainer step: the (vec_id, kcell,
+  /** A protocol's half of one trainer step: the (vec_id, cell,
     * embedding) frame the MacQueen fold reads, the batch's emission
     * (if the protocol emits one), and the protocol's own state change,
     * run at the trainer's commit point.
@@ -766,7 +802,7 @@ object VectorQueries {
 
     /** The centroids the next batch assigns under. */
     protected final def cents: KmCents = current
-    protected final def df(c: KmCents): DataFrame = kmCentsDf(s, c)
+    protected final def quant(c: KmCents): Quantizer = Quantizer.trained(s, c)
 
     /** The protocol's half of one step, run under `cents`. */
     protected def serve(batch: DataFrame, batchId: Long): KmServed
@@ -786,7 +822,7 @@ object VectorQueries {
     }
 
     /** The current centroid table in long form (kcell, pos, c). */
-    def result(): DataFrame = kmUnnest(df(cents))
+    def result(): DataFrame = kmUnnest(s, cents)
 
     /** Every applied batch's emission. */
     protected final def emissions: DataFrame = {
@@ -802,7 +838,7 @@ object VectorQueries {
   private[graft] final class KmTrainOnly(s: SparkSession, d: String)
       extends KmMiniBatch(s, d) {
     protected def serve(batch: DataFrame, batchId: Long): KmServed =
-      KmServed(kmAssigned(batch, df(cents)))
+      KmServed(quant(cents).assigned(batch))
   }
 
   /** Serve, then train (stream_kmeans_online_serve): the batch's
@@ -814,27 +850,15 @@ object VectorQueries {
   private[graft] final class KmServeAssign(s: SparkSession, d: String)
       extends KmMiniBatch(s, d) {
     protected def serve(batch: DataFrame, batchId: Long): KmServed = {
-      val assigned = kmAssigned(batch, df(cents)).localCheckpoint()
-      KmServed(assigned, Some(assigned.select(col("vec_id"), col("kcell"))))
+      val assigned = quant(cents).assigned(batch).localCheckpoint()
+      KmServed(assigned,
+        Some(assigned.select(col("vec_id"), col("cell").as("kcell"))))
     }
 
     /** Every batch's (vec_id, kcell): batch r assigned under the
       * centroids after r steps.
       */
     def servedResult(): DataFrame = emissions
-  }
-
-  /** IVF top-3 of the batch's queries: probe lists from `bscored`
-    * (the batch scored under the quantizer `corpusIdx` was built
-    * with), then the shared exact re-rank tail over the (nn_id, cell,
-    * embedding) lists.
-    */
-  private def kmServeIvf(corpusIdx: DataFrame, bscored: DataFrame,
-                         batch: DataFrame): DataFrame = {
-    val probed = kmProbeSelection(bscored, NProbe)
-    val q = batch.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    ivfTopkTail(corpusIdx, probed, q)
   }
 
   /** The index a generation protocol serves from. A generation is
@@ -847,12 +871,13 @@ object VectorQueries {
 
     /** The generation serving batch `batchId`, and the batch's top-3
       * served from it: on `rebuild` a new generation holding `prior`'s
-      * corpus and the batch, assigned under `cents`; otherwise `prior`
-      * with the batch appended. `bscored` is the batch scored under the
-      * serving generation's quantizer. The caller commits the returned
-      * generation; nothing else may depend on it before.
+      * corpus and the batch, assigned under `q`; otherwise `prior` with
+      * the batch appended. `q` is the serving generation's quantizer
+      * (the current one on a rebuild) and `bscored` the batch scored
+      * under it. The caller commits the returned generation; nothing
+      * else may depend on it before.
       */
-    def advance(prior: Option[Gen], rebuild: Boolean, cents: KmCents,
+    def advance(prior: Option[Gen], rebuild: Boolean, q: Quantizer,
                 bscored: DataFrame, batch: DataFrame,
                 batchId: Long): (Gen, DataFrame)
   }
@@ -864,17 +889,13 @@ object VectorQueries {
   private[graft] final class KmLists(s: SparkSession, d: String) extends KmArtifact {
     type Gen = DataFrame
 
-    def advance(prior: Option[DataFrame], rebuild: Boolean, cents: KmCents,
+    def advance(prior: Option[DataFrame], rebuild: Boolean, q: Quantizer,
                 bscored: DataFrame, batch: DataFrame,
                 batchId: Long): (DataFrame, DataFrame) = {
       val lists =
-        if (rebuild)
-          kmAssigned(Tables.embeddingsSpread(s, d), kmCentsDf(s, cents))
-            .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
-              col("embedding"))
-            .localCheckpoint()
+        if (rebuild) q.lists(Tables.embeddingsSpread(s, d)).localCheckpoint()
         else prior.get
-      (lists, kmServeIvf(lists, bscored, batch))
+      (lists, ivfServe(lists, q, bscored, batch))
     }
   }
 
@@ -904,34 +925,34 @@ object VectorQueries {
     val runRoot: String = s"$storeRoot/run_${System.nanoTime()}"
 
     /** The batch's store rows (…, ingest = batchId, cell from `bscored`). */
-    protected def batchRows(bscored: DataFrame, batch: DataFrame,
+    protected def batchRows(q: Quantizer, bscored: DataFrame, batch: DataFrame,
                             batchId: Long): DataFrame
 
-    /** A prior generation's rows, re-assigned under `cents` into
+    /** A prior generation's rows, re-assigned under `q` into
       * ingest = batchId.
       */
-    protected def priorRows(prior: DataFrame, cents: KmCents,
+    protected def priorRows(prior: DataFrame, q: Quantizer,
                             batchId: Long): DataFrame
 
     /** The batch's top-3 served from a generation's scan. */
-    protected def serveScan(scan: DataFrame, bscored: DataFrame,
+    protected def serveScan(scan: DataFrame, q: Quantizer, bscored: DataFrame,
                             batch: DataFrame): DataFrame
 
-    final def advance(prior: Option[String], rebuild: Boolean, cents: KmCents,
+    final def advance(prior: Option[String], rebuild: Boolean, q: Quantizer,
                       bscored: DataFrame, batch: DataFrame,
                       batchId: Long): (String, DataFrame) = {
-      val rows = batchRows(bscored, batch, batchId)
+      val rows = batchRows(q, bscored, batch, batchId)
       def read(dir: String) = s.read.schema(genSchema(rows)).parquet(dir)
       val dir = if (rebuild) s"$runRoot/gen_$batchId" else prior.get
       val out =
-        if (rebuild) prior.fold(rows)(g => priorRows(read(g), cents, batchId)
+        if (rebuild) prior.fold(rows)(g => priorRows(read(g), q, batchId)
           .unionByName(rows))
         else rows
       val w = out.repartition(col("cell")).write.mode("overwrite")
       (if (rebuild) w else w.option("partitionOverwriteMode", "dynamic"))
         .partitionBy("ingest", "cell").parquet(dir)
       ivfStoreCommitLatest(runRoot, dir)
-      (dir, serveScan(read(dir), bscored, batch))
+      (dir, serveScan(read(dir), q, bscored, batch))
     }
 
     /** At drain: compact the current generation, bound the run to ≤ 2
@@ -952,21 +973,21 @@ object VectorQueries {
       extends KmGenStore(s, refreshStoreRoot(d)) {
     private def rows(assigned: DataFrame, batchId: Long): DataFrame =
       assigned.select(col("vec_id").as("nn_id"), col("embedding"),
-        lit(batchId).as("ingest"), col("kcell").as("cell"))
+        lit(batchId).as("ingest"), col("cell"))
 
-    protected def batchRows(bscored: DataFrame, batch: DataFrame,
+    protected def batchRows(q: Quantizer, bscored: DataFrame, batch: DataFrame,
                             batchId: Long): DataFrame =
-      rows(kmAssignedFromScored(bscored), batchId)
+      rows(q.assignedFrom(bscored), batchId)
 
-    protected def priorRows(prior: DataFrame, cents: KmCents,
+    protected def priorRows(prior: DataFrame, q: Quantizer,
                             batchId: Long): DataFrame =
-      rows(kmAssigned(prior.select(col("nn_id").as("vec_id"), col("embedding")),
-        kmCentsDf(s, cents)), batchId)
+      rows(q.assigned(prior.select(col("nn_id").as("vec_id"), col("embedding"))),
+        batchId)
 
-    protected def serveScan(scan: DataFrame, bscored: DataFrame,
+    protected def serveScan(scan: DataFrame, q: Quantizer, bscored: DataFrame,
                             batch: DataFrame): DataFrame =
-      kmServeIvf(scan.select(col("nn_id"), col("embedding"), col("cell")),
-        bscored, batch)
+      ivfServe(scan.select(col("nn_id"), col("embedding"), col("cell")),
+        q, bscored, batch)
   }
 
   /** The PQ code store (stream_ann_ivfpq_persisted_refresh): rows are
@@ -982,29 +1003,29 @@ object VectorQueries {
     private lazy val pqCb: DataFrame =
       pqCodebook(pqSubs(s, d).localCheckpoint(), k = IvfPqK)
 
-    protected def batchRows(bscored: DataFrame, batch: DataFrame,
+    protected def batchRows(q: Quantizer, bscored: DataFrame, batch: DataFrame,
                             batchId: Long): DataFrame =
       packCodes(
         pqAssign(pqSubsOf(batch), pqCb)
           .select(col("vec_id"), col("sub_id"), col("code"))
-          .join(kmAssignedFromScored(bscored)
-            .select(col("vec_id"), col("kcell").as("cell")), "vec_id"))
+          .join(q.assignedFrom(bscored).select(col("vec_id"), col("cell")),
+            "vec_id"))
         .withColumn("ingest", lit(batchId))
 
     // cells re-assigned from the raw embeddings of the stored ids
     // (vec_id-keyed; co-partitioned at scale)
-    protected def priorRows(prior: DataFrame, cents: KmCents,
+    protected def priorRows(prior: DataFrame, q: Quantizer,
                             batchId: Long): DataFrame = {
       val pc = prior.select(col("vec_id"), col("codes"))
       pc.join(
-        kmAssigned(Tables.embeddingsSpread(s, d)
-          .join(pc.select(col("vec_id")), "vec_id"), kmCentsDf(s, cents))
-          .select(col("vec_id"), col("kcell").as("cell")), "vec_id")
+        q.assigned(Tables.embeddingsSpread(s, d)
+          .join(pc.select(col("vec_id")), "vec_id"))
+          .select(col("vec_id"), col("cell")), "vec_id")
         .select(col("vec_id"), col("cell"), col("codes"),
           lit(batchId).as("ingest"))
     }
 
-    protected def serveScan(scan: DataFrame, bscored: DataFrame,
+    protected def serveScan(scan: DataFrame, q: Quantizer, bscored: DataFrame,
                             batch: DataFrame): DataFrame = {
       val codes = scan
         .select(col("vec_id"), col("cell"), posexplode(col("codes")))
@@ -1012,7 +1033,7 @@ object VectorQueries {
           col("pos").as("sub_id"), col("col").cast("long").as("code"))
       val lut = pqQueryLut(
         pqSubsOf(batch.filter(col("vec_id") < NQueries)), pqCb)
-      adcServeTail(codes, kmProbeSelection(bscored, NProbe), lut)
+      adcServeTail(codes, q.probes(bscored, NProbe), lut)
     }
   }
 
@@ -1048,13 +1069,14 @@ object VectorQueries {
     protected def serve(batch: DataFrame, batchId: Long): KmServed = {
       val rebuild = gen.isEmpty || kmDriftFp2(cents, genCents) > thr
       val srvCents = if (rebuild) cents else genCents
-      val bscored = kmScored(batch.select(col("vec_id"), col("embedding")),
-        df(srvCents)).localCheckpoint()
-      val (g, topk) = artifact.advance(gen, rebuild, cents, bscored, batch, batchId)
+      val srv = quant(srvCents)
+      val bscored = srv.scored(batch.select(col("vec_id"), col("embedding")))
+        .localCheckpoint()
+      val (g, topk) = artifact.advance(gen, rebuild, srv, bscored, batch, batchId)
       val cur = topk.localCheckpoint()
       val assigned =
-        if (rebuild) kmAssignedFromScored(bscored)
-        else kmAssigned(batch, df(cents))
+        if (rebuild) srv.assignedFrom(bscored)
+        else quant(cents).assigned(batch)
       KmServed(assigned, Some(cur), () => {
         gen = Some(g)
         genCents = srvCents
@@ -1093,33 +1115,27 @@ object VectorQueries {
     private var movedLog: List[Seq[Long]] = Nil
 
     protected def serve(batch: DataFrame, batchId: Long): KmServed = {
+      val q = quant(cents)
       val (newLists, newCellCents, moved) = lists match {
         case None =>
           // initial build: every list under the frozen quantizer
-          val built = kmAssigned(Tables.embeddingsSpread(s, d), df(cents))
-            .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
-              col("embedding"))
-            .localCheckpoint()
+          val built = q.lists(Tables.embeddingsSpread(s, d)).localCheckpoint()
           (built, cents, cents.map(_._1))
         case Some(prev) =>
           val moved = kmDriftPerCell(cents, cellCents)
             .collect { case (k, d2) if d2 > KmDriftRebuild => k }
           val inMoved = col("cell").isin(moved: _*)
-          val rea = kmAssigned(
-            prev.filter(inMoved)
-              .select(col("nn_id").as("vec_id"), col("embedding")),
-            df(cents))
-            .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
-              col("embedding"))
-          val cur = cents.toMap
+          val rea = q.lists(prev.filter(inMoved)
+            .select(col("nn_id").as("vec_id"), col("embedding")))
+          val now = cents.toMap
           val ncc = cellCents.map { case (k, prevK) =>
-            k -> (if (moved.contains(k)) cur(k) else prevK)
+            k -> (if (moved.contains(k)) now(k) else prevK)
           }
           (prev.filter(!inMoved).unionAll(rea).localCheckpoint(), ncc, moved)
       }
-      val bscored = kmScored(batch, df(cents)).localCheckpoint()
-      val cur = kmServeIvf(newLists, bscored, batch).localCheckpoint()
-      KmServed(kmAssignedFromScored(bscored), Some(cur), () => {
+      val bscored = q.scored(batch).localCheckpoint()
+      val cur = ivfServe(newLists, q, bscored, batch).localCheckpoint()
+      KmServed(q.assignedFrom(bscored), Some(cur), () => {
         lists = Some(newLists)
         cellCents = newCellCents
         movedLog = movedLog :+ moved
@@ -1130,7 +1146,7 @@ object VectorQueries {
       * build) — the re-assignment-work surface.
       */
     def movedCells: Seq[DataFrame] = movedLog.map(m =>
-      kmCentsDf(s, frozen.filter(c => m.contains(c._1))).select(col("kcell")))
+      kmCentsDf(s, frozen.filter(c => m.contains(c._1))).select(col("cell")))
 
     /** The current patchwork lists (every vector in exactly one). */
     private[graft] def listsTable: DataFrame = {
@@ -1374,8 +1390,8 @@ object VectorQueries {
   }
 
   /** stream_ann_ivfpq_persisted_refresh's oracle — the drift-refreshed
-    * PERSISTED CODE STORE's full contract in SQL (r17 verdict Next #1,
-    * the last open seam: refresh × the PQ code table): the SAME
+    * PERSISTED CODE STORE's full contract in SQL (refresh × the PQ
+    * code table): the SAME
     * unrolled MacQueen chain and generation recurrence as the raw
     * refresh face (kmDriftGensSrvcSql — one definition, the rule
     * cannot drift between the two stores), with each batch's serving
@@ -1589,18 +1605,18 @@ object VectorQueries {
     (s * s).toLong
   }
 
-  /** SemDeDup with the pair scan's CELL COVERAGE as a knob (r12
-    * verdict #3 — the paper's "multiple assignments" mitigation for
-    * cluster-boundary loss, Abbas et al. 2303.09540): membership and
+  /** SemDeDup with the pair scan's CELL COVERAGE as a knob (the
+    * paper's "multiple assignments" mitigation for cluster-boundary
+    * loss, Abbas et al. 2303.09540): membership and
     * the dominance key stay PRIMARY-cell (cent_sim is the crn=1
     * similarity, output identical in shape to dedup_semdedup), but
     * each vector's pair scan additionally probes its top-`nprobe`
     * cells, so a near-copy whose perturbation flipped its nearest
     * centroid is still paired with its original (the planted-fixture
     * 19/20 → 20/20 — VectorSpec). Devices:
-    *  - probe lists as the PURE EXPRESSION over the one-row broadcast
-    *    centroid array (sortedCellsExpr — no window, no shuffle, the
-    *    same tie-break as ranked_cells; at nprobe=1 the probe list IS
+    *  - probe lists as the label quantizer's per-row rank
+    *    (Quantizer.ranked — no window, no shuffle, the same tie-break
+    *    as the oracle's ranked_cells; at nprobe=1 the probe list IS
     *    the primary assignment and the scan reduces to the paper's
     *    base case, spec-pinned against the registered query);
     *  - candidate pairs from probe-side × primary-side on cell — an
@@ -1616,13 +1632,11 @@ object VectorQueries {
   private[graft] def semdedupKept(s: SparkSession, d: String,
                                   nprobe: Int = 1): DataFrame = {
     val e = Tables.embeddingsSpread(s, d)
-    val carr = ivfCentroids(e)
-    val assigned = ivfAssignedScored(e, carr).localCheckpoint()
-    val probes = e.crossJoin(broadcast(centsRowOf(carr)))
-      .select(col("vec_id"),
-        explode(slice(sortedCellsExpr(col("cents"), col("embedding")),
-          1, nprobe)).as("p"))
-      .select(col("vec_id").as("a"), col("p.clabel").as("cell"))
+    val q = Quantizer.labelMeans(s, d)
+    val assigned = q.assignedWithDot(e).localCheckpoint()
+    val probes = q.ranked(e, col("embedding"), nprobe)
+      .select(col("vec_id").as("a"), explode(col("cells")).as("p"))
+      .select(col("a"), col("p.cell").as("cell"))
     val aSide = probes.join(
       assigned.select(col("vec_id").as("a"), col("embedding").as("ea"),
         col("cdot").as("ca")), "a")
@@ -1635,23 +1649,19 @@ object VectorQueries {
       .select(when(struct(col("ca"), col("a")) < struct(col("cb"), col("b")),
         col("b")).otherwise(col("a")).as("vec_id"))
       .distinct()
-    assigned
-      .join(dropped.withColumn("is_drop", lit(1L)), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"),
-        round(col("cdot"), 6).as("cent_sim"),
-        when(col("is_drop").isNull, lit(1L)).otherwise(lit(0L)).as("kept"))
+    semdedupKeep(assigned, dropped)
   }
 
-  /** The SemDeDup keep/drop decision over a scored assignment
-    * (vec_id, cell, embedding, cdot): within-cell pair scan at
-    * DedupCos, drop the MORE-prototypical member of each near-dup
-    * pair ((cdot, vec_id) dominance — keep-least-prototypical), emit
-    * (vec_id, cell, cent_sim, kept). ONE definition shared by the
-    * label-cell face (dedup_semdedup) and the trained-quantizer face
-    * (dedup_semdedup_kmeans), so the decision arithmetic cannot drift
-    * between quantizers.
+  /** SemDeDup under quantizer `q` — dedup_semdedup (label cells) and
+    * dedup_semdedup_kmeans / _sampled (Lloyd cells), one decision body:
+    * the assignment with its centroid dot (checkpointed: both self-join
+    * sides and the output read it), a within-cell pair scan at
+    * DedupCos, and the MORE-prototypical member of each near-dup pair
+    * dropped ((cdot, vec_id) dominance — keep-least-prototypical).
     */
-  private def semdedupDecisions(assigned: DataFrame): DataFrame = {
+  private[graft] def semdedup(s: SparkSession, d: String, q: Quantizer): DataFrame = {
+    val assigned = q.assignedWithDot(Tables.embeddingsSpread(s, d))
+      .localCheckpoint()
     val dropped = assigned.select(col("cell"), col("vec_id").as("a"),
         col("embedding").as("ea"), col("cdot").as("ca"))
       .join(assigned.select(col("cell"), col("vec_id").as("b"),
@@ -1661,12 +1671,18 @@ object VectorQueries {
       .filter(col("cos") >= DedupCos)
       .filter(struct(col("ca"), col("a")) < struct(col("cb"), col("b")))
       .select(col("b").as("vec_id")).distinct()
+    semdedupKeep(assigned, dropped)
+  }
+
+  /** (vec_id, cell, cent_sim, kept) for every assigned vector, kept = 0
+    * iff it is among the `dropped` ids.
+    */
+  private def semdedupKeep(assigned: DataFrame, dropped: DataFrame): DataFrame =
     assigned
       .join(dropped.withColumn("is_drop", lit(1L)), Seq("vec_id"), "left")
       .select(col("vec_id"), col("cell"),
         round(col("cdot"), 6).as("cent_sim"),
         when(col("is_drop").isNull, lit(1L)).otherwise(lit(0L)).as("kept"))
-  }
 
   /** 64-bit random-hyperplane signature (vector SimHash). */
   private def sig(v: Column): Column = VectorFunctions.hyperplaneSig(v, W)
@@ -1837,37 +1853,6 @@ object VectorQueries {
         col("m.code").as("code"), col("m.dist").as("dist"))
   }
 
-  /** The IVF coarse quantizer's centroid table (clabel, carr) — exact
-    * per-label mean vectors via fixed-point integer sums (CentScale).
-    * Centroid build: ONE groupBy(label) with 64 bounded-state sum
-    * columns — no explode (no 64x row blow-up), no per-group buffer;
-    * per-group state is 64 longs + a count regardless of corpus size.
-    * localCheckpointed: the 10-row centroid table — the corpus
-    * aggregate behind it runs ONCE even though multiple consumers
-    * broadcast it. (A 10-row materialization is free at any scale; a
-    * corpus-sized one is not.) localCheckpoint rather than cache()
-    * keeps the repo's cache-hygiene invariant — NO bare cache() in any
-    * query path — so long-lived sessions never accumulate CacheManager
-    * entries; the ContextCleaner frees the blocks once the frame is
-    * unreachable.
-    */
-  private def ivfCentroids(e: DataFrame): DataFrame = {
-    // .cast("long") BEFORE the sum: true integer arithmetic at any
-    // scale (ADVICE r13 — a double sum is only exact below 2^53; the
-    // oracle sums BIGINT, so engine parity would silently break past
-    // ~2^29 rows per cell otherwise)
-    val sums = e.groupBy(col("label")).agg(
-      count(lit(1)).as("n"),
-      (0 until Dim).map(i =>
-        sum(floor(element_at(col("embedding"), i + 1).cast("double")
-          * lit(CentScale.toDouble) + lit(0.5)).cast("long")).as(s"c$i")): _*)
-    sums.select(col("label").as("clabel"),
-      array((0 until Dim).map(i =>
-        col(s"c$i").cast("double")
-          / (col("n") * lit(CentScale)).cast("double")): _*).as("carr"))
-      .localCheckpoint()
-  }
-
   // ---- Unsupervised coarse quantizer: Lloyd k-means ----
   // (vec_kmeans_assign / ann_ivf_kmeans_topk)
   //
@@ -1897,15 +1882,15 @@ object VectorQueries {
 
   /** k-means cell count — matches the label-cell geometry (10 cells at
     * every SF) so the trained quantizer's recall is directly comparable
-    * to the supervised ivfCentroids family at the same NProbe pruning
+    * to the supervised label-mean cells at the same NProbe pruning
     * fraction.
     *
     * k is the SemDeDup SCALE knob (the paper's protocol: k grows with
     * the corpus to hold cell width — and so the per-cell (n/k)²
     * quadratic — constant), and its scale effect is MEASURED, not
-    * argued (r13 verdict What's wrong #2; VectorSpec "KmCells is the
-    * SemDeDup scale knob"): training at k = 32 on the sf0.01 corpus
-    * collapses the within-cell pair volume 12 363 → 3 931 (≈ n²/2k as
+    * argued (VectorSpec "KmCells is the SemDeDup scale knob"):
+    * training at k = 32 on the sf0.01 corpus collapses the within-cell
+    * pair volume 12 363 → 3 931 (≈ n²/2k as
     * the near-balanced bound predicts) and moves kept members 313 →
     * 385 of 500 — scan cost and dedup aggressiveness trade exactly as
     * the paper states. Serving side at the fixed NProbe = 3, recall@3
@@ -1915,7 +1900,7 @@ object VectorQueries {
     * reason growing k with the corpus is affordable). The registered
     * k stays 10 (the label-cell comparability point); a production
     * corpus sizes k to hold n/k constant and pays the same
-    * semdedupDecisions body per cell.
+    * semdedup body per cell.
     */
   private[graft] val KmCells = 10
 
@@ -1941,7 +1926,7 @@ object VectorQueries {
     * (deterministic Gonzalez farthest-point traversal, kmSeedFarthest).
     *
     * MEASURED head-to-head at equal rounds (kmDistortionOf per round
-    * and kmIvfTopk recall@3 vs brute for each seed, KmRounds = 2,
+    * and ivfTopk recall@3 vs brute for each seed, KmRounds = 2,
     * both trainers, both gate scales):
     *
     *   sf0.01  full:    dist 461.8 first / 461.3 farthest; recall@3
@@ -1964,8 +1949,8 @@ object VectorQueries {
   private[graft] val KmSeed = "first"
 
   /** SIZE-TARGETED training sample — the FAISS protocol implemented
-    * faithfully (r14 verdict "What's wrong" #1: a constant FRACTION
-    * still scans O(corpus) per Lloyd round; FAISS's
+    * faithfully (a constant FRACTION would still scan O(corpus) per
+    * Lloyd round; FAISS's
     * max_points_per_centroid caps the training set at an ABSOLUTE
     * size, making training O(1) in corpus size): production trains
     * the coarse quantizer on a subsample capped at a fixed per-cell
@@ -1997,7 +1982,7 @@ object VectorQueries {
     * Recall band: see the ann_ivf_kmeans_sampled_topk query doc;
     * VectorSpec pins the floor.
     *
-    * The production default IS exercised (r15 verdict Next #4):
+    * The production default IS exercised:
     * VectorSpec runs the sampler at perCell = 256 on every gate
     * corpus and pins the documented degeneration — cap 2560 exceeds
     * all three corpora (500/500/2000 vectors), so the derived modulus
@@ -2058,11 +2043,11 @@ object VectorQueries {
     */
   private def kmSeed(e: DataFrame, cells: Int = KmCells): KmCents =
     kmCentsOf(e.filter(col("vec_id") < cells)
-      .select(col("vec_id").as("kcell"),
-        transform(col("embedding"), v => v.cast("double")).as("karr")))
+      .select(col("vec_id").as("cell"),
+        transform(col("embedding"), v => v.cast("double")).as("carr")))
 
   /** Deterministic farthest-point seed (Gonzalez 1985) — the MEASURED
-    * alternative to first-K (r13 verdict #6 / r14 Next #4): seed 0 is
+    * alternative to first-K: seed 0 is
     * the training row with the smallest vec_id; each next seed is the
     * training point maximizing its min L2² to the chosen set, ties
     * broken by vec_id ASC — no RNG anywhere, so the traversal is a
@@ -2082,20 +2067,20 @@ object VectorQueries {
   private def kmSeedFarthest(train: DataFrame,
                              cells: Int = KmCells): KmCents = {
     var seeds = kmCentsOf(train.orderBy(col("vec_id")).limit(1)
-      .select(lit(0L).as("kcell"),
-        transform(col("embedding"), v => v.cast("double")).as("karr")))
+      .select(lit(0L).as("cell"),
+        transform(col("embedding"), v => v.cast("double")).as("carr")))
     for (j <- 1 until cells) {
       seeds = seeds ++ kmCentsOf(train
         .crossJoin(broadcast(kmCentsDf(train.sparkSession, seeds)
-          .select(col("karr").as("sarr"))))
+          .select(col("carr").as("sarr"))))
         .withColumn("sd", kmL2(col("sarr"), col("embedding")))
         .groupBy(col("vec_id"))
         .agg(min(col("sd")).as("mind"),
           min_by(col("embedding"), col("sd")).as("emb"))
         .orderBy(col("mind").desc, col("vec_id"))
         .limit(1)
-        .select(lit(j.toLong).as("kcell"),
-          transform(col("emb"), v => v.cast("double")).as("karr")))
+        .select(lit(j.toLong).as("cell"),
+          transform(col("emb"), v => v.cast("double")).as("carr")))
     }
     seeds
   }
@@ -2107,55 +2092,14 @@ object VectorQueries {
   private def kmL2(c: Column, v: Column): Column =
     VectorFunctions.l2DF(c, v)
 
-  /** Every (vector, cell) L2² — narrow scan × broadcast, no exchange
-    * (the ivfScoredCells shape).
-    */
-  private def kmScored(e: DataFrame, cents: DataFrame): DataFrame =
-    e.crossJoin(broadcast(cents))
-      .withColumn("kdist", kmL2(col("karr"), col("embedding")))
-
-  /** Nearest-centroid assignment with the embedding riding along: ONE
-    * bounded-state min_by on the (kdist, kcell) struct — exactly the
-    * oracle window's (kdist ASC, kcell ASC) tie-break; partial
-    * aggregation collapses the ×KmCells rows map-side (the
-    * ivfAssignedScored device under the opposite ordering).
-    */
-  private def kmAssigned(e: DataFrame, cents: DataFrame): DataFrame =
-    kmAssignedFromScored(kmScored(e, cents))
-
-  /** kmAssigned over an ALREADY-SCORED frame — the online IVF serving
-    * step derives the batch's assignment AND its probe ranking from
-    * one checkpointed scored frame instead of scoring the batch per
-    * consumer (code-review r15).
-    */
-  private def kmAssignedFromScored(scored: DataFrame): DataFrame =
-    scored
-      .groupBy(col("vec_id"))
-      .agg(min_by(struct(col("kcell"), col("embedding")),
-        struct(col("kdist"), col("kcell"))).as("m"))
-      .select(col("vec_id"), col("m.kcell").as("kcell"),
-        col("m.embedding").as("embedding"))
-
-  /** Lloyd-trained coarse centroids: `rounds` rounds of assign →
-    * integer-exact per-dimension means (the ivfCentroids fixed-point
-    * sum, grouped by the assigned cell instead of the label). EMPTY
-    * CELLS KEEP their previous centroid (kmCumCentroids), so the
-    * table is KmCells rows at any round count; it reaches plans as a
-    * LocalRelation, so no consumer re-derives the training scans.
-    */
-  private def kmCentroids(e: DataFrame, rounds: Int = KmRounds,
-                          sampled: Boolean = false,
-                          cells: Int = KmCells,
-                          seed: String = KmSeed): DataFrame =
-    kmCentsDf(e.sparkSession, kmCentroidSeq(e, rounds, sampled, cells, seed).last)
-
   /** Every round's centroid table from ONE training run — element r is
-    * the quantizer after r rounds (element 0 the seed). The loop body
-    * lives only here; kmCentroids takes `.last`, and the curve
-    * consumers (the VectorSpec training contracts) score
-    * each table without re-running earlier rounds per point
-    * (code-review r13: per-round retraining repeated the corpus
-    * scans quadratically in the round count).
+    * the Lloyd quantizer after r rounds (element 0 the seed): `rounds`
+    * rounds of assign → integer-exact per-dimension means. EMPTY CELLS
+    * KEEP their previous centroid (kmCumCentroids), so the table is
+    * `cells` rows at any round count. The loop body lives only here;
+    * Quantizer.lloyd takes `.last`, and the curve consumers (the
+    * VectorSpec training contracts) score each table without
+    * re-running earlier rounds per point.
     */
   private def kmCentroidSeq(e: DataFrame, rounds: Int,
                             sampled: Boolean = false,
@@ -2176,12 +2120,12 @@ object VectorQueries {
     // one round = one collect() of the ≤ cells-group integer sums
     (1 to rounds).scanLeft(seeds) { (cents, _) =>
       kmCumCentroids(cents,
-        kmAssignedSums(kmAssigned(train, kmCentsDf(e.sparkSession, cents))))
+        kmAssignedSums(Quantizer.trained(e.sparkSession, cents).assigned(train)))
     }
   }
 
-  /** The per-round centroid tables for a data dir — ONE training run
-    * (seq element r = the quantizer after r rounds), exposed for the
+  /** The per-round Lloyd quantizers for a data dir — ONE training run
+    * (element r = the quantizer after r rounds), exposed for the
     * VectorSpec training contracts (distortion non-increase, shape
     * invariance) and the KmRounds/KmSeed measurements.
     */
@@ -2189,60 +2133,25 @@ object VectorQueries {
                                       rounds: Int,
                                       sampled: Boolean = false,
                                       cells: Int = KmCells,
-                                      seed: String = KmSeed): Seq[DataFrame] =
+                                      seed: String = KmSeed): Seq[Quantizer] =
     kmCentroidSeq(Tables.embeddingsSpread(s, d), rounds, sampled, cells, seed)
-      .map(kmCentsDf(s, _))
+      .map(Quantizer.trained(s, _))
 
-  /** The frozen offline quantizer for a data dir — kmCentroids exposed
-    * for the streaming update gate (stream_kmeans_update shares ONE
-    * training run between the arriving-side assignment and the
-    * empty-cell coalesce).
-    */
-  private[graft] def kmCentroidsOf(s: SparkSession, d: String): DataFrame =
-    kmCentroids(Tables.embeddingsSpread(s, d))
-
-  /** Full-corpus cell assignment under a quantizer trained at an
-    * arbitrary cell count — the KmCells-knob measurement face
-    * (VectorSpec pins the per-cell pair-count collapse in k; the
-    * measured grid is cited at the KmCells doc).
-    */
-  private[graft] def kmAssignAt(s: SparkSession, d: String,
-                                cells: Int): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    kmAssigned(e, kmCentroids(e, cells = cells))
-      .select(col("vec_id"), col("kcell"))
-  }
-
-  /** dedup_semdedup_kmeans's decisions at an arbitrary cell count —
-    * the same shared body (kmAssignedScored → semdedupDecisions), k
-    * the only thing that moves; the KmCells-knob keep-rate face.
-    */
-  private[graft] def semdedupKmeansAt(s: SparkSession, d: String,
-                                      cells: Int,
-                                      sampled: Boolean = false): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    semdedupDecisions(
-      kmAssignedScored(e, kmCentroids(e, cells = cells, sampled = sampled))
-        .localCheckpoint())
-  }
-
-  /** Total assigned distortion (Σ per-vector min L2²) under an
-    * arbitrary centroid table — the Lloyd objective, for the
-    * non-increase contracts.
+  /** Total assigned distortion (Σ per-vector min L2²) under a Lloyd
+    * quantizer — the Lloyd objective, for the non-increase contracts.
     */
   private[graft] def kmDistortionOf(s: SparkSession, d: String,
-                                    cents: DataFrame): DataFrame =
-    kmScored(Tables.embeddingsSpread(s, d), cents)
+                                    q: Quantizer): DataFrame =
+    q.scored(Tables.embeddingsSpread(s, d))
       .groupBy(col("vec_id"))
-      .agg(min(col("kdist")).as("kd"))
+      .agg(min(col("key")).as("kd"))
       .agg(sum(col("kd")).as("distortion"))
 
   /** Exact brute-force cosine top-3 of batch `r`'s queries over the
     * ARRIVED corpus (vec_id % nb <= r) — the measurement baseline for
     * the persisted-refresh gate (the store cannot contain vectors
     * that have not arrived), ONE definition for the KmDriftRebuild
-    * threshold sweep and VectorSpec's recall floors (code-review r17:
-    * the two carried verbatim copies).
+    * threshold sweep and VectorSpec's recall floors.
     */
   private[graft] def arrivedBruteTopk(s: SparkSession, d: String,
                                       r: Int, nb: Int): DataFrame = {
@@ -2259,47 +2168,6 @@ object VectorQueries {
       .select(col("qid"), col("vec_id").as("nn_id"))
   }
 
-  /** Probe selection over the trained quantizer's scored frame: each
-    * query's top `nprobe` cells by (kdist ASC, kcell ASC) —
-    * kmAssigned's own metric. ONE definition shared by
-    * ann_ivf_kmeans_topk and the trained ADC face, the probeSelection
-    * twin for the k-means family.
-    */
-  private def kmProbeSelection(scored: DataFrame, nprobe: Int): DataFrame =
-    scored.filter(col("vec_id") < NQueries)
-      .withColumn("crn", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("kdist"), col("kcell"))))
-      .filter(col("crn") <= nprobe)
-      .select(col("vec_id").as("qid"), col("kcell").as("cell"))
-
-  /** The trained-quantizer IVF serving chain — ONE definition for both
-    * training regimes (ann_ivf_kmeans_topk / _sampled_topk differ ONLY
-    * in what the trainer scans; code-review r14: the two registered
-    * bodies were verbatim copies): full-corpus assignment + probe
-    * selection under the (full- or sample-) trained centroids, then
-    * the shared exact re-rank tail.
-    */
-  private[graft] def kmIvfTopk(s: SparkSession, d: String,
-                               sampled: Boolean,
-                               cells: Int = KmCells,
-                               seed: String = KmSeed): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    val cents = kmCentroids(e, sampled = sampled, cells = cells, seed = seed)
-    def scored = kmScored(e, cents)
-    val assigned = kmAssigned(e, cents)
-      .select(col("vec_id").as("nn_id"), col("kcell").as("cell"),
-        col("embedding"))
-    val probed = kmProbeSelection(scored, NProbe)
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    ivfTopkTail(assigned, probed, q)
-  }
-
-  /** Oracle twin of kmIvfTopk — the assignment/probe/tail SQL shared
-    * by both training regimes' oracles (only kmCtesSql's `sampled`
-    * differs).
-    */
   /** dedup_semdedup_kmeans's oracle for either training regime: the
     * Lloyd chain (full- or sample-trained via kmCtesSql), assignment
     * at crn = 1, trained-centroid prototypicality, and the shared
@@ -2328,6 +2196,10 @@ object VectorQueries {
              CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
       FROM assigned s LEFT JOIN sdropped d ON d.vec_id = s.vec_id"""
 
+  /** Oracle twin of ivfTopk on the Lloyd cells — the assignment/probe/
+    * tail SQL shared by both training regimes' oracles (only
+    * kmCtesSql's `sampled` differs).
+    */
   private def kmIvfTopkSql(sampled: Boolean): String = s"""
       WITH ${kmCtesSql(sampled = sampled)},
       assigned AS (SELECT vec_id AS nn_id, kcell AS cell FROM kmranked WHERE crn = 1),
@@ -2336,59 +2208,11 @@ object VectorQueries {
       q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < $NQueries),
       $ivfTopkTailSql"""
 
-  /** The (cells, probed, centroids) triple every IVF consumer needs,
-    * under either quantizer: label-mean cells with max-dot assignment
-    * (`trained = false`, the registered family default) or
-    * Lloyd-trained cells under their OWN min-L2 metric
-    * (`trained = true`) — centroids always surfaced as
-    * (clabel, carr), so residual encoding and LUT builds are
-    * quantizer-agnostic downstream.
-    */
-  private def ivfQuantizer(e: DataFrame, nprobe: Int,
-                           trained: Boolean,
-                           sampled: Boolean = false): (DataFrame, DataFrame, DataFrame) =
-    if (trained) {
-      val cents = kmCentroids(e, sampled = sampled)
-      def scored = kmScored(e, cents)
-      (kmAssigned(e, cents).select(col("vec_id"), col("kcell").as("cell")),
-        kmProbeSelection(scored, nprobe),
-        cents.select(col("kcell").as("clabel"), col("karr").as("carr")))
-    } else {
-      val carr = ivfCentroids(e)
-      def scored = ivfScoredCells(e, carr)
-      (scored.groupBy(col("vec_id"))
-        .agg(max_by(col("clabel"), struct(col("adot"), -col("clabel")))
-          .as("cell")),
-        probeSelection(scored, nprobe), carr)
-    }
-
-  /** Trained-cell assignment with the prototypicality key riding
-    * along: (vec_id, cell, embedding, cdot), cdot = the index-ordered
-    * dot with the TRAINED cell centroid — the k-means twin of
-    * ivfAssignedScored, ONE definition shared by the batch SemDeDup
-    * face (dedup_semdedup_kmeans) and the streaming admission index,
-    * so the dominance arithmetic cannot drift between them.
-    */
-  private def kmAssignedScored(e: DataFrame, cents: DataFrame): DataFrame =
-    kmAssigned(e, cents)
-      .join(broadcast(cents), "kcell")
-      .withColumn("cdot", cdot(col("karr"), col("embedding")))
-      .select(col("vec_id"), col("kcell").as("cell"),
-        col("embedding"), col("cdot"))
-
   /** Index-ordered centroid-dot: fold of carr[i] * (double)v[i] —
     * engine-portable (mirrored in the oracle's list_reduce).
     */
   private def cdot(c: Column, v: Column): Column =
     VectorFunctions.dotDF(c, v)
-
-  /** Every (vector, cell) centroid score — a narrow scan × broadcast
-    * with no exchange; consumers derive cell assignment (bounded-state
-    * max_by) and query probe lists (post-filter rank window) from it.
-    */
-  private def ivfScoredCells(e: DataFrame, carr: DataFrame): DataFrame =
-    e.crossJoin(broadcast(carr))
-      .withColumn("adot", cdot(col("carr"), col("embedding")))
 
   /** Subspace-quantize an array&lt;double&gt; column: per-row symmetric
     * int8 scale (max |x|), PqM slices, floor-half-up — the identical
@@ -2458,27 +2282,24 @@ object VectorQueries {
         col("rnk").cast("long").as("rnk"), col("adist"))
   }
 
-  /** ann_ivfpq_topk's body, with the geometry (codebook size k, probed
-    * cells nprobe) as measurement knobs — the registered query pins
-    * (IvfPqK, NProbe); VectorSpec measures the recall surface across
-    * both knobs (the r11 geometry selection, recorded in the IvfPqK
-    * doc).
+  /** IVFADC under quantizer `q` — ann_ivfpq_topk on the label cells,
+    * ann_ivfpq_kmeans_topk / _sampled_topk on Lloyd cells — with the
+    * geometry (codebook size k, probed cells nprobe) as measurement
+    * knobs: the registered queries pin (IvfPqK, NProbe); VectorSpec
+    * measures the recall surface across both knobs (the grid recorded
+    * in the IvfPqK doc). The ADC chain is quantizer-agnostic: `q`
+    * supplies each vector's cell and each query's probe list.
     */
-  private[graft] def ivfpqTopk(s: SparkSession, d: String,
+  private[graft] def ivfpqTopk(s: SparkSession, d: String, q: Quantizer,
                                k: Int = IvfPqK,
                                nprobe: Int = NProbe,
-                               topn: Int = 3,
-                               trained: Boolean = false,
-                               sampled: Boolean = false): DataFrame = {
+                               topn: Int = 3): DataFrame = {
     val e = Tables.embeddingsSpread(s, d)
-    // nearest cell per vector + the query probe lists, under either
-    // quantizer (label-mean max-dot, or Lloyd-trained min-L2; the
-    // trained face optionally SAMPLE-trained) — the ADC chain below
-    // is quantizer-agnostic
-    val (cells, probed, _) = ivfQuantizer(e, nprobe, trained, sampled)
     val subs = pqSubs(s, d).localCheckpoint()
     val (rawCodes, lut) = adcCodesAndLut(subs, pqCodebook(subs, k = k))
-    adcServeTail(rawCodes.join(cells, "vec_id"), probed, lut, topn)
+    adcServeTail(
+      rawCodes.join(q.assigned(e).select(col("vec_id"), col("cell")), "vec_id"),
+      q.probes(q.scored(e), nprobe), lut, topn)
   }
 
   /** Pack a (vec_id, cell, sub_id, code) code table into the persisted
@@ -2486,7 +2307,7 @@ object VectorQueries {
     * vector, ordered by sub_id (posexplode re-derives the sub_id at
     * read). ONE definition for the batch build and the streaming
     * ingest, so the artifact layout cannot drift between them.
-    * The byte cast is range-guarded (ADVICE r17): a codebook with
+    * The byte cast is range-guarded: a codebook with
     * k > 128 would silently wrap codes negative and the read-back
     * cast('long') would miss the LUT join — rankings would go wrong
     * with no loud failure at write time. raise_error makes the pack
@@ -2507,35 +2328,34 @@ object VectorQueries {
         }).as("codes"))
 
   /** ADC serving FROM a persisted cell-partitioned packed-code store:
-    * probe lists and the query LUT derive from the live quantizer and
-    * codebook (both broadcast-sized at any corpus scale), the corpus
-    * side is the artifact's posexploded scan — the broadcast probe
-    * join prunes it to the probed cells' partitions. ONE definition
-    * shared by the batch-built face (ann_ivfpq_persisted_topk) and
-    * the streaming-ingested face (stream_ann_ivfpq_persisted_topk);
+    * probe lists come from the quantizer `q` and the query LUT from the
+    * codebook `cb` the store was encoded under (both broadcast-sized at
+    * any corpus scale, and built once by the caller), the corpus side
+    * is the artifact's posexploded scan — the broadcast probe join
+    * prunes it to the probed cells' partitions. ONE definition shared
+    * by the batch-built faces (ann_ivfpq_persisted_topk, _compact_topk)
+    * and the streaming-ingested face (stream_ann_ivfpq_persisted_topk);
     * reads both layouts (the streaming store carries an extra ingest
     * partition column the select ignores).
     */
-  private[graft] def pqServeFromStore(s: SparkSession, d: String,
-                                      store: String): DataFrame = {
+  private[graft] def pqServeFromStore(s: SparkSession, d: String, q: Quantizer,
+                                      cb: DataFrame, store: String): DataFrame = {
     val e = Tables.embeddingsSpread(s, d)
-    val (_, probed, _) = ivfQuantizer(e, NProbe, trained = false)
-    val subs = pqSubs(s, d).localCheckpoint()
-    val (_, lut) = adcCodesAndLut(subs, pqCodebook(subs, k = IvfPqK))
+    val lut = pqQueryLut(pqSubs(s, d).filter(col("vec_id") < NQueries), cb)
     val codes = s.read.parquet(store)
       .select(col("vec_id"), col("cell").cast("int").as("cell"),
         posexplode(col("codes")))
       .select(col("vec_id"), col("cell"),
         col("pos").as("sub_id"), col("col").cast("long").as("code"))
-    adcServeTail(codes, probed, lut)
+    adcServeTail(codes, q.probes(q.scored(e), NProbe), lut)
   }
 
   /** One micro-batch of the streaming code-store ingest: the arriving
     * vectors' PQ codes (pqSubsOf — the identical quantization
     * arithmetic as the batch face) under the OFFLINE-trained codebook
     * (broadcast, dictionary-sized — the train-offline/ingest-online
-    * deployment, the tokenizer gates' shape), cell-assigned by the
-    * same pure broadcast expression as the raw-vector ingest
+    * deployment, the tokenizer gates' shape), cell-assigned under `q`
+    * by the same per-row rank as the raw-vector ingest
     * (ivfArrivingAssign), packed, and written as this batch's
     * ingest=batchId partitions with DYNAMIC partition overwrite — a
     * redelivered batch overwrites its OWN partitions instead of
@@ -2543,13 +2363,13 @@ object VectorQueries {
     * device; aggregations force foreachBatch here, so the sink
     * commit log the raw-vector face relies on is not available).
     */
-  private[graft] def pqStoreIngestBatch(s: SparkSession, d: String,
+  private[graft] def pqStoreIngestBatch(q: Quantizer,
                                         store: String, cb: DataFrame,
                                         batch: DataFrame,
                                         batchId: Long): Unit = {
     val codes = pqAssign(pqSubsOf(batch), cb)
       .select(col("vec_id"), col("sub_id"), col("code"))
-    val cells = ivfArrivingAssign(batch, s, d)
+    val cells = ivfArrivingAssign(batch, q)
       .select(col("nn_id").as("vec_id"), col("cell"))
     packCodes(codes.join(cells, "vec_id"))
       .withColumn("ingest", lit(batchId))
@@ -2566,7 +2386,7 @@ object VectorQueries {
     * the persisted-code-store face (ann_ivfpq_persisted_topk) — the
     * two registered rows share ivfpqTopkOracleSql verbatim, so the
     * tail's arithmetic and casts must stay byte-identical between
-    * them (code-review r17: it lived in two copies).
+    * them.
     */
   private def adcServeTail(codes: DataFrame, probed: DataFrame,
                            lut: DataFrame, topn: Int = 3): DataFrame =
@@ -2604,15 +2424,14 @@ object VectorQueries {
                                      nprobe: Int = NProbe,
                                      shortlist: Int = RefineR): DataFrame = {
     val e = Tables.embeddingsSpread(s, d)
-    val short = ivfpqTopk(s, d, k, nprobe, topn = shortlist)
+    val short = ivfpqTopk(s, d, Quantizer.labelMeans(s, d), k, nprobe,
+      topn = shortlist)
       .select(col("qid"), col("nn_id"))
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("nn_id"))
     e.select(col("vec_id").as("nn_id"), col("embedding"))
       .join(broadcast(short), "nn_id") // corpus streamed once, no shuffle
-      .join(broadcast(q), "qid")
+      .join(broadcast(queriesOf(e)), "qid")
       .withColumn("cos", dot(col("qe"), col("embedding")))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 3)
@@ -2650,21 +2469,20 @@ object VectorQueries {
     * stays measured, not assumed.
     */
   private[graft] def ivfpqResidualTopk(s: SparkSession, d: String,
+                                       q: Quantizer,
                                        k: Int = IvfPqK,
-                                       nprobe: Int = NProbe,
-                                       trained: Boolean = false): DataFrame = {
+                                       nprobe: Int = NProbe): DataFrame = {
     val e = Tables.embeddingsSpread(s, d)
-    val (cells0, probed0, carr) = ivfQuantizer(e, nprobe, trained)
     // both consumed by TWO subtrees each (cells: rsubs + the codes
     // join; probed: the LUT build + the final cell filter) —
     // checkpoint so the corpus×NCells scoring runs once, not four
-    // times (code-review r11; probed is NQueries×nprobe rows, free)
-    val cells = cells0.localCheckpoint()
-    val probed = probed0.localCheckpoint()
+    // times (probed is NQueries×nprobe rows, free)
+    val cells = q.assigned(e).select(col("vec_id"), col("cell")).localCheckpoint()
+    val probed = q.probes(q.scored(e), nprobe).localCheckpoint()
     // database residuals vs each vector's OWN cell centroid
     val rsubs = quantizeSubs(
       e.join(cells, "vec_id")
-        .join(broadcast(carr), col("cell") === col("clabel"))
+        .join(broadcast(q.cents), "cell")
         .select(col("vec_id"),
           zip_with(col("embedding"), col("carr"),
             (x, c) => x.cast("double") - c).as("r")),
@@ -2677,7 +2495,7 @@ object VectorQueries {
     val lut = quantizeSubs(
       probed
         .join(e.select(col("vec_id").as("qid"), col("embedding")), "qid")
-        .join(broadcast(carr), col("cell") === col("clabel"))
+        .join(broadcast(q.cents), "cell")
         .select(col("qid"), col("cell"),
           zip_with(col("embedding"), col("carr"),
             (x, c) => x.cast("double") - c).as("r")),
@@ -2788,8 +2606,8 @@ object VectorQueries {
         FROM pqdists)"""
 
   /** The oracle L2² distance CTE body against a named centroid CTE —
-    * ONE definition of the parity-critical fold (code-review r13:
-    * kmRoundSql and kmdist carried two hand-maintained copies).
+    * ONE definition of the parity-critical fold, shared by kmRoundSql
+    * and kmdist.
     */
   private def kmDistSql(centCte: String,
                         corpus: String = "embeddings"): String = s"""
@@ -2803,7 +2621,7 @@ object VectorQueries {
   /** One oracle Lloyd round for the COARSE quantizer: L2² distances vs
     * km{r-1}, ranked assignment, integer-floored fixed-point means,
     * and the empty-cell-preserving left join + COALESCE — mirroring
-    * kmCentroids' loop body statement-for-statement (the pqRoundSql
+    * kmCentroidSeq's loop body statement-for-statement (the pqRoundSql
     * device over full-dimension double vectors).
     */
   private def kmRoundSql(r: Int,
@@ -2831,7 +2649,7 @@ object VectorQueries {
     * centroid table (kmc), all (vector, cell) distances (kmdist) and
     * the ranked assignment (kmranked) — vec_kmeans_assign and
     * ann_ivf_kmeans_topk close over these. `rounds` must match the
-    * Spark side's kmCentroids call (default KmRounds).
+    * Spark side's Quantizer.lloyd call (default KmRounds).
     */
   private def kmCtesSql(rounds: Int = KmRounds,
                         sampled: Boolean = false): String = {
@@ -2858,7 +2676,7 @@ object VectorQueries {
   }
 
   /** Shared IVF coarse-quantizer CTEs (csum → carr → scored_cells →
-    * ranked_cells), mirroring ivfCentroids/ivfScoredCells
+    * ranked_cells), mirroring Quantizer.labelMeans and its scoring
     * constant-for-constant — ann_ivf_topk and ann_ivfpq_topk close
     * over these and derive their own assignment/probe selections.
     */
@@ -2912,8 +2730,8 @@ object VectorQueries {
       $ivfTopkTailSql"""
 
   /** Root of the persisted inverted-list stores for a corpus, keyed
-    * by the md5 of the dir path (code-review r16: |String.hashCode|
-    * collides across dirs and folds sign). Each invocation writes a
+    * by the md5 of the dir path (|String.hashCode| would collide
+    * across dirs and fold sign). Each invocation writes a
     * FRESH child index dir under this root rather than overwriting in
     * place — an overwrite would delete the part files a previously
     * built (lazy) DataFrame captured at plan time, and two graft JVMs
@@ -2921,9 +2739,9 @@ object VectorQueries {
     * marker (atomic tmp+rename) names the current child, and the
     * committing writer prunes superseded siblings down to the newest
     * two — the marker's target plus one generation of slack for a
-    * still-lazy plan captured by the previous invocation (ADVICE r16:
-    * mtime-globbing could resolve a concurrent run's child, and stale
-    * children accumulated unboundedly between reboots).
+    * still-lazy plan captured by the previous invocation
+    * (mtime-globbing could resolve a concurrent run's child, and stale
+    * children would accumulate unboundedly between reboots).
     */
   private[graft] def ivfStoreRoot(d: String): String = {
     val key = java.security.MessageDigest.getInstance("MD5")
@@ -2940,13 +2758,26 @@ object VectorQueries {
   private[graft] def ivfStoreNewChild(d: String): String =
     storeNewChild(ivfStoreRoot(d))
 
+  /** Build a store generation in one write: a new child of `root`
+    * holding `rows` clustered by cell (repartition(cell), so each
+    * cell's inverted list is exactly one file) and written
+    * partitionBy("cell"), then published via the LATEST marker. The
+    * one batch store-build verb of the persisted faces; returns the
+    * child.
+    */
+  private[graft] def storeBuild(root: String, rows: DataFrame): String = {
+    val child = storeNewChild(root)
+    rows.repartition(col("cell")).write.partitionBy("cell").parquet(child)
+    ivfStoreCommitLatest(root, child)
+    child
+  }
+
   /** Publish `child` as the root's current index: write the LATEST
     * marker atomically (tmp file + rename — readers never observe a
     * torn marker), then best-effort delete superseded idx_/run_/cmp_
-    * siblings (ADVICE r17: cmp_ children a prior compaction left
-    * superseded were never reclaimed by later commits) beyond the
-    * newest two — but ONLY those older than
-    * StorePruneAgeMs (code-review r17: the keep-two budget is shared
+    * siblings (cmp_ children a prior compaction left superseded
+    * included) beyond the newest two — but ONLY those older than
+    * StorePruneAgeMs (the keep-two budget is shared
     * across committers at the per-corpus root, so without the age
     * gate two concurrent JVMs' commits could delete a sibling JVM's
     * just-committed child out from under its still-lazy scan; a
@@ -2983,8 +2814,13 @@ object VectorQueries {
     */
   private val StorePruneAgeMs: Long = 15L * 60 * 1000
 
+  /** Delete `f` and everything under it. A symbolic link is removed,
+    * never followed — a staged stream source links to the table it
+    * reads.
+    */
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(): Unit
   }
 
@@ -3040,10 +2876,9 @@ object VectorQueries {
     s"${ivfStoreRoot(d)}_pqrefresh"
 
   /** Store compaction — the HyDFS `merge` analog for the persisted
-    * index stores (r16 verdict Next #3; the reference's merge
-    * rewrites a file's appended blocks into canonical order,
-    * /root/reference/dht/dht.go:843-931 — here canonical = ONE
-    * clustered file per cell): rewrite the root's CURRENT child with
+    * index stores (the reference's merge rewrites a file's appended
+    * blocks into canonical order, dht/dht.go:843-931 — here
+    * canonical = ONE clustered file per cell): rewrite the root's CURRENT child with
     * repartition(cell) (collapsing the one-file-per-cell-per-batch
     * accumulation the streaming faces leave), publish the compacted
     * child via the LATEST marker, then DROP every superseded child —
@@ -3055,8 +2890,8 @@ object VectorQueries {
     * across the call. Like the reference, compaction is a
     * SINGLE-writer operation per store root — concurrent ingest into
     * the child being compacted is the caller's exclusion to provide.
-    * Superseded-child cleanup is AGE-GATED by default (ADVICE r17:
-    * an unconditional delete here, unlike ivfStoreCommitLatest's
+    * Superseded-child cleanup is AGE-GATED by default (an
+    * unconditional delete here, unlike ivfStoreCommitLatest's
     * gated prune, could fail a sibling JVM's still-lazy scan over the
     * pre-compaction child mid-read); a caller that OWNS the root —
     * a gate finalizing its instance-private run root, or a
@@ -3083,9 +2918,9 @@ object VectorQueries {
     dir
   }
 
-  /** PER-CELL store compaction (r17 verdict Next #2 — ivfStoreCompact
-    * above rewrites the WHOLE current child every call, which at
-    * production cadence is the wrong unit): only cells whose file
+  /** PER-CELL store compaction (ivfStoreCompact above rewrites the
+    * WHOLE current child every call, which at production cadence is
+    * the wrong unit): only cells whose file
     * count exceeds `maxFilesPerCell` rewrite — their rows collapse to
     * ONE clustered file — while cold cells' part files carry over
     * BYTE-IDENTICAL as hard links (no data copied, no rewrite; the
@@ -3114,8 +2949,8 @@ object VectorQueries {
     else storeRewriteCells(s, root, cur, hot, identity, files)
   }
 
-  /** Retention — the lifecycle verb ingest-only stores lack (r17
-    * verdict Next #7): drop every row NOT satisfying `keep` (a TTL on
+  /** Retention — the lifecycle verb ingest-only stores lack: drop
+    * every row NOT satisfying `keep` (a TTL on
     * the ingest partition, a kept-id set, any data predicate), leaving
     * cells that contain no dropped rows PHYSICALLY untouched (hard
     * links, like compaction's cold cells) and rewriting only the
@@ -3128,8 +2963,8 @@ object VectorQueries {
     * both spec-pinned. Offline/single-writer like compaction: a
     * replayed ingest batch after a retention pass would resurrect its
     * dropped rows, so retention runs at drain or between ingest runs.
-    * Predicate semantics are WHERE-style on both sides of the split
-    * (code-review r18): a row is RETAINED iff `keep` evaluates TRUE —
+    * Predicate semantics are WHERE-style on both sides of the split:
+    * a row is RETAINED iff `keep` evaluates TRUE —
     * the affected-cell scan and the rewrite filter both treat a
     * NULL-evaluating row as dropped, so the published row set equals
     * filter(keep) of the original regardless of which cells the
@@ -3146,10 +2981,10 @@ object VectorQueries {
     else storeRewriteCells(s, root, cur, affected, _.filter(keepTrue))
   }
 
-  /** Gate-driven store lifecycle (r17 verdict Next #3 — until now
-    * compaction and generation pruning only ran when a spec called
-    * them, so an unattended production run grew its disk footprint
-    * without bound): the refresh gates call this AT DRAIN, before
+  /** Gate-driven store lifecycle (if compaction and generation
+    * pruning only ran when a spec called them, an unattended
+    * production run would grow its disk footprint without bound): the
+    * refresh gates call this AT DRAIN, before
     * publishing the run, so the run root bounds itself — the current
     * generation compacts per-cell (a no-op walk when the last batch
     * was a rebuild, the common case at scale), and superseded
@@ -3171,7 +3006,7 @@ object VectorQueries {
       .filter(f => f.isDirectory && f.getName != dirName &&
         (f.getName.startsWith("gen_") || f.getName.startsWith("cmp_")))
     // the one slack child kept is the newest REAL generation — never a
-    // stale cmp_ from an earlier finalize (code-review r18: mixed
+    // stale cmp_ from an earlier finalize (mixed
     // gen_<batchId>/cmp_<nanoTime> numeric sorting would retain the
     // dead cmp_ branch and drop every gen_ hard-link source; harmless
     // on POSIX links but wrong on the HDFS/object-store deployment
@@ -3230,7 +3065,7 @@ object VectorQueries {
     val files = if (files0.nonEmpty) files0 else storeDataFiles(cur)
     // every data file must belong to a parseable cell= partition, or
     // the link/rewrite split below would silently drop its rows from
-    // the published child (code-review r18) — fail loudly instead
+    // the published child — fail loudly instead
     files.find(f => storeCellOf(cur, f).isEmpty).foreach(f =>
       sys.error(s"store child $cur holds a data file outside a " +
         s"cell= partition: $f — not a per-cell store"))
@@ -3262,40 +3097,32 @@ object VectorQueries {
   }
 
   /** Arrival-side index ingestion for the streaming persisted-index
-    * gate: each arriving vector assigns to its cell as a PURE
-    * broadcast expression (semdedupArriving — the admission gates'
-    * shared device, ivfAssignedScored's own (adot DESC, clabel ASC)
-    * tie-break), emitting the (nn_id, cell, embedding) inverted-list
-    * row the store persists. No state, no shuffle — the write's
-    * partitionBy(cell) is what places the row.
+    * gates: each arriving vector takes its cell under `q` as a pure
+    * per-row expression (semdedupArriving — slice 1 of the quantizer's
+    * rank, its batch assignment), emitting the (nn_id, cell, embedding)
+    * inverted-list row the store persists. No state, no shuffle — the
+    * write's partitionBy(cell) is what places the row.
     */
-  private[graft] def ivfArrivingAssign(df: DataFrame,
-                                       s: SparkSession, d: String): DataFrame =
-    semdedupArriving(
-      df.select(col("vec_id"), col("embedding").as("qe")),
-      ivfCentroids(Tables.embeddingsSpread(s, d)))
+  private[graft] def ivfArrivingAssign(df: DataFrame, q: Quantizer): DataFrame =
+    semdedupArriving(df.select(col("vec_id"), col("embedding").as("qe")), q)
       .select(col("vec_id").as("nn_id"), col("cell"),
         col("qe").as("embedding"))
 
   /** IVF serving FROM a persisted cell-partitioned store: the probe
-    * lists and query rows derive from the live quantizer, the corpus
-    * side is the artifact's scan — the broadcast probe join prunes it
-    * to the probed cells' partitions. ONE definition shared by the
-    * batch-built face (ann_ivf_persisted_topk) and the
-    * streaming-ingested face (stream_ann_ivf_persisted_topk).
+    * lists come from the quantizer `q` the store was built under (built
+    * once by the caller) and the query rows from the live table, the
+    * corpus side is the artifact's scan — the broadcast probe join
+    * prunes it to the probed cells' partitions. ONE definition shared
+    * by the batch-built faces (ann_ivf_persisted_topk, _retain_topk)
+    * and the streaming-ingested face (stream_ann_ivf_persisted_topk).
     */
-  private[graft] def ivfServeFromStore(s: SparkSession, d: String,
+  private[graft] def ivfServeFromStore(s: SparkSession, d: String, q: Quantizer,
                                        store: String): DataFrame = {
     val e = Tables.embeddingsSpread(s, d)
-    val carr = ivfCentroids(e)
-    def scoredCells = ivfScoredCells(e, carr)
     val idx = s.read.parquet(store)
       .select(col("nn_id"), col("embedding"),
         col("cell").cast("int").as("cell"))
-    val probed = probeSelection(scoredCells, NProbe)
-    val q = e.filter(col("vec_id") < NQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    ivfTopkTail(idx, probed, q)
+    ivfServe(idx, q, q.scored(e), e)
   }
 
   /** Oracle twin of adcCodesAndLut, closing over the PQ CTEs: the
@@ -3361,8 +3188,8 @@ object VectorQueries {
 
   /** The oracle twin of ivfTopkTail, closing over `assigned`, `probed`
     * and `q` CTEs — ONE definition shared by ann_ivf_topk and
-    * ann_ivf_kmeans_topk (code-review r13: the scored/ranked tail was
-    * copied verbatim between the two quantizer faces).
+    * ann_ivf_kmeans_topk, so the scored/ranked tail cannot drift
+    * between the two quantizer faces.
     */
   private lazy val ivfTopkTailSql: String = s"""scored AS (
         SELECT p.qid, a.nn_id, ${dotSql("q.qe", "e.embedding")} AS cos
@@ -3418,11 +3245,9 @@ object VectorQueries {
     // baseline every ANN variant is judged against.
     "ann_brute_topk" -> ((s, d) => {
       val e = Tables.embeddingsSpread(s, d)
-      val q = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("vec_id"))
-      e.crossJoin(broadcast(q))
+      e.crossJoin(broadcast(queriesOf(e)))
         .filter(col("vec_id") =!= col("qid"))
         .withColumn("cos", dot(col("qe"), col("embedding")))
         .withColumn("rnk", row_number().over(w))
@@ -3436,12 +3261,10 @@ object VectorQueries {
     // top-3 within the candidate set (see class doc for the banding math).
     "ann_lsh_topk" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val q = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val w = Window.partitionBy(col("qid"))
         .orderBy(col("cos").desc, col("nn_id"))
       annCandidates(s, d)
-        .join(broadcast(q), "qid")
+        .join(broadcast(queriesOf(e)), "qid")
         .join(e.select(col("vec_id").as("nn_id"), col("embedding")), "nn_id")
         .withColumn("cos", dot(col("qe"), col("embedding")))
         .withColumn("rnk", row_number().over(w))
@@ -3462,36 +3285,14 @@ object VectorQueries {
     // partitionBy("cell") and pins files-read = 3 of 10 on the probe
     // join, batch (dynamic partition pruning) and streaming faces.
     // Determinism: centroid components are exact integer-sum means; all
-    // centroid-dot products fold over positions in index order via
-    // zip_with+aggregate — both mirrored exactly in the oracle SQL.
-    "ann_ivf_topk" -> ((s, d) => {
-      val e = Tables.embeddingsSpread(s, d)
-      val carr = ivfCentroids(e)
-      // narrow (scan × broadcast, no exchange) — cheap to recompute for
-      // its two consumers, so it is deliberately NOT cached
-      def scoredCells = ivfScoredCells(e, carr)
-      // corpus assignment: nearest cell via a bounded-state max_by
-      // aggregate — partial aggregation collapses the ×NCells rows
-      // map-side and nothing is ever sorted (the old row_number window
-      // shuffled AND sorted corpus×NCells rows; max_by's state is one
-      // struct per vector regardless of corpus size). The (adot,
-      // -clabel) ordering struct reproduces the window's
-      // adot DESC, clabel ASC tie-break exactly.
-      val assigned = scoredCells
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("clabel"), col("embedding")),
-          struct(col("adot"), -col("clabel"))).as("m"))
-        .select(col("vec_id").as("nn_id"),
-          col("m.clabel").as("cell"), col("m.embedding").as("embedding"))
-      // queries probe their NProbe nearest cells: the rank window runs
-      // AFTER the query filter, over NQueries×NCells rows only
-      val probed = probeSelection(scoredCells, NProbe)
-      val q = e.filter(col("vec_id") < NQueries)
-        .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      ivfTopkTail(assigned, probed, q)
-    }),
+    // centroid-dot products fold over positions in index order (the
+    // native dot kernel) — both mirrored exactly in the oracle SQL.
+    // Assignment is a bounded-state min_by and probe selection a rank
+    // window after the query filter (Quantizer), both under the
+    // (dot DESC, cell ASC) order the oracle's ranked_cells states.
+    "ann_ivf_topk" -> ((s, d) => ivfTopk(s, d, Quantizer.labelMeans(s, d))),
 
-    // THE PERSISTED INDEX (r15 verdict Next #3): every serving gate
+    // THE PERSISTED INDEX: every serving gate
     // above rebuilds its inverted lists in-plan; at 100 TB the cell
     // join IS the storage layout — the index written once, partitioned
     // by cell on disk, and a query's probe list a partition-pruned
@@ -3506,19 +3307,16 @@ object VectorQueries {
     // physical plan: files read = NProbe on a one-query lookup, DPP
     // predicate present on this query's own store scan. The oracle is
     // ann_ivf_topk's verbatim — a persisted index that drifts from the
-    // in-plan assignment hash-mismatches, not just slows down.
+    // in-plan assignment hash-mismatches, not just slows down. One
+    // quantizer serves both the build and the probe lists.
     "ann_ivf_persisted_topk" -> ((s, d) => {
-      val e = Tables.embeddingsSpread(s, d)
-      val store = ivfStoreNewChild(d)
-      ivfAssignedFrom(e, ivfCentroids(e))
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(store)
-      ivfStoreCommitLatest(ivfStoreRoot(d), store)
-      ivfServeFromStore(s, d, store)
+      val q = Quantizer.labelMeans(s, d)
+      ivfServeFromStore(s, d, q,
+        storeBuild(ivfStoreRoot(d), q.lists(Tables.embeddingsSpread(s, d))))
     }),
 
-    // RETENTION AS A SERVING CONTRACT (r17 verdict Next #7 made a
-    // CORRECTNESS row, not just a spec): build the persisted index,
+    // RETENTION AS A SERVING CONTRACT (a CORRECTNESS row, not just a
+    // spec): build the persisted index,
     // age out a deterministic kept-set (vec_id % RetainMod ==
     // RetainDrop models the expired cohort — at production it's a TTL
     // on the ingest partition or a kept-id inventory), and serve the
@@ -3530,43 +3328,36 @@ object VectorQueries {
     // rewrite hash-mismatches. Queries still come from the live
     // table: a searcher whose own vector aged out still searches.
     "ann_ivf_persisted_retain_topk" -> ((s, d) => {
-      val e = Tables.embeddingsSpread(s, d)
-      val store = ivfStoreNewChild(d)
-      ivfAssignedFrom(e, ivfCentroids(e))
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(store)
-      ivfStoreCommitLatest(ivfStoreRoot(d), store)
+      val q = Quantizer.labelMeans(s, d)
+      storeBuild(ivfStoreRoot(d), q.lists(Tables.embeddingsSpread(s, d)))
       val kept = ivfStoreRetain(s, ivfStoreRoot(d),
         col("nn_id") % RetainMod =!= RetainDrop)
-      ivfServeFromStore(s, d, kept)
+      ivfServeFromStore(s, d, q, kept)
     }),
 
     // Unsupervised coarse-quantizer training — Lloyd k-means over the
     // vectors themselves (the published FAISS protocol; see the
-    // kmCentroids section doc). Output: the full-corpus cell
+    // Lloyd k-means section doc). Output: the full-corpus cell
     // assignment under the trained quantizer — the inverted-list
     // building block when no label column exists.
-    "vec_kmeans_assign" -> ((s, d) => {
-      val e = Tables.embeddingsSpread(s, d)
-      kmAssigned(e, kmCentroids(e))
-        .select(col("vec_id"), col("kcell").cast("long").as("cell"))
-    }),
+    "vec_kmeans_assign" -> ((s, d) =>
+      Quantizer.lloyd(s, d).assigned(Tables.embeddingsSpread(s, d))
+        .select(col("vec_id"), col("cell"))),
 
     // IVF top-k on the TRAINED (k-means) coarse quantizer — the same
-    // probe-NProbe-cells/exact-within shape as ann_ivf_topk with cells
-    // from kmCentroids instead of the label means: what the IVF family
+    // probe-NProbe-cells/exact-within shape as ann_ivf_topk with Lloyd
+    // cells instead of the label means: what the IVF family
     // runs on a label-less corpus. Assignment and probe selection rank
     // by ascending exact L2² (the quantizer's own training metric,
     // tie to the smaller cell id); recall@3 vs brute measured at the
     // KmRounds doc (0.633 vs the label cells' 0.533 at NProbe=3 —
     // trained cells beat the supervised ones they replace here).
-    "ann_ivf_kmeans_topk" -> ((s, d) => kmIvfTopk(s, d, sampled = false)),
+    "ann_ivf_kmeans_topk" -> ((s, d) => ivfTopk(s, d, Quantizer.lloyd(s, d))),
 
     // IVF top-k with the quantizer trained on the DETERMINISTIC
     // SIZE-TARGETED SUBSAMPLE — the FAISS max_points_per_centroid
-    // protocol implemented faithfully (r14 verdict Next #1: the
-    // previous constant-fraction sample still scanned O(corpus) per
-    // round): the training set is capped at an ABSOLUTE size
+    // protocol (a constant-fraction sample would still scan O(corpus)
+    // per round): the training set is capped at an ABSOLUTE size
     // (KmTrainPerCell × k points; modulus derived from the corpus
     // count as a lazy one-row broadcast, mirrored by the oracle's
     // scalar subquery), so the Lloyd rounds scan a ~250-point set at
@@ -3590,9 +3381,10 @@ object VectorQueries {
     // expected generalization noise, recall unaffected). VectorSpec
     // pins sampled > label at the gate corpus and the sampled-loop
     // distortion non-increase there. ONE serving-chain definition for
-    // both training regimes (kmIvfTopk — only the trainer's input set
+    // both training regimes (ivfTopk — only the trainer's input set
     // differs).
-    "ann_ivf_kmeans_sampled_topk" -> ((s, d) => kmIvfTopk(s, d, sampled = true)),
+    "ann_ivf_kmeans_sampled_topk" -> ((s, d) =>
+      ivfTopk(s, d, Quantizer.lloyd(s, d, sampled = true))),
 
     // Embedding-cosine near-dup: exact-band candidate pairs (da < db),
     // verified at cosine >= 0.3 (threshold note in class doc). ONE
@@ -3725,20 +3517,13 @@ object VectorQueries {
     // Here k = the 10 label-cells the IVF family trains — wide enough
     // that the within-cell exact scan IS the honest cost (no LSH
     // pre-filter hiding the paper's actual arithmetic).
-    "dedup_semdedup" -> ((s, d) => {
-      val e = Tables.embeddingsSpread(s, d)
-      // assignment + centroid similarity (shared ivfAssignedScored);
-      // consumed by both self-join sides and the output projection,
-      // so the corpus aggregate behind it runs once
-      semdedupDecisions(
-        ivfAssignedScored(e, ivfCentroids(e)).localCheckpoint())
-    }),
+    "dedup_semdedup" -> ((s, d) => semdedup(s, d, Quantizer.labelMeans(s, d))),
 
     // SemDeDup on the TRAINED quantizer — the paper's actual protocol
     // (Abbas et al. 2303.09540 §3 cluster with k-means, not with
-    // labels): cells from kmCentroids, prototypicality = dot with the
-    // TRAINED cell centroid, decision body shared verbatim with the
-    // registered label-cell face (semdedupDecisions — one definition).
+    // labels): Lloyd cells, prototypicality = dot with the TRAINED
+    // cell centroid, decision body shared verbatim with the registered
+    // label-cell face (semdedup — one definition).
     // The label-cell query above stays registered alongside: it is the
     // supervised comparison point and the streaming admission gate's
     // oracle anchor. On the planted fixture the trained cells recover
@@ -3747,11 +3532,8 @@ object VectorQueries {
     // cell but not its Lloyd cell; VectorSpec). Scale shape identical:
     // per-cell quadratic bounded at (n/k)², cell the partition key;
     // the one new cost is the KmRounds training scans (see the
-    // kmCentroids section doc).
-    // delegates to semdedupKmeansAt at the registered cell count —
-    // ONE decision body shared with the KmCells-knob measurement face
-    // (code-review r14: the two were verbatim copies).
-    "dedup_semdedup_kmeans" -> ((s, d) => semdedupKmeansAt(s, d, KmCells)),
+    // Lloyd k-means section doc).
+    "dedup_semdedup_kmeans" -> ((s, d) => semdedup(s, d, Quantizer.lloyd(s, d))),
 
     // The SemDeDup paper's actual production protocol end-to-end: the
     // coarse quantizer trained on the SIZE-TARGETED sample (the FAISS
@@ -3759,13 +3541,13 @@ object VectorQueries {
     // points whatever the corpus; the paper itself clusters a sample,
     // never all of LAION), then the full corpus assigned once and the
     // per-cell dominance decisions taken exactly as the full-trained
-    // face — same semdedupDecisions body, only the trainer's input
-    // set differs. With this row the sampled trainer is carried
+    // face — same semdedup body, only the trainer's input set
+    // differs. With this row the sampled trainer is carried
     // through EVERY registered consumer family (IVF serving, ADC,
     // and now the dedup face) — training cost O(1) in corpus size on
     // all of them.
     "dedup_semdedup_kmeans_sampled" -> ((s, d) =>
-      semdedupKmeansAt(s, d, KmCells, sampled = true)),
+      semdedup(s, d, Quantizer.lloyd(s, d, sampled = true))),
 
     // SemDeDup with the MULTI-CELL probe knob at nprobe=2 (the paper's
     // multiple-assignments mitigation, semdedupKept doc): the pair
@@ -3845,9 +3627,9 @@ object VectorQueries {
     // + ranked top-3 proceed exactly as in ann_pq_adc_topk. Recall vs
     // the exact baseline is the product of the two stages' losses
     // (cell pruning × PQ distortion) — floor-pinned in VectorSpec.
-    "ann_ivfpq_topk" -> ((s, d) => ivfpqTopk(s, d)),
+    "ann_ivfpq_topk" -> ((s, d) => ivfpqTopk(s, d, Quantizer.labelMeans(s, d))),
 
-    // THE PERSISTED IVFADC CODE STORE (r16 verdict Next #4): the
+    // THE PERSISTED IVFADC CODE STORE: the
     // raw-vector store above persists full embedding arrays; at 100 TB
     // the artifact worth persisting is the PQ CODE table — PqM bytes
     // per vector instead of Dim floats (32× smaller here: 8 tinyint
@@ -3867,20 +3649,18 @@ object VectorQueries {
     // code mis-packed, mis-placed, or re-ranked by the round trip
     // hash-mismatches rather than just drifting recall.
     "ann_ivfpq_persisted_topk" -> ((s, d) => {
-      val e = Tables.embeddingsSpread(s, d)
-      val (cells, _, _) = ivfQuantizer(e, NProbe, trained = false)
+      val q = Quantizer.labelMeans(s, d)
       val subs = pqSubs(s, d).localCheckpoint()
-      val (rawCodes, _) = adcCodesAndLut(subs, pqCodebook(subs, k = IvfPqK))
-      val store = storeNewChild(pqStoreRoot(d))
-      packCodes(rawCodes.join(cells, "vec_id"))
-        .repartition(col("cell"))
-        .write.partitionBy("cell").parquet(store)
-      ivfStoreCommitLatest(pqStoreRoot(d), store)
-      pqServeFromStore(s, d, store)
+      val cb = pqCodebook(subs, k = IvfPqK)
+      val codes = pqAssign(subs, cb)
+        .select(col("vec_id"), col("sub_id"), col("code"))
+        .join(q.assigned(Tables.embeddingsSpread(s, d))
+          .select(col("vec_id"), col("cell")), "vec_id")
+      pqServeFromStore(s, d, q, cb, storeBuild(pqStoreRoot(d), packCodes(codes)))
     }),
 
-    // PER-CELL COMPACTION AS A SERVING CONTRACT (r17 verdict Next #2
-    // made a CORRECTNESS row): the code store accumulates TWO batch
+    // PER-CELL COMPACTION AS A SERVING CONTRACT (a CORRECTNESS row):
+    // the code store accumulates TWO batch
     // ingests (pqStoreIngestBatch — the streaming face's exact write,
     // two files per cell), ivfStoreCompactCells collapses every
     // crossed-threshold cell to one clustered file, and the full
@@ -3892,23 +3672,22 @@ object VectorQueries {
     // cell, hard-linked cold cells) on a mixed fixture.
     "ann_ivfpq_persisted_compact_topk" -> ((s, d) => {
       val e = Tables.embeddingsSpread(s, d)
+      val q = Quantizer.labelMeans(s, d)
       val subs = pqSubs(s, d).localCheckpoint()
       val cb = pqCodebook(subs, k = IvfPqK)
       val store = storeNewChild(pqStoreRoot(d))
       for (i <- 0 to 1)
-        pqStoreIngestBatch(s, d, store, cb,
-          e.filter(col("vec_id") % 2 === i), i.toLong)
+        pqStoreIngestBatch(q, store, cb, e.filter(col("vec_id") % 2 === i), i.toLong)
       ivfStoreCommitLatest(pqStoreRoot(d), store)
-      val cmp = ivfStoreCompactCells(s, pqStoreRoot(d))
-      pqServeFromStore(s, d, cmp)
+      pqServeFromStore(s, d, q, cb, ivfStoreCompactCells(s, pqStoreRoot(d)))
     }),
 
     // IVFADC on the TRAINED coarse quantizer — the fully unsupervised
     // published stack (FAISS's own shape: k-means coarse quantizer +
     // PQ codes + ADC scan), nothing derived from the label column
     // anywhere in the chain. Same ADC machinery (ivfpqTopk is
-    // quantizer-agnostic past the ivfQuantizer triple); cells and
-    // probe lists come from kmCentroids under min-L2. Measured at
+    // quantizer-agnostic); cells and probe lists come from the Lloyd
+    // quantizer under min-L2. Measured at
     // sf0.01 (VectorSpec): ADC recall@3 vs brute 0.233 on trained
     // cells vs 0.207 on label cells (direction pinned); residual
     // encoding RE-MEASURED on trained cells — the label family's
@@ -3917,7 +3696,7 @@ object VectorQueries {
     // costs more than centering buys at this codebook geometry), so
     // raw stays the registered default ON MEASUREMENT, spec-pinned to
     // re-open loudly if a corpus change flips it.
-    "ann_ivfpq_kmeans_topk" -> ((s, d) => ivfpqTopk(s, d, trained = true)),
+    "ann_ivfpq_kmeans_topk" -> ((s, d) => ivfpqTopk(s, d, Quantizer.lloyd(s, d))),
 
     // The production-trainer IVFADC: the fully unsupervised stack
     // with the coarse quantizer trained on the SIZE-TARGETED sample
@@ -3926,13 +3705,13 @@ object VectorQueries {
     // through PQ + ADC: at 100 TB this is the whole-stack shape
     // (train coarse cells on an O(1)-size sample, assign + encode the
     // corpus once, serve pruned ADC scans). Everything past the
-    // ivfQuantizer triple is the shared quantizer-agnostic chain.
+    // quantizer is the shared quantizer-agnostic chain.
     // Measured (VectorSpec): ADC recall@3 vs brute 0.230 sampled vs
     // 0.233 full-trained at sf0.01 — PQ distortion dominates, so the
     // bounded training set costs nothing measurable at this geometry;
     // band-pinned.
     "ann_ivfpq_kmeans_sampled_topk" -> ((s, d) =>
-      ivfpqTopk(s, d, trained = true, sampled = true)),
+      ivfpqTopk(s, d, Quantizer.lloyd(s, d, sampled = true))),
 
     // IVFADC+R — the published third stage of the billion-scale stack
     // (Jégou et al. TPAMI'11 §V): ADC's top-RefineR shortlist per

@@ -25,29 +25,9 @@ import graft.operators.Core
   */
 object StreamOps {
 
-  /** S1 streaming source: a directory of text files as the reference's
-    * (key, value) line stream. The key carries the originating file so
-    * downstream semantics match rainstorm/server.go:439's "<file>:<line>"
-    * without serializing the scan.
-    */
-  def sourceLines(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .option("maxFilesPerTrigger", 8) // bounded micro-batches at scale
-      .text(dir)
-      .select(
-        concat(input_file_name(), lit(":"),
-          md5(col("value"))).as("key"),
-        col("value"))
-
   /** Streaming parquet source over a fixed schema (driver testdata shape). */
   def sourceParquet(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     spark.readStream.schema(schema).option("maxFilesPerTrigger", 8).parquet(dir)
-
-  /** A1 keyed running count, micro-batch observable form: update-mode
-    * `groupBy(key).count()`. The state store holds one long per key —
-    * the direct replacement for the reference's `map[string]int` + WAL.
-    */
-  def countByKey(df: DataFrame): DataFrame = Core.countByKey(df)
 
   /** A1 per-record emission fidelity: the reference emits `(key, n)` on
     * EVERY increment (rainstorm/server.go:344-355), not once per

@@ -94,9 +94,15 @@ class PartitioningSpec extends GraftSpec {
     // registered query's own store, not a fixture.
     val sf = "/root/testdata/sf0.001"
     val vq = graft.queries.VectorQueries
-    // invoking the registered query builds (overwrites) the store
-    val registered = vq.queries("ann_ivf_persisted_topk")(spark, sf)
-    assert(registered.count() > 0)
+    // invoking the registered query builds (overwrites) the store; the
+    // build plus one serve runs within a Spark-job budget (measured 18
+    // at sf0.001, one label quantizer shared by build and serve)
+    val (servedRows, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      vq.queries("ann_ivf_persisted_topk")(spark, sf).count()
+    }
+    assert(servedRows > 0)
+    info(s"ann_ivf_persisted_topk build + serve: $jobs Spark jobs")
+    assert(jobs <= 20, s"ann_ivf_persisted_topk ran $jobs Spark jobs, budget 20")
     val store = vq.ivfStoreLatest(sf)
     val cellDirs = new java.io.File(store).listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("cell="))
@@ -645,7 +651,7 @@ class PartitioningSpec extends GraftSpec {
     }
     val totalFiles = parquetFiles(store)
     assert(totalFiles >= 10, s"expected >= 10 cell partitions' files, got $totalFiles")
-    val carr = graft.queries.VectorQueries.ivfCentroidsOf(spark, sf)
+    val quant = graft.queries.VectorQueries.Quantizer.labelMeans(spark, sf)
     val qemb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), col("embedding").as("qe"))
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -657,7 +663,7 @@ class PartitioningSpec extends GraftSpec {
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         // arrival-side cell assignment: the gate's own expression
         val cells = graft.queries.VectorQueries
-          .semdedupArriving(batch.join(qemb, "vec_id"), carr)
+          .semdedupArriving(batch.join(qemb, "vec_id"), quant)
           .select("cell").distinct().collect().map(_.getInt(0)).toSeq
         val pruned = spark.read.parquet(store)
           .filter(col("cell").isin(cells: _*))

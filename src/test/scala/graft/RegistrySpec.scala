@@ -72,5 +72,16 @@ class RegistrySpec extends GraftSpec {
     val after = graftEntries
     assert(after.size === before.size,
       s"the gate left temp entries behind: ${(after -- before).mkString(", ")}")
+    // The memory-sink, file-sink and curation-pipeline gates delete
+    // their checkpoint, staged-source and staging dirs too; a file-sink
+    // gate keeps its graft-out-* dir, which the returned frame reads.
+    val gateDirs = Seq("graft-ckpt-", "graft-src-", "graft-stage-")
+    for (name <- Seq("stream_count_by_key", "stream_dedup_events_wm",
+                     "stream_curation_pipeline")) {
+      val pre = graftEntries
+      assert(SparkEntry.queries(name)(session, Sf).count() > 0L)
+      val left = (graftEntries -- pre).filter(n => gateDirs.exists(n.startsWith))
+      assert(left.isEmpty, s"$name left temp entries behind: ${left.mkString(", ")}")
+    }
   }
 }

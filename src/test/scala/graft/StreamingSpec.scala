@@ -373,16 +373,15 @@ class StreamingSpec extends GraftSpec {
     val streamed = rows(graft.queries.StreamingGateQueries
       .queries("stream_kmeans_update")(spark, d))
     val tables = graft.queries.VectorQueries.kmCentroidTables(spark, d, kr + 1)
-    def unnest(c: org.apache.spark.sql.DataFrame) =
-      rows(c.select(col("kcell"), posexplode(col("karr")).as(Seq("pos", "c")))
-        .select(col("kcell"), col("pos").cast("long"), col("c")))
+    def unnest(q: graft.queries.VectorQueries.Quantizer) =
+      rows(q.cents.select(col("cell"), posexplode(col("carr")).as(Seq("pos", "c")))
+        .select(col("cell"), col("pos").cast("long"), col("c")))
     assert(streamed === unnest(tables.last),
       "streamed update must equal batch Lloyd round KmRounds+1")
     assert(streamed !== unnest(tables(kr)),
       "the streamed round should move at least one centroid component")
-    val crossBatch = graft.queries.VectorQueries.kmAssignAt(spark, d,
-        graft.queries.VectorQueries.KmCells)
-      .groupBy(col("kcell"))
+    val crossBatch = graft.queries.VectorQueries.queries("vec_kmeans_assign")(spark, d)
+      .groupBy(col("cell"))
       .agg(countDistinct(col("vec_id") % 4).as("nb"))
       .filter(col("nb") >= 2L).count()
     assert(crossBatch > 0L,
@@ -406,9 +405,9 @@ class StreamingSpec extends GraftSpec {
       .queries("stream_kmeans_update")(spark, d))
     val kr = graft.queries.VectorQueries.KmRounds
     val frozen = rows(graft.queries.VectorQueries
-      .kmCentroidTables(spark, d, kr)(kr)
-      .select(col("kcell"), posexplode(col("karr")).as(Seq("pos", "c")))
-      .select(col("kcell"), col("pos").cast("long"), col("c")))
+      .kmCentroidTables(spark, d, kr)(kr).cents
+      .select(col("cell"), posexplode(col("carr")).as(Seq("pos", "c")))
+      .select(col("cell"), col("pos").cast("long"), col("c")))
     assert(seqr.map(_._1) === frozen.map(_._1),
       "same cell geometry in and out")
     assert(seqr !== frozen, "the online steps must move the centroids")
@@ -483,8 +482,7 @@ class StreamingSpec extends GraftSpec {
     val served = graft.queries.StreamingGateQueries
       .queries("stream_kmeans_online_serve")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val frozen = graft.queries.VectorQueries
-      .kmAssignAt(spark, d, graft.queries.VectorQueries.KmCells)
+    val frozen = graft.queries.VectorQueries.queries("vec_kmeans_assign")(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(served.keySet === frozen.keySet,
       "every arrival is served exactly once")
@@ -514,7 +512,7 @@ class StreamingSpec extends GraftSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val servedRows = rows(graft.queries.StreamingGateQueries
       .queries("stream_ann_ivf_online_topk")(spark, d))
-    val frozenRows = rows(vq.kmIvfTopk(spark, d, sampled = false))
+    val frozenRows = rows(vq.ivfTopk(spark, d, vq.Quantizer.lloyd(spark, d)))
     val (served, frozen) = (servedRows.toSet, frozenRows.toSet)
     // exactly-once is pinned on ROW COUNTS, not the qid set (a query
     // double-served under two generations, or a replayed batch
@@ -835,8 +833,8 @@ class StreamingSpec extends GraftSpec {
     // cross-batch merging, not per-batch resets.
     implicit val sql = spark.sqlContext
     import spark.implicits._
-    val cents = (0 until 3).map(k =>
-      (k.toLong, Seq.tabulate(64)(_ => k * 10.0))).toDF("kcell", "karr")
+    val cents = graft.queries.VectorQueries.Quantizer.trained(spark,
+      (0 until 3).map(k => k.toLong -> Array.fill(64)(k * 10.0)))
     val ms = MemoryStream[Seq[Float]]
     val out = graft.queries.VectorQueries.kmStreamSums(
       ms.toDF().toDF("qe"), cents)
@@ -989,7 +987,8 @@ class StreamingSpec extends GraftSpec {
           ms.toDF().toDF("qid").join(qemb, "qid")
             .select(col("qid").as("vec_id"), col("qe"))
             .withColumn("arrival_ts", servingArrival8("vec_id")),
-          spark, d, windowed = windowed),
+          spark, d, graft.queries.VectorQueries.Quantizer.labelMeans(spark, d),
+          windowed = windowed),
         windowed,
         b => ms.addData((0L until 40L).filter(_ % 8 == b): _*),
         s"sdd_serve_$windowed")
@@ -1013,7 +1012,8 @@ class StreamingSpec extends GraftSpec {
           ms.toDF().toDF("qid").join(qemb, "qid")
             .select(col("qid").as("vec_id"), col("qe"))
             .withColumn("arrival_ts", servingArrival8("vec_id")),
-          spark, d, windowed = windowed, trained = true),
+          spark, d, graft.queries.VectorQueries.Quantizer.lloyd(spark, d),
+          windowed = windowed),
         windowed,
         b => ms.addData((0L until 40L).filter(_ % 8 == b): _*),
         s"sddkm_serve_$windowed")

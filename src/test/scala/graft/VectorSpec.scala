@@ -317,8 +317,8 @@ class VectorSpec extends GraftSpec {
     val vq = graft.queries.VectorQueries
     val t1 = vq.kmCentroidTables(spark, d, 2, seed = "farthest")
     val t2 = vq.kmCentroidTables(spark, d, 2, seed = "farthest")
-    def seedRows(t: Seq[org.apache.spark.sql.DataFrame]) =
-      t.head.collect().map(r =>
+    def seedRows(t: Seq[vq.Quantizer]) =
+      t.head.cents.collect().map(r =>
         r.getLong(0) -> r.getSeq[Double](1).toVector).sortBy(_._1).toVector
     val s1 = seedRows(t1)
     assert(s1 === seedRows(t2), "farthest seed walk must be deterministic")
@@ -350,10 +350,46 @@ class VectorSpec extends GraftSpec {
     val d = "/root/testdata/sf0.001"
     graft.queries.VectorQueries.kmCentroidTables(spark, d, 3)
       .zipWithIndex.foreach { case (c, r) =>
-        val n = c.count()
+        val n = c.cents.count()
         assert(n === graft.queries.VectorQueries.KmCells.toLong,
           s"centroid table at rounds=$r has $n rows")
       }
+  }
+
+  test("per-row arrival rank agrees with the batch assignment and probe lists under both quantizers") {
+    // The streaming faces (probe lists, admission, ingest, k-means sums)
+    // rank cells per row; the batch faces assign with an aggregate and
+    // probe with a window. Their oracle parity rests on the two paths
+    // agreeing: slice 1 of the per-row rank is the batch-assigned cell
+    // of every vector, and slices 1..NProbe are exactly the batch probe
+    // list of every query — on the label-mean and the Lloyd cells.
+    val d = "/root/testdata/sf0.001"
+    val vq = graft.queries.VectorQueries
+    val e = graft.Tables.embeddingsSpread(spark, d)
+    for ((name, q) <- Seq("label-mean" -> vq.Quantizer.labelMeans(spark, d),
+                          "lloyd" -> vq.Quantizer.lloyd(spark, d))) {
+      val ranked = q.ranked(e, col("embedding"), vq.NProbe)
+        .select(col("vec_id"),
+          transform(col("cells"), c => c.getField("cell").cast("long")).as("cells"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+      val assigned = q.assigned(e)
+        .select(col("vec_id"), col("cell").cast("long"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(assigned.nonEmpty && ranked.keySet === assigned.keySet,
+        s"$name: the rank must cover every assigned vector")
+      assigned.foreach { case (v, c) =>
+        assert(ranked(v).head === c,
+          s"$name: vector $v ranks cell ${ranked(v).head} first, batch-assigned $c")
+      }
+      val probes = q.probes(q.scored(e), vq.NProbe)
+        .select(col("qid"), col("cell").cast("long"))
+        .collect().groupBy(_.getLong(0)).map { case (k, rs) => k -> rs.map(_.getLong(1)).toSet }
+      assert(probes.size === vq.NQueries, s"$name: every query probes")
+      probes.foreach { case (qid, cells) =>
+        assert(ranked(qid).size === vq.NProbe && ranked(qid).toSet === cells,
+          s"$name: query $qid ranks ${ranked(qid)}, batch probes $cells")
+      }
+    }
   }
 
   test("trained k-means cells beat the supervised label cells at the same NProbe (gate corpus)") {
@@ -483,7 +519,7 @@ class VectorSpec extends GraftSpec {
     // decision on them run no job at all
     val t = vq.kmCentroidTables(spark, d, 2)
     val (drift, driftJobs) = org.apache.spark.graft.JobCount(spark.sparkContext) {
-      vq.kmDriftFp2(vq.kmCentsOf(t(2)), vq.kmCentsOf(t(1)))
+      vq.kmDriftFp2(vq.kmCentsOf(t(2).cents), vq.kmCentsOf(t(1).cents))
     }
     assert(driftJobs === 0, s"the drift decision ran $driftJobs Spark jobs")
     assert(drift > 0L, "a Lloyd round should move some centroid")
@@ -643,7 +679,7 @@ class VectorSpec extends GraftSpec {
     // (the registered point) and k = 32 on the same corpus and pin
     // that the within-cell PAIR COUNT (Σ n·(n−1)/2 — exactly the rows
     // the decision self-join scans) falls, while the decisions stay
-    // the shared semdedupDecisions body. Measured at sf0.01 (500
+    // the shared semdedup body. Measured at sf0.01 (500
     // vectors): pairs 12 363 (k=10) → 3 931 (k=32) — a 3.1× collapse
     // for 3.2× the cells, i.e. ~n²/2k as the bound predicts on
     // near-balanced cells; kept 313 → 385 of 500 (fewer pairs ⇒ fewer
@@ -654,7 +690,8 @@ class VectorSpec extends GraftSpec {
     // derive from the same decisions frame (code-review r14 — the
     // first cut retrained the quantizer once per metric)
     def stats(k: Int): (Long, Long) = {
-      val dec = graft.queries.VectorQueries.semdedupKmeansAt(spark, d, k)
+      val vq = graft.queries.VectorQueries
+      val dec = vq.semdedup(spark, d, vq.Quantizer.lloyd(spark, d, cells = k))
         .select(col("cell"), col("kept")).localCheckpoint()
       val pairs = dec.groupBy(col("cell")).count()
         .agg(sum(col("count") * (col("count") - 1))).head.getLong(0) / 2
@@ -679,8 +716,8 @@ class VectorSpec extends GraftSpec {
     // than the scan shrinks — exactly why the paper grows k with the
     // corpus).
     def recallAt(k: Int): Int =
-      graft.queries.VectorQueries.kmIvfTopk(spark, d, sampled = false,
-          cells = k)
+      graft.queries.VectorQueries.ivfTopk(spark, d,
+          graft.queries.VectorQueries.Quantizer.lloyd(spark, d, cells = k))
         .select(col("qid"), col("nn_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
         .intersect(brutePairs).size
@@ -753,7 +790,8 @@ class VectorSpec extends GraftSpec {
     val d = "/root/testdata/sf0.01"
     val brute = annPairs("ann_brute_topk", d)
     def recallAtNp(np: Int): Double = {
-      val pairs = graft.queries.VectorQueries.ivfpqTopk(spark, d, nprobe = np)
+      val pairs = graft.queries.VectorQueries.ivfpqTopk(spark, d,
+          graft.queries.VectorQueries.Quantizer.labelMeans(spark, d), nprobe = np)
         .select(col("qid"), col("nn_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       pairs.intersect(brute).size.toDouble / brute.size
@@ -784,7 +822,8 @@ class VectorSpec extends GraftSpec {
     val adc = annPairs("ann_ivfpq_topk", d)
     val refined = annPairs("ann_ivfpq_refine", d)
     val short = graft.queries.VectorQueries
-      .ivfpqTopk(spark, d, topn = graft.queries.VectorQueries.RefineR)
+      .ivfpqTopk(spark, d, graft.queries.VectorQueries.Quantizer.labelMeans(spark, d),
+        topn = graft.queries.VectorQueries.RefineR)
       .select(col("qid"), col("nn_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(refined.subsetOf(short),
@@ -898,7 +937,7 @@ class VectorSpec extends GraftSpec {
 
   test("dedup_semdedup_kmeans: the paper's k-means protocol — decision contract on trained cells; planted copies dedup") {
     // Abbas et al. cluster with k-means, not labels — this face IS the
-    // paper's protocol. The shared decision body (semdedupDecisions)
+    // paper's protocol. The shared decision body (semdedup)
     // must show the same contracts on trained cells: one decision per
     // corpus row, the least-prototypical member of every cell kept,
     // and planted near-copies deduplicated up to boundary crossings.
@@ -975,7 +1014,8 @@ class VectorSpec extends GraftSpec {
     // needs re-deciding — fail loudly rather than drift).
     val d = "/root/testdata/sf0.01"
     val brute = annPairs("ann_brute_topk", d)
-    val res = graft.queries.VectorQueries.ivfpqResidualTopk(spark, d)
+    val res = graft.queries.VectorQueries.ivfpqResidualTopk(spark, d,
+        graft.queries.VectorQueries.Quantizer.labelMeans(spark, d))
       .select(col("qid"), col("nn_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val raw = annPairs("ann_ivfpq_topk", d)
@@ -1009,7 +1049,7 @@ class VectorSpec extends GraftSpec {
     val kmRaw = annPairs("ann_ivfpq_kmeans_topk", d)
     val lblRaw = annPairs("ann_ivfpq_topk", d)
     val kmRes = graft.queries.VectorQueries
-      .ivfpqResidualTopk(spark, d, trained = true)
+      .ivfpqResidualTopk(spark, d, graft.queries.VectorQueries.Quantizer.lloyd(spark, d))
       .select(col("qid"), col("nn_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(s: Set[(Long, Long)]) =
