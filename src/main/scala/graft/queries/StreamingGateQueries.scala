@@ -1,26 +1,35 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
-import graft.Tables
+import graft.{GraftSession, Tables}
+import graft.streaming.StreamOps
 
 /** Oracle-gated queries that execute a REAL Structured Streaming job:
-  * `readStream` over the parquet table → stateful aggregation →
-  * checkpointed memory sink, drained with `Trigger.AvailableNow` (the
-  * deterministic batch-equivalent trigger), then returned as the
-  * query's result. The DuckDB oracle states the same aggregate in plain
-  * SQL — proving streaming ≡ batch on the driver's own gate, not just
-  * in unit tests.
+  * `readStream` over a staged copy of a parquet table → the gate's body
+  * (stateful aggregation, join, dedup or a per-batch protocol) → a
+  * sink, drained with `Trigger.AvailableNow` (the deterministic
+  * batch-equivalent trigger), then returned as the query's result. The
+  * DuckDB oracle states the same result in plain SQL — proving
+  * streaming ≡ batch on the driver's own gate, not just in unit tests.
   *
-  * `maxFilesPerTrigger`/`maxBytesPerTrigger` are deliberately NOT set
-  * here: with AvailableNow the source still plans bounded batches, and
-  * the state store carries counts across micro-batches exactly as the
-  * reference's recoverable `map[string]int` did (SURVEY.md §2.3 A1/A2).
+  * Every gate runs through [[runGate]]: RainStorm's one pipeline
+  * template (scan → op → [shuffle] → op → sink) applied to the gates.
+  * How the source plans micro-batches follows the staging form:
+  * [[WholeTable]] sets no `maxFilesPerTrigger` and streams one file, so
+  * the drain is one data micro-batch; [[Batches]] stages one file per
+  * batch predicate and sets `maxFilesPerTrigger` to 1, so every
+  * predicate is exactly one micro-batch, in order — the shape that
+  * exercises real cross-batch state and watermarks, the way the
+  * reference's recoverable `map[string]int` carried counts across
+  * batches (SURVEY.md §2.3 A1/A2).
   *
   * NOTE — do not copy the memory-sink pattern to production paths: a
   * memory sink (and Complete mode in particular) materializes the whole
@@ -32,101 +41,241 @@ object StreamingGateQueries {
 
   private val runId = new AtomicLong(0L)
 
-  /** A stager: stages a table dir as a file-stream source and returns
-    * (readStream frame, fresh checkpoint dir, staged source dir).
-    */
-  private type Stager = (SparkSession, String, String, DataFrame => DataFrame) =>
-    (DataFrame, String, java.io.File)
+  /** A gate's source table: `<d>/<name>.parquet` and its normalization. */
+  private final case class GateTable(name: String, normalize: DataFrame => DataFrame)
+  private val Events = GateTable("events", Tables.normalizeEvents)
+  private val Documents = GateTable("documents", identity)
+  private val Embeddings = GateTable("embeddings", Tables.normalizeTemporal)
+  private val Lineitem = GateTable("lineitem", identity)
 
-  /** Run `body` over a staged stream's (source frame, checkpoint dir),
-    * then delete the checkpoint and staged source dirs — also when
-    * `body` fails. `body` must await its query's termination, and the
-    * frame it returns must read neither dir (a memory sink, a sink
-    * output dir or checkpointed data).
-    */
-  private def onStaged[T](staged: (DataFrame, String, java.io.File))(
-      body: (DataFrame, String) => T): T = {
-    val (src, ckpt, srcDir) = staged
-    try body(src, ckpt)
-    finally {
-      VectorQueries.deleteRecursively(new java.io.File(ckpt))
-      VectorQueries.deleteRecursively(srcDir)
-    }
-  }
+  /** How a gate's table enters its stream. */
+  private sealed trait Staging
 
-  /** Run a streaming aggregation over a table dir and hand back its
-    * complete result from the memory sink. Checkpoint and staged
-    * source are throwaway temp dirs, deleted once the query has
-    * terminated — each gate run is a fresh pipeline; recovery
-    * semantics are covered by StreamingSpec's kill/restart test.
+  /** The table's one parquet file, linked (zero-copy) into the source
+    * dir and normalized on the readStream side.
     */
-  private def runStream(s: SparkSession, path: String,
-                        normalize: DataFrame => DataFrame,
-                        agg: DataFrame => DataFrame,
-                        mode: OutputMode = OutputMode.Complete(),
-                        stager: Stager = stageStream): DataFrame =
-    withGateParts(s) {
-      val name = s"gate_stream_${runId.incrementAndGet()}"
-      onStaged(stager(s, path, name, normalize)) { (src, ckpt) =>
-        val q = agg(src).writeStream
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .format("memory").queryName(name).start()
-        q.awaitTermination()
-        s.table(name)
-      }
+  private case object WholeTable extends Staging
+
+  /** The table as ordered micro-batches: batch i holds
+    * `prepare(normalize(table).filter(preds(i)))`, staged as one parquet
+    * file with that normalized, prepared schema. Invariants:
+    *  - membership: the predicates alone decide which rows a batch
+    *    holds, so an oracle recomputes every batch (and its watermark)
+    *    exactly; `prepare` shapes a batch's content, e.g. one row per
+    *    key at a deterministic event time;
+    *  - order: the file source orders files by modification time, set
+    *    60 s apart in predicate order;
+    *  - one staging job: every batch is tagged with its index and the
+    *    union is written once, hash-repartitioned and partitioned by the
+    *    tag, so each batch lands in one task and one part file; a batch
+    *    the split leaves empty gets its own empty file, so the
+    *    micro-batch sequence is the same at any scale;
+    *  - row order WITHIN a batch is the order the staging shuffle
+    *    delivered, which varies between runs and discards any order
+    *    `prepare` sets. No gate's emission depends on it: each emits a
+    *    set, an exact integer aggregate, a top-k with a total tie-break,
+    *    or a dedup whose candidate rows for one key are identical
+    *    (one row per key per batch, or the batch's staged clock).
+    */
+  private final case class Batches(preds: Seq[Column],
+                                   prepare: DataFrame => DataFrame = identity)
+      extends Staging
+
+  /** `n` batches by `c % n`. */
+  private def byMod(c: String, n: Int,
+                    prepare: DataFrame => DataFrame = identity): Batches =
+    Batches((0 until n).map(i => col(c) % n === i), prepare)
+
+  /** Keeps the serving gates' query vectors only: each staged batch
+    * holds ~NQueries/batches rows instead of a slice of the corpus,
+    * which enters the plan once, as the static side.
+    */
+  private val queryVectors: DataFrame => DataFrame =
+    _.filter(col("vec_id") < VectorQueries.NQueries)
+
+  /** Where a gate's rows go, and what the runner returns once the
+    * stream has drained.
+    */
+  private sealed trait Sink
+
+  /** The driver memory sink. Returns its rows; the temp view Spark
+    * registers for the sink is dropped, so the caller's catalog keeps
+    * no reference to the run's rows.
+    */
+  private final case class Memory(mode: OutputMode) extends Sink
+
+  /** The production path: a parquet file sink in Append mode (the only
+    * mode file sinks support) into a runner-owned dir, read back through
+    * the sink's `_spark_metadata` commit log — only files committed
+    * exactly-once are visible — with the body's own schema (a run whose
+    * watermark closes no window commits no data file, and schema
+    * inference over a metadata-only dir throws instead of returning the
+    * empty frame the gate compares), then localCheckpointed. Append
+    * semantics are part of the contract: a window emits only once the
+    * final watermark passes its end, and the oracle states that cutoff.
+    */
+  private case object FileSink extends Sink
+
+  /** Parquet appends into the caller's store `path`, partitioned by
+    * `partitionBy`; the store outlives the run. Returns `drained()`.
+    */
+  private final case class StoreSink(path: String, partitionBy: String,
+                                     drained: () => DataFrame) extends Sink
+
+  /** foreachBatch: `step` runs once per micro-batch. Returns `drained()`. */
+  private final case class StepSink(step: (DataFrame, Long) => Unit,
+                                    drained: () => DataFrame) extends Sink
+
+  /** A KmMiniBatch protocol driven one step per micro-batch; `result`
+    * reads the drained protocol.
+    */
+  private def kmSink[P <: VectorQueries.KmMiniBatch](st: P)(
+      result: P => DataFrame): StepSink =
+    StepSink(st.step, () => result(st))
+
+  /** A drift-refreshed persisted-store gate: the generation step over
+    * `store` at KmDriftRebuild; at drain the store compacts and bounds
+    * its run, then publishes it as the corpus's current refresh store
+    * (the two-level LATEST resolution specs and compaction use).
+    */
+  private def refreshSink(s: SparkSession, d: String,
+                          store: VectorQueries.KmGenStore): StepSink =
+    kmSink(new VectorQueries.KmIvfGenerations(s, d,
+        VectorQueries.KmDriftRebuild, store)) { st =>
+      st.artifact.publish()
+      st.servedTopkResult()
     }
+
+  /** The KmMiniBatch gates' staging: KmMbBatches vec_id-residue batches
+    * (mtime-staged ORDER is part of the contract — the oracles unroll
+    * the steps CTE-for-CTE).
+    */
+  private val KmStaging = byMod("vec_id", VectorQueries.KmMbBatches)
 
   /** One state store per shuffle partition PER stateful operator side:
     * at gate scale (tens of k rows) 32 partitions means the run is
-    * dominated by store commit I/O, not data. Size partitions to the
-    * data for the gate run, restore after (stream pins the value at
-    * start; a production job sizes this to its key cardinality).
+    * dominated by store commit I/O, not data, so every gate runs with 8
+    * (a production job sizes this to its key cardinality).
     */
-  private def withGateParts[T](s: SparkSession)(body: => T): T = {
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try body
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
+  private val GateConfs = Map("spark.sql.shuffle.partitions" -> "8")
 
-  /** Stage a single-file parquet table as a file-stream source (the
-    * source wants a directory; a temp dir with a symlink keeps the read
-    * zero-copy) and hand back the normalized readStream frame, a fresh
-    * throwaway checkpoint dir and the source dir.
+  /** No no-data micro-batch between the staged batches: one would
+    * advance the watermark — and run evictions — a batch early, which
+    * the eviction-replay oracles rule out. AvailableNow is observed
+    * never to interleave one; the pin makes it contractual. Window gates
+    * must NOT get it: their Append emission relies on the trailing
+    * no-data batch.
     */
-  private def stageStream(s: SparkSession, path: String, name: String,
-                          normalize: DataFrame => DataFrame)
-      : (DataFrame, String, java.io.File) = {
-    val ckpt = Files.createTempDirectory(s"graft-ckpt-$name").toString
-    val srcDir = Files.createTempDirectory(s"graft-src-$name")
-    Files.createSymbolicLink(srcDir.resolve("part-0.parquet"),
-      java.nio.file.Paths.get(path).toAbsolutePath)
-    val schema = s.read.parquet(path).schema
-    (normalize(s.readStream.schema(schema).parquet(srcDir.toString)), ckpt,
-      srcDir.toFile)
-  }
+  private val NoDataBatchesOff =
+    Map("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
 
-  /** Stage a table as N parquet files processed as N ordered
-    * micro-batches (maxFilesPerTrigger=1; the file-stream source orders
-    * files by modification time, set 60s apart as a belt under the
-    * deterministic content split) — the shape that exercises REAL
-    * cross-batch watermark semantics. The split predicates decide batch
-    * membership, so the oracle can recompute every batch's watermark
-    * exactly. coalesce(1) is gate-scoped staging (tens of k rows), not
-    * a query plan — the query under test never coalesces.
+  /** The RocksDB state store: transformWithState requires it, and it is
+    * the backend the bounded-state story names (state off-heap,
+    * incremental checkpoints).
     */
-  /** `normalize` is applied BEFORE the split (so batch predicates and
-    * `prepare` see normalized columns — e.g. events.ts as a timestamp,
-    * not raw nanos) and the staged files already carry the normalized
-    * schema; the readStream side re-reads them as-is. `prepare` maps
-    * each batch's filtered frame to what that micro-batch should
-    * contain (default: the rows themselves) — the device that lets a
-    * gate stream e.g. one row per key per batch with a deterministic
-    * event time. Returns (readStream frame, fresh checkpoint dir,
-    * staged source dir).
+  private val RocksDb = Map("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** The one gate runner: stage → body → sink → drain → collect → clean
+    * up. Invariants:
+    *  - pins: GateConfs ++ `confs` are set on the caller's session for
+    *    the whole run and restored in a finally; a key that was unset
+    *    before is unset again. StreamExecution clones the session at
+    *    start(), so a pin holds for the run; gates never run
+    *    concurrently, so a pin never reaches another gate;
+    *  - everything the gate builds runs under the pins: the staging, the
+    *    body, the sink (a by-name value, evaluated once after the body,
+    *    so a foreachBatch protocol sets up its state there) and the
+    *    sink's collect step;
+    *  - the temp dirs (graft-src-*, graft-stage-*, graft-ckpt-*,
+    *    graft-out-*) are the runner's: deleted once the query has
+    *    terminated, also when a step fails, and the returned frame reads
+    *    none of them. Each run is a fresh pipeline; recovery is covered
+    *    by StreamingSpec's kill/restart tests;
+    *  - the runner's own Spark jobs are the staging reads and write and
+    *    FileSink's read-back checkpoint, none per micro-batch; every
+    *    other job is the gate's.
     */
+  private def runGate(s: SparkSession, d: String, table: GateTable,
+                      sink: => Sink = Memory(OutputMode.Complete()),
+                      staging: Staging = WholeTable,
+                      confs: Map[String, String] = Map.empty)(
+      body: DataFrame => DataFrame): DataFrame = {
+    GraftSession.tune(s)
+    val pins = GateConfs ++ confs
+    val set = s.conf.getAll
+    val prior = pins.keys.map(k => k -> set.get(k))
+    pins.foreach { case (k, v) => s.conf.set(k, v) }
+    val name = s"gate_${runId.incrementAndGet()}"
+    val dirs = ArrayBuffer.empty[java.io.File]
+    def temp(kind: String): java.io.File = {
+      dirs += Files.createTempDirectory(s"graft-$kind-$name").toFile
+      dirs.last
+    }
+    try {
+      val path = s"$d/${table.name}.parquet"
+      val src = staging match {
+        case WholeTable =>
+          val srcDir = temp("src")
+          Files.createSymbolicLink(srcDir.toPath.resolve("part-0.parquet"),
+            Paths.get(path).toAbsolutePath)
+          table.normalize(s.readStream.schema(s.read.parquet(path).schema)
+            .parquet(srcDir.toString))
+        case Batches(preds, prepare) =>
+          val (srcDir, stage) = (temp("src"), temp("stage"))
+          val full = table.normalize(s.read.parquet(path))
+          val staged = preds.map(p => prepare(full.filter(p)))
+          staged.zipWithIndex.map { case (df, i) => df.withColumn("__b", lit(i)) }
+            .reduce(_ unionByName _)
+            .repartition(col("__b")).write.mode("overwrite").partitionBy("__b")
+            .parquet(stage.toString)
+          val t0 = System.currentTimeMillis() - 600000L
+          staged.indices.foreach { i =>
+            val dir = new java.io.File(stage, s"__b=$i")
+            if (!dir.isDirectory) staged(i).coalesce(1).write.parquet(dir.toString)
+            val dst = new java.io.File(srcDir, f"batch$i%02d.parquet")
+            Files.move(onlyPart(dir).toPath, dst.toPath)
+            dst.setLastModified(t0 + i * 60000L)
+          }
+          s.readStream.schema(staged.head.schema).option("maxFilesPerTrigger", 1)
+            .parquet(srcDir.toString)
+      }
+      val out = body(src)
+      val gateSink = sink
+      val w = out.writeStream.trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", temp("ckpt").toString)
+      lazy val outDir = temp("out").toString
+      val q = gateSink match {
+        case Memory(mode) =>
+          w.outputMode(mode).format("memory").queryName(name).start()
+        case FileSink =>
+          w.outputMode(OutputMode.Append()).format("parquet")
+            .option("path", outDir).start()
+        case StoreSink(store, by, _) =>
+          w.outputMode(OutputMode.Append()).partitionBy(by).format("parquet")
+            .option("path", store).start()
+        case StepSink(step, _) => w.foreachBatch(step).start()
+      }
+      try q.awaitTermination()
+      finally q.stop()
+      gateSink match {
+        case Memory(_) =>
+          val rows = s.table(name)
+          s.catalog.dropTempView(name)
+          rows
+        case FileSink =>
+          s.read.schema(out.schema).parquet(outDir).localCheckpoint()
+        case StoreSink(_, _, drained) => drained()
+        case StepSink(_, drained) => drained()
+      }
+    } finally {
+      dirs.foreach(VectorQueries.deleteRecursively)
+      prior.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
+      }
+    }
+  }
 
   /** The one parquet part file a staging write left in `dir` — a
     * second one would be a batch's rows staged as two files, so it
@@ -139,120 +288,40 @@ object StreamingGateQueries {
       case ps => sys.error(s"expected exactly one part file staged in $dir, found ${ps.length}")
     }
 
-  private def stageBatchedStream(s: SparkSession, path: String, name: String,
-                                 normalize: DataFrame => DataFrame,
-                                 batches: Seq[org.apache.spark.sql.Column],
-                                 prepare: DataFrame => DataFrame = identity)
-      : (DataFrame, String, java.io.File) = {
-    val ckpt = Files.createTempDirectory(s"graft-ckpt-$name").toString
-    val srcDir = Files.createTempDirectory(s"graft-src-$name")
-    val full = normalize(s.read.parquet(path))
-    def stageOne(df: DataFrame, fileName: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory(s"graft-stage-$name").toFile
-      try {
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val dst = srcDir.resolve(fileName)
-        Files.move(onlyPart(tmp).toPath, dst)
-        dst.toFile.setLastModified(mtime)
-      } finally VectorQueries.deleteRecursively(tmp)
-    }
-    val t0 = System.currentTimeMillis() - 600000L
-    val staged = batches.map(pred => prepare(full.filter(pred)))
-    // ONE staging job for all batches (r18 optimization: the per-batch
-    // coalesce(1) writes were 4-5 driver-sequential jobs per gate run,
-    // pure fixed overhead at gate scale): each batch's frame — the
-    // IDENTICAL prepare(full.filter(pred)) subplan as before, so batch
-    // CONTENT is unchanged whatever `prepare` does — is tagged with its
-    // index and the union written once through partitionBy("__b") after
-    // a hash repartition on the tag (each tag lands in exactly one
-    // task → exactly one part-file per nonempty batch, which then moves
-    // to its mtime-ordered name). A batch the split leaves EMPTY yields
-    // no directory; the per-batch fallback writes its empty file so the
-    // micro-batch sequence (and so every oracle's batch unrolling) is
-    // identical to the per-batch staging path at any SF.
-    val fused = staged.zipWithIndex
-      .map { case (df, i) => df.withColumn("__b", lit(i)) }
-      .reduce(_ unionByName _)
-    val tmp = Files.createTempDirectory(s"graft-stage-$name").toFile
-    try {
-      fused.repartition(col("__b")).write.mode("overwrite")
-        .partitionBy("__b").parquet(tmp.toString)
-      staged.indices.foreach { i =>
-        val dir = new java.io.File(tmp, s"__b=$i")
-        val mtime = t0 + i * 60000L
-        if (dir.isDirectory) {
-          val dst = srcDir.resolve(f"batch$i%02d.parquet")
-          Files.move(onlyPart(dir).toPath, dst)
-          dst.toFile.setLastModified(mtime)
-        } else stageOne(staged(i), f"batch$i%02d.parquet", mtime)
-      }
-    } finally VectorQueries.deleteRecursively(tmp)
-    val src = s.readStream.schema(staged.head.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir.toString)
-    (src, ckpt, srcDir.toFile)
+  /** The running-count gates' shared body — one record projection
+    * (events → Core.Record) for both state APIs, so the twins can never
+    * drift apart (same reason splitSql/deconSql are shared in
+    * CurationQueries).
+    */
+  private def runningCount(
+      counter: org.apache.spark.sql.Dataset[graft.operators.Core.Record] =>
+        org.apache.spark.sql.Dataset[(String, Long)])(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    counter(df.select(
+      col("event_id").cast("string").as("id"),
+      col("event_type").as("key"),
+      lit("").as("value")).as[graft.operators.Core.Record]).toDF("key", "n")
   }
 
-  /** Run a streaming aggregation through the PRODUCTION sink path: a
-    * parquet file sink in Append mode (the only mode file sinks
-    * support), then read the result back through the sink's
-    * `_spark_metadata` commit log — so only files committed exactly-once
-    * are visible, and no memory sink appears anywhere in the plan.
-    * Append-mode semantics are part of the contract: a window is
-    * emitted only once the final watermark passes its end, so windows
-    * the watermark never closes are withheld — the oracle states the
-    * same cutoff explicitly.
+  /** Hourly event-time windows per event_type under a 1-hour watermark:
+    * the body of stream_tumbling_window and stream_late_data. Watermarks
+    * require an instant (TIMESTAMP); the UTC session makes the NTZ→LTZ
+    * cast value-preserving.
     */
-  /** Shared body of the two running-count gates — one record
-    * projection (events → Core.Record) for both state APIs, so the
-    * twins can never drift apart (same reason splitSql/deconSql are
-    * shared in CurationQueries).
-    */
-  private def runRunningCount(s: SparkSession, d: String,
-      counter: org.apache.spark.sql.Dataset[graft.operators.Core.Record] =>
-        org.apache.spark.sql.Dataset[(String, Long)]): DataFrame = {
-    Tables.load(s, d, "region")
-    runStream(s, s"$d/events.parquet", Tables.normalizeEvents,
-      df => {
-        import s.implicits._
-        val recs = df.select(
-          col("event_id").cast("string").as("id"),
-          col("event_type").as("key"),
-          lit("").as("value")).as[graft.operators.Core.Record]
-        counter(recs).toDF("key", "n")
-      },
-      OutputMode.Update())
-  }
+  private val hourlyWindowCounts: DataFrame => DataFrame =
+    _.withColumn("ts", col("ts").cast("timestamp"))
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(col("window.start").cast("timestamp_ntz").as("wstart"),
+        col("event_type"), col("cnt"))
 
   /** One oracle for both running-count gates (same multiset contract). */
   private val runningCountOracleSql = """
       SELECT event_type AS key, CAST(i AS BIGINT) AS n
       FROM (SELECT event_type, COUNT(*) AS c FROM events GROUP BY event_type),
            LATERAL (SELECT unnest(range(1, c + 1)) AS i) t"""
-
-  private def runFileSinkStream(s: SparkSession, path: String,
-                                normalize: DataFrame => DataFrame,
-                                agg: DataFrame => DataFrame,
-                                stager: Stager = stageStream): DataFrame =
-    withGateParts(s) {
-      val name = s"gate_fsink_${runId.incrementAndGet()}"
-      onStaged(stager(s, path, name, normalize)) { (src, ckpt) =>
-        val outDir = Files.createTempDirectory(s"graft-out-$name").toString
-        val out = agg(src)
-        val q = out.writeStream
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .option("checkpointLocation", ckpt)
-          .format("parquet").option("path", outDir).start()
-        q.awaitTermination()
-        // Read back with the query's own schema: a run whose watermark
-        // closes no window commits zero data files, and schema inference
-        // over a metadata-only sink dir throws instead of returning the
-        // empty frame the gate should compare. The returned frame reads
-        // only the sink's dir and its commit log.
-        s.read.schema(out.schema).parquet(outDir)
-      }
-    }
 
   /** The two pipeline stages of the streaming curation composite,
     * shared with the spec that asserts its metrics totals (one
@@ -281,7 +350,7 @@ object StreamingGateQueries {
     * twin's oracle gates it exactly.
     */
   private[graft] val curationOp2Wm: DataFrame => DataFrame = df =>
-    graft.streaming.StreamOps.dedupBoundedBy(
+    StreamOps.dedupBoundedBy(
         df.withColumn("arrival_ts", current_timestamp()),
         "arrival_ts", "1 day", "split", "chunk_fp")
       .select(col("split"), col("chunk_fp"))
@@ -346,112 +415,18 @@ object StreamingGateQueries {
         .agg(count(lit(1)).as("n_words"), sum(col("nb")).as("n_bpe_tokens"))
   }
 
-  /** Body of stream_dedup_events_wm (the gate wraps it in the
-    * no-data-micro-batch pin): four time-ordered staged batches, one
-    * row per user_id per batch at that batch's MIN event time, deduped
-    * through StreamOps.dedupBoundedBy with a 12-hour delay.
-    */
-  private def runDedupEventsWm(s: SparkSession, d: String): DataFrame =
-    runFileSinkStream(s, s"$d/events.parquet", Tables.normalizeEvents,
-      df => graft.streaming.StreamOps.dedupBoundedBy(
-          df.withColumn("ts", col("ts").cast("timestamp")),
-          "ts", "12 hours", "user_id")
-        .select(col("user_id"), col("ts").cast("timestamp_ntz").as("ts")),
-      stageBatchedStream(_, _, _, _,
-        Seq(
-          col("ts") < lit("2024-01-08").cast("timestamp_ntz"),
-          col("ts") >= lit("2024-01-08").cast("timestamp_ntz") &&
-            col("ts") < lit("2024-01-15").cast("timestamp_ntz"),
-          col("ts") >= lit("2024-01-15").cast("timestamp_ntz") &&
-            col("ts") < lit("2024-01-22").cast("timestamp_ntz"),
-          col("ts") >= lit("2024-01-22").cast("timestamp_ntz")),
-        prepare = df => df.groupBy(col("user_id"))
-          .agg(min(col("ts")).as("ts"))))
-
-  /** Shared body of the two curation-composite gates: op1 (stateless
-    * gate → chunk → split) then the given dedup stage, through
-    * runPipeline's production parquet sink, read back via the sink's
-    * commit log.
-    */
-  private def runCurationPipeline(s: SparkSession, d: String,
-                                  op2: DataFrame => DataFrame): DataFrame = {
-    Tables.load(s, d, "region")
-    withGateParts(s) {
-      val name = s"gate_curation_${runId.incrementAndGet()}"
-      onStaged(stageStream(s, s"$d/documents.parquet", name, identity)) {
-        (src, ckpt) =>
-          val outDir = Files.createTempDirectory(s"graft-out-$name").toString
-          val q = graft.streaming.StreamOps.runPipeline(
-            src, curationOp1, op2,
-            OutputMode.Append(), ckpt, Some(outDir))
-          q.awaitTermination()
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("split",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("chunk_fp",
-              org.apache.spark.sql.types.StringType)))
-          s.read.schema(schema).parquet(outDir)
-      }
-    }
-  }
-
-  /** Shared driver for the seven KmMiniBatch gates: stage the
-    * embeddings stream as KmMbBatches deterministic vec_id-residue
-    * micro-batches (mtime-staged ORDER — part of the contract, the
-    * oracles unroll the steps CTE-for-CTE), build the protocol with
-    * `make`, drive one step per micro-batch through foreachBatch under
-    * AvailableNow, return `result` of the drained protocol. The
-    * checkpoint and staged source dirs are deleted once the query has
-    * terminated: every frame a result returns is driver-held or
-    * localCheckpointed by its step, so none re-reads the staged files.
-    */
-  private def runKmMiniBatchGate[P <: VectorQueries.KmMiniBatch](
-      s: SparkSession, d: String, namePrefix: String, make: => P)(
-      result: P => DataFrame): DataFrame = {
-    Tables.load(s, d, "region")
-    withGateParts(s) {
-      val name = s"${namePrefix}_${runId.incrementAndGet()}"
-      val nb = VectorQueries.KmMbBatches
-      onStaged(stageBatchedStream(s, s"$d/embeddings.parquet", name,
-        Tables.normalizeTemporal, (0 until nb).map(i => col("vec_id") % nb === i))) {
-        (src, ckpt) =>
-          val state = make
-          val q = src.writeStream
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .foreachBatch((b: DataFrame, id: Long) => state.step(b, id))
-            .start()
-          try q.awaitTermination()
-          finally q.stop()
-          result(state)
-      }
-    }
-  }
-
-  /** A drift-refreshed persisted-store gate: the generation step over
-    * `store` at KmDriftRebuild; at drain the store compacts and bounds
-    * its run, then publishes it as the corpus's current refresh store
-    * (the two-level LATEST resolution specs and compaction use).
-    */
-  private def runStoreRefreshGate(s: SparkSession, d: String,
-      namePrefix: String, store: => VectorQueries.KmGenStore): DataFrame =
-    runKmMiniBatchGate(s, d, namePrefix, new VectorQueries.KmIvfGenerations(
-      s, d, VectorQueries.KmDriftRebuild, store)) { st =>
-      st.artifact.publish()
-      st.servedTopkResult()
-    }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // The LLM curation pipeline composed UNDER CHECKPOINTED STREAMING —
     // quality/language gate → chunk → split → chunk-dedup — through the
-    // PRODUCTION path end-to-end: StreamOps.runPipeline (both ends
+    // PRODUCTION path end-to-end: StreamOps.observedPipeline (both ends
     // observed for PipelineMetricsListener; StreamingSpec asserts the
     // totals against batch counts) into the parquet file sink, read
     // back via the sink's commit log. Proves the per-operator streaming
     // twins COMPOSE as one checkpointed job, not just individually.
     "stream_curation_pipeline" -> ((s, d) =>
-      runCurationPipeline(s, d, curationOp2)),
+      runGate(s, d, Documents, FileSink)(
+        StreamOps.observedPipeline(_, curationOp1, curationOp2))),
 
     // The SAME composite with the dedup stage in its BOUNDED-state
     // form (curationOp2Wm): gate → chunk → split → watermark-bounded
@@ -461,7 +436,8 @@ object StreamingGateQueries {
     // changes is the state regime, which is the part that decides
     // whether the composite survives a month of 100 TB ingest.
     "stream_curation_pipeline_wm" -> ((s, d) =>
-      runCurationPipeline(s, d, curationOp2Wm)),
+      runGate(s, d, Documents, FileSink)(
+        StreamOps.observedPipeline(_, curationOp1, curationOp2Wm))),
 
     // THE FULL-STACK CURATION COMPOSITE AS A STREAMING ADMISSION JOB
     // (the streaming twin of docs_curation_e2e_kmeans): every stage of the batch e2e chain runs
@@ -488,71 +464,49 @@ object StreamingGateQueries {
     // the sink's rows — the kmStreamUpdateFinish device — through the
     // SHARED packBins tail. Oracle: the batch composite's verbatim
     // (streaming ≡ batch, one definition, zero drift).
-    "stream_docs_curation_e2e_kmeans" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      withGateParts(s) {
-        val name = s"gate_cure2e_${runId.incrementAndGet()}"
-        onStaged(stageStream(s, s"$d/documents.parquet", name, identity)) { (src, ckpt) =>
-          // static stage artifacts (each the registered operator's plan);
-          // the fingerprint is the SHARED curationFp definition — the
-          // arrival-side check cannot drift from the batch pick
-          val owners = TextQueries.curationGateRows(
-              Tables.documentsSpread(s, d).select(col("doc_id"), col("text")))
-            .select(col("doc_id"), TextQueries.curationFp(col("text")).as("fp"))
-            .groupBy(col("fp")).agg(min(col("doc_id")).as("owner_id"))
-            .localCheckpoint()
-          val dec = CurationQueries.queries("docs_decontaminate")(s, d)
-            .select(col("doc_id")).localCheckpoint()
-          val spans = TextQueries.queries("dedup_substring_spans")(s, d)
-            .select(col("doc_id"), col("dup_tokens")).localCheckpoint()
-          val emb = Tables.embeddingsSpread(s, d)
-            .select(col("vec_id"), col("embedding"))
-          val outDir = Files.createTempDirectory(s"graft-out-$name").toString
-          // the arriving flow: gate → canonical-copy check → admission
-          val gated = TextQueries.curationGateRows(
-              src.select(col("doc_id"), col("text")))
-            .withColumn("fp", TextQueries.curationFp(col("text")))
-            .join(owners, "fp")
-            .filter(col("owner_id") === col("doc_id"))
-            .select(col("doc_id"), col("n_tokens"))
-          val withVec = VectorQueries.semdedupAdmitStateless(
-            gated.join(emb, col("doc_id") === col("vec_id"))
-              .select(col("vec_id"), col("embedding").as("qe"), col("n_tokens")),
-            s, d, VectorQueries.Quantizer.lloyd(s, d), carry = Seq(col("n_tokens")))
-            .select(col("vec_id").as("doc_id"), col("n_tokens"))
-          val noVec = gated
-            .join(emb, col("doc_id") === col("vec_id"), "left_anti")
-            .select(col("doc_id"), col("n_tokens"))
-          val admitted = withVec.unionByName(noVec)
-            .join(dec, "doc_id")
-            .join(spans, Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              (col("n_tokens") - coalesce(col("dup_tokens"), lit(0L)))
-                .as("kept_tokens"))
-          val q = admitted.writeStream
-            .outputMode(OutputMode.Append())
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .format("parquet").option("path", outDir).start()
-          q.awaitTermination()
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("kept_tokens",
-              org.apache.spark.sql.types.LongType)))
-          CurationQueries.packBins(
-            s.read.schema(schema).parquet(outDir), "kept_tokens")
-        }
-      }
-    }),
+    "stream_docs_curation_e2e_kmeans" -> ((s, d) =>
+      CurationQueries.packBins(runGate(s, d, Documents, FileSink) { src =>
+        // static stage artifacts (each the registered operator's plan);
+        // the fingerprint is the SHARED curationFp definition — the
+        // arrival-side check cannot drift from the batch pick
+        val owners = TextQueries.curationGateRows(
+            Tables.documentsSpread(s, d).select(col("doc_id"), col("text")))
+          .select(col("doc_id"), TextQueries.curationFp(col("text")).as("fp"))
+          .groupBy(col("fp")).agg(min(col("doc_id")).as("owner_id"))
+          .localCheckpoint()
+        val dec = CurationQueries.queries("docs_decontaminate")(s, d)
+          .select(col("doc_id")).localCheckpoint()
+        val spans = TextQueries.queries("dedup_substring_spans")(s, d)
+          .select(col("doc_id"), col("dup_tokens")).localCheckpoint()
+        val emb = Tables.embeddingsSpread(s, d)
+          .select(col("vec_id"), col("embedding"))
+        // the arriving flow: gate → canonical-copy check → admission
+        val gated = TextQueries.curationGateRows(
+            src.select(col("doc_id"), col("text")))
+          .withColumn("fp", TextQueries.curationFp(col("text")))
+          .join(owners, "fp")
+          .filter(col("owner_id") === col("doc_id"))
+          .select(col("doc_id"), col("n_tokens"))
+        val withVec = VectorQueries.semdedupAdmitStateless(
+          gated.join(emb, col("doc_id") === col("vec_id"))
+            .select(col("vec_id"), col("embedding").as("qe"), col("n_tokens")),
+          s, d, VectorQueries.Quantizer.lloyd(s, d), carry = Seq(col("n_tokens")))
+          .select(col("vec_id").as("doc_id"), col("n_tokens"))
+        val noVec = gated
+          .join(emb, col("doc_id") === col("vec_id"), "left_anti")
+          .select(col("doc_id"), col("n_tokens"))
+        withVec.unionByName(noVec)
+          .join(dec, "doc_id")
+          .join(spans, Seq("doc_id"), "left")
+          .select(col("doc_id"),
+            (col("n_tokens") - coalesce(col("dup_tokens"), lit(0L)))
+              .as("kept_tokens"))
+      }, "kept_tokens")),
 
     // App-2's stateful keyed count as a genuine streaming job.
-    "stream_count_by_key" -> ((s, d) => {
-      Tables.load(s, d, "region") // warms session confs (tune) before readStream
-      runStream(s, s"$d/events.parquet", Tables.normalizeEvents,
-        df => df.groupBy(col("event_type").as("key"))
-          .agg(count(lit(1)).as("cnt")))
-    }),
+    "stream_count_by_key" -> ((s, d) =>
+      runGate(s, d, Events)(
+        _.groupBy(col("event_type").as("key")).agg(count(lit(1)).as("cnt")))),
 
     // Count-min sketch as STREAMING state: the counter matrix is a
     // plain streaming count aggregation — ≤ 4·2048 keys of state no
@@ -561,13 +515,10 @@ object StreamingGateQueries {
     // addition is associative. Estimation (probe + min-over-depths +
     // threshold) is a batch post-pass over the tiny built sketch —
     // same shared pieces as events_heavy_hitters, same oracle.
-    "stream_events_heavy_hitters" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      val sketch = runStream(s, s"$d/events.parquet", Tables.normalizeEvents,
-        df => TimeWindowQueries.cmsCounters(df))
-      TimeWindowQueries.cmsEstimate(sketch,
-        Tables.events(s, d).select(col("user_id")))
-    }),
+    "stream_events_heavy_hitters" -> ((s, d) =>
+      TimeWindowQueries.cmsEstimate(
+        runGate(s, d, Events)(TimeWindowQueries.cmsCounters(_)),
+        Tables.events(s, d).select(col("user_id")))),
 
     // The reference's A1 fidelity contract, driver-gated: an emission
     // on EVERY increment (rainstorm/server.go:344-355), not one row per
@@ -576,54 +527,44 @@ object StreamingGateQueries {
     // order, but the emitted MULTISET per key is exactly {1..count} —
     // deterministic, so it oracles as a LATERAL range expansion.
     "stream_running_count" -> ((s, d) =>
-      runRunningCount(s, d, graft.streaming.StreamOps.runningCountPerRecord)),
+      runGate(s, d, Events, Memory(OutputMode.Update()))(
+        runningCount(StreamOps.runningCountPerRecord))),
 
     // The SAME A1 emission contract on Spark 4's arbitrary-state
     // successor API (transformWithState/StatefulProcessor) — the same
     // projection and the same oracle by construction (shared helpers),
     // so both state APIs are driver-verified, not just spec-compared.
-    // The RocksDB provider is a requirement of the API; it is pinned
-    // on an ISOLATED session (s.newSession(): own SQLConf over the
-    // shared SparkContext), so the pin cannot leak into — or race
-    // with — any gate running on the shared session; builder-level
-    // confs (UTC, nanosAsLong) live in the SparkContext conf and carry
-    // over to the new session.
-    "stream_running_count_tws" -> ((s, d) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      runRunningCount(s2, d, graft.streaming.StreamOps.runningCountPerRecordTws)
-    }),
+    // The RocksDB provider is a requirement of the API, pinned for the
+    // run (runGate restores the caller's conf afterwards).
+    "stream_running_count_tws" -> ((s, d) =>
+      runGate(s, d, Events, Memory(OutputMode.Update()), confs = RocksDb)(
+        runningCount(StreamOps.runningCountPerRecordTws))),
 
     // Gap-based session windows as a genuine streaming job — the state
     // store merges/extends open sessions across micro-batches. Complete
     // mode (like the other windowed gates) so no window is withheld by
     // the final watermark.
-    "stream_session_window" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/events.parquet", Tables.normalizeEvents,
-        df => df.withColumn("ts", col("ts").cast("timestamp"))
+    "stream_session_window" -> ((s, d) =>
+      runGate(s, d, Events)(
+        _.withColumn("ts", col("ts").cast("timestamp"))
           .withWatermark("ts", "1 hour")
           .groupBy(session_window(col("ts"), "2 hours"), col("user_id"))
           .agg(count(lit(1)).as("cnt"))
           .select(col("user_id"),
             col("session_window.start").cast("timestamp_ntz").as("sstart"),
             col("session_window.end").cast("timestamp_ntz").as("send"),
-            col("cnt")))
-    }),
+            col("cnt")))),
 
     // Sliding event-time windows (1 hour every 30 minutes — each event
     // in exactly two epoch-aligned windows), streamed with a watermark.
-    "stream_sliding_window" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/events.parquet", Tables.normalizeEvents,
-        df => df.withColumn("ts", col("ts").cast("timestamp"))
+    "stream_sliding_window" -> ((s, d) =>
+      runGate(s, d, Events)(
+        _.withColumn("ts", col("ts").cast("timestamp"))
           .withWatermark("ts", "1 hour")
           .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
           .agg(count(lit(1)).as("cnt"))
           .select(col("window.start").cast("timestamp_ntz").as("wstart"),
-            col("event_type"), col("cnt")))
-    }),
+            col("event_type"), col("cnt")))),
 
     // Stream-stream INNER JOIN (the canonical Spark shape: equality key
     // + event-time range, watermarks on BOTH sides so join state is
@@ -634,27 +575,24 @@ object StreamingGateQueries {
     // in the plan), covering the stateful-join→file-sink path. A
     // self-join of one streaming source is deliberate: one scan feeds
     // both sides.
-    "stream_join" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runFileSinkStream(s, s"$d/events.parquet", Tables.normalizeEvents,
-        df => {
-          val e = df.withColumn("ts", col("ts").cast("timestamp"))
-          val c = e.filter(col("event_type") === "click")
-            .select(col("user_id"), col("event_id").as("click_id"),
-              col("ts").as("cts"))
-            .withWatermark("cts", "1 hour")
-          val p = e.filter(col("event_type") === "purchase")
-            .select(col("user_id").as("p_user"),
-              col("event_id").as("purchase_id"), col("ts").as("pts"))
-            .withWatermark("pts", "1 hour")
-          c.join(p, col("p_user") === col("user_id") &&
-              col("pts") >= col("cts") &&
-              col("pts") <= col("cts") + expr("INTERVAL 30 MINUTES"))
-            .select(col("user_id"), col("click_id"), col("purchase_id"),
-              col("cts").cast("timestamp_ntz").as("click_ts"),
-              col("pts").cast("timestamp_ntz").as("purchase_ts"))
-        })
-    }),
+    "stream_join" -> ((s, d) =>
+      runGate(s, d, Events, FileSink) { df =>
+        val e = df.withColumn("ts", col("ts").cast("timestamp"))
+        val c = e.filter(col("event_type") === "click")
+          .select(col("user_id"), col("event_id").as("click_id"),
+            col("ts").as("cts"))
+          .withWatermark("cts", "1 hour")
+        val p = e.filter(col("event_type") === "purchase")
+          .select(col("user_id").as("p_user"),
+            col("event_id").as("purchase_id"), col("ts").as("pts"))
+          .withWatermark("pts", "1 hour")
+        c.join(p, col("p_user") === col("user_id") &&
+            col("pts") >= col("cts") &&
+            col("pts") <= col("cts") + expr("INTERVAL 30 MINUTES"))
+          .select(col("user_id"), col("click_id"), col("purchase_id"),
+            col("cts").cast("timestamp_ntz").as("click_ts"),
+            col("pts").cast("timestamp_ntz").as("purchase_ts"))
+      }),
 
     // Stream-STATIC join: the arriving fact stream enriched against a
     // static dimension — the third join regime next to batch joins and
@@ -666,11 +604,10 @@ object StreamingGateQueries {
       val urgent = Tables.orders(s, d)
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_orderpriority"))
-      runStream(s, s"$d/lineitem.parquet", identity,
-        df => df.join(urgent, col("l_orderkey") === col("o_orderkey"))
+      runGate(s, d, Lineitem, Memory(OutputMode.Append()))(
+        _.join(urgent, col("l_orderkey") === col("o_orderkey"))
           .select(col("l_orderkey"), col("l_linenumber"),
-            col("o_orderpriority")),
-        OutputMode.Append())
+            col("o_orderpriority")))
     }),
 
     // Exact content-dedup as a STREAMING job — the LLM-pipeline dedup
@@ -685,15 +622,12 @@ object StreamingGateQueries {
     // regime ships alongside: stream_dedup_events_wm (real event time,
     // exact eviction-replay oracle) and the *_wm arrival-time twins
     // for this corpus (chunks/phash/cdc/curation composite).
-    "stream_dedup_docs" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/documents.parquet", identity,
-        df => df.select(
+    "stream_dedup_docs" -> ((s, d) =>
+      runGate(s, d, Documents, Memory(OutputMode.Append()))(
+        _.select(
             md5(trim(regexp_replace(lower(col("text")), "\\s+", " "))
               .cast("binary")).as("fingerprint"))
-          .dropDuplicates("fingerprint"),
-        OutputMode.Append())
-    }),
+          .dropDuplicates("fingerprint"))),
 
     // ANN SERVING on the streaming face — the production shape where
     // the corpus sits still and QUERY vectors arrive as a stream:
@@ -714,22 +648,14 @@ object StreamingGateQueries {
     // top-3 completes within its batch; Complete mode re-emits the
     // final table, deterministic under any arrival order.
     "stream_ann_topk" -> ((s, d) => {
-      Tables.load(s, d, "region")
       val corpus = Tables.embeddingsSpread(s, d)
         .select(col("vec_id").as("nn_id"), col("embedding"))
-      // The stream IS the query vectors: the stager's prepare keeps
-      // only them, so each staged batch holds ~NQueries/3 rows instead
-      // of a third of the corpus (5.41 → 3.35 s median of cache-cleared
-      // reps at sf0.1; the corpus enters the plan once, as the static
-      // side).
-      runStream(s, s"$d/embeddings.parquet", Tables.normalizeTemporal,
-        df => VectorQueries.annStreamTopk(
-          df.select(col("vec_id").as("qid"), col("embedding").as("qe")),
-          corpus),
-        OutputMode.Complete(),
-        stageBatchedStream(_, _, _, _,
-          (0 until 3).map(i => col("vec_id") % 3 === i),
-          prepare = df => df.filter(col("vec_id") < VectorQueries.NQueries)))
+      // The stream IS the query vectors (queryVectors: 5.41 → 3.35 s
+      // median of cache-cleared reps at sf0.1 against staging a third of
+      // the corpus per batch).
+      runGate(s, d, Embeddings, staging = byMod("vec_id", 3, queryVectors))(df =>
+        VectorQueries.annStreamTopk(
+          df.select(col("vec_id").as("qid"), col("embedding").as("qe")), corpus))
     }),
 
     // ANN serving WITH IVF PRUNING — the composition stream_ann_topk's
@@ -740,17 +666,10 @@ object StreamingGateQueries {
     // VectorQueries.annStreamIvfTopk). The oracle is ann_ivf_topk's
     // SQL verbatim — streaming ≡ batch for the pruned serving shape,
     // the exact analogue of stream_ann_topk ≡ ann_brute_topk.
-    "stream_ann_ivf_topk" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/embeddings.parquet", Tables.normalizeTemporal,
-        df => VectorQueries.annStreamIvfTopk(
-          df.select(col("vec_id").as("qid"), col("embedding").as("qe")),
-          s, d),
-        OutputMode.Complete(),
-        stageBatchedStream(_, _, _, _,
-          (0 until 3).map(i => col("vec_id") % 3 === i),
-          prepare = df => df.filter(col("vec_id") < VectorQueries.NQueries)))
-    }),
+    "stream_ann_ivf_topk" -> ((s, d) =>
+      runGate(s, d, Embeddings, staging = byMod("vec_id", 3, queryVectors))(df =>
+        VectorQueries.annStreamIvfTopk(
+          df.select(col("vec_id").as("qid"), col("embedding").as("qe")), s, d))),
 
     // SEMANTIC-DEDUP ADMISSION — the curation face of the serving
     // story: centroids trained OFFLINE on the batch corpus collapse to
@@ -764,16 +683,11 @@ object StreamingGateQueries {
     // ann_ivf_topk. This is the shape that admits a new data shard
     // against a frozen curated corpus at 100 TB: broadcast centroids,
     // cell-partitioned index, per-arrival work bounded by cell width.
-    "stream_semdedup" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/embeddings.parquet", Tables.normalizeTemporal,
-        df => VectorQueries.semdedupStreamAdmit(
+    "stream_semdedup" -> ((s, d) =>
+      runGate(s, d, Embeddings, staging = byMod("vec_id", 4))(df =>
+        VectorQueries.semdedupStreamAdmit(
           df.select(col("vec_id"), col("embedding").as("qe")), s, d,
-          VectorQueries.Quantizer.labelMeans(s, d)),
-        OutputMode.Complete(),
-        stageBatchedStream(_, _, _, _,
-          (0 until 4).map(i => col("vec_id") % 4 === i)))
-    }),
+          VectorQueries.Quantizer.labelMeans(s, d)))),
 
     // SemDeDup admission on the TRAINED quantizer — the same gate with
     // the Lloyd k-means cells (dedup_semdedup_kmeans's quantizer, the
@@ -781,16 +695,11 @@ object StreamingGateQueries {
     // vectors assign by the quantizer's OWN min-L2 metric as a pure
     // broadcast expression, LEFT join their trained cell's static
     // members only. Oracle is dedup_semdedup_kmeans's SQL verbatim.
-    "stream_semdedup_kmeans" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/embeddings.parquet", Tables.normalizeTemporal,
-        df => VectorQueries.semdedupStreamAdmit(
+    "stream_semdedup_kmeans" -> ((s, d) =>
+      runGate(s, d, Embeddings, staging = byMod("vec_id", 4))(df =>
+        VectorQueries.semdedupStreamAdmit(
           df.select(col("vec_id"), col("embedding").as("qe")), s, d,
-          VectorQueries.Quantizer.lloyd(s, d)),
-        OutputMode.Complete(),
-        stageBatchedStream(_, _, _, _,
-          (0 until 4).map(i => col("vec_id") % 4 === i)))
-    }),
+          VectorQueries.Quantizer.lloyd(s, d)))),
 
     // STREAMING QUANTIZER TRAINING — online mini-batch k-means (the
     // streaming story of the trained quantizer): the embeddings table arrives as FOUR deterministic
@@ -808,18 +717,13 @@ object StreamingGateQueries {
     // chain one round deeper, and StreamingSpec pins the same equality
     // (plus that the update actually moved the centroids) in-process.
     "stream_kmeans_update" -> ((s, d) => {
-      Tables.load(s, d, "region")
       // ONE training run shared by the arriving-side assignment and
       // the finish's empty-cell coalesce (the trained table is
       // driver-held; plans read it as a LocalRelation)
       val frozen = VectorQueries.Quantizer.lloyd(s, d)
-      val sums = runStream(s, s"$d/embeddings.parquet", Tables.normalizeTemporal,
-        df => VectorQueries.kmStreamSums(
-          df.select(col("embedding").as("qe")), frozen),
-        OutputMode.Complete(),
-        stageBatchedStream(_, _, _, _,
-          (0 until 4).map(i => col("vec_id") % 4 === i)))
-      VectorQueries.kmStreamUpdateFinish(frozen, sums)
+      VectorQueries.kmStreamUpdateFinish(frozen,
+        runGate(s, d, Embeddings, staging = byMod("vec_id", 4))(df =>
+          VectorQueries.kmStreamSums(df.select(col("embedding").as("qe")), frozen)))
     }),
 
     // SEQUENTIAL mini-batch k-means — the ONLINE training protocol
@@ -835,8 +739,8 @@ object StreamingGateQueries {
     // unrolls the same four MacQueen steps CTE-for-CTE, so a wrong
     // arrival order would hash-mismatch, not just drift.
     "stream_kmeans_minibatch" -> ((s, d) =>
-      runKmMiniBatchGate(s, d, "gate_kmmb",
-        new VectorQueries.KmTrainOnly(s, d))(_.result())),
+      runGate(s, d, Embeddings,
+        kmSink(new VectorQueries.KmTrainOnly(s, d))(_.result()), KmStaging)(identity)),
 
     // ONLINE TRAINING COMPOSED WITH SERVING — the online-deployment
     // shape: each arriving batch's vectors are SERVED (assigned and
@@ -852,8 +756,9 @@ object StreamingGateQueries {
     // batches really assign under MOVED centroids (batch 0 matches the
     // frozen assignment; some later batch differs from it).
     "stream_kmeans_online_serve" -> ((s, d) =>
-      runKmMiniBatchGate(s, d, "gate_kmos",
-        new VectorQueries.KmServeAssign(s, d))(_.servedResult())),
+      runGate(s, d, Embeddings,
+        kmSink(new VectorQueries.KmServeAssign(s, d))(_.servedResult()),
+        KmStaging)(identity)),
 
     // ONLINE ANN SERVING — the IVF face of the composition above: the
     // quantizer retrains from arriving traffic (the same MacQueen
@@ -869,10 +774,9 @@ object StreamingGateQueries {
     // batch r a complete IVF chain under mbc$r, unioned — one
     // stale-generation index or probe list anywhere hash-mismatches.
     "stream_ann_ivf_online_topk" -> ((s, d) =>
-      runKmMiniBatchGate(s, d, "gate_kmoi",
-        new VectorQueries.KmIvfGenerations(s, d,
+      runGate(s, d, Embeddings, kmSink(new VectorQueries.KmIvfGenerations(s, d,
           VectorQueries.KmRebuildAlways, new VectorQueries.KmLists(s, d)))(
-        _.servedTopkResult())),
+        _.servedTopkResult()), KmStaging)(identity)),
 
     // DRIFT-GATED online IVF serving — the epoch-rebuild cadence as a
     // measured knob: same stream, same MacQueen trainer, same
@@ -891,10 +795,9 @@ object StreamingGateQueries {
     // anywhere hash-mismatches the emission
     // (kmOnlineIvfDriftTopkOracleSql).
     "stream_ann_ivf_online_topk_drift" -> ((s, d) =>
-      runKmMiniBatchGate(s, d, "gate_kmoid",
-        new VectorQueries.KmIvfGenerations(s, d,
+      runGate(s, d, Embeddings, kmSink(new VectorQueries.KmIvfGenerations(s, d,
           VectorQueries.KmDriftRebuild, new VectorQueries.KmLists(s, d)))(
-        _.servedTopkResult())),
+        _.servedTopkResult()), KmStaging)(identity)),
 
     // PER-CELL INCREMENTAL REINDEXING — the finer protocol next to the
     // whole-index drift gate above (rebuild only cells whose centroid
@@ -925,8 +828,9 @@ object StreamingGateQueries {
     // (kmOnlineIvfIncrTopkOracleSql) — a member left behind or a
     // wrong moved set anywhere hash-mismatches.
     "stream_ann_ivf_online_topk_incr" -> ((s, d) =>
-      runKmMiniBatchGate(s, d, "gate_kmoii",
-        new VectorQueries.KmIvfIncr(s, d))(_.servedTopkResult())),
+      runGate(s, d, Embeddings,
+        kmSink(new VectorQueries.KmIvfIncr(s, d))(_.servedTopkResult()),
+        KmStaging)(identity)),
 
     // STREAMING INGEST INTO THE PERSISTED INDEX — the production
     // ingestion path of ann_ivf_persisted_topk: arriving vectors
@@ -944,27 +848,14 @@ object StreamingGateQueries {
     // verbatim — a row mis-placed by the streaming write (wrong cell
     // directory, lost batch, double batch) hash-mismatches.
     "stream_ann_ivf_persisted_topk" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      withGateParts(s) {
-        val name = s"gate_ivfp_${runId.incrementAndGet()}"
-        onStaged(stageBatchedStream(s, s"$d/embeddings.parquet",
-          name, Tables.normalizeTemporal,
-          (0 until 4).map(i => col("vec_id") % 4 === i))) { (src, ckpt) =>
-          val store = VectorQueries.ivfStoreNewChild(d)
-          // one quantizer for the arriving-side assignment and the probes
-          val quant = VectorQueries.Quantizer.labelMeans(s, d)
-          val q = VectorQueries.ivfArrivingAssign(src, quant)
-            .writeStream
-            .outputMode(OutputMode.Append())
-            .partitionBy("cell")
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .format("parquet").option("path", store).start()
-          q.awaitTermination()
-          VectorQueries.ivfStoreCommitLatest(VectorQueries.ivfStoreRoot(d), store)
-          VectorQueries.ivfServeFromStore(s, d, quant, store)
-        }
-      }
+      val store = VectorQueries.ivfStoreNewChild(d)
+      // one quantizer for the arriving-side assignment and the probes,
+      // built by the body, under the gate's pins
+      lazy val quant = VectorQueries.Quantizer.labelMeans(s, d)
+      runGate(s, d, Embeddings, StoreSink(store, "cell", () => {
+        VectorQueries.ivfStoreCommitLatest(VectorQueries.ivfStoreRoot(d), store)
+        VectorQueries.ivfServeFromStore(s, d, quant, store)
+      }), byMod("vec_id", 4))(VectorQueries.ivfArrivingAssign(_, quant))
     }),
 
     // STREAMING INGEST INTO THE PERSISTED CODE STORE — the IVFADC
@@ -983,31 +874,19 @@ object StreamingGateQueries {
     // VERBATIM — a code mis-packed, mis-quantized, or mis-placed by
     // any micro-batch hash-mismatches.
     "stream_ann_ivfpq_persisted_topk" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      withGateParts(s) {
-        val name = s"gate_pqp_${runId.incrementAndGet()}"
-        onStaged(stageBatchedStream(s, s"$d/embeddings.parquet",
-          name, Tables.normalizeTemporal,
-          (0 until 4).map(i => col("vec_id") % 4 === i))) { (src, ckpt) =>
-          // offline training of the quantizer and the codebook, ONCE per
-          // gate (checkpointed) — the foreachBatch closure broadcasts
-          // both per arrival batch, and serving reuses them
-          val quant = VectorQueries.Quantizer.labelMeans(s, d)
-          val subs = VectorQueries.pqSubs(s, d).localCheckpoint()
-          val cb = VectorQueries.pqCodebook(subs, k = VectorQueries.IvfPqK)
-          val store =
-            VectorQueries.storeNewChild(VectorQueries.pqStoreRoot(d))
-          val q = src.writeStream
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .foreachBatch((b: DataFrame, id: Long) =>
-              VectorQueries.pqStoreIngestBatch(quant, store, cb, b, id))
-            .start()
-          q.awaitTermination()
+      val store = VectorQueries.storeNewChild(VectorQueries.pqStoreRoot(d))
+      runGate(s, d, Embeddings, {
+        // offline training of the quantizer and the codebook, ONCE per
+        // gate (checkpointed) — each arrival batch broadcasts both, and
+        // serving reuses them
+        val quant = VectorQueries.Quantizer.labelMeans(s, d)
+        val cb = VectorQueries.pqCodebook(VectorQueries.pqSubs(s, d).localCheckpoint(),
+          k = VectorQueries.IvfPqK)
+        StepSink(VectorQueries.pqStoreIngestBatch(quant, store, cb, _, _), () => {
           VectorQueries.ivfStoreCommitLatest(VectorQueries.pqStoreRoot(d), store)
           VectorQueries.pqServeFromStore(s, d, quant, cb, store)
-        }
-      }
+        })
+      }, byMod("vec_id", 4))(identity)
     }),
 
     // DRIFT-REFRESHED PERSISTED INDEX — the drift gate's generation
@@ -1032,8 +911,8 @@ object StreamingGateQueries {
     // — a skipped rebuild, a mis-assigned append, or serving a
     // superseded generation hash-mismatches the emission.
     "stream_ann_ivf_persisted_refresh" -> ((s, d) =>
-      runStoreRefreshGate(s, d, "gate_kmoipr",
-        new VectorQueries.KmRawStore(s, d))),
+      runGate(s, d, Embeddings,
+        refreshSink(s, d, new VectorQueries.KmRawStore(s, d)), KmStaging)(identity)),
 
     // DRIFT-REFRESH × THE PERSISTED PQ CODE STORE — the same generation
     // step over the artifact actually worth persisting at 100 TB
@@ -1054,8 +933,8 @@ object StreamingGateQueries {
     // mis-bucketed append, a mis-packed code, or a superseded
     // generation served hash-mismatches the emission.
     "stream_ann_ivfpq_persisted_refresh" -> ((s, d) =>
-      runStoreRefreshGate(s, d, "gate_pqpr",
-        new VectorQueries.KmPqStore(s, d))),
+      runGate(s, d, Embeddings,
+        refreshSink(s, d, new VectorQueries.KmPqStore(s, d)), KmStaging)(identity)),
 
     // ONLINE BPE TRAINING — the tokenizer face of the online-training
     // trio (stream_kmeans_minibatch and the two online-serve gates
@@ -1072,24 +951,11 @@ object StreamingGateQueries {
     // unrolled batch-for-batch with the catch-up and the cumulative
     // weights stated in SQL (bpeTrainOnlineSql) — a late-arriving
     // word tokenized under the wrong generation hash-mismatches.
-    "stream_bpe_train_online" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      withGateParts(s) {
-        val name = s"gate_bpeon_${runId.incrementAndGet()}"
-        val nb = TextQueries.BpeOnlineBatches
-        onStaged(stageBatchedStream(s, s"$d/documents.parquet",
-          name, identity, (0 until nb).map(i => col("doc_id") % nb === i))) { (src, ckpt) =>
-          val st = new TextQueries.BpeOnline()
-          val q = src.writeStream
-            .trigger(Trigger.AvailableNow())
-            .option("checkpointLocation", ckpt)
-            .foreachBatch((b: DataFrame, id: Long) => st.update(b, id))
-            .start()
-          q.awaitTermination()
-          st.result()
-        }
-      }
-    }),
+    "stream_bpe_train_online" -> ((s, d) =>
+      runGate(s, d, Documents, {
+        val st = new TextQueries.BpeOnline()
+        StepSink(st.update, () => st.result())
+      }, byMod("doc_id", TextQueries.BpeOnlineBatches))(identity)),
 
     // BPE SERVING — the tokenizer face of the ANN-serving story: the
     // merge table is trained ONCE, OFFLINE, on the batch corpus
@@ -1105,13 +971,9 @@ object StreamingGateQueries {
     // (streaming ≡ batch; the map is shared via bpeSubtokenMap — one
     // definition, zero drift).
     "stream_bpe_tokenize" -> ((s, d) => {
-      Tables.load(s, d, "region")
       val nsub = TextQueries.bpeSubtokenMap(s, d).localCheckpoint()
-      runStream(s, s"$d/documents.parquet", identity,
-        df => bpeServe(df, nsub, windowed = false),
-        OutputMode.Complete(),
-        stageBatchedStream(_, _, _, _,
-          (0 until 4).map(i => col("doc_id") % 4 === i)))
+      runGate(s, d, Documents, staging = byMod("doc_id", 4))(
+        bpeServe(_, nsub, windowed = false))
     }),
 
     // ---- The BOUNDED-regime serving twins ----------------------------
@@ -1133,71 +995,53 @@ object StreamingGateQueries {
     // by (arrival window, qid); per-group state is the ≤ k-row heap,
     // evicted when the window closes.
     "stream_ann_topk_wm" -> ((s, d) => {
-      Tables.load(s, d, "region")
       val corpus = Tables.embeddingsSpread(s, d)
         .select(col("vec_id").as("nn_id"), col("embedding"))
-      runFileSinkStream(s, s"$d/embeddings.parquet", Tables.normalizeTemporal,
-        df => VectorQueries.annStreamTopk(
+      runGate(s, d, Embeddings, FileSink,
+          byMod("vec_id", WmServeBatches, queryVectors))(df =>
+        VectorQueries.annStreamTopk(
           df.select(col("vec_id").as("qid"), col("embedding").as("qe"))
             .withColumn("arrival_ts", stagedArrival("qid")),
-          corpus, windowed = true),
-        stageBatchedStream(_, _, _, _,
-          (0 until WmServeBatches).map(i => col("vec_id") % WmServeBatches === i),
-          prepare = df => df.filter(col("vec_id") < VectorQueries.NQueries)))
+          corpus, windowed = true))
     }),
 
     // IVF-pruned ANN serving, bounded: same probe-list devices as
     // stream_ann_ivf_topk; only the state regime changes.
-    "stream_ann_ivf_topk_wm" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runFileSinkStream(s, s"$d/embeddings.parquet", Tables.normalizeTemporal,
-        df => VectorQueries.annStreamIvfTopk(
+    "stream_ann_ivf_topk_wm" -> ((s, d) =>
+      runGate(s, d, Embeddings, FileSink,
+          byMod("vec_id", WmServeBatches, queryVectors))(df =>
+        VectorQueries.annStreamIvfTopk(
           df.select(col("vec_id").as("qid"), col("embedding").as("qe"))
             .withColumn("arrival_ts", stagedArrival("qid")),
-          s, d, windowed = true),
-        stageBatchedStream(_, _, _, _,
-          (0 until WmServeBatches).map(i => col("vec_id") % WmServeBatches === i),
-          prepare = df => df.filter(col("vec_id") < VectorQueries.NQueries)))
-    }),
+          s, d, windowed = true))),
 
     // SemDeDup admission, bounded: the keep/drop decision per arriving
     // vector is unchanged (it depends only on the static cell index);
     // the admission flag's state row now lives in its arrival window
     // and evicts with it.
-    "stream_semdedup_wm" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runFileSinkStream(s, s"$d/embeddings.parquet", Tables.normalizeTemporal,
-        df => VectorQueries.semdedupStreamAdmit(
+    "stream_semdedup_wm" -> ((s, d) =>
+      runGate(s, d, Embeddings, FileSink, byMod("vec_id", WmServeBatches))(df =>
+        VectorQueries.semdedupStreamAdmit(
           df.select(col("vec_id"), col("embedding").as("qe"))
             .withColumn("arrival_ts", stagedArrival("vec_id")),
-          s, d, VectorQueries.Quantizer.labelMeans(s, d), windowed = true),
-        stageBatchedStream(_, _, _, _,
-          (0 until WmServeBatches).map(i => col("vec_id") % WmServeBatches === i)))
-    }),
+          s, d, VectorQueries.Quantizer.labelMeans(s, d), windowed = true))),
 
     // The trained-quantizer admission gate, bounded: same Lloyd-cell
     // admission body under the arrival-window/watermark regime.
-    "stream_semdedup_kmeans_wm" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runFileSinkStream(s, s"$d/embeddings.parquet", Tables.normalizeTemporal,
-        df => VectorQueries.semdedupStreamAdmit(
+    "stream_semdedup_kmeans_wm" -> ((s, d) =>
+      runGate(s, d, Embeddings, FileSink, byMod("vec_id", WmServeBatches))(df =>
+        VectorQueries.semdedupStreamAdmit(
           df.select(col("vec_id"), col("embedding").as("qe"))
             .withColumn("arrival_ts", stagedArrival("vec_id")),
-          s, d, VectorQueries.Quantizer.lloyd(s, d), windowed = true),
-        stageBatchedStream(_, _, _, _,
-          (0 until WmServeBatches).map(i => col("vec_id") % WmServeBatches === i)))
-    }),
+          s, d, VectorQueries.Quantizer.lloyd(s, d), windowed = true))),
 
     // BPE token metering, bounded: per-doc budgets keyed by the
     // arrival window — the served-corpus shape where a document's
     // budget row retires with its ingest horizon.
     "stream_bpe_tokenize_wm" -> ((s, d) => {
-      Tables.load(s, d, "region")
       val nsub = TextQueries.bpeSubtokenMap(s, d).localCheckpoint()
-      runFileSinkStream(s, s"$d/documents.parquet", identity,
-        df => bpeServe(df, nsub, windowed = true),
-        stageBatchedStream(_, _, _, _,
-          (0 until WmServeBatches).map(i => col("doc_id") % WmServeBatches === i)))
+      runGate(s, d, Documents, FileSink, byMod("doc_id", WmServeBatches))(
+        bpeServe(_, nsub, windowed = true))
     }),
 
     // The duplicated-gram inventory in the BOUNDED regime — the _wm
@@ -1230,10 +1074,9 @@ object StreamingGateQueries {
     // periodic batch re-sweep over the emitted inventories is the
     // standard recover-the-tail move).
     "stream_dedup_substring_wm" -> ((s, d) => {
-      Tables.load(s, d, "region")
       val nb = TextQueries.SubstrWmBatches // one constant, both faces
-      runStream(s, s"$d/documents.parquet", identity,
-        df => TextQueries.substrGramRows(df.select(col("doc_id"), col("text")))
+      runGate(s, d, Documents, Memory(OutputMode.Append()), byMod("doc_id", nb))(df =>
+        TextQueries.substrGramRows(df.select(col("doc_id"), col("text")))
           .withColumn("arrival_ts",
             expr("cast('2024-03-01 00:00:00' as timestamp) + " +
               s"make_interval(0, 0, 0, cast(doc_id % $nb as int), 0, 0, 0)"))
@@ -1242,10 +1085,7 @@ object StreamingGateQueries {
           .agg(count(lit(1)).as("occ"))
           .filter(col("occ") >= 2L)
           .select(col("window.start").cast("timestamp_ntz").as("wstart"),
-            col("gram"), col("occ")),
-        OutputMode.Append(),
-        stageBatchedStream(_, _, _, _,
-          (0 until nb).map(i => col("doc_id") % nb === i)))
+            col("gram"), col("occ")))
     }),
 
     // The ExactSubstr duplicated-gram inventory (what
@@ -1268,16 +1108,11 @@ object StreamingGateQueries {
     // gate keys state by the raw gram string so the oracle can state
     // the inventory portably; production (and the batch plan) keys the
     // fixed-width xxhash64 of it.
-    "stream_dedup_substring" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/documents.parquet", identity,
-        df => TextQueries.substrGramRows(df.select(col("doc_id"), col("text")))
+    "stream_dedup_substring" -> ((s, d) =>
+      runGate(s, d, Documents, staging = byMod("doc_id", 3))(df =>
+        TextQueries.substrGramRows(df.select(col("doc_id"), col("text")))
           .groupBy(col("gram")).agg(count(lit(1)).as("occ"))
-          .filter(col("occ") >= 2L),
-        OutputMode.Complete(),
-        stageBatchedStream(_, _, _, _,
-          (0 until 3).map(i => col("doc_id") % 3 === i)))
-    }),
+          .filter(col("occ") >= 2L))),
 
     // The incremental-ingest dedup (CurationQueries.dedup_incremental)
     // on the engine's streaming face — the production shape where the
@@ -1290,16 +1125,14 @@ object StreamingGateQueries {
     // fingerprint universe, not the store's. Output is the surviving
     // fingerprint SET (deterministic under any arrival order).
     "stream_dedup_incremental" -> ((s, d) => {
-      Tables.load(s, d, "region")
       val store = Tables.documentsSpread(s, d)
         .filter(col("doc_id") % 4L =!= 0L)
         .select(md5(col("text").cast("binary")).as("fp")).distinct()
-      runStream(s, s"$d/documents.parquet", identity,
-        df => df.filter(col("doc_id") % 4L === 0L)
+      runGate(s, d, Documents, Memory(OutputMode.Append()))(
+        _.filter(col("doc_id") % 4L === 0L)
           .select(md5(col("text").cast("binary")).as("fp"))
           .join(store, Seq("fp"), "left_anti")
-          .dropDuplicates("fp"),
-        OutputMode.Append())
+          .dropDuplicates("fp"))
     }),
 
     // Chunk-level dedup on the STREAMING face: arriving documents
@@ -1311,14 +1144,11 @@ object StreamingGateQueries {
     // emits the deterministic fingerprint SET (same reasoning as
     // stream_dedup_docs). Also the only gate combining a streaming
     // Generate with stateful dedup.
-    "stream_dedup_chunks" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/documents.parquet", identity,
-        df => CurationQueries.chunkRows(df.select(col("doc_id"), col("text")))
+    "stream_dedup_chunks" -> ((s, d) =>
+      runGate(s, d, Documents, Memory(OutputMode.Append()))(df =>
+        CurationQueries.chunkRows(df.select(col("doc_id"), col("text")))
           .select(col("chunk_fp"))
-          .dropDuplicates("chunk_fp"),
-        OutputMode.Append())
-    }),
+          .dropDuplicates("chunk_fp"))),
 
     // CONTENT-DEFINED chunk dedup on the streaming face: arriving
     // documents chunk through the SAME pure-array cdcChunkRows the
@@ -1328,14 +1158,11 @@ object StreamingGateQueries {
     // be) — and each chunk fingerprint is emitted once with the
     // seen-set in the state store. Deterministic fingerprint SET out
     // (same reasoning as stream_dedup_chunks).
-    "stream_dedup_cdc_chunks" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/documents.parquet", identity,
-        df => CurationQueries.cdcChunkRows(df.select(col("doc_id"), col("text")))
+    "stream_dedup_cdc_chunks" -> ((s, d) =>
+      runGate(s, d, Documents, Memory(OutputMode.Append()))(df =>
+        CurationQueries.cdcChunkRows(df.select(col("doc_id"), col("text")))
           .select(col("chunk_fp"))
-          .dropDuplicates("chunk_fp"),
-        OutputMode.Append())
-    }),
+          .dropDuplicates("chunk_fp"))),
 
     // Exact IMAGE dedup on the streaming face — the multimodal twin of
     // stream_dedup_docs: arriving documents synthesize into real PPM
@@ -1345,19 +1172,16 @@ object StreamingGateQueries {
     // emitted once with the seen-set in the state store. Output is the
     // deterministic distinct band-tuple SET (which image arrives first
     // is arrival-order-dependent; the set is not).
-    "stream_dedup_phash" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/documents.parquet", identity,
-        df => MultimodalQueries
+    "stream_dedup_phash" -> ((s, d) =>
+      runGate(s, d, Documents, Memory(OutputMode.Append()))(df =>
+        MultimodalQueries
           .imageMediaRows(df.select(col("doc_id"), col("text"))).toDF()
           .select(graft.functions.BinaryFunctions
             .ppmPhashBands(col("payload")).as("bands"))
           .filter(col("bands").isNotNull)
           .select((0 until 8).map(i =>
             element_at(col("bands"), i + 1).as(s"b$i")): _*)
-          .dropDuplicates((0 until 8).map(i => s"b$i")),
-        OutputMode.Append())
-    }),
+          .dropDuplicates((0 until 8).map(i => s"b$i")))),
 
     // Watermark-BOUNDED streaming dedup — the state regime the three
     // unbounded dedup gates (stream_dedup_docs/chunks/phash) need at
@@ -1380,33 +1204,25 @@ object StreamingGateQueries {
     // + delay clears that watermark; duplicates never extend it. Four
     // batches exercise two distinct eviction rounds: at sf0.01 batch 2
     // re-emits the expired majority and batch 3 the complementary set.
-    "stream_dedup_events_wm" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      // Run on an ISOLATED session (same device as
-      // stream_running_count_tws) with two pins:
-      //  - noDataMicroBatches OFF: the replay oracle assumes NO
-      //    no-data micro-batch interleaves the four planned file
-      //    batches (one would advance the watermark — and run
-      //    evictions — a batch early). AvailableNow is observed never
-      //    to interleave one, but observed isn't contractual: the conf
-      //    enforces it. (The window gates must NOT get this pin —
-      //    their Append emission relies on the trailing no-data batch
-      //    the default runs.)
-      //  - RocksDB state store provider: the bounded-state showcase
-      //    runs the backend the 100 TB story names (state off-heap,
-      //    incremental checkpoints), not just the in-memory HDFS
-      //    provider. Eviction semantics are provider-independent
-      //    (StreamingSpec pins HDFS-vs-RocksDB equality); the gate
-      //    proves the oracle replay holds ON the production backend.
-      // newSession(): own SQLConf over the shared SparkContext, so
-      // neither pin can leak into or race with other gates;
-      // builder-time confs (UTC, nanosAsLong) carry over.
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      s2.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      runDedupEventsWm(s2, d)
-    }),
+    // Two pins: NoDataBatchesOff, and RocksDb — the bounded-state
+    // showcase runs the production backend, not just the in-memory HDFS
+    // provider. Eviction semantics are provider-independent
+    // (StreamingSpec pins HDFS-vs-RocksDB equality); the gate proves
+    // the oracle replay holds ON the production backend.
+    "stream_dedup_events_wm" -> ((s, d) =>
+      runGate(s, d, Events, FileSink,
+        Batches(Seq(
+          col("ts") < lit("2024-01-08").cast("timestamp_ntz"),
+          col("ts") >= lit("2024-01-08").cast("timestamp_ntz") &&
+            col("ts") < lit("2024-01-15").cast("timestamp_ntz"),
+          col("ts") >= lit("2024-01-15").cast("timestamp_ntz") &&
+            col("ts") < lit("2024-01-22").cast("timestamp_ntz"),
+          col("ts") >= lit("2024-01-22").cast("timestamp_ntz")),
+          _.groupBy(col("user_id")).agg(min(col("ts")).as("ts"))),
+        NoDataBatchesOff ++ RocksDb)(df =>
+        StreamOps.dedupBoundedBy(
+            df.withColumn("ts", col("ts").cast("timestamp")), "ts", "12 hours", "user_id")
+          .select(col("user_id"), col("ts").cast("timestamp_ntz").as("ts")))),
 
     // ARRIVAL-time watermark-bounded chunk dedup CROSSING EVICTION
     // BOUNDARIES — closes the evidence gap the *_wm twins leave open
@@ -1429,15 +1245,11 @@ object StreamingGateQueries {
     // set per batch is therefore E_b = F_b \ (E_{b-1} ∪ E_{b-2})
     // (F_b = distinct fps in batch b) — two genuine re-emission rounds
     // at sf0.01 — and each emission carries its batch's arrival_ts,
-    // pinning WHICH batch re-emitted. Same noDataMicroBatches pin as
-    // stream_dedup_events_wm (a no-data batch would advance the
-    // watermark and evict a batch early).
-    "stream_dedup_chunks_wm_evict" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-      runFileSinkStream(s2, s"$d/documents.parquet", identity,
-        df => graft.streaming.StreamOps.dedupBoundedBy(
+    // pinning WHICH batch re-emitted. Pinned NoDataBatchesOff, as
+    // stream_dedup_events_wm.
+    "stream_dedup_chunks_wm_evict" -> ((s, d) =>
+      runGate(s, d, Documents, FileSink, byMod("doc_id", 5), NoDataBatchesOff)(df =>
+        StreamOps.dedupBoundedBy(
             CurationQueries.chunkRows(df.select(col("doc_id"), col("text")))
               .withColumn("arrival_ts",
                 expr("cast('2024-03-01 00:00:00' as timestamp) + " +
@@ -1445,10 +1257,7 @@ object StreamingGateQueries {
               .select(col("chunk_fp"), col("arrival_ts")),
             "arrival_ts", "6 hours", "chunk_fp")
           .select(col("chunk_fp"),
-            col("arrival_ts").cast("timestamp_ntz").as("arrival_ts")),
-        stageBatchedStream(_, _, _, _,
-          (0 until 5).map(i => col("doc_id") % 5 === i)))
-    }),
+            col("arrival_ts").cast("timestamp_ntz").as("arrival_ts")))),
 
     // ARRIVAL-time watermark-bounded chunk dedup — the bounded twin of
     // stream_dedup_chunks for corpora with no event-time column
@@ -1462,27 +1271,23 @@ object StreamingGateQueries {
     // what lets the same batch oracle gate it exactly; the eviction
     // machinery itself is proven by stream_dedup_events_wm and the
     // StreamingSpec state-bound test.
-    "stream_dedup_chunks_wm" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/documents.parquet", identity,
-        df => graft.streaming.StreamOps.dedupBoundedBy(
+    "stream_dedup_chunks_wm" -> ((s, d) =>
+      runGate(s, d, Documents, Memory(OutputMode.Append()))(df =>
+        StreamOps.dedupBoundedBy(
             CurationQueries.chunkRows(df.select(col("doc_id"), col("text")))
               .select(col("chunk_fp"))
               .withColumn("arrival_ts", current_timestamp()),
             "arrival_ts", "1 day", "chunk_fp")
-          .select(col("chunk_fp")),
-        OutputMode.Append())
-    }),
+          .select(col("chunk_fp")))),
 
     // The same arrival-time bounded regime on the IMAGE face: phash
     // band-tuples deduped with the seen-set bounded by the 1-day
     // arrival watermark (same DISTINCT-equivalence argument as
     // stream_dedup_chunks_wm; same synthesis + native hash as
     // stream_dedup_phash).
-    "stream_dedup_phash_wm" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runStream(s, s"$d/documents.parquet", identity,
-        df => graft.streaming.StreamOps.dedupBoundedBy(
+    "stream_dedup_phash_wm" -> ((s, d) =>
+      runGate(s, d, Documents, Memory(OutputMode.Append()))(df =>
+        StreamOps.dedupBoundedBy(
             MultimodalQueries
               .imageMediaRows(df.select(col("doc_id"), col("text"))).toDF()
               .select(graft.functions.BinaryFunctions
@@ -1492,27 +1297,15 @@ object StreamingGateQueries {
                 element_at(col("bands"), i + 1).as(s"b$i")): _*)
               .withColumn("arrival_ts", current_timestamp()),
             "arrival_ts", "1 day", (0 until 8).map(i => s"b$i"): _*)
-          .select((0 until 8).map(i => col(s"b$i")): _*),
-        OutputMode.Append())
-    }),
+          .select((0 until 8).map(i => col(s"b$i")): _*))),
 
     // Event-time tumbling window aggregation with a watermark, streamed
     // through the PRODUCTION parquet file sink (Append mode, result read
     // back via the sink's commit log — no memory sink in this plan).
     // Only watermark-closed windows are emitted; the oracle states the
     // same cutoff.
-    "stream_tumbling_window" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runFileSinkStream(s, s"$d/events.parquet", Tables.normalizeEvents,
-        // watermarks require an instant (TIMESTAMP); the UTC session
-        // makes the NTZ→LTZ cast value-preserving
-        df => df.withColumn("ts", col("ts").cast("timestamp"))
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(col("window.start").cast("timestamp_ntz").as("wstart"),
-            col("event_type"), col("cnt")))
-    }),
+    "stream_tumbling_window" -> ((s, d) =>
+      runGate(s, d, Events, FileSink)(hourlyWindowCounts)),
 
     // LATE-DATA DROP, driver-gated: the events table arrives as THREE
     // micro-batches split by event_id mod 3. Spark's measured contract
@@ -1529,19 +1322,8 @@ object StreamingGateQueries {
     // batch-0 watermark and the final watermark from the same mod-3
     // split and states the drop and the Append-emission cutoff
     // explicitly.
-    "stream_late_data" -> ((s, d) => {
-      Tables.load(s, d, "region")
-      runFileSinkStream(s, s"$d/events.parquet", Tables.normalizeEvents,
-        df => df.withColumn("ts", col("ts").cast("timestamp"))
-          .withWatermark("ts", "1 hour")
-          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(col("window.start").cast("timestamp_ntz").as("wstart"),
-            col("event_type"), col("cnt")),
-        stageBatchedStream(_, _, _, _,
-          Seq(col("event_id") % 3 === 0, col("event_id") % 3 === 1,
-            col("event_id") % 3 === 2)))
-    })
+    "stream_late_data" -> ((s, d) =>
+      runGate(s, d, Events, FileSink, byMod("event_id", 3))(hourlyWindowCounts))
   )
 
   /** Streaming ≡ batch for the composite: the emitted (split,

@@ -188,14 +188,23 @@ object StreamOps {
     }
   }
 
+  /** source → op1 → op2 with both ends observed (rows_in before op1,
+    * rows_out after op2), so a PipelineMetricsListener sees per-batch
+    * ingest and emit counts without the sink path running blind — and
+    * without a second pass over the data. The frame runPipeline sinks;
+    * the streaming gates run it through their own runner.
+    */
+  def observedPipeline(source: DataFrame,
+                       op1: DataFrame => DataFrame,
+                       op2: DataFrame => DataFrame): DataFrame =
+    Core.pipeline(source.observe(SourceMetrics, count(lit(1)).as("rows_in")),
+      op1, op2).observe(SinkMetrics, count(lit(1)).as("rows_out"))
+
   /** The RainStorm pipeline template, streaming edition: source → op1 →
     * op2 → sink with checkpointed exactly-once (rainstorm/server.go:88-153
-    * minus the hand-rolled WAL). `AvailableNow` drains all available
-    * input then stops — the deterministic batch-equivalent trigger.
-    * Both ends of the pipeline are observed (rows_in before op1,
-    * rows_out after op2), so a PipelineMetricsListener sees per-batch
-    * ingest and emit counts without the sink path running blind —
-    * and without a second pass over the data.
+    * minus the hand-rolled WAL), observed as in observedPipeline.
+    * `AvailableNow` drains all available input then stops — the
+    * deterministic batch-equivalent trigger.
     */
   def runPipeline(source: DataFrame,
                   op1: DataFrame => DataFrame,
@@ -203,10 +212,7 @@ object StreamOps {
                   outputMode: OutputMode,
                   checkpoint: String,
                   sinkDir: Option[String] = None): StreamingQuery = {
-    val observed = source.observe(SourceMetrics, count(lit(1)).as("rows_in"))
-    val transformed = Core.pipeline(observed, op1, op2)
-      .observe(SinkMetrics, count(lit(1)).as("rows_out"))
-    val writer = transformed.writeStream
+    val writer = observedPipeline(source, op1, op2).writeStream
       .outputMode(outputMode)
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)

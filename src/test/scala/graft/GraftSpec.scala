@@ -20,9 +20,12 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // saveAsTable targets (BucketingSpec) land in a temp warehouse,
-      // not the repo working directory
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      // not the repo working directory; it goes with the test JVM
+      .config("spark.sql.warehouse.dir", {
+        val dir = java.nio.file.Files.createTempDirectory("graft-warehouse").toFile
+        sys.addShutdownHook(graft.queries.VectorQueries.deleteRecursively(dir))
+        dir.toString
+      })
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -95,13 +95,17 @@ class GraphsSpec extends GraftSpec {
     // the truncated lineage cannot recompute them). Same fixpoint, same
     // labels — only the materialization differs.
     val prev = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(tmpDir("graft-cc-ckpt"))
+    val dir = tmpDir("graft-cc-ckpt")
+    spark.sparkContext.setCheckpointDir(dir)
     try {
       val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L), (8L, 9L), (9L, 7L))
       val reliable = Graphs
         .connectedComponents(edges.toDF("da", "db"), _.checkpoint(true))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(reliable === cc(edges))
-    } finally prev.foreach(spark.sparkContext.setCheckpointDir)
+    } finally {
+      prev.foreach(spark.sparkContext.setCheckpointDir)
+      graft.queries.VectorQueries.deleteRecursively(new java.io.File(dir))
+    }
   }
 }

@@ -73,11 +73,12 @@ class RegistrySpec extends GraftSpec {
     assert(after.size === before.size,
       s"the gate left temp entries behind: ${(after -- before).mkString(", ")}")
     // The memory-sink, file-sink and curation-pipeline gates delete
-    // their checkpoint, staged-source and staging dirs too; a file-sink
-    // gate keeps its graft-out-* dir, which the returned frame reads.
-    val gateDirs = Seq("graft-ckpt-", "graft-src-", "graft-stage-")
+    // their checkpoint, staged-source, staging and sink output dirs too.
+    val gateDirs = Seq("graft-ckpt-", "graft-src-", "graft-stage-", "graft-out-")
     for (name <- Seq("stream_count_by_key", "stream_dedup_events_wm",
-                     "stream_curation_pipeline")) {
+                     "stream_curation_pipeline", "stream_join",
+                     "stream_dedup_chunks_wm_evict",
+                     "stream_docs_curation_e2e_kmeans")) {
       val pre = graftEntries
       assert(SparkEntry.queries(name)(session, Sf).count() > 0L)
       val left = (graftEntries -- pre).filter(n => gateDirs.exists(n.startsWith))

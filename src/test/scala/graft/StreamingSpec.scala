@@ -289,6 +289,98 @@ class StreamingSpec extends GraftSpec {
     } finally spark.streams.removeListener(listener)
   }
 
+  test("memory-sink gates leave no temp view behind; their frames stay readable") {
+    // Spark's memory sink registers a temp view holding the sink and
+    // every row of the run; the gate runner drops it once it has taken
+    // the frame, so repeated gate runs do not accrete rows in the
+    // caller's catalog.
+    val d = "/root/testdata/sf0.001"
+    def views = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val before = views
+    val gates = graft.queries.StreamingGateQueries.queries
+    val byKey = gates("stream_count_by_key")(spark, d)
+    val heavy = gates("stream_events_heavy_hitters")(spark, d)
+    assert(views === before, s"gates left temp views: ${views -- before}")
+    assert(byKey.count() ===
+      Tables.events(spark, d).select("event_type").distinct().count())
+    assert(heavy.count() ===
+      graft.queries.TimeWindowQueries.queries("events_heavy_hitters")(spark, d).count())
+  }
+
+  test("gate conf pins reach the stream and are restored afterwards, also on failure") {
+    // The pinned gates set their confs on the caller's session for the
+    // run only: afterwards every key reads as before (an unset key is
+    // unset again), and the RocksDB pin is what the stream ran on.
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    val d = "/root/testdata/sf0.001"
+    val parts = "spark.sql.shuffle.partitions"
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    def confs = Seq(parts, provider, noData).map(k => k -> spark.conf.getAll.get(k)).toMap
+    val original = confs
+    // one unset key, and a set key the gates pin to another value
+    spark.conf.unset(provider)
+    spark.conf.set(noData, "true")
+    val before = confs
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]
+    val ended = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.incrementAndGet()
+    }
+    val gates = graft.queries.StreamingGateQueries.queries
+    spark.streams.addListener(listener)
+    try {
+      for ((gate, rocks) <- Seq("stream_running_count_tws" -> true,
+                                "stream_dedup_events_wm" -> true,
+                                "stream_dedup_chunks_wm_evict" -> false)) {
+        progress.clear()
+        val endedBefore = ended.get
+        assert(gates(gate)(spark, d).count() > 0L)
+        assert(confs === before, s"$gate changed the caller's confs")
+        // progress events are posted asynchronously, ahead of the
+        // query's termination event
+        val deadline = System.currentTimeMillis() + 15000
+        while (ended.get == endedBefore && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+        val last = progress.asScala.toSeq.last
+        val custom = last.stateOperators(0).customMetrics.keySet.asScala
+        assert(custom.exists(_.startsWith("rocksdb")) === rocks,
+          s"$gate: state metrics ${custom.mkString(", ")}")
+      }
+      // Failure inside the run: tables lacking a column the gate reads
+      // (the running-count and chunk bodies; the events_wm staging).
+      val bad = tmpDir("gate-pins-bad")
+      def fixture(table: String, drop: String): Unit = {
+        val out = s"$bad/$table-out"
+        spark.read.parquet(s"$d/$table.parquet").drop(drop)
+          .coalesce(1).write.mode("overwrite").parquet(out)
+        val part = new java.io.File(out).listFiles()
+          .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+        Files.move(part.toPath, Paths.get(bad, s"$table.parquet"))
+      }
+      for ((gate, table, drop) <- Seq(
+             ("stream_running_count_tws", "events", "event_type"),
+             ("stream_dedup_events_wm", "events", "user_id"),
+             ("stream_dedup_chunks_wm_evict", "documents", "text"))) {
+        new java.io.File(s"$bad/$table.parquet").delete()
+        fixture(table, drop)
+        intercept[Exception](gates(gate)(spark, bad).collect())
+        assert(confs === before, s"a failed $gate changed the caller's confs")
+      }
+    } finally {
+      spark.streams.removeListener(listener)
+      original.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("streaming ANN serving equals the batch brute-force ranking") {
     // stream_ann_topk ranks with the bounded-heap TopKAggregator while
     // ann_brute_topk ranks with a window row_number — identical
