@@ -14,10 +14,32 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
+  /** `file:` served by graft.fs's in-process local file system: without
+    * the Hadoop native library the stock one starts a chmod or readlink
+    * process per checkpoint, state or store file. Hadoop's FileSystem
+    * cache keys on scheme, not impl, so these must be in place before
+    * the JVM's first `file:` FileSystem is made.
+    */
+  val localFsConfs: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[graft.fs.InProcessLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.fs.InProcessLocalFs].getName)
+
+  /** One executor class loader for every session: each streaming query
+    * runs on a clone of its caller's session, and with per-session
+    * artifact isolation each clone got its own task class loader, which
+    * Spark's codegen cache keys on, so every `runStreaming` call
+    * recompiled its generated classes and ran them on cold JIT code.
+    * graft adds no session-scoped jars or files. Session-creation conf.
+    */
+  val sharedClassLoaderConfs: Map[String, String] = Map(
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .withExtensions(new GraftExtensions)
+      .config(localFsConfs)
+      .config(sharedClassLoaderConfs)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

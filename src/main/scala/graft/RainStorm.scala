@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
-import graft.operators.Core
-
 /** The reference's user-facing entry point, re-expressed as a library
   * call: `RainStorm <op1_exe> <op2_exe> <hydfs_src> <hydfs_dest>
   * <num_tasks> [pattern]` (main.go:206-222, rainstorm/server.go:88-153)
@@ -200,22 +198,20 @@ object RainStorm {
       */
     val app1op2: RsOp = csvProject(2, 3)
 
-    def csvProject(keyIdx: Int, valIdx: Int): RsOp = FlatMap((_, v, _) => {
-      val cols = splitCsv(v)
-      if (cols.isDefined && cols.get.length > math.max(keyIdx, valIdx))
-        Seq(cols.get(keyIdx) -> cols.get(valIdx))
-      else Seq.empty
-    })
+    def csvProject(keyIdx: Int, valIdx: Int): RsOp = FlatMap((_, v, _) =>
+      csvFields(v, keyIdx, valIdx).toList)
 
     /** ops/app2op1: CSV-parse, iff col6 == pattern emit (col8, "1"). */
     val app2op1: RsOp = csvFilterEq(6, 8)
 
+    /** The scan stops at a filter field that is not `p`: such a line
+      * emits nothing whatever follows, malformed or not.
+      */
     def csvFilterEq(filterIdx: Int, keyIdx: Int): RsOp = FlatMap((_, v, p) => {
-      val cols = splitCsv(v)
-      if (cols.isDefined && cols.get.length > math.max(filterIdx, keyIdx)
-          && cols.get(filterIdx) == p)
-        Seq(cols.get(keyIdx) -> "1")
-      else Seq.empty
+      var key: String = null
+      val n = scanCsv(v, i => i == filterIdx || i == keyIdx, (i, f) =>
+        (i != filterIdx || f == p) && { if (i == keyIdx) key = f; true })
+      if (n > math.max(filterIdx, keyIdx)) key -> "1" :: Nil else Nil
     })
 
     /** ops/app2op2: echo key → engine COUNT protocol. */
@@ -225,51 +221,88 @@ object RainStorm {
       * None on malformed input (unterminated quote, stray quote).
       */
     private[graft] def splitCsv(line: String): Option[Array[String]] = {
-      val out = Seq.newBuilder[String]
-      val cur = new StringBuilder
-      var i = 0
-      var inQ = false
-      while (i < line.length) {
-        val c = line.charAt(i)
-        if (inQ) {
-          if (c == '"') {
-            if (i + 1 < line.length && line.charAt(i + 1) == '"') { cur += '"'; i += 1 }
-            else inQ = false
-          } else cur += c
-        } else c match {
-          case ','                      => out += cur.result(); cur.clear()
-          case '"' if cur.isEmpty       => inQ = true
-          case '"'                      => return None
-          case _                        => cur += c
-        }
+      val out = Array.newBuilder[String]
+      if (scanCsv(line, _ => true, (_, f) => { out += f; true }) < 0) None
+      else Some(out.result())
+    }
+
+    /** Fields `a` and `b` of one CSV line, as `splitCsv(line)` would give
+      * them, from one scan that builds only those two: None when the
+      * line is malformed or has at most `max(a, b)` fields.
+      */
+    private[graft] def csvFields(line: String, a: Int, b: Int): Option[(String, String)] = {
+      var fa, fb: String = null
+      val n = scanCsv(line, i => i == a || i == b,
+        (i, f) => { if (i == a) fa = f; if (i == b) fb = f; true })
+      if (n > math.max(a, b)) Some((fa, fb)) else None
+    }
+
+    /** The one CSV scanner: a single pass over `line` that hands field i
+      * to `put` iff `keep(i)`, in field order, and builds no string for
+      * any other field. Returns the field count, or -1 when `put` stops
+      * the scan by returning false or when the line is malformed — an
+      * unterminated quote, or a quote that does not open a field — in
+      * which case the fields already put are to be dropped.
+      * A quoted field may go on unquoted after its closing quote
+      * (`"a"b` is `ab`).
+      */
+    private def scanCsv(line: String, keep: Int => Boolean,
+                        put: (Int, String) => Boolean): Int = {
+      val n = line.length
+      var i = -1 // the comma before the current field
+      var field = -1
+      while (i < n) {
         i += 1
+        field += 1
+        val kept = keep(field)
+        if (i < n && line.charAt(i) == '"') {
+          val sb = if (kept) new java.lang.StringBuilder else null
+          var inQ = true
+          i += 1
+          while (i < n && (inQ || line.charAt(i) != ',')) {
+            val c = line.charAt(i)
+            if (!inQ) { if (c == '"') return -1; if (kept) sb.append(c) }
+            else if (c != '"') { if (kept) sb.append(c) }
+            else if (i + 1 < n && line.charAt(i + 1) == '"') { if (kept) sb.append('"'); i += 1 }
+            else inQ = false
+            i += 1
+          }
+          if (inQ) return -1
+          if (kept && !put(field, sb.toString)) return -1
+        } else {
+          val start = i
+          while (i < n && line.charAt(i) != ',') {
+            if (line.charAt(i) == '"') return -1
+            i += 1
+          }
+          if (kept && !put(field, line.substring(start, i))) return -1
+        }
       }
-      if (inQ) None
-      else { out += cur.result(); Some(out.result().toArray) }
+      field + 1
     }
   }
 
+  /** One stage over the `(key, value)` string records every stage
+    * reads and writes — the reference's Record without its id, which no
+    * stage here reads (exactly-once comes from the checkpoint, not from
+    * id dedup). A FlatMap stage is a typed flatMap after the key-hash
+    * exchange; CountByKey is the keyed count, its value the count as a
+    * string, so any stage may follow it in batch.
+    */
   private def applyOp(df: DataFrame, op: RsOp, pattern: String, numTasks: Int,
                       plan: Chaos.KillPlan): DataFrame =
     op match {
       case FlatMap(f) =>
+        import df.sparkSession.implicits._
         // stage boundary: the reference hash-exchanges on key between
         // stages (rainstorm/server.go:384-390); numTasks ≈ partitions
-        Core.flatMapRecords(
-          applyOpInput(df, numTasks),
-          r => {
-            Chaos.tap(plan) // no-op unless THIS run claimed armed kills
-            f(r.key, r.value, pattern).map { case (k, v) =>
-              Core.Record(java.util.UUID.randomUUID().toString, k, v)
-            }
-          })
+        applyOpInput(df, numTasks).as[(String, String)].flatMap { case (k, v) =>
+          Chaos.tap(plan) // no-op unless THIS run claimed armed kills
+          f(k, v, pattern)
+        }.toDF("key", "value")
       case CountByKey =>
-        // Re-synthesize a (key-derived) id so a FlatMap stage may legally
-        // follow a CountByKey stage in batch — the public RsOp API allows
-        // the combination, and flatMapRecords requires an id column.
         df.groupBy(col("key")).agg(count(lit(1)).as("value"))
           .select(col("key"), col("value").cast("string").as("value"))
-          .withColumn("id", concat(lit("count:"), col("key")))
     }
 
   /** Batch source with the reference's EXACT record identity: key =
@@ -334,7 +367,6 @@ object RainStorm {
     }
     if (files.isEmpty)
       return spark.emptyDataset[(String, String)].toDF("key", "value")
-        .withColumn("id", expr("uuid()"))
     val lines = spark.read.text(files: _*).select(
       col("value"),
       col("_metadata.file_path").as("fp"),
@@ -395,7 +427,6 @@ object RainStorm {
     withOrd.join(offs, Seq("fp", "bs"))
       .select(concat(col("kp"), lit(":"), col("base") + col("ord")).as("key"),
         col("value"))
-      .withColumn("id", expr("uuid()"))
   }
 
   /** Per-stage kill plans for a batch run. The closure transport
@@ -524,7 +555,6 @@ object RainStorm {
     val src = spark.readStream.text(srcDir)
       .select(concat(lit(srcDir), lit(":"), md5(col("value"))).as("key"),
         col("value"))
-      .withColumn("id", expr("uuid()"))
     val out = applyOp(applyOp(src, op1, pattern, numTasks, op1Plan),
       op2, pattern, numTasks, op2Plan)
       .select(col("key"), col("value"))

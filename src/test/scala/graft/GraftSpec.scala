@@ -19,6 +19,8 @@ object TestSpark {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config(GraftSession.localFsConfs)
+      .config(GraftSession.sharedClassLoaderConfs)
       // saveAsTable targets (BucketingSpec) land in a temp warehouse,
       // not the repo working directory; it goes with the test JVM
       .config("spark.sql.warehouse.dir", {

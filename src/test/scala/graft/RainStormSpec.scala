@@ -54,6 +54,24 @@ class RainStormSpec extends GraftSpec {
     assert(got === Map("Regulatory" -> "2", "Warning" -> "1"))
   }
 
+  test("streaming calls share one task class loader, so generated code is reused") {
+    // each query runs on a clone of the session, and Spark's codegen
+    // cache keys on the task's class loader: a loader per clone would
+    // recompile every call's generated classes
+    val src = writeFixture()
+    TaskLoaders.seen.clear()
+    val op1 = RainStorm.FlatMap((_, v, _) => {
+      TaskLoaders.seen.add(Thread.currentThread.getContextClassLoader)
+      Seq(v.take(3) -> "1")
+    })
+    (1 to 2).foreach { i =>
+      RainStorm.runStreaming(spark, src, op1, RainStorm.CountByKey, s"rainstorm_loader$i",
+        tmpDir("rainstorm-ckpt"), numTasks = 2).awaitTermination()
+      spark.catalog.dropTempView(s"rainstorm_loader$i")
+    }
+    assert(TaskLoaders.seen.size === 1)
+  }
+
   test("sink write produces <key,value> csv lines") {
     val src = writeFixture()
     val dest = tmpDir("rainstorm-dest") + "/out"
@@ -477,8 +495,8 @@ class RainStormSpec extends GraftSpec {
   test("CountByKey then FlatMap: allowed in batch, rejected in streaming") {
     val src = writeFixture()
     // batch: CountByKey over the per-line source keys (all distinct ->
-    // count 1 each), then a FlatMap stage — requires the re-synthesized
-    // id column on the aggregate output.
+    // count 1 each), then a FlatMap stage over the aggregate's
+    // (key, value) records.
     val out = RainStorm.run(spark, src,
       RainStorm.CountByKey, RainStorm.FlatMap((k, v, _) => Seq(v -> k)),
       dest = None, numTasks = 2)
@@ -523,4 +541,95 @@ class RainStormSpec extends GraftSpec {
     assert(Ops.splitCsv("a\"b,c").isEmpty)           // stray quote -> drop
     assert(Ops.splitCsv("a,,c").get.toSeq === Seq("a", "", "c"))
   }
+
+  /** splitCsv as a char-by-char builder of every field: the reference
+    * the field-selective scan is held to.
+    */
+  private def refSplitCsv(line: String): Option[Array[String]] = {
+    val out = Seq.newBuilder[String]
+    val cur = new StringBuilder
+    var i = 0
+    var inQ = false
+    while (i < line.length) {
+      val c = line.charAt(i)
+      if (inQ) {
+        if (c == '"') {
+          if (i + 1 < line.length && line.charAt(i + 1) == '"') { cur += '"'; i += 1 }
+          else inQ = false
+        } else cur += c
+      } else c match {
+        case ','                      => out += cur.result(); cur.clear()
+        case '"' if cur.isEmpty       => inQ = true
+        case '"'                      => return None
+        case _                        => cur += c
+      }
+      i += 1
+    }
+    if (inQ) None
+    else { out += cur.result(); Some(out.result().toArray) }
+  }
+
+  /** A TrafficSigns-shaped line: 20 columns, quoted fields with doubled
+    * quotes and commas, blank fields, and 1 in 20 lines malformed by an
+    * unterminated or a stray quote.
+    */
+  private def signLine(r: scala.util.Random): String = {
+    val posts = Array("Wood Post", "\"Wood Post\"", " ", "U-Channel", "\"Mast, Arm\"")
+    val types = Array("Stop", "\"No Parking, Any Time\"", "\"School \"\"Zone\"\" Ahead\"", "")
+    val cats = Array("Warning", "Regulatory", "\"Street, Name\"")
+    val cols = Array.tabulate(20) {
+      case 2 => r.nextInt(100000).toString
+      case 3 => types(r.nextInt(types.length))
+      case 4 => if (r.nextBoolean()) "\"16\"\" X 42\"\"\"" else " "
+      case 6 => posts(r.nextInt(posts.length))
+      case 8 => cats(r.nextInt(cats.length))
+      case _ => if (r.nextInt(3) == 0) "" else s"v${r.nextInt(50)}"
+    }
+    r.nextInt(20) match {
+      case 0 => cols(4) = "\"16\"\" X 42"
+      case 1 => cols(9) = "Rep\"laced"
+      case _ => ()
+    }
+    (if (r.nextInt(10) == 0) "\uFEFF" else "") + cols.mkString(",")
+  }
+
+  test("csvFields equals splitCsv projected to its two fields, on random and sign-shaped lines") {
+    val r = new scala.util.Random(8)
+    val alphabet = Array('a', ',', '"', ' ', '\uFEFF')
+    val random = Seq.fill(20000)(
+      Seq.fill(r.nextInt(16))(alphabet(r.nextInt(alphabet.length))).mkString)
+    val signs = Seq.fill(5000)(signLine(r))
+    def projected(line: String, a: Int, b: Int): Option[(String, String)] =
+      refSplitCsv(line).filter(_.length > math.max(a, b)).map(c => (c(a), c(b)))
+    for (line <- random; a <- 0 to 4; b <- 0 to 4)
+      assert(Ops.csvFields(line, a, b) === projected(line, a, b), s"line [$line] fields $a, $b")
+    for (line <- signs; (a, b) <- Seq((6, 8), (2, 3), (8, 6), (3, 3), (19, 0), (20, 1)))
+      assert(Ops.csvFields(line, a, b) === projected(line, a, b), s"line [$line] fields $a, $b")
+    for (line <- random ++ signs)
+      assert(Ops.splitCsv(line).map(_.toSeq) === refSplitCsv(line).map(_.toSeq), s"line [$line]")
+    // the operators built on the scan: App-2's filter-and-key (whose scan
+    // stops at a filter field that is not the pattern), App-1's projection
+    def filterEq(f: Int, k: Int, line: String, p: String) = {
+      val RainStorm.FlatMap(op) = Ops.csvFilterEq(f, k)
+      op("k", line, p)
+    }
+    val RainStorm.FlatMap(project) = Ops.app1op2
+    for (line <- signs; p <- Seq("Wood Post", " ")) {
+      assert(filterEq(6, 8, line, p) ===
+        projected(line, 6, 8).filter(_._1 == p).map(_._2 -> "1").toSeq, s"line [$line]")
+      assert(project("k", line, p) === projected(line, 2, 3).toSeq, s"line [$line]")
+    }
+    for (line <- random; (f, k) <- Seq((0, 1), (1, 0), (2, 2)); p <- Seq("a", "", " "))
+      assert(filterEq(f, k, line, p) ===
+        projected(line, f, k).filter(_._1 == p).map(_._2 -> "1").toSeq, s"line [$line]")
+    assert(signs.count(l => refSplitCsv(l).isEmpty) > 100)
+    assert(signs.count(l => projected(l, 6, 8).exists(_._1 == "Wood Post")) > 1000)
+  }
+}
+
+/** Task context class loaders seen by a test operator (static: a task
+  * runs a deserialized copy of its closure).
+  */
+object TaskLoaders {
+  val seen: java.util.Set[ClassLoader] = java.util.concurrent.ConcurrentHashMap.newKeySet[ClassLoader]()
 }

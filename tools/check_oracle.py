@@ -1,15 +1,22 @@
 #!/usr/bin/env python3
 """Local mimic of the driver's correctness gate.
 
-Usage: python3 tools/check_oracle.py <verify_out_dir> <sf_dir> [query...]
+Usage: python3 tools/check_oracle.py <verify_out_dir> <sf_dir>
+           [--ref <ref_out_dir>] [query...]
 
 Reads each <out_dir>/<name> parquet (Spark result) and runs the matching
 oracle_sql.json SQL in DuckDB over the sf_dir parquet tables, then
 compares: schema (column names), row count, and values (columns sorted by
 name, rows sorted by all columns, floats compared exactly after a stable
 stringification — stricter than needed, matching a hash compare).
+
+With --ref, each query's output must also equal the same query's output
+in a reference Verify dump (say, one made from the parent commit): the
+same DuckDB column types, the same parquet nullability (REQUIRED or
+OPTIONAL) per column, and the same rows. The oracle compare cannot see a
+type or nullability change; this one can.
 """
-import json, sys, glob, os
+import argparse, json, sys, glob, os
 import duckdb
 import pandas as pd
 
@@ -28,9 +35,52 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     s = s.sort_values(by=list(s.columns), kind="mergesort").reset_index(drop=True)
     return s
 
+def parquet_shape(con, d):
+    """A dump dir's DuckDB column types and the repetition (REQUIRED or
+    OPTIONAL) of every parquet schema element, nested ones included,
+    both sorted by name; an error string when part files disagree."""
+    files = f"{d}/*.parquet"
+    types = con.execute(
+        f"DESCRIBE SELECT * FROM read_parquet('{files}')").fetchall()
+    per_file = {}
+    for f, name, rep in con.execute(
+            "SELECT file_name, name, repetition_type "
+            f"FROM parquet_schema('{files}')").fetchall():
+        per_file.setdefault(f, []).append(f"{name}:{rep}")
+    # the first element is the schema root, whose name is the writer's
+    shapes = {tuple(sorted(v[1:])) for v in per_file.values()}
+    if len(shapes) != 1:
+        return f"part files disagree: {sorted(shapes)[:2]}"
+    return sorted(f"{n}:{t}" for n, t, *_ in types) + list(shapes.pop())
+
+def compare_ref(con, name, got, out_dir, ref_dir):
+    """None when <out_dir>/<name> has the reference dump's types,
+    nullability and rows; else what differs."""
+    ref = f"{ref_dir}/{name}"
+    files = glob.glob(f"{ref}/*.parquet")
+    if not files:
+        return "REF-MISSING"
+    mine, theirs = parquet_shape(con, f"{out_dir}/{name}"), parquet_shape(con, ref)
+    if mine != theirs:
+        if isinstance(mine, str) or isinstance(theirs, str):
+            return f"REF-SCHEMA got={mine} ref={theirs}"
+        return (f"REF-SCHEMA got-only={sorted(set(mine) - set(theirs))} "
+                f"ref-only={sorted(set(theirs) - set(mine))}")
+    want = pd.concat([pd.read_parquet(f) for f in files], ignore_index=True)
+    if len(got) != len(want):
+        return f"REF-ROWCOUNT got={len(got)} ref={len(want)}"
+    if not canon(got).equals(canon(want)):
+        return "REF-VALUES-MISMATCH"
+    return None
+
 def main():
-    out_dir, sf_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("out_dir")
+    ap.add_argument("sf_dir")
+    ap.add_argument("--ref", help="reference Verify dump to compare with")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    out_dir, sf_dir, only = args.out_dir, args.sf_dir, set(args.queries)
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     for t in TABLES:
@@ -67,6 +117,8 @@ def main():
             continue
         st = stages[name] = {"rows_match": False, "schema_match": False,
                              "hash_match": False}
+        if args.ref:
+            st["ref_match"] = False
         spark_dir = f"{out_dir}/{name}"
         files = glob.glob(f"{spark_dir}/*.parquet")
         if not files:
@@ -90,6 +142,11 @@ def main():
         st["hash_match"] = g.equals(w)
         if st["hash_match"]:
             results[name] = "OK"
+            if args.ref:
+                diff = compare_ref(con, name, got, out_dir, args.ref)
+                st["ref_match"] = diff is None
+                if diff:
+                    results[name] = diff
         else:
             neq = (g != w).any(axis=1)
             idx = list(g.index[neq])[:3]
