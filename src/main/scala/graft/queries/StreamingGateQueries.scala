@@ -116,12 +116,6 @@ object StreamingGateQueries {
     */
   private case object FileSink extends Sink
 
-  /** Parquet appends into the caller's store `path`, partitioned by
-    * `partitionBy`; the store outlives the run. Returns `drained()`.
-    */
-  private final case class StoreSink(path: String, partitionBy: String,
-                                     drained: () => DataFrame) extends Sink
-
   /** foreachBatch: `step` runs once per micro-batch. Returns `drained()`. */
   private final case class StepSink(step: (DataFrame, Long) => Unit,
                                     drained: () => DataFrame) extends Sink
@@ -134,17 +128,36 @@ object StreamingGateQueries {
     StepSink(st.step, () => result(st))
 
   /** A drift-refreshed persisted-store gate: the generation step over
-    * `store` at KmDriftRebuild; at drain the store compacts and bounds
-    * its run, then publishes it as the corpus's current refresh store
-    * (the two-level LATEST resolution specs and compaction use).
+    * `codec`'s KmGenStore at KmDriftRebuild; at drain the store compacts
+    * and bounds its run, then publishes it as the corpus's current
+    * refresh store (the two-level LATEST resolution specs and
+    * compaction use).
     */
   private def refreshSink(s: SparkSession, d: String,
-                          store: VectorQueries.KmGenStore): StepSink =
-    kmSink(new VectorQueries.KmIvfGenerations(s, d,
-        VectorQueries.KmDriftRebuild, store)) { st =>
+                          codec: VectorQueries.Codec): StepSink =
+    kmSink(new VectorQueries.KmIvfGenerations(s, d, VectorQueries.KmDriftRebuild,
+        new VectorQueries.KmGenStore(s, d, codec))) { st =>
       st.artifact.publish()
       st.servedTopkResult()
     }
+
+  /** A streaming-ingest persisted-store gate: four vec_id-residue
+    * batches land in a fresh child of `codec`'s root through the
+    * shared storeIngest (one label quantizer, built under the gate's
+    * pins, for the arriving-side cells and the probes); at drain the
+    * child is published and the full query set serves from it.
+    */
+  private def ingestGate(s: SparkSession, d: String,
+                         codec: VectorQueries.Codec): DataFrame = {
+    val store = VectorQueries.storeNewChild(codec.root(d))
+    runGate(s, d, Embeddings, {
+      val quant = VectorQueries.Quantizer.labelMeans(s, d)
+      StepSink(VectorQueries.storeIngest(codec, quant, store, _, _), () => {
+        VectorQueries.ivfStoreCommitLatest(codec.root(d), store)
+        VectorQueries.storeServe(s, d, quant, codec, store)
+      })
+    }, byMod("vec_id", 4))(identity)
+  }
 
   /** The KmMiniBatch gates' staging: KmMbBatches vec_id-residue batches
     * (mtime-staged ORDER is part of the contract — the oracles unroll
@@ -251,9 +264,6 @@ object StreamingGateQueries {
         case FileSink =>
           w.outputMode(OutputMode.Append()).format("parquet")
             .option("path", outDir).start()
-        case StoreSink(store, by, _) =>
-          w.outputMode(OutputMode.Append()).partitionBy(by).format("parquet")
-            .option("path", store).start()
         case StepSink(step, _) => w.foreachBatch(step).start()
       }
       try q.awaitTermination()
@@ -265,7 +275,6 @@ object StreamingGateQueries {
           rows
         case FileSink =>
           s.read.schema(out.schema).parquet(outDir).localCheckpoint()
-        case StoreSink(_, _, drained) => drained()
         case StepSink(_, drained) => drained()
       }
     } finally {
@@ -835,62 +844,39 @@ object StreamingGateQueries {
     // STREAMING INGEST INTO THE PERSISTED INDEX — the production
     // ingestion path of ann_ivf_persisted_topk: arriving vectors
     // assign to their cell as a pure broadcast expression
-    // (ivfArrivingAssign — no state, no shuffle) and APPEND to the
-    // cell-partitioned store through the STREAMING parquet sink's
-    // partitionBy(cell): each micro-batch lands as new files inside
-    // its cells' directories — inverted lists grow by file append,
-    // existing lists are never rewritten, and the sink's commit log
-    // makes the ingest exactly-once. After the drain the full query
-    // set serves FROM THE ARTIFACT through the shared
-    // ivfServeFromStore body (probe join = partition-pruned read).
-    // Assignment under the frozen quantizer is batch-invariant, so
-    // streaming ingest ≡ batch build and the oracle is ann_ivf_topk's
-    // verbatim — a row mis-placed by the streaming write (wrong cell
-    // directory, lost batch, double batch) hash-mismatches.
-    "stream_ann_ivf_persisted_topk" -> ((s, d) => {
-      val store = VectorQueries.ivfStoreNewChild(d)
-      // one quantizer for the arriving-side assignment and the probes,
-      // built by the body, under the gate's pins
-      lazy val quant = VectorQueries.Quantizer.labelMeans(s, d)
-      runGate(s, d, Embeddings, StoreSink(store, "cell", () => {
-        VectorQueries.ivfStoreCommitLatest(VectorQueries.ivfStoreRoot(d), store)
-        VectorQueries.ivfServeFromStore(s, d, quant, store)
-      }), byMod("vec_id", 4))(VectorQueries.ivfArrivingAssign(_, quant))
-    }),
+    // (ivfArrivingAssign — no state, no shuffle) and land through
+    // foreachBatch as ingest=batchId partitions inside their cell
+    // directories: each micro-batch adds new files to its cells —
+    // inverted lists grow by file append, existing lists are never
+    // rewritten, and the write's dynamic partition overwrite keyed on
+    // the batch id makes the ingest exactly-once (a redelivered batch
+    // rewrites its own partitions). After the drain the full query
+    // set serves FROM THE ARTIFACT through the shared storeServe
+    // (probe join = partition-pruned read). Assignment under the
+    // frozen quantizer is batch-invariant, so streaming ingest ≡
+    // batch build and the oracle is ann_ivf_topk's verbatim — a row
+    // mis-placed by the streaming write (wrong cell directory, lost
+    // batch, double batch) hash-mismatches.
+    "stream_ann_ivf_persisted_topk" -> ((s, d) =>
+      ingestGate(s, d, VectorQueries.Codec.raw)),
 
-    // STREAMING INGEST INTO THE PERSISTED CODE STORE — the IVFADC
-    // twin of stream_ann_ivf_persisted_topk: arriving vectors are
-    // PQ-quantized on arrival (pqSubsOf — the batch face's exact
-    // arithmetic) against the OFFLINE-trained broadcast codebook,
-    // cell-assigned by the same pure broadcast expression, PACKED to
-    // the array<tinyint> row, and land as idempotent ingest=batchId
-    // partitions inside their cell directories (dynamic partition
-    // overwrite — the packing aggregation forces foreachBatch, so
-    // replay-safety comes from the layout rather than the sink's
-    // commit log). After the drain the full query set serves FROM the
-    // artifact through the shared pqServeFromStore body. Frozen
+    // STREAMING INGEST INTO THE PERSISTED CODE STORE — the same
+    // ingest with the PQ codec: arriving vectors are PQ-quantized on
+    // arrival (pqSubsOf — the batch face's exact arithmetic) against
+    // the codec's offline-trained broadcast codebook (trained once per
+    // gate, checkpointed, reused by serving), cell-assigned by the same
+    // pure broadcast expression, PACKED to the array<tinyint> row, and
+    // land as the same idempotent ingest=batchId partitions. Frozen
     // quantizer AND codebook make ingest batch-invariant, so
     // streaming ≡ batch build and the oracle is ann_ivfpq_topk's
     // VERBATIM — a code mis-packed, mis-quantized, or mis-placed by
     // any micro-batch hash-mismatches.
-    "stream_ann_ivfpq_persisted_topk" -> ((s, d) => {
-      val store = VectorQueries.storeNewChild(VectorQueries.pqStoreRoot(d))
-      runGate(s, d, Embeddings, {
-        // offline training of the quantizer and the codebook, ONCE per
-        // gate (checkpointed) — each arrival batch broadcasts both, and
-        // serving reuses them
-        val quant = VectorQueries.Quantizer.labelMeans(s, d)
-        val cb = VectorQueries.pqCodebook(VectorQueries.pqSubs(s, d).localCheckpoint(),
-          k = VectorQueries.IvfPqK)
-        StepSink(VectorQueries.pqStoreIngestBatch(quant, store, cb, _, _), () => {
-          VectorQueries.ivfStoreCommitLatest(VectorQueries.pqStoreRoot(d), store)
-          VectorQueries.pqServeFromStore(s, d, quant, cb, store)
-        })
-      }, byMod("vec_id", 4))(identity)
-    }),
+    "stream_ann_ivfpq_persisted_topk" -> ((s, d) =>
+      ingestGate(s, d, VectorQueries.Codec.pq(s, d))),
 
     // DRIFT-REFRESHED PERSISTED INDEX — the drift gate's generation
-    // step with the cell-partitioned store as its artifact (KmRawStore):
+    // step with the cell-partitioned raw-vector store as its artifact
+    // (KmGenStore over the raw codec):
     // arriving vectors INGEST into the store (appends join the current
     // generation, assigned under ITS quantizer, as idempotent
     // ingest=batchId partitions), the MacQueen trainer drifts, and a
@@ -912,11 +898,11 @@ object StreamingGateQueries {
     // superseded generation hash-mismatches the emission.
     "stream_ann_ivf_persisted_refresh" -> ((s, d) =>
       runGate(s, d, Embeddings,
-        refreshSink(s, d, new VectorQueries.KmRawStore(s, d)), KmStaging)(identity)),
+        refreshSink(s, d, VectorQueries.Codec.raw), KmStaging)(identity)),
 
     // DRIFT-REFRESH × THE PERSISTED PQ CODE STORE — the same generation
     // step over the artifact actually worth persisting at 100 TB
-    // (KmPqStore — 8 tinyint codes vs 64 floats per row): arriving
+    // (the PQ codec — 8 tinyint codes vs 64 floats per row): arriving
     // vectors PQ-encode under the frozen offline codebook and land as
     // packed ingest=batchId partitions in the current CODE generation;
     // a tripped KmDriftRebuild re-buckets the whole arrived code table
@@ -934,7 +920,7 @@ object StreamingGateQueries {
     // generation served hash-mismatches the emission.
     "stream_ann_ivfpq_persisted_refresh" -> ((s, d) =>
       runGate(s, d, Embeddings,
-        refreshSink(s, d, new VectorQueries.KmPqStore(s, d)), KmStaging)(identity)),
+        refreshSink(s, d, VectorQueries.Codec.pq(s, d)), KmStaging)(identity)),
 
     // ONLINE BPE TRAINING — the tokenizer face of the online-training
     // trio (stream_kmeans_minibatch and the two online-serve gates

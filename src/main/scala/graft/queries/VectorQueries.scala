@@ -60,7 +60,7 @@ object VectorQueries {
   private[graft] val NQueries = 100
   /** IVF cells probed per query (of the 10 cells) — the SERVING-TIME
     * recall knob of the whole IVF family (ann_ivf_topk, ann_ivfpq_topk
-    * via ivfpqTopk's `nprobe` param, stream_ann_ivf_topk via
+    * via ivfTopk's `nprobe` param, stream_ann_ivf_topk via
     * annStreamIvfTopk's, the probe-list table via ivfProbedCells'):
     * recall rises with probed fraction at proportional scan cost, no
     * retraining, no re-storage — the r11 grid at k = 128 measured
@@ -421,13 +421,13 @@ object VectorQueries {
     Quantizer.labelMeans(s, d).lists(Tables.embeddingsSpread(s, d))
 
   /** The IVF probe-join / exact re-rank tail every IVF serving face
-    * shares (one definition — the tie-break and k cannot drift between
+    * shares (one definition — the tie-break cannot drift between
     * quantizers or between batch and online serving): inverted lists
     * join the broadcast probe table, self-matches drop, exact cosine
-    * ranks within each query's probed cells, top 3 kept.
+    * ranks within each query's probed cells, top `topn` kept.
     */
   private def ivfTopkTail(assigned: DataFrame, probed: DataFrame,
-                          q: DataFrame): DataFrame = {
+                          q: DataFrame, topn: Int): DataFrame = {
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("nn_id"))
     assigned.join(broadcast(probed), "cell")
@@ -435,28 +435,111 @@ object VectorQueries {
       .join(broadcast(q), "qid")
       .withColumn("cos", dot(col("qe"), col("embedding")))
       .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
+      .filter(col("rnk") <= topn)
       .select(col("qid"), col("nn_id"),
         col("rnk").cast("long").as("rnk"),
         round(col("cos"), 6).as("cos_sim"))
   }
 
-  /** IVF top-3 of the query rows of `rows` from inverted `lists` built
-    * under `q`: each query's NProbe-cell probe list from `scored` (the
-    * rows scored under `q`), then the shared exact re-rank tail. The
-    * serving step of the in-plan, persisted and online faces alike.
-    */
-  private def ivfServe(lists: DataFrame, q: Quantizer, scored: DataFrame,
-                       rows: DataFrame): DataFrame =
-    ivfTopkTail(lists, q.probes(scored, NProbe), queriesOf(rows))
+  // ---- The inverted-list codec --------------------------------------
 
-  /** IVF top-3 under quantizer `q` — ann_ivf_topk on the label cells,
-    * ann_ivf_kmeans_topk and _sampled_topk on Lloyd cells — over the
-    * whole corpus's inverted lists.
+  /** How an IVF index holds its inverted-list entries, in a plan and in
+    * a persisted store, and how the entries serve a query. Two
+    * constructors:
+    *  - raw: the entries are the vectors, (nn_id, cell, embedding),
+    *    ranked by exact cosine (ivfTopkTail);
+    *  - pq: the entries are raw-PQ codes under ONE codebook, trained
+    *    lazily, once per codec, on the checkpointed corpus subvectors:
+    *    (vec_id, cell, sub_id, code) in a plan, one packed
+    *    array<tinyint> row per vector in a store (packCodes), ranked by
+    *    ADC against each query's LUT (pqQueryLut, adcServeTail).
+    * Members:
+    *  - lists: an assignment (vec_id, cell, embedding) → its entries;
+    *  - rows / decode: entries → store rows, and a store scan → entries
+    *    with `cell` as int (the type partition inference reads);
+    *  - rebucket: a prior generation's store rows re-assigned under a
+    *    new quantizer — raw PQ under a frozen codebook makes codes
+    *    generation-invariant, so it re-buckets and never re-encodes;
+    *  - serve: entries, a (qid, cell) probe list and the rows whose
+    *    query vectors (vec_id < NQueries) it serves → each query's
+    *    top-`topn`.
+    * A codec's stores live under ivfStoreRoot(d) plus its namespace:
+    * `root` for built and streaming-ingested stores, `refreshRoot` for
+    * drift-refreshed generation stores — the two codecs never share a
+    * LATEST marker. A refresh root resolves in two levels: its LATEST
+    * names a gate run, the run's LATEST its current generation.
     */
-  private[graft] def ivfTopk(s: SparkSession, d: String, q: Quantizer): DataFrame = {
+  private[graft] final class Codec private (
+      ns: String,
+      val lists: DataFrame => DataFrame,
+      val rows: DataFrame => DataFrame,
+      val decode: DataFrame => DataFrame,
+      val rebucket: (DataFrame, Quantizer) => DataFrame,
+      val serve: (DataFrame, DataFrame, DataFrame, Int) => DataFrame) {
+    def root(d: String): String = ivfStoreRoot(d) + (if (ns.isEmpty) "" else s"_$ns")
+    def refreshRoot(d: String): String = s"${ivfStoreRoot(d)}_${ns}refresh"
+  }
+
+  private[graft] object Codec {
+    val raw: Codec = new Codec("",
+      _.withColumnRenamed("vec_id", "nn_id"),
+      identity,
+      _.select(col("nn_id"), col("embedding"), col("cell").cast("int").as("cell")),
+      (prior, q) => q.lists(prior.select(col("nn_id").as("vec_id"), col("embedding"))),
+      (lists, probed, rows, topn) => ivfTopkTail(lists, probed, queriesOf(rows), topn))
+
+    /** `k` is the codebook size; the corpus is `d`'s, which a rebucket
+      * reads the stored ids' vectors from (vec_id-keyed; co-partitioned
+      * at scale).
+      */
+    def pq(s: SparkSession, d: String, k: Int = IvfPqK): Codec = {
+      lazy val cb = pqCodebook(pqSubs(s, d).localCheckpoint(), k = k)
+      new Codec("pq",
+        a => a.select(col("vec_id"), col("cell")).join(
+          pqAssign(pqSubsOf(a), cb).select(col("vec_id"), col("sub_id"), col("code")),
+          "vec_id"),
+        packCodes,
+        _.select(col("vec_id"), col("cell").cast("int").as("cell"),
+            posexplode(col("codes")))
+          .select(col("vec_id"), col("cell"),
+            col("pos").as("sub_id"), col("col").cast("long").as("code")),
+        (prior, q) => {
+          val pc = prior.select(col("vec_id"), col("codes"))
+          pc.join(
+            q.assigned(Tables.embeddingsSpread(s, d)
+              .join(pc.select(col("vec_id")), "vec_id"))
+              .select(col("vec_id"), col("cell")), "vec_id")
+            .select(col("vec_id"), col("cell"), col("codes"))
+        },
+        (lists, probed, rows, topn) => adcServeTail(lists, probed,
+          pqQueryLut(pqSubsOf(rows.filter(col("vec_id") < NQueries)), cb), topn))
+    }
+  }
+
+  /** IVF top-`topn` of the query rows of `rows` from inverted `lists`
+    * held by `codec` and built under `q`: each query's `nprobe`-cell
+    * probe list from `scored` (the rows scored under `q`), then the
+    * codec's serve. The serving step of the in-plan, persisted and
+    * online faces alike.
+    */
+  private def ivfServe(codec: Codec, lists: DataFrame, q: Quantizer,
+                       scored: DataFrame, rows: DataFrame,
+                       nprobe: Int = NProbe, topn: Int = 3): DataFrame =
+    codec.serve(lists, q.probes(scored, nprobe), rows, topn)
+
+  /** The in-plan IVF top-k under quantizer `q` and `codec` over the
+    * whole corpus's inverted lists — ann_ivf_topk / ann_ivfpq_topk on
+    * the label cells, the _kmeans_ and _kmeans_sampled_ rows on Lloyd
+    * cells — with the probed cells `nprobe` and the kept `topn` as
+    * measurement knobs (the registered rows pin NProbe and 3;
+    * VectorSpec measures the recall surface, IVFADC+R takes a
+    * shortlist).
+    */
+  private[graft] def ivfTopk(s: SparkSession, d: String, q: Quantizer,
+                             codec: Codec, nprobe: Int = NProbe,
+                             topn: Int = 3): DataFrame = {
     val e = Tables.embeddingsSpread(s, d)
-    ivfServe(q.lists(e), q, q.scored(e), e)
+    ivfServe(codec, codec.lists(q.assigned(e)), q, q.scored(e), e, nprobe, topn)
   }
 
   /** The (qid, cell) probe list at an arbitrary `nprobe` — exactly
@@ -895,21 +978,23 @@ object VectorQueries {
       val lists =
         if (rebuild) q.lists(Tables.embeddingsSpread(s, d)).localCheckpoint()
         else prior.get
-      (lists, ivfServe(lists, q, bscored, batch))
+      (lists, ivfServe(Codec.raw, lists, q, bscored, batch))
     }
   }
 
-  /** A persisted, cell-partitioned generation store. Each instance
-    * writes one run directory under `storeRoot`; generation g is the
-    * directory gen_g (partitionBy ingest, cell) and the run's LATEST
-    * marker names the serving one.
-    *  - rebuild: the prior generation's rows, re-assigned under the
-    *    current quantizer, and the batch's rows overwrite gen_batchId,
-    *    then LATEST switches to it (tmp + rename — atomic);
+  /** A persisted, cell-partitioned generation store of `codec`'s rows
+    * (stream_ann_ivf_persisted_refresh on raw vectors,
+    * stream_ann_ivfpq_persisted_refresh on PQ codes). Each instance
+    * writes one run directory under the codec's refreshRoot; generation
+    * g is the directory gen_g (partitionBy ingest, cell) and the run's
+    * LATEST marker names the serving one.
+    *  - rebuild: the prior generation's rows, re-bucketed by the codec
+    *    under the current quantizer, and the batch's rows overwrite
+    *    gen_batchId, then LATEST switches to it (tmp + rename — atomic);
     *  - append: the batch's rows land as the current generation's
     *    ingest=batchId partitions by dynamic overwrite;
-    *  - serve: from the generation's scan, which the broadcast probe
-    *    join prunes to the probed cells.
+    *  - serve: the codec's serve over the generation's decoded scan,
+    *    which the broadcast probe join prunes to the probed cells.
     * Replay-safe within one process: a rebuild rewrites a directory
     * named by the batch id, an append overwrites only its own ingest
     * partition, and the prior corpus is read from the committed
@@ -917,42 +1002,35 @@ object VectorQueries {
     * the store whatever the failure point. Reads pass the written
     * schema (genSchema), so no read infers one.
     */
-  private[graft] abstract class KmGenStore(s: SparkSession, storeRoot: String)
+  private[graft] final class KmGenStore(s: SparkSession, d: String, codec: Codec)
       extends KmArtifact {
     type Gen = String
+
+    private val storeRoot = codec.refreshRoot(d)
 
     /** This instance's run directory. */
     val runRoot: String = s"$storeRoot/run_${System.nanoTime()}"
 
-    /** The batch's store rows (…, ingest = batchId, cell from `bscored`). */
-    protected def batchRows(q: Quantizer, bscored: DataFrame, batch: DataFrame,
-                            batchId: Long): DataFrame
+    /** Store rows as ingest = batchId: data columns, ingest, cell. */
+    private def stamped(rows: DataFrame, batchId: Long): DataFrame =
+      rows.select(rows.columns.toSeq.filter(_ != "cell").map(col) ++
+        Seq(lit(batchId).as("ingest"), col("cell")): _*)
 
-    /** A prior generation's rows, re-assigned under `q` into
-      * ingest = batchId.
-      */
-    protected def priorRows(prior: DataFrame, q: Quantizer,
-                            batchId: Long): DataFrame
-
-    /** The batch's top-3 served from a generation's scan. */
-    protected def serveScan(scan: DataFrame, q: Quantizer, bscored: DataFrame,
-                            batch: DataFrame): DataFrame
-
-    final def advance(prior: Option[String], rebuild: Boolean, q: Quantizer,
-                      bscored: DataFrame, batch: DataFrame,
-                      batchId: Long): (String, DataFrame) = {
-      val rows = batchRows(q, bscored, batch, batchId)
+    def advance(prior: Option[String], rebuild: Boolean, q: Quantizer,
+                bscored: DataFrame, batch: DataFrame,
+                batchId: Long): (String, DataFrame) = {
+      val rows = stamped(codec.rows(codec.lists(q.assignedFrom(bscored))), batchId)
       def read(dir: String) = s.read.schema(genSchema(rows)).parquet(dir)
       val dir = if (rebuild) s"$runRoot/gen_$batchId" else prior.get
       val out =
-        if (rebuild) prior.fold(rows)(g => priorRows(read(g), q, batchId)
-          .unionByName(rows))
+        if (rebuild) prior.fold(rows)(g =>
+          stamped(codec.rebucket(read(g), q), batchId).unionByName(rows))
         else rows
       val w = out.repartition(col("cell")).write.mode("overwrite")
       (if (rebuild) w else w.option("partitionOverwriteMode", "dynamic"))
         .partitionBy("ingest", "cell").parquet(dir)
       ivfStoreCommitLatest(runRoot, dir)
-      (dir, serveScan(read(dir), q, bscored, batch))
+      (dir, ivfServe(codec, codec.decode(read(dir)), q, bscored, batch))
     }
 
     /** At drain: compact the current generation, bound the run to ≤ 2
@@ -965,86 +1043,14 @@ object VectorQueries {
     }
   }
 
-  /** The raw-vector store (stream_ann_ivf_persisted_refresh): rows are
-    * (nn_id, embedding, ingest, cell), served by the exact re-rank
-    * tail.
-    */
-  private[graft] final class KmRawStore(s: SparkSession, d: String)
-      extends KmGenStore(s, refreshStoreRoot(d)) {
-    private def rows(assigned: DataFrame, batchId: Long): DataFrame =
-      assigned.select(col("vec_id").as("nn_id"), col("embedding"),
-        lit(batchId).as("ingest"), col("cell"))
-
-    protected def batchRows(q: Quantizer, bscored: DataFrame, batch: DataFrame,
-                            batchId: Long): DataFrame =
-      rows(q.assignedFrom(bscored), batchId)
-
-    protected def priorRows(prior: DataFrame, q: Quantizer,
-                            batchId: Long): DataFrame =
-      rows(q.assigned(prior.select(col("nn_id").as("vec_id"), col("embedding"))),
-        batchId)
-
-    protected def serveScan(scan: DataFrame, q: Quantizer, bscored: DataFrame,
-                            batch: DataFrame): DataFrame =
-      ivfServe(scan.select(col("nn_id"), col("embedding"), col("cell")),
-        q, bscored, batch)
-  }
-
-  /** The PQ code store (stream_ann_ivfpq_persisted_refresh): rows are
-    * (vec_id, cell, packed codes, ingest), the codes encoded under a
-    * codebook trained once per instance on the static corpus. Raw
-    * (non-residual) PQ under a frozen codebook makes codes
-    * generation-invariant, so a rebuild re-buckets the stored codes
-    * and never re-encodes them. Serving builds each query's integer
-    * LUT against the same codebook and runs the ADC tail.
-    */
-  private[graft] final class KmPqStore(s: SparkSession, d: String)
-      extends KmGenStore(s, pqRefreshStoreRoot(d)) {
-    private lazy val pqCb: DataFrame =
-      pqCodebook(pqSubs(s, d).localCheckpoint(), k = IvfPqK)
-
-    protected def batchRows(q: Quantizer, bscored: DataFrame, batch: DataFrame,
-                            batchId: Long): DataFrame =
-      packCodes(
-        pqAssign(pqSubsOf(batch), pqCb)
-          .select(col("vec_id"), col("sub_id"), col("code"))
-          .join(q.assignedFrom(bscored).select(col("vec_id"), col("cell")),
-            "vec_id"))
-        .withColumn("ingest", lit(batchId))
-
-    // cells re-assigned from the raw embeddings of the stored ids
-    // (vec_id-keyed; co-partitioned at scale)
-    protected def priorRows(prior: DataFrame, q: Quantizer,
-                            batchId: Long): DataFrame = {
-      val pc = prior.select(col("vec_id"), col("codes"))
-      pc.join(
-        q.assigned(Tables.embeddingsSpread(s, d)
-          .join(pc.select(col("vec_id")), "vec_id"))
-          .select(col("vec_id"), col("cell")), "vec_id")
-        .select(col("vec_id"), col("cell"), col("codes"),
-          lit(batchId).as("ingest"))
-    }
-
-    protected def serveScan(scan: DataFrame, q: Quantizer, bscored: DataFrame,
-                            batch: DataFrame): DataFrame = {
-      val codes = scan
-        .select(col("vec_id"), col("cell"), posexplode(col("codes")))
-        .select(col("vec_id"), col("cell"),
-          col("pos").as("sub_id"), col("col").cast("long").as("code"))
-      val lut = pqQueryLut(
-        pqSubsOf(batch.filter(col("vec_id") < NQueries)), pqCb)
-      adcServeTail(codes, q.probes(bscored, NProbe), lut)
-    }
-  }
-
   /** Threshold that trips on every batch: kmDriftFp2 ≥ 0 > -1. */
   private[graft] val KmRebuildAlways: Long = -1L
 
   /** Drift-gated IVF serving from a generation `artifact` under the
     * moving quantizer (stream_ann_ivf_online_topk with
     * thr = KmRebuildAlways, stream_ann_ivf_online_topk_drift over
-    * KmLists, and the two persisted-refresh gates over KmRawStore and
-    * KmPqStore, all with thr = KmDriftRebuild). One step:
+    * KmLists, and the two persisted-refresh gates over a KmGenStore of
+    * the raw or the PQ codec, all with thr = KmDriftRebuild). One step:
     *  - rebuild iff there is no generation yet or the trainer has
     *    drifted past `thr` since the serving generation was built
     *    (kmDriftFp2 — max per-cell squared movement, exact fixed
@@ -1134,7 +1140,7 @@ object VectorQueries {
           (prev.filter(!inMoved).unionAll(rea).localCheckpoint(), ncc, moved)
       }
       val bscored = q.scored(batch).localCheckpoint()
-      val cur = ivfServe(newLists, q, bscored, batch).localCheckpoint()
+      val cur = ivfServe(Codec.raw, newLists, q, bscored, batch).localCheckpoint()
       KmServed(q.assignedFrom(bscored), Some(cur), () => {
         lists = Some(newLists)
         cellCents = newCellCents
@@ -1581,7 +1587,7 @@ object VectorQueries {
     * 1.22×.
     *
     * End-to-end sensitivity on the COMPOSED persisted-refresh gate
-    * (KmIvfGenerations over KmRawStore stepped at
+    * (KmIvfGenerations over the raw codec's KmGenStore stepped at
     * `thr` over the four staged batches, sf0.01, recall@3 vs
     * arrivedBruteTopk, the exact brute over the arrived corpus): a
     * two-point
@@ -2238,25 +2244,11 @@ object VectorQueries {
               .cast("long")).otherwise(lit(0L))).as("sq")): _*)
   }
 
-  /** The two ADC queries' shared pieces over a (subs, trained-codebook)
-    * pair: the assigned code table, and the per-query LUT of integer
-    * subspace distances to every codeword (PqM×PqK rows per query —
-    * broadcastable at any corpus size). One definition so the
-    * exact-parity arithmetic can never diverge between the exhaustive
-    * and the IVF-filtered query.
-    */
-  private def adcCodesAndLut(subs: DataFrame, cb: DataFrame): (DataFrame, DataFrame) = {
-    val codes = pqAssign(subs, cb)
-      .select(col("vec_id"), col("sub_id"), col("code"))
-    (codes, pqQueryLut(subs.filter(col("vec_id") < NQueries), cb))
-  }
-
   /** The per-query ADC lookup table over a QUERY subvector frame —
     * (qid, sub_id, code, d2) integer distances to every codeword,
     * broadcastable at any corpus size (PqM×k rows per query). ONE
-    * definition for the batch faces (via adcCodesAndLut) and the
-    * PQ refresh gate's per-batch LUT, so the parity-critical
-    * arithmetic cannot fork.
+    * definition for the exhaustive face (adcTopk) and the PQ codec's
+    * serve, so the parity-critical arithmetic cannot fork.
     */
   private def pqQueryLut(qsubs: DataFrame, cb: DataFrame): DataFrame =
     qsubs.select(col("vec_id").as("qid"), col("sub_id"), col("sq"))
@@ -2270,7 +2262,9 @@ object VectorQueries {
     * property of `cb`; nothing here depends on PqK).
     */
   private[graft] def adcTopk(subs: DataFrame, cb: DataFrame): DataFrame = {
-    val (codes, lut) = adcCodesAndLut(subs, cb)
+    val codes = pqAssign(subs, cb)
+      .select(col("vec_id"), col("sub_id"), col("code"))
+    val lut = pqQueryLut(subs.filter(col("vec_id") < NQueries), cb)
     codes.join(broadcast(lut), Seq("sub_id", "code"))
       .filter(col("vec_id") =!= col("qid"))
       .groupBy(col("qid"), col("vec_id"))
@@ -2282,31 +2276,11 @@ object VectorQueries {
         col("rnk").cast("long").as("rnk"), col("adist"))
   }
 
-  /** IVFADC under quantizer `q` — ann_ivfpq_topk on the label cells,
-    * ann_ivfpq_kmeans_topk / _sampled_topk on Lloyd cells — with the
-    * geometry (codebook size k, probed cells nprobe) as measurement
-    * knobs: the registered queries pin (IvfPqK, NProbe); VectorSpec
-    * measures the recall surface across both knobs (the grid recorded
-    * in the IvfPqK doc). The ADC chain is quantizer-agnostic: `q`
-    * supplies each vector's cell and each query's probe list.
-    */
-  private[graft] def ivfpqTopk(s: SparkSession, d: String, q: Quantizer,
-                               k: Int = IvfPqK,
-                               nprobe: Int = NProbe,
-                               topn: Int = 3): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    val subs = pqSubs(s, d).localCheckpoint()
-    val (rawCodes, lut) = adcCodesAndLut(subs, pqCodebook(subs, k = k))
-    adcServeTail(
-      rawCodes.join(q.assigned(e).select(col("vec_id"), col("cell")), "vec_id"),
-      q.probes(q.scored(e), nprobe), lut, topn)
-  }
-
   /** Pack a (vec_id, cell, sub_id, code) code table into the persisted
     * store's row form — one array<tinyint> of the PqM codes per
     * vector, ordered by sub_id (posexplode re-derives the sub_id at
-    * read). ONE definition for the batch build and the streaming
-    * ingest, so the artifact layout cannot drift between them.
+    * read). The PQ codec's store rows, so every build, ingest and
+    * generation writes one layout.
     * The byte cast is range-guarded: a codebook with
     * k > 128 would silently wrap codes negative and the read-back
     * cast('long') would miss the LUT join — rankings would go wrong
@@ -2327,72 +2301,20 @@ object VectorQueries {
             .otherwise(c.cast("byte"))
         }).as("codes"))
 
-  /** ADC serving FROM a persisted cell-partitioned packed-code store:
-    * probe lists come from the quantizer `q` and the query LUT from the
-    * codebook `cb` the store was encoded under (both broadcast-sized at
-    * any corpus scale, and built once by the caller), the corpus side
-    * is the artifact's posexploded scan — the broadcast probe join
-    * prunes it to the probed cells' partitions. ONE definition shared
-    * by the batch-built faces (ann_ivfpq_persisted_topk, _compact_topk)
-    * and the streaming-ingested face (stream_ann_ivfpq_persisted_topk);
-    * reads both layouts (the streaming store carries an extra ingest
-    * partition column the select ignores).
-    */
-  private[graft] def pqServeFromStore(s: SparkSession, d: String, q: Quantizer,
-                                      cb: DataFrame, store: String): DataFrame = {
-    val e = Tables.embeddingsSpread(s, d)
-    val lut = pqQueryLut(pqSubs(s, d).filter(col("vec_id") < NQueries), cb)
-    val codes = s.read.parquet(store)
-      .select(col("vec_id"), col("cell").cast("int").as("cell"),
-        posexplode(col("codes")))
-      .select(col("vec_id"), col("cell"),
-        col("pos").as("sub_id"), col("col").cast("long").as("code"))
-    adcServeTail(codes, q.probes(q.scored(e), NProbe), lut)
-  }
-
-  /** One micro-batch of the streaming code-store ingest: the arriving
-    * vectors' PQ codes (pqSubsOf — the identical quantization
-    * arithmetic as the batch face) under the OFFLINE-trained codebook
-    * (broadcast, dictionary-sized — the train-offline/ingest-online
-    * deployment, the tokenizer gates' shape), cell-assigned under `q`
-    * by the same per-row rank as the raw-vector ingest
-    * (ivfArrivingAssign), packed, and written as this batch's
-    * ingest=batchId partitions with DYNAMIC partition overwrite — a
-    * redelivered batch overwrites its OWN partitions instead of
-    * double-appending (the refresh gate's idempotent-by-layout
-    * device; aggregations force foreachBatch here, so the sink
-    * commit log the raw-vector face relies on is not available).
-    */
-  private[graft] def pqStoreIngestBatch(q: Quantizer,
-                                        store: String, cb: DataFrame,
-                                        batch: DataFrame,
-                                        batchId: Long): Unit = {
-    val codes = pqAssign(pqSubsOf(batch), cb)
-      .select(col("vec_id"), col("sub_id"), col("code"))
-    val cells = ivfArrivingAssign(batch, q)
-      .select(col("nn_id").as("vec_id"), col("cell"))
-    packCodes(codes.join(cells, "vec_id"))
-      .withColumn("ingest", lit(batchId))
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "ingest").parquet(store)
-  }
-
   /** The IVFADC serving tail over a cell-tagged code table: probed-cell
-    * prune BEFORE any LUT work, broadcast LUT join, keyed integer
-    * distance sum, ranked top-`topn` with the (adist, vec_id)
-    * tie-break. ONE definition for the in-plan face (ivfpqTopk) and
-    * the persisted-code-store face (ann_ivfpq_persisted_topk) — the
-    * two registered rows share ivfpqTopkOracleSql verbatim, so the
-    * tail's arithmetic and casts must stay byte-identical between
-    * them.
+    * prune BEFORE any LUT work, broadcast LUT join on every LUT column
+    * but d2 — (qid, sub_id, code), or (qid, cell, sub_id, code) for a
+    * residual LUT — keyed integer distance sum, ranked top-`topn` with
+    * the (adist, vec_id) tie-break. ONE definition for the PQ codec's
+    * in-plan, persisted and refresh faces and the residual face; the
+    * registered rows share ivfpqLabelTopkSql verbatim, so the tail's
+    * arithmetic and casts must stay byte-identical between them.
     */
   private def adcServeTail(codes: DataFrame, probed: DataFrame,
                            lut: DataFrame, topn: Int = 3): DataFrame =
     codes.join(broadcast(probed), "cell") // cell filter BEFORE the LUT join
       .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(lut), Seq("qid", "sub_id", "code"))
+      .join(broadcast(lut), lut.columns.toSeq.filter(_ != "d2"))
       .groupBy(col("qid"), col("vec_id"))
       .agg(sum(col("d2")).as("adist"))
       .withColumn("rnk", row_number().over(
@@ -2424,8 +2346,8 @@ object VectorQueries {
                                      nprobe: Int = NProbe,
                                      shortlist: Int = RefineR): DataFrame = {
     val e = Tables.embeddingsSpread(s, d)
-    val short = ivfpqTopk(s, d, Quantizer.labelMeans(s, d), k, nprobe,
-      topn = shortlist)
+    val short = ivfTopk(s, d, Quantizer.labelMeans(s, d), Codec.pq(s, d, k),
+      nprobe, topn = shortlist)
       .select(col("qid"), col("nn_id"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("nn_id"))
@@ -2503,16 +2425,7 @@ object VectorQueries {
       .join(broadcast(cb), "sub_id")
       .select(col("qid"), col("cell"), col("sub_id"),
         col("code_id").as("code"), pqL2(col("sq"), col("cq")).as("d2"))
-    codes.join(broadcast(probed), "cell") // cell filter BEFORE the LUT join
-      .filter(col("vec_id") =!= col("qid"))
-      .join(broadcast(lut), Seq("qid", "cell", "sub_id", "code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("d2")).as("adist"))
-      .withColumn("rnk", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("adist"), col("vec_id"))))
-      .filter(col("rnk") <= 3)
-      .select(col("qid"), col("vec_id").as("nn_id"),
-        col("rnk").cast("long").as("rnk"), col("adist"))
+    adcServeTail(codes, probed, lut)
   }
 
   /** Multi-probe ANN candidate pairs (qid, nn_id), distinct.
@@ -2755,9 +2668,6 @@ object VectorQueries {
   private[graft] def storeNewChild(root: String): String =
     s"$root/idx_${System.nanoTime()}"
 
-  private[graft] def ivfStoreNewChild(d: String): String =
-    storeNewChild(ivfStoreRoot(d))
-
   /** Build a store generation in one write: a new child of `root`
     * holding `rows` clustered by cell (repartition(cell), so each
     * cell's inverted list is exactly one file) and written
@@ -2843,37 +2753,6 @@ object VectorQueries {
       s"LATEST marker names a missing child ${child.getAbsolutePath}")
     child.getAbsolutePath
   }
-
-  private[graft] def ivfStoreLatest(d: String): String =
-    storeLatest(ivfStoreRoot(d))
-
-  /** Root of the persisted IVFADC CODE stores — a sibling namespace of
-    * the raw-vector store (the two faces persist different artifacts
-    * for the same corpus and must not clobber each other's LATEST).
-    */
-  private[graft] def pqStoreRoot(d: String): String =
-    s"${ivfStoreRoot(d)}_pq"
-
-  private[graft] def pqStoreLatest(d: String): String =
-    storeLatest(pqStoreRoot(d))
-
-  /** Root of the drift-refreshed persisted stores — one run_* child
-    * per gate instance (its generation directories live inside), the
-    * root's LATEST naming the current run. Two-level resolution:
-    * storeLatest(refreshStoreRoot(d)) → the run,
-    * storeLatest(run) → its current generation.
-    */
-  private[graft] def refreshStoreRoot(d: String): String =
-    s"${ivfStoreRoot(d)}_refresh"
-
-  /** Root of the drift-refreshed persisted PQ CODE stores — the
-    * code-table twin of refreshStoreRoot (same two-level resolution:
-    * LATEST → run, LATEST → the run's current code generation), a
-    * sibling namespace so the raw-vector and code-table refresh
-    * stores for one corpus never clobber each other's markers.
-    */
-  private[graft] def pqRefreshStoreRoot(d: String): String =
-    s"${ivfStoreRoot(d)}_pqrefresh"
 
   /** Store compaction — the HyDFS `merge` analog for the persisted
     * index stores (the reference's merge rewrites a file's appended
@@ -3096,41 +2975,58 @@ object VectorQueries {
     dir
   }
 
-  /** Arrival-side index ingestion for the streaming persisted-index
-    * gates: each arriving vector takes its cell under `q` as a pure
-    * per-row expression (semdedupArriving — slice 1 of the quantizer's
-    * rank, its batch assignment), emitting the (nn_id, cell, embedding)
-    * inverted-list row the store persists. No state, no shuffle — the
-    * write's partitionBy(cell) is what places the row.
+  /** Arrival-side cell assignment for the streaming store ingest: each
+    * arriving vector takes its cell under `q` as a pure per-row
+    * expression (semdedupArriving — slice 1 of the quantizer's rank,
+    * its batch assignment), as the (vec_id, cell, embedding)
+    * assignment a codec turns into inverted-list entries. No state, no
+    * shuffle — the write's partitionBy(cell) is what places the row.
     */
-  private[graft] def ivfArrivingAssign(df: DataFrame, q: Quantizer): DataFrame =
+  private def ivfArrivingAssign(df: DataFrame, q: Quantizer): DataFrame =
     semdedupArriving(df.select(col("vec_id"), col("embedding").as("qe")), q)
-      .select(col("vec_id").as("nn_id"), col("cell"),
-        col("qe").as("embedding"))
+      .select(col("vec_id"), col("cell"), col("qe").as("embedding"))
 
-  /** IVF serving FROM a persisted cell-partitioned store: the probe
-    * lists come from the quantizer `q` the store was built under (built
-    * once by the caller) and the query rows from the live table, the
-    * corpus side is the artifact's scan — the broadcast probe join
-    * prunes it to the probed cells' partitions. ONE definition shared
-    * by the batch-built faces (ann_ivf_persisted_topk, _retain_topk)
-    * and the streaming-ingested face (stream_ann_ivf_persisted_topk).
+  /** Build `codec`'s store of the whole corpus under `q` in one write
+    * (storeBuild under the codec's root); returns the child.
     */
-  private[graft] def ivfServeFromStore(s: SparkSession, d: String, q: Quantizer,
-                                       store: String): DataFrame = {
+  private def corpusStoreBuild(s: SparkSession, d: String, q: Quantizer,
+                               codec: Codec): String =
+    storeBuild(codec.root(d),
+      codec.rows(codec.lists(q.assigned(Tables.embeddingsSpread(s, d)))))
+
+  /** One micro-batch of the streaming store ingest, for either codec:
+    * the arriving vectors' cells under `q` (ivfArrivingAssign), the
+    * codec's store rows, written as this batch's ingest=batchId
+    * partitions inside their cell directories with DYNAMIC partition
+    * overwrite — a redelivered batch overwrites its OWN partitions
+    * instead of double-appending, so ingest is exactly-once by layout,
+    * keyed on the batch id.
+    */
+  private[graft] def storeIngest(codec: Codec, q: Quantizer, store: String,
+                                 batch: DataFrame, batchId: Long): Unit =
+    codec.rows(codec.lists(ivfArrivingAssign(batch, q)))
+      .withColumn("ingest", lit(batchId))
+      .repartition(col("cell"))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("cell", "ingest").parquet(store)
+
+  /** IVF serving FROM a persisted cell-partitioned store of `codec`'s
+    * rows: the probe lists come from the quantizer `q` the store was
+    * built under (built once by the caller) and the query rows from the
+    * live table, the corpus side is the artifact's decoded scan — the
+    * broadcast probe join prunes it to the probed cells' partitions.
+    * ONE definition for the built faces (ann_ivf_persisted_topk,
+    * _retain_topk, ann_ivfpq_persisted_topk, _compact_topk) and the
+    * streaming-ingested ones; reads both layouts (an ingested store's
+    * extra `ingest` partition column is dropped by the decode).
+    */
+  private[graft] def storeServe(s: SparkSession, d: String, q: Quantizer,
+                                codec: Codec, store: String): DataFrame = {
     val e = Tables.embeddingsSpread(s, d)
-    val idx = s.read.parquet(store)
-      .select(col("nn_id"), col("embedding"),
-        col("cell").cast("int").as("cell"))
-    ivfServe(idx, q, q.scored(e), e)
+    ivfServe(codec, codec.decode(s.read.parquet(store)), q, q.scored(e), e)
   }
 
-  /** Oracle twin of adcCodesAndLut, closing over the PQ CTEs: the
-    * assigned code table, and the query LUT as pqdists RESTRICTED to
-    * the query rows — the identical q×cb integer distance the
-    * assignment ranking used, so the parity-critical arithmetic lives
-    * in exactly one CTE (pqCtesSql's pqdists) for both ADC queries.
-    */
   /** The assignment + probe-list CTEs over a ranked-cells CTE — ONE
     * definition parametrized by the quantizer's ranked table and cell
     * column (ranked_cells/clabel for the label family, kmranked/kcell
@@ -3172,7 +3068,7 @@ object VectorQueries {
     * top-3; everything else is pruned by the probed-cell join before
     * any distance work.
     */
-  private lazy val ivfpqTopkOracleSql: String = s"""
+  private lazy val ivfpqLabelTopkSql: String = s"""
       WITH ${pqCtesSql(k = IvfPqK)},
       $ivfCellCtesSql,
       ${ivfAssignProbeSql("ranked_cells", "clabel")},
@@ -3290,7 +3186,7 @@ object VectorQueries {
     // Assignment is a bounded-state min_by and probe selection a rank
     // window after the query filter (Quantizer), both under the
     // (dot DESC, cell ASC) order the oracle's ranked_cells states.
-    "ann_ivf_topk" -> ((s, d) => ivfTopk(s, d, Quantizer.labelMeans(s, d))),
+    "ann_ivf_topk" -> ((s, d) => ivfTopk(s, d, Quantizer.labelMeans(s, d), Codec.raw)),
 
     // THE PERSISTED INDEX: every serving gate
     // above rebuilds its inverted lists in-plan; at 100 TB the cell
@@ -3311,8 +3207,7 @@ object VectorQueries {
     // quantizer serves both the build and the probe lists.
     "ann_ivf_persisted_topk" -> ((s, d) => {
       val q = Quantizer.labelMeans(s, d)
-      ivfServeFromStore(s, d, q,
-        storeBuild(ivfStoreRoot(d), q.lists(Tables.embeddingsSpread(s, d))))
+      storeServe(s, d, q, Codec.raw, corpusStoreBuild(s, d, q, Codec.raw))
     }),
 
     // RETENTION AS A SERVING CONTRACT (a CORRECTNESS row, not just a
@@ -3329,10 +3224,10 @@ object VectorQueries {
     // table: a searcher whose own vector aged out still searches.
     "ann_ivf_persisted_retain_topk" -> ((s, d) => {
       val q = Quantizer.labelMeans(s, d)
-      storeBuild(ivfStoreRoot(d), q.lists(Tables.embeddingsSpread(s, d)))
-      val kept = ivfStoreRetain(s, ivfStoreRoot(d),
+      corpusStoreBuild(s, d, q, Codec.raw)
+      val kept = ivfStoreRetain(s, Codec.raw.root(d),
         col("nn_id") % RetainMod =!= RetainDrop)
-      ivfServeFromStore(s, d, q, kept)
+      storeServe(s, d, q, Codec.raw, kept)
     }),
 
     // Unsupervised coarse-quantizer training — Lloyd k-means over the
@@ -3352,7 +3247,7 @@ object VectorQueries {
     // tie to the smaller cell id); recall@3 vs brute measured at the
     // KmRounds doc (0.633 vs the label cells' 0.533 at NProbe=3 —
     // trained cells beat the supervised ones they replace here).
-    "ann_ivf_kmeans_topk" -> ((s, d) => ivfTopk(s, d, Quantizer.lloyd(s, d))),
+    "ann_ivf_kmeans_topk" -> ((s, d) => ivfTopk(s, d, Quantizer.lloyd(s, d), Codec.raw)),
 
     // IVF top-k with the quantizer trained on the DETERMINISTIC
     // SIZE-TARGETED SUBSAMPLE — the FAISS max_points_per_centroid
@@ -3384,7 +3279,7 @@ object VectorQueries {
     // both training regimes (ivfTopk — only the trainer's input set
     // differs).
     "ann_ivf_kmeans_sampled_topk" -> ((s, d) =>
-      ivfTopk(s, d, Quantizer.lloyd(s, d, sampled = true))),
+      ivfTopk(s, d, Quantizer.lloyd(s, d, sampled = true), Codec.raw)),
 
     // Embedding-cosine near-dup: exact-band candidate pairs (da < db),
     // verified at cosine >= 0.3 (threshold note in class doc). ONE
@@ -3627,7 +3522,8 @@ object VectorQueries {
     // + ranked top-3 proceed exactly as in ann_pq_adc_topk. Recall vs
     // the exact baseline is the product of the two stages' losses
     // (cell pruning × PQ distortion) — floor-pinned in VectorSpec.
-    "ann_ivfpq_topk" -> ((s, d) => ivfpqTopk(s, d, Quantizer.labelMeans(s, d))),
+    "ann_ivfpq_topk" -> ((s, d) =>
+      ivfTopk(s, d, Quantizer.labelMeans(s, d), Codec.pq(s, d))),
 
     // THE PERSISTED IVFADC CODE STORE: the
     // raw-vector store above persists full embedding arrays; at 100 TB
@@ -3650,18 +3546,13 @@ object VectorQueries {
     // hash-mismatches rather than just drifting recall.
     "ann_ivfpq_persisted_topk" -> ((s, d) => {
       val q = Quantizer.labelMeans(s, d)
-      val subs = pqSubs(s, d).localCheckpoint()
-      val cb = pqCodebook(subs, k = IvfPqK)
-      val codes = pqAssign(subs, cb)
-        .select(col("vec_id"), col("sub_id"), col("code"))
-        .join(q.assigned(Tables.embeddingsSpread(s, d))
-          .select(col("vec_id"), col("cell")), "vec_id")
-      pqServeFromStore(s, d, q, cb, storeBuild(pqStoreRoot(d), packCodes(codes)))
+      val codec = Codec.pq(s, d)
+      storeServe(s, d, q, codec, corpusStoreBuild(s, d, q, codec))
     }),
 
     // PER-CELL COMPACTION AS A SERVING CONTRACT (a CORRECTNESS row):
     // the code store accumulates TWO batch
-    // ingests (pqStoreIngestBatch — the streaming face's exact write,
+    // ingests (storeIngest — the streaming face's exact write,
     // two files per cell), ivfStoreCompactCells collapses every
     // crossed-threshold cell to one clustered file, and the full
     // query set serves FROM THE COMPACTED ARTIFACT. Content
@@ -3673,19 +3564,18 @@ object VectorQueries {
     "ann_ivfpq_persisted_compact_topk" -> ((s, d) => {
       val e = Tables.embeddingsSpread(s, d)
       val q = Quantizer.labelMeans(s, d)
-      val subs = pqSubs(s, d).localCheckpoint()
-      val cb = pqCodebook(subs, k = IvfPqK)
-      val store = storeNewChild(pqStoreRoot(d))
+      val codec = Codec.pq(s, d)
+      val store = storeNewChild(codec.root(d))
       for (i <- 0 to 1)
-        pqStoreIngestBatch(q, store, cb, e.filter(col("vec_id") % 2 === i), i.toLong)
-      ivfStoreCommitLatest(pqStoreRoot(d), store)
-      pqServeFromStore(s, d, q, cb, ivfStoreCompactCells(s, pqStoreRoot(d)))
+        storeIngest(codec, q, store, e.filter(col("vec_id") % 2 === i), i.toLong)
+      ivfStoreCommitLatest(codec.root(d), store)
+      storeServe(s, d, q, codec, ivfStoreCompactCells(s, codec.root(d)))
     }),
 
     // IVFADC on the TRAINED coarse quantizer — the fully unsupervised
     // published stack (FAISS's own shape: k-means coarse quantizer +
     // PQ codes + ADC scan), nothing derived from the label column
-    // anywhere in the chain. Same ADC machinery (ivfpqTopk is
+    // anywhere in the chain. Same ADC machinery (the PQ codec is
     // quantizer-agnostic); cells and probe lists come from the Lloyd
     // quantizer under min-L2. Measured at
     // sf0.01 (VectorSpec): ADC recall@3 vs brute 0.233 on trained
@@ -3696,7 +3586,8 @@ object VectorQueries {
     // costs more than centering buys at this codebook geometry), so
     // raw stays the registered default ON MEASUREMENT, spec-pinned to
     // re-open loudly if a corpus change flips it.
-    "ann_ivfpq_kmeans_topk" -> ((s, d) => ivfpqTopk(s, d, Quantizer.lloyd(s, d))),
+    "ann_ivfpq_kmeans_topk" -> ((s, d) =>
+      ivfTopk(s, d, Quantizer.lloyd(s, d), Codec.pq(s, d))),
 
     // The production-trainer IVFADC: the fully unsupervised stack
     // with the coarse quantizer trained on the SIZE-TARGETED sample
@@ -3711,7 +3602,7 @@ object VectorQueries {
     // bounded training set costs nothing measurable at this geometry;
     // band-pinned.
     "ann_ivfpq_kmeans_sampled_topk" -> ((s, d) =>
-      ivfpqTopk(s, d, Quantizer.lloyd(s, d, sampled = true))),
+      ivfTopk(s, d, Quantizer.lloyd(s, d, sampled = true), Codec.pq(s, d))),
 
     // IVFADC+R — the published third stage of the billion-scale stack
     // (Jégou et al. TPAMI'11 §V): ADC's top-RefineR shortlist per
@@ -3899,16 +3790,16 @@ object VectorQueries {
     // vectors in a query's probed cells flow through the same LUT sum
     // and ranked top-3 as ann_pq_adc_topk; everything else is pruned
     // by the probed-cell join before any distance work.
-    "ann_ivfpq_topk" -> ivfpqTopkOracleSql,
+    "ann_ivfpq_topk" -> ivfpqLabelTopkSql,
     // The persisted-code-store face serves the identical result from
     // the cell-partitioned packed-code artifact, so the two rows pin
     // each other: an artifact that drifts from the in-plan codes
     // hash-mismatches, not just slows down (the ann_ivf_persisted_topk
     // device, applied to the ADC family).
-    "ann_ivfpq_persisted_topk" -> ivfpqTopkOracleSql,
+    "ann_ivfpq_persisted_topk" -> ivfpqLabelTopkSql,
     // per-cell compaction is content-preserving, so the compacted
     // store serves ann_ivfpq_topk's results verbatim
-    "ann_ivfpq_persisted_compact_topk" -> ivfpqTopkOracleSql,
+    "ann_ivfpq_persisted_compact_topk" -> ivfpqLabelTopkSql,
 
     // The fully unsupervised stack's oracle: the k-means training CTEs
     // replace the label-cell CTEs, assignment/probes read kmranked,

@@ -36,6 +36,19 @@ object TestSpark {
 
 abstract class GraftSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private val tmpDirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A fresh temp dir, deleted with everything under it after the suite
+    * (a symbolic link inside is removed, never followed).
+    */
+  def tmpDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tmpDirs.synchronized(tmpDirs += dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try tmpDirs.synchronized(tmpDirs.foreach(graft.queries.VectorQueries.deleteRecursively))
+    finally super.afterAll()
 }

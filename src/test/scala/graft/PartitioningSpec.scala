@@ -103,7 +103,7 @@ class PartitioningSpec extends GraftSpec {
     assert(servedRows > 0)
     info(s"ann_ivf_persisted_topk build + serve: $jobs Spark jobs")
     assert(jobs <= 20, s"ann_ivf_persisted_topk ran $jobs Spark jobs, budget 20")
-    val store = vq.ivfStoreLatest(sf)
+    val store = vq.storeLatest(vq.Codec.raw.root(sf))
     val cellDirs = new java.io.File(store).listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs >= 10, s"expected >= 10 cell partitions, got $cellDirs")
@@ -148,7 +148,7 @@ class PartitioningSpec extends GraftSpec {
     val vq = graft.queries.VectorQueries
     val registered = vq.queries("ann_ivfpq_persisted_topk")(spark, sf)
     assert(registered.count() > 0)
-    val store = vq.pqStoreLatest(sf)
+    val store = vq.storeLatest(vq.Codec.pq(spark, sf).root(sf))
     val cellDirs = new java.io.File(store).listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs >= 10, s"expected >= 10 cell partitions, got $cellDirs")
@@ -194,7 +194,7 @@ class PartitioningSpec extends GraftSpec {
     val res = graft.queries.StreamingGateQueries
       .queries("stream_ann_ivfpq_persisted_topk")(spark, sf)
     assert(res.count() > 0)
-    val store = vq.pqStoreLatest(sf)
+    val store = vq.storeLatest(vq.Codec.pq(spark, sf).root(sf))
     val cellDirs = new java.io.File(store).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs.length >= 10,
@@ -228,7 +228,7 @@ class PartitioningSpec extends GraftSpec {
     // compaction collapses the ingest accumulation, preserves content
     // pruneAgeMs = 0: this single-JVM spec owns the root, so immediate
     // reclaim is safe (the default age gate protects sibling JVMs)
-    val compacted = vq.ivfStoreCompact(spark, vq.pqStoreRoot(sf), pruneAgeMs = 0L)
+    val compacted = vq.ivfStoreCompact(spark, vq.Codec.pq(spark, sf).root(sf), pruneAgeMs = 0L)
     val cmpMax = new java.io.File(compacted).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
       .map(parquets).max
@@ -339,7 +339,7 @@ class PartitioningSpec extends GraftSpec {
     val res = graft.queries.StreamingGateQueries
       .queries("stream_ann_ivf_persisted_refresh")(spark, sf)
     assert(res.count() > 0)
-    assertRefreshStoreFinalized(sf, vq.refreshStoreRoot(sf), "nn_id")
+    assertRefreshStoreFinalized(sf, vq.Codec.raw.refreshRoot(sf), "nn_id")
   }
 
   test("stream_ann_ivfpq_persisted_refresh: gate-finalized CODE store — packed rows, bounded generations, pruned reads") {
@@ -352,13 +352,13 @@ class PartitioningSpec extends GraftSpec {
     val res = graft.queries.StreamingGateQueries
       .queries("stream_ann_ivfpq_persisted_refresh")(spark, sf)
     assert(res.count() > 0)
-    val cur = vq.storeLatest(vq.storeLatest(vq.pqRefreshStoreRoot(sf)))
+    val cur = vq.storeLatest(vq.storeLatest(vq.Codec.pq(spark, sf).refreshRoot(sf)))
     val codesType = spark.read.parquet(cur).schema("codes").dataType
     assert(codesType ===
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.ByteType, containsNull = true),
       s"persisted code column must be array<tinyint>, got $codesType")
-    assertRefreshStoreFinalized(sf, vq.pqRefreshStoreRoot(sf), "vec_id")
+    assertRefreshStoreFinalized(sf, vq.Codec.pq(spark, sf).refreshRoot(sf), "vec_id")
   }
 
   test("per-cell compaction: hot cells collapse to one file, cold cells' files carry over byte-identical") {
@@ -468,7 +468,7 @@ class PartitioningSpec extends GraftSpec {
     def batch(r: Int) = graft.Tables.embeddings(spark, sf)
       .filter(col("vec_id") % nb === r)
     val st = new vq.KmIvfGenerations(spark, sf, Long.MaxValue,
-      new vq.KmRawStore(spark, sf))
+      new vq.KmGenStore(spark, sf, vq.Codec.raw))
     for (r <- 0 until nb) st.step(batch(r), r.toLong)
     assert(st.rebuildLog === Seq(0L),
       "infinite threshold must leave only the initial build")
@@ -491,23 +491,51 @@ class PartitioningSpec extends GraftSpec {
       "finalize must preserve every arrived vector")
   }
 
+  test("shared store ingest: a replayed batch id leaves exactly a single ingest's rows, for either codec") {
+    // The streaming ingest's exactly-once contract is its layout: a
+    // batch lands as its own ingest=<batchId> partitions by dynamic
+    // overwrite, so a redelivered batch id rewrites them instead of
+    // appending a second copy. Pinned per codec on the multiset of
+    // store rows (a duplicated row would survive a set comparison).
+    val sf = "/root/testdata/sf0.001"
+    val vq = graft.queries.VectorQueries
+    val q = vq.Quantizer.labelMeans(spark, sf)
+    val batch = graft.Tables.embeddings(spark, sf).filter(col("vec_id") % 4 === 1)
+    val n = batch.count()
+    def storeRows(codec: vq.Codec, ingests: Int): Seq[String] = {
+      val store = tmpDir("ingest-replay")
+      for (_ <- 1 to ingests) vq.storeIngest(codec, q, store, batch, 7L)
+      val df = spark.read.parquet(store)
+      df.select(df.columns.map(c => col(c).cast("string")): _*)
+        .collect().map(_.mkString("|")).sorted.toSeq
+    }
+    for ((name, codec) <- Seq("raw" -> vq.Codec.raw, "pq" -> vq.Codec.pq(spark, sf))) {
+      val once = storeRows(codec, 1)
+      assert(once.size.toLong === n, s"$name: one ingest must hold the batch's $n rows")
+      val replayed = storeRows(codec, 2)
+      val sameRows = replayed == once
+      assert(sameRows, s"$name: a replayed batch id must leave the rows of a single " +
+        s"ingest (${replayed.size} rows after the replay, ${once.size} after one ingest)")
+    }
+  }
+
   test("stream_ann_ivf_persisted_topk: micro-batches APPEND files per cell, pruning still holds") {
-    // The streaming-ingest claim made structural: the parquet sink's
-    // partitionBy(cell) lands each micro-batch as NEW files inside the
-    // cell directories (inverted lists grow by append — existing lists
-    // are never rewritten), and the store stays a pruned-read target.
+    // The streaming-ingest claim made structural: the shared ingest
+    // lands each micro-batch as an ingest=<id> partition of NEW files
+    // inside the cell directories (inverted lists grow by append —
+    // existing lists are never rewritten), and the store stays a
+    // pruned-read target.
     val sf = "/root/testdata/sf0.001"
     val vq = graft.queries.VectorQueries
     val res = graft.queries.StreamingGateQueries
       .queries("stream_ann_ivf_persisted_topk")(spark, sf)
     assert(res.count() > 0)
-    val store = vq.ivfStoreLatest(sf)
+    val store = vq.storeLatest(vq.Codec.raw.root(sf))
     val cellDirs = new java.io.File(store).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs.length >= 10,
       s"expected >= 10 cell partitions, got ${cellDirs.length}")
-    val maxFiles = cellDirs
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).max
+    val maxFiles = parquetsByCell(store).values.max
     assert(maxFiles > 1,
       s"expected per-micro-batch file APPEND inside cell dirs, " +
         s"max files per cell = $maxFiles")
@@ -527,7 +555,7 @@ class PartitioningSpec extends GraftSpec {
     val preRows = spark.read.parquet(store)
       .select(col("nn_id"), col("cell").cast("int").as("cell"))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val compacted = vq.ivfStoreCompact(spark, vq.ivfStoreRoot(sf), pruneAgeMs = 0L)
+    val compacted = vq.ivfStoreCompact(spark, vq.Codec.raw.root(sf), pruneAgeMs = 0L)
     val cmpCells = new java.io.File(compacted).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cmpCells.length === cellDirs.length)

@@ -524,7 +524,7 @@ class StreamingSpec extends GraftSpec {
       when(col("vec_id") >= 0, raise_error(lit("injected mid-step failure")))
         .otherwise(lit(null)).cast(embType).as("embedding"))
     val refresh = new vq.KmIvfGenerations(spark, d, vq.KmDriftRebuild,
-      new vq.KmRawStore(spark, d))
+      new vq.KmGenStore(spark, d, vq.Codec.raw))
     // what each protocol publishes besides the centroids: the refresh
     // step's LATEST generation, rebuild log and emission
     val protocols: Seq[(vq.KmMiniBatch, () => Any)] = Seq(
@@ -604,7 +604,7 @@ class StreamingSpec extends GraftSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val servedRows = rows(graft.queries.StreamingGateQueries
       .queries("stream_ann_ivf_online_topk")(spark, d))
-    val frozenRows = rows(vq.ivfTopk(spark, d, vq.Quantizer.lloyd(spark, d)))
+    val frozenRows = rows(vq.ivfTopk(spark, d, vq.Quantizer.lloyd(spark, d), vq.Codec.raw))
     val (served, frozen) = (servedRows.toSet, frozenRows.toSet)
     // exactly-once is pinned on ROW COUNTS, not the qid set (a query
     // double-served under two generations, or a replayed batch

@@ -498,7 +498,7 @@ class VectorSpec extends GraftSpec {
     def batch(r: Int) = graft.Tables.embeddings(spark, d)
       .filter(col("vec_id") % nb === r)
     val st = new vq.KmIvfGenerations(spark, d, vq.KmDriftRebuild,
-      new vq.KmRawStore(spark, d))
+      new vq.KmGenStore(spark, d, vq.Codec.raw))
     // Each step's control work (MacQueen fold, drift decision) is
     // driver arithmetic over driver-held state; only data work runs as
     // Spark jobs. The budget is the heaviest step's count (measured
@@ -564,7 +564,7 @@ class VectorSpec extends GraftSpec {
     def batch(r: Int) = graft.Tables.embeddings(spark, d)
       .filter(col("vec_id") % nb === r)
     val st = new vq.KmIvfGenerations(spark, d, vq.KmDriftRebuild,
-      new vq.KmPqStore(spark, d))
+      new vq.KmGenStore(spark, d, vq.Codec.pq(spark, d)))
     // The same per-step job budget as the raw twin, at the heaviest
     // step's count (measured 27/24/20/24; the first step also trains
     // the frozen codebook).
@@ -717,7 +717,8 @@ class VectorSpec extends GraftSpec {
     // corpus).
     def recallAt(k: Int): Int =
       graft.queries.VectorQueries.ivfTopk(spark, d,
-          graft.queries.VectorQueries.Quantizer.lloyd(spark, d, cells = k))
+          graft.queries.VectorQueries.Quantizer.lloyd(spark, d, cells = k),
+          graft.queries.VectorQueries.Codec.raw)
         .select(col("qid"), col("nn_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
         .intersect(brutePairs).size
@@ -790,8 +791,9 @@ class VectorSpec extends GraftSpec {
     val d = "/root/testdata/sf0.01"
     val brute = annPairs("ann_brute_topk", d)
     def recallAtNp(np: Int): Double = {
-      val pairs = graft.queries.VectorQueries.ivfpqTopk(spark, d,
-          graft.queries.VectorQueries.Quantizer.labelMeans(spark, d), nprobe = np)
+      val pairs = graft.queries.VectorQueries.ivfTopk(spark, d,
+          graft.queries.VectorQueries.Quantizer.labelMeans(spark, d),
+          graft.queries.VectorQueries.Codec.pq(spark, d), nprobe = np)
         .select(col("qid"), col("nn_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       pairs.intersect(brute).size.toDouble / brute.size
@@ -822,7 +824,8 @@ class VectorSpec extends GraftSpec {
     val adc = annPairs("ann_ivfpq_topk", d)
     val refined = annPairs("ann_ivfpq_refine", d)
     val short = graft.queries.VectorQueries
-      .ivfpqTopk(spark, d, graft.queries.VectorQueries.Quantizer.labelMeans(spark, d),
+      .ivfTopk(spark, d, graft.queries.VectorQueries.Quantizer.labelMeans(spark, d),
+        graft.queries.VectorQueries.Codec.pq(spark, d),
         topn = graft.queries.VectorQueries.RefineR)
       .select(col("qid"), col("nn_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
