@@ -323,10 +323,10 @@ object ClusterCheck {
           String.join("\n", lines: _*).getBytes("UTF-8"))
       }
       // Same at-most-n pre-assertion as the batch gate, against the
-      // STREAMING key formula (content-hash keys partition differently
-      // than the batch source's line-identity keys).
+      // STREAMING op1 partitioning: file-scan splits, no key exchange
+      // (the batch gate's op1 partitions by key hash).
       val armable = RainStorm.streamingArmedPartitionsNonEmpty(
-        spark, src.toString, numTasks = 4, n = 2)
+        spark, src.toString, n = 2)
       require(armable == 2,
         s"streaming op1-stage partitions 0..1 must be non-empty before " +
           s"arming (EpochPartitionKills is at-most-n): only $armable of 2 are")

@@ -43,9 +43,10 @@ object RainStorm {
     * (PartitionKills) and the kill decision becomes a pure function of
     * TaskContext — first attempt of each of the first n non-empty
     * partitions throws once — which needs no cross-JVM state at all.
-    * Kills are BEST-EFFORT (at-most-n): the FlatMap stage partitions
-    * by key hash, so a kill armed on a partition that receives no
-    * deliveries is silently absorbed and fewer than n attempts die —
+    * Kills are BEST-EFFORT (at-most-n): a batch FlatMap stage
+    * partitions by key hash and streaming op1 by file-scan split, so a
+    * kill armed on a partition that receives no deliveries is silently
+    * absorbed and fewer than n attempts die —
     * counting "n distinct non-empty partitions" exactly would need the
     * cross-JVM state this transport exists to avoid. At-most-n is
     * still as honest as the reference's "kill two live workers": up to
@@ -74,8 +75,8 @@ object RainStorm {
       * throws on its first delivery. Run-scoped by construction,
       * reaches every executor JVM. AT-MOST-n: an empty partition
       * among the first n absorbs its kill (nothing delivers there),
-      * so under key-skew fewer than n attempts may die — see the
-      * Chaos scaladoc.
+      * so under key skew (batch: the FlatMap stage partitions by key
+      * hash) fewer than n attempts may die — see the Chaos scaladoc.
       */
     final case class PartitionKills(n: Int) extends KillPlan
     /** Cluster transport for STREAMING runs: like PartitionKills, but
@@ -87,7 +88,9 @@ object RainStorm {
       * (n kills per BATCH, not per run — the reason this quadrant
       * used to degrade to NoKills). Still at-most-n, same as the
       * batch transport: an armed partition that receives no
-      * deliveries in that micro-batch absorbs its kill.
+      * deliveries in that micro-batch absorbs its kill. Streaming op1
+      * runs on the file source's splits, so partition ids are scan
+      * splits, not key hashes (`streamingArmedPartitionsNonEmpty`).
       */
     final case class EpochPartitionKills(n: Int, epoch: Long = 0L) extends KillPlan
 
@@ -285,18 +288,22 @@ object RainStorm {
   /** One stage over the `(key, value)` string records every stage
     * reads and writes — the reference's Record without its id, which no
     * stage here reads (exactly-once comes from the checkpoint, not from
-    * id dedup). A FlatMap stage is a typed flatMap after the key-hash
-    * exchange; CountByKey is the keyed count, its value the count as a
-    * string, so any stage may follow it in batch.
+    * id dedup). A FlatMap stage is a typed flatMap, after a key-hash
+    * exchange into `exchange` partitions when one is given and on its
+    * input's own partitions otherwise; CountByKey is the keyed count
+    * (its own aggregation exchange), its value the count as a string,
+    * so any stage may follow it in batch.
     */
-  private def applyOp(df: DataFrame, op: RsOp, pattern: String, numTasks: Int,
+  private def applyOp(df: DataFrame, op: RsOp, pattern: String, exchange: Option[Int],
                       plan: Chaos.KillPlan): DataFrame =
     op match {
       case FlatMap(f) =>
         import df.sparkSession.implicits._
         // stage boundary: the reference hash-exchanges on key between
-        // stages (rainstorm/server.go:384-390); numTasks ≈ partitions
-        applyOpInput(df, numTasks).as[(String, String)].flatMap { case (k, v) =>
+        // stages (rainstorm/server.go:384-390), numTasks ≈ partitions.
+        // Streaming op1 takes none: it runs on the file source's splits,
+        // and its one exchange is the one before op2.
+        exchange.fold(df)(applyOpInput(df, _)).as[(String, String)].flatMap { case (k, v) =>
           Chaos.tap(plan) // no-op unless THIS run claimed armed kills
           f(k, v, pattern)
         }.toDF("key", "value")
@@ -429,17 +436,6 @@ object RainStorm {
         col("value"))
   }
 
-  /** Per-stage kill plans for a batch run. The closure transport
-    * (PartitionKills) is stateless per task, so arming BOTH stages
-    * would fire n kills in each (2n per run, vs the armed n): scope it
-    * to the FIRST FlatMap stage — only FlatMap deliveries tap the
-    * plan, so scoping to op1 unconditionally would silently disarm a
-    * (CountByKey, FlatMap) run. The registry transport counts down
-    * globally and stays armed across both stages, like the reference.
-    * (A CountByKey/CountByKey run has no tap path under EITHER
-    * transport — nothing to kill in a pipeline with no user-operator
-    * deliveries.)
-    */
   /** How many of the first `n` op1-stage partitions are NON-EMPTY for
     * (src, numTasks) — probed on the exact frame applyOp hands op1
     * (sourceBatch repartitioned on key), so the partition ids match
@@ -457,30 +453,37 @@ object RainStorm {
       .distinct()
       .count()
 
-  /** Streaming twin of the probe above, for the epoch transport: the
-    * STREAMING source keys by content hash (`srcDir:md5(value)`), so
-    * the armed partitions are a different function of the data than
-    * the batch source's line-identity keys. Probed with a batch read
-    * of the same files — identical values → identical keys →
-    * identical hash partitioning as micro-batch 0's op1 stage.
+  /** Streaming twin of the probe above, for the epoch transport:
+    * streaming op1 runs with no exchange, on the file source's splits,
+    * so its armed partitions are the first `n` file-scan partitions of
+    * micro-batch 0. Probed with a batch read of the same files — the
+    * same file list and split sizing give the same scan partitions.
     */
   private[graft] def streamingArmedPartitionsNonEmpty(
-      spark: SparkSession, srcDir: String, numTasks: Int, n: Int): Long =
-    applyOpInput(
-      spark.read.text(srcDir)
-        .select(concat(lit(srcDir), lit(":"), md5(col("value"))).as("key"),
-          col("value")),
-      numTasks)
+      spark: SparkSession, srcDir: String, n: Int): Long =
+    spark.read.text(srcDir)
       .select(spark_partition_id().as("p"))
       .filter(col("p") < n)
       .distinct()
       .count()
 
-  /** The stage boundary applyOp's FlatMap arm applies — factored so the
-    * chaos pre-probe above sees the same partitioning as the real run. */
+  /** The key-hash exchange before a batch FlatMap stage — factored so
+    * the batch chaos pre-probe above sees the same partitioning as the
+    * real run. */
   private def applyOpInput(df: DataFrame, numTasks: Int): DataFrame =
     df.repartition(numTasks, col("key"))
 
+  /** Per-stage kill plans for a run. The closure transports
+    * (PartitionKills, EpochPartitionKills) are stateless per task, so
+    * arming BOTH stages would fire n kills in each (2n per run, vs the
+    * armed n): scope them to the FIRST FlatMap stage — only FlatMap
+    * deliveries tap the plan, so scoping to op1 unconditionally would
+    * silently disarm a (CountByKey, FlatMap) run. The registry transport counts down
+    * globally and stays armed across both stages, like the reference.
+    * (A CountByKey/CountByKey run has no tap path under EITHER
+    * transport — nothing to kill in a pipeline with no user-operator
+    * deliveries.)
+    */
   private[graft] def stagePlans(plan: Chaos.KillPlan,
                                 op1: RsOp): (Chaos.KillPlan, Chaos.KillPlan) =
     plan match {
@@ -501,8 +504,8 @@ object RainStorm {
     val plan = Chaos.plan(runId, spark.sparkContext.master)
     val (op1Plan, op2Plan) = stagePlans(plan, op1)
     val out = applyOp(
-      applyOp(sourceBatch(spark, src), op1, pattern, numTasks, op1Plan),
-      op2, pattern, numTasks, op2Plan)
+      applyOp(sourceBatch(spark, src), op1, pattern, Some(numTasks), op1Plan),
+      op2, pattern, Some(numTasks), op2Plan)
       .select(col("key"), col("value")) // sink format, rainstorm/types.go:79
     // With a dest the job executes HERE — release the claim after it
     // (exhausted cells self-remove in tap; release covers a job that
@@ -518,7 +521,13 @@ object RainStorm {
 
   /** Streaming run with checkpointed exactly-once, draining available
     * input (AvailableNow): the reference's long-running job shape with
-    * its WAL/replay machinery replaced by the checkpoint.
+    * its WAL/replay machinery replaced by the checkpoint. Source records
+    * are keyed `srcDir:md5(value)` — a stream cannot assign stable line
+    * ordinals — and op1 reads that key. Op1 runs on the file source's
+    * splits, with no exchange before it, so the pipeline has one
+    * exchange, the reference's only one: CountByKey's aggregation
+    * exchange, or a key-hash exchange into `numTasks` partitions before
+    * a FlatMap op2.
     */
   def runStreaming(spark: SparkSession, srcDir: String, op1: RsOp, op2: RsOp,
                    queryName: String, checkpoint: String,
@@ -555,8 +564,8 @@ object RainStorm {
     val src = spark.readStream.text(srcDir)
       .select(concat(lit(srcDir), lit(":"), md5(col("value"))).as("key"),
         col("value"))
-    val out = applyOp(applyOp(src, op1, pattern, numTasks, op1Plan),
-      op2, pattern, numTasks, op2Plan)
+    val out = applyOp(applyOp(src, op1, pattern, None, op1Plan),
+      op2, pattern, Some(numTasks), op2Plan)
       .select(col("key"), col("value"))
     val mode =
       if (op2 == CountByKey || op1 == CountByKey) OutputMode.Complete()

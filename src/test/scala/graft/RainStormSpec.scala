@@ -2,6 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+
 import graft.RainStorm.Ops
 
 /** End-to-end specs for the RainStorm migration facade on
@@ -52,6 +56,74 @@ class RainStormSpec extends GraftSpec {
     val got = spark.table("rainstorm_app2").collect()
       .map(r => (r.getString(0), r.getString(1))).toMap
     assert(got === Map("Regulatory" -> "2", "Warning" -> "1"))
+  }
+
+  test("App-1 streaming equals batch") {
+    val src = writeFixture()
+    val batch = RainStorm.run(spark, src, Ops.app1op1, Ops.app1op2,
+      dest = None, numTasks = 2, pattern = "Stop")
+      .collect().map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    val q = RainStorm.runStreaming(spark, src, Ops.app1op1, Ops.app1op2,
+      "rainstorm_app1", tmpDir("rainstorm-ckpt"), numTasks = 2, pattern = "Stop")
+    q.awaitTermination()
+    val got = spark.table("rainstorm_app1").collect()
+      .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    spark.catalog.dropTempView("rainstorm_app1")
+    assert(got === batch)
+  }
+
+  test("streaming op1 reads the key srcDir:md5(line)") {
+    val src = writeFixture()
+    val echo = RainStorm.FlatMap((k, v, _) => Seq(k -> v))
+    RainStorm.runStreaming(spark, src, echo, echo, "rainstorm_keys",
+      tmpDir("rainstorm-ckpt"), numTasks = 2).awaitTermination()
+    val got = spark.table("rainstorm_keys").collect()
+      .map(r => (r.getString(0), r.getString(1))).sorted.toSeq
+    spark.catalog.dropTempView("rainstorm_keys")
+    def md5hex(line: String): String =
+      java.security.MessageDigest.getInstance("MD5")
+        .digest(line.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+    assert(got === rows.map(l => (src + ":" + md5hex(l), l)).sorted)
+  }
+
+  test("a streaming call shuffles once: op1 runs on the source's splits") {
+    // the reference's one exchange sits between op1 and op2: the
+    // aggregation's own before CountByKey, the keyed one before FlatMap
+    val src = writeFixture()
+    for ((name, op1, op2, pattern) <- Seq(
+        ("rainstorm_shape2", Ops.app2op1, Ops.app2op2, "Punched Telespar"),
+        ("rainstorm_shape1", Ops.app1op1, Ops.app1op2, "Stop"))) {
+      val q = RainStorm.runStreaming(spark, src, op1, op2, name,
+        tmpDir("rainstorm-ckpt"), numTasks = 2, pattern = pattern)
+      q.awaitTermination()
+      spark.catalog.dropTempView(name)
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      // stateless streaming plans run under AQE: look inside its stages
+      val exchanges = new AdaptiveSparkPlanHelper {}.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size === 1, s"$name:\n$plan")
+    }
+  }
+
+  test("streaming chaos probe counts the file-scan partitions op1 delivers in") {
+    val dir = tmpDir("rainstorm-probe-src")
+    (0 until 3).foreach { f =>
+      Files.write(Paths.get(dir, s"part$f.csv"),
+        (0 until 5 + f).map(i => s"$f,$i,v$i").mkString("\n").getBytes,
+        StandardOpenOption.CREATE)
+    }
+    TaskPartitions.seen.clear()
+    val op1 = RainStorm.FlatMap((k, _, _) => {
+      TaskPartitions.seen.add(org.apache.spark.TaskContext.getPartitionId())
+      Seq(k -> "1")
+    })
+    RainStorm.runStreaming(spark, dir, op1, RainStorm.CountByKey, "rainstorm_probe",
+      tmpDir("rainstorm-ckpt"), numTasks = 2).awaitTermination()
+    spark.catalog.dropTempView("rainstorm_probe")
+    import scala.jdk.CollectionConverters._
+    val delivered = TaskPartitions.seen.asScala.toSet
+    for (k <- 1 to 3)
+      assert(RainStorm.streamingArmedPartitionsNonEmpty(spark, dir, n = k) ===
+        delivered.count(_ < k).toLong, s"k = $k, delivered $delivered")
   }
 
   test("streaming calls share one task class loader, so generated code is reused") {
@@ -632,4 +704,9 @@ class RainStormSpec extends GraftSpec {
   */
 object TaskLoaders {
   val seen: java.util.Set[ClassLoader] = java.util.concurrent.ConcurrentHashMap.newKeySet[ClassLoader]()
+}
+
+/** Partition ids a test operator's deliveries ran in. */
+object TaskPartitions {
+  val seen: java.util.Set[Int] = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 }
