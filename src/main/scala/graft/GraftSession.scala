@@ -34,6 +34,19 @@ object GraftSession {
   val sharedClassLoaderConfs: Map[String, String] = Map(
     "spark.sql.artifact.isolation.enabled" -> "false")
 
+  /** File listing on the driver, never in a Spark job: past the
+    * threshold (32 paths by default) Spark lists a scan's paths in a
+    * parallel job — every streaming micro-batch over more than 32 new
+    * files re-lists them that way in `FileStreamSource.getBatch`, which
+    * reads the conf from the caller's session. Under `local[N]` that
+    * job's tasks run on this JVM's own threads, so it costs scheduling
+    * and buys nothing; on a cluster, parallel listing on the executors
+    * can pay off against an object store, so `localCluster` and
+    * `builder` keep Spark's default.
+    */
+  val driverListingConfs: Map[String, String] = Map(
+    "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString)
+
   def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -90,7 +103,8 @@ object GraftSession {
     // failover contract the engine claims; with 4, a killed attempt
     // (RainStorm.Chaos, or a genuine fault) is rescheduled and lineage/
     // shuffle replay reproduces its work, as on a cluster.
-    val s = builder(appName).master(s"local[$cpus, 4]").getOrCreate()
+    val s = builder(appName).config(driverListingConfs)
+      .master(s"local[$cpus, 4]").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

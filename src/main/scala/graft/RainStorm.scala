@@ -12,7 +12,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * executable to an `RsOp`:
   *
   *  - an executable printing 2k alternating key/value lines → `FlatMap`
-  *    (the general contract, rainstorm/server.go:334-361);
+  *    (the general contract, rainstorm/server.go:334-361), or
+  *    `ValueFlatMap` when it never reads its input key;
   *  - an executable printing exactly 1 line → the engine's keyed-COUNT
   *    protocol → `CountByKey` (rainstorm/server.go:344-355).
   *
@@ -26,7 +27,7 @@ object RainStorm {
     * REPL verb (main.go:223-243: run the job, kill two live op workers
     * 1.5 s in, and show output equivalence; rainstorm/server.go:543-572
     * is the failover that absorbs it). Spark analogue: armed kills
-    * throw inside FlatMap tasks, killing the task attempt mid-run; the
+    * throw inside flat-map tasks, killing the task attempt mid-run; the
     * scheduler reschedules the attempt (spark.task.maxFailures=4, the
     * cluster default, set in GraftSession) and lineage/shuffle replay
     * reproduces the lost work — output equivalence is the scheduler's
@@ -43,7 +44,7 @@ object RainStorm {
     * (PartitionKills) and the kill decision becomes a pure function of
     * TaskContext — first attempt of each of the first n non-empty
     * partitions throws once — which needs no cross-JVM state at all.
-    * Kills are BEST-EFFORT (at-most-n): a batch FlatMap stage
+    * Kills are BEST-EFFORT (at-most-n): a batch flat-map stage
     * partitions by key hash and streaming op1 by file-scan split, so a
     * kill armed on a partition that receives no deliveries is silently
     * absorbed and fewer than n attempts die —
@@ -147,8 +148,9 @@ object RainStorm {
       * drop). */
     private[graft] def release(runId: String): Unit = runs.remove(runId)
 
-    /** Called per record delivery on the FlatMap path with the owning
-      * run's plan; only that run's deliveries can fire its kills.
+    /** Called per record delivery on the FlatMap and ValueFlatMap paths
+      * with the owning run's plan; only that run's deliveries can fire
+      * its kills.
       */
     private[graft] def tap(plan: KillPlan): Unit = plan match {
       case NoKills => ()
@@ -186,6 +188,11 @@ object RainStorm {
   sealed trait RsOp
   /** General flat-map contract: (key, value, pattern) → 0..k records. */
   final case class FlatMap(f: (String, String, String) => Seq[(String, String)]) extends RsOp
+  /** A flat-map that never reads its input key: (value, pattern) → 0..k
+    * records. The stage reads only `value`, so a streaming op1 of this
+    * kind never computes the source's content-hash key.
+    */
+  final case class ValueFlatMap(f: (String, String) => Seq[(String, String)]) extends RsOp
   /** The 1-line COUNT protocol: running count per key. */
   case object CountByKey extends RsOp
 
@@ -201,7 +208,7 @@ object RainStorm {
       */
     val app1op2: RsOp = csvProject(2, 3)
 
-    def csvProject(keyIdx: Int, valIdx: Int): RsOp = FlatMap((_, v, _) =>
+    def csvProject(keyIdx: Int, valIdx: Int): RsOp = ValueFlatMap((v, _) =>
       csvFields(v, keyIdx, valIdx).toList)
 
     /** ops/app2op1: CSV-parse, iff col6 == pattern emit (col8, "1"). */
@@ -210,7 +217,7 @@ object RainStorm {
     /** The scan stops at a filter field that is not `p`: such a line
       * emits nothing whatever follows, malformed or not.
       */
-    def csvFilterEq(filterIdx: Int, keyIdx: Int): RsOp = FlatMap((_, v, p) => {
+    def csvFilterEq(filterIdx: Int, keyIdx: Int): RsOp = ValueFlatMap((v, p) => {
       var key: String = null
       val n = scanCsv(v, i => i == filterIdx || i == keyIdx, (i, f) =>
         (i != filterIdx || f == p) && { if (i == keyIdx) key = f; true })
@@ -290,27 +297,36 @@ object RainStorm {
     * stage here reads (exactly-once comes from the checkpoint, not from
     * id dedup). A FlatMap stage is a typed flatMap, after a key-hash
     * exchange into `exchange` partitions when one is given and on its
-    * input's own partitions otherwise; CountByKey is the keyed count
-    * (its own aggregation exchange), its value the count as a string,
-    * so any stage may follow it in batch.
+    * input's own partitions otherwise; a ValueFlatMap stage is the same
+    * over `value` alone, so a key the stage never reads is pruned from
+    * the plan below it (the batch exchange still hashes it); CountByKey
+    * is the keyed count (its own aggregation exchange), its value the
+    * count as a string, so any stage may follow it in batch.
     */
   private def applyOp(df: DataFrame, op: RsOp, pattern: String, exchange: Option[Int],
-                      plan: Chaos.KillPlan): DataFrame =
+                      plan: Chaos.KillPlan): DataFrame = {
+    import df.sparkSession.implicits._
+    // stage boundary: the reference hash-exchanges on key between
+    // stages (rainstorm/server.go:384-390), numTasks ≈ partitions.
+    // Streaming op1 takes none: it runs on the file source's splits,
+    // and its one exchange is the one before op2.
+    def input = exchange.fold(df)(applyOpInput(df, _))
     op match {
       case FlatMap(f) =>
-        import df.sparkSession.implicits._
-        // stage boundary: the reference hash-exchanges on key between
-        // stages (rainstorm/server.go:384-390), numTasks ≈ partitions.
-        // Streaming op1 takes none: it runs on the file source's splits,
-        // and its one exchange is the one before op2.
-        exchange.fold(df)(applyOpInput(df, _)).as[(String, String)].flatMap { case (k, v) =>
+        input.as[(String, String)].flatMap { case (k, v) =>
           Chaos.tap(plan) // no-op unless THIS run claimed armed kills
           f(k, v, pattern)
+        }.toDF("key", "value")
+      case ValueFlatMap(f) =>
+        input.select(col("value")).as[String].flatMap { v =>
+          Chaos.tap(plan)
+          f(v, pattern)
         }.toDF("key", "value")
       case CountByKey =>
         df.groupBy(col("key")).agg(count(lit(1)).as("value"))
           .select(col("key"), col("value").cast("string").as("value"))
     }
+  }
 
   /** Batch source with the reference's EXACT record identity: key =
     * "<srcFile>:<lineNo>", 1-based PER FILE (rainstorm/server.go:
@@ -467,7 +483,7 @@ object RainStorm {
       .distinct()
       .count()
 
-  /** The key-hash exchange before a batch FlatMap stage — factored so
+  /** The key-hash exchange before a batch flat-map stage — factored so
     * the batch chaos pre-probe above sees the same partitioning as the
     * real run. */
   private def applyOpInput(df: DataFrame, numTasks: Int): DataFrame =
@@ -476,10 +492,11 @@ object RainStorm {
   /** Per-stage kill plans for a run. The closure transports
     * (PartitionKills, EpochPartitionKills) are stateless per task, so
     * arming BOTH stages would fire n kills in each (2n per run, vs the
-    * armed n): scope them to the FIRST FlatMap stage — only FlatMap
-    * deliveries tap the plan, so scoping to op1 unconditionally would
-    * silently disarm a (CountByKey, FlatMap) run. The registry transport counts down
-    * globally and stays armed across both stages, like the reference.
+    * armed n): scope them to the FIRST flat-map stage — only FlatMap and
+    * ValueFlatMap deliveries tap the plan, so scoping to op1
+    * unconditionally would silently disarm a (CountByKey, FlatMap) run.
+    * The registry transport counts down globally and stays armed across
+    * both stages, like the reference.
     * (A CountByKey/CountByKey run has no tap path under EITHER
     * transport — nothing to kill in a pipeline with no user-operator
     * deliveries.)
@@ -488,7 +505,7 @@ object RainStorm {
                                 op1: RsOp): (Chaos.KillPlan, Chaos.KillPlan) =
     plan match {
       case k @ (Chaos.PartitionKills(_) | Chaos.EpochPartitionKills(_, _)) =>
-        if (op1.isInstanceOf[FlatMap]) (k, Chaos.NoKills) else (Chaos.NoKills, k)
+        if (op1 != CountByKey) (k, Chaos.NoKills) else (Chaos.NoKills, k)
       case p => (p, p)
     }
 
@@ -523,17 +540,18 @@ object RainStorm {
     * input (AvailableNow): the reference's long-running job shape with
     * its WAL/replay machinery replaced by the checkpoint. Source records
     * are keyed `srcDir:md5(value)` — a stream cannot assign stable line
-    * ordinals — and op1 reads that key. Op1 runs on the file source's
-    * splits, with no exchange before it, so the pipeline has one
-    * exchange, the reference's only one: CountByKey's aggregation
+    * ordinals — and a FlatMap op1 reads that key; a ValueFlatMap op1
+    * never reads it, so the plan computes no hash. Op1 runs on the file
+    * source's splits, with no exchange before it, so the pipeline has
+    * one exchange, the reference's only one: CountByKey's aggregation
     * exchange, or a key-hash exchange into `numTasks` partitions before
-    * a FlatMap op2.
+    * a flat-map op2.
     */
   def runStreaming(spark: SparkSession, srcDir: String, op1: RsOp, op2: RsOp,
                    queryName: String, checkpoint: String,
                    numTasks: Int = 3, pattern: String = ""): StreamingQuery = {
-    require(!(op1 == CountByKey && op2.isInstanceOf[FlatMap]),
-      "CountByKey followed by FlatMap is not supported in streaming mode: " +
+    require(!(op1 == CountByKey && op2 != CountByKey),
+      "CountByKey followed by a flat-map is not supported in streaming mode: " +
         "Structured Streaming cannot apply a row-generating transform after " +
         "a streaming aggregation. Run this combination in batch (RainStorm.run).")
     require(!(op1 == CountByKey && op2 == CountByKey),

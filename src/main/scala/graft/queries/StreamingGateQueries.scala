@@ -201,7 +201,8 @@ object StreamingGateQueries {
     *    so a foreachBatch protocol sets up its state there) and the
     *    sink's collect step;
     *  - the temp dirs (graft-src-*, graft-stage-*, graft-ckpt-*,
-    *    graft-out-*) are the runner's: deleted once the query has
+    *    graft-out-*, named graft-<kind>-gate_<pid>_<n> after the JVM
+    *    and the run) are the runner's: deleted once the query has
     *    terminated, also when a step fails, and the returned frame reads
     *    none of them. Each run is a fresh pipeline; recovery is covered
     *    by StreamingSpec's kill/restart tests;
@@ -219,7 +220,7 @@ object StreamingGateQueries {
     val set = s.conf.getAll
     val prior = pins.keys.map(k => k -> set.get(k))
     pins.foreach { case (k, v) => s.conf.set(k, v) }
-    val name = s"gate_${runId.incrementAndGet()}"
+    val name = s"gate_${ProcessHandle.current().pid()}_${runId.incrementAndGet()}"
     val dirs = ArrayBuffer.empty[java.io.File]
     def temp(kind: String): java.io.File = {
       dirs += Files.createTempDirectory(s"graft-$kind-$name").toFile

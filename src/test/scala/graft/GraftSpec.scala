@@ -21,6 +21,7 @@ object TestSpark {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config(GraftSession.localFsConfs)
       .config(GraftSession.sharedClassLoaderConfs)
+      .config(GraftSession.driverListingConfs)
       // saveAsTable targets (BucketingSpec) land in a temp warehouse,
       // not the repo working directory; it goes with the test JVM
       .config("spark.sql.warehouse.dir", {

@@ -104,6 +104,46 @@ class RainStormSpec extends GraftSpec {
     }
   }
 
+  test("a value-only streaming op1 computes no md5 key") {
+    // App-2's op1 reads only the line, so Catalyst prunes the source's
+    // content-hash key; an op1 that reads its key still gets it
+    val src = writeFixture()
+    val echo = RainStorm.FlatMap((k, v, _) => Seq(k -> v))
+    for ((name, op1, hashes) <- Seq(("rainstorm_nomd5", Ops.app2op1, 0), ("rainstorm_md5", echo, 1))) {
+      val q = RainStorm.runStreaming(spark, src, op1, Ops.app2op2, name,
+        tmpDir("rainstorm-ckpt"), numTasks = 2, pattern = "Punched Telespar")
+      q.awaitTermination()
+      spark.catalog.dropTempView(name)
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      val md5s = new AdaptiveSparkPlanHelper {}.flatMap(plan)(_.expressions.flatMap(_.collect {
+        case m: org.apache.spark.sql.catalyst.expressions.Md5 => m }))
+      assert(md5s.size === hashes, s"$name:\n$plan")
+    }
+  }
+
+  test("a streaming drain over more than 32 files runs one Spark job: no listing job") {
+    // past spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    // FileStreamSource.getBatch would re-list the batch's files in a
+    // parallel job; the local sessions list them on the driver
+    val dir = tmpDir("rainstorm-drain-src")
+    for (f <- 0 until 40)
+      Files.write(Paths.get(dir, f"f$f%02d.csv"),
+        String.join("\n", rows.take(1 + f % rows.size): _*).getBytes, StandardOpenOption.CREATE)
+    val (_, jobs) = org.apache.spark.graft.JobCount(spark.sparkContext) {
+      RainStorm.runStreaming(spark, dir, Ops.app2op1, Ops.app2op2, "rainstorm_drain",
+        tmpDir("rainstorm-ckpt"), numTasks = 2, pattern = "Punched Telespar").awaitTermination()
+    }
+    val got = spark.table("rainstorm_drain").collect()
+      .map(r => (r.getString(0), r.getString(1))).toMap
+    spark.catalog.dropTempView("rainstorm_drain")
+    val batch = RainStorm.run(spark, dir, Ops.app2op1, Ops.app2op2,
+      dest = None, numTasks = 2, pattern = "Punched Telespar")
+      .collect().map(r => (r.getString(0), r.getString(1))).toMap
+    assert(jobs === 1)
+    assert(got === batch)
+    assert(got === Map("Regulatory" -> "56", "Warning" -> "32"))
+  }
+
   test("streaming chaos probe counts the file-scan partitions op1 delivers in") {
     val dir = tmpDir("rainstorm-probe-src")
     (0 until 3).foreach { f =>
@@ -682,10 +722,11 @@ class RainStormSpec extends GraftSpec {
     // the operators built on the scan: App-2's filter-and-key (whose scan
     // stops at a filter field that is not the pattern), App-1's projection
     def filterEq(f: Int, k: Int, line: String, p: String) = {
-      val RainStorm.FlatMap(op) = Ops.csvFilterEq(f, k)
-      op("k", line, p)
+      val RainStorm.ValueFlatMap(op) = Ops.csvFilterEq(f, k)
+      op(line, p)
     }
-    val RainStorm.FlatMap(project) = Ops.app1op2
+    val RainStorm.ValueFlatMap(projectValue) = Ops.app1op2
+    def project(key: String, line: String, p: String) = projectValue(line, p) // key unread
     for (line <- signs; p <- Seq("Wood Post", " ")) {
       assert(filterEq(6, 8, line, p) ===
         projected(line, 6, 8).filter(_._1 == p).map(_._2 -> "1").toSeq, s"line [$line]")

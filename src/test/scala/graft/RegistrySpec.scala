@@ -63,12 +63,14 @@ class RegistrySpec extends GraftSpec {
   test("stream_ann_ivf_persisted_refresh leaves no graft-* temp entries behind") {
     // The gate's staging, checkpoint and staged-source dirs are all
     // gate-private: the run deletes them once the stream has drained.
+    // Only this JVM's gate dirs count (graft-<kind>-gate_<pid>_<n>):
+    // another graft process may share java.io.tmpdir meanwhile.
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val ours = s"-gate_${ProcessHandle.current().pid()}_"
     def graftEntries: Set[String] = Option(tmp.listFiles()).getOrElse(Array.empty)
-      .map(_.getName).filter(_.startsWith("graft-")).toSet
-    val session = spark // the shared session's own graft-warehouse dir predates the count
+      .map(_.getName).filter(n => n.startsWith("graft-") && n.contains(ours)).toSet
     val before = graftEntries
-    assert(SparkEntry.queries("stream_ann_ivf_persisted_refresh")(session, Sf).count() > 0L)
+    assert(SparkEntry.queries("stream_ann_ivf_persisted_refresh")(spark, Sf).count() > 0L)
     val after = graftEntries
     assert(after.size === before.size,
       s"the gate left temp entries behind: ${(after -- before).mkString(", ")}")
@@ -80,7 +82,7 @@ class RegistrySpec extends GraftSpec {
                      "stream_dedup_chunks_wm_evict",
                      "stream_docs_curation_e2e_kmeans")) {
       val pre = graftEntries
-      assert(SparkEntry.queries(name)(session, Sf).count() > 0L)
+      assert(SparkEntry.queries(name)(spark, Sf).count() > 0L)
       val left = (graftEntries -- pre).filter(n => gateDirs.exists(n.startsWith))
       assert(left.isEmpty, s"$name left temp entries behind: ${left.mkString(", ")}")
     }
